@@ -81,8 +81,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
     long, meta = supplier_hierarchy(spark, sf_dir)
     params = CompetitionParams(lowest_level=1, nperm=2, num_trees=30, seed=42)
-    resolved, state = taxa_hfe(meta, long, params=params, filter_prevalence=0.05)
-    return winner_feature_matrix(resolved, state, metadata=meta)
+    tree, state = taxa_hfe(meta, long, params=params, filter_prevalence=0.05)
+    return winner_feature_matrix(tree, state, metadata=meta)
 
 
 # --------------------------------------------------------------------------
@@ -173,18 +173,12 @@ def q_hfe_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_hfe_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from taxahfe_spark.operators.filters import feature_filter_flags
-    from taxahfe_spark.taxonomy import hierarchical_rollup
+    from taxahfe_spark.taxonomy import resolve_tree
 
-    long = _hfe_long(spark, sf_dir)
-    # r8: rollup FIRST — its construction already fills the base cache, so
-    # the entity-universe count becomes a cached scan instead of a second
-    # full pass over the 5-way join (same distinct set either way; the
-    # rollup's base projection only casts entity_id to string)
-    resolved = hierarchical_rollup(long, clean_paths=False)
-    n_entities = (
-        resolved._taxahfe_base[0].select("entity_id").distinct().count()
-    )
-    return feature_filter_flags(resolved, n_entities, 0.4, 1000.0).select(
+    # the resolved tree already knows its entity universe: no second pass
+    # over the 5-way join for the filter denominator
+    tree = resolve_tree(_hfe_long(spark, sf_dir), clean_paths=False)
+    return feature_filter_flags(tree.frame(), len(tree.entities), 0.4, 1000.0).select(
         "path",
         F.col("level").cast("long").alias("level"),
         F.col("prevalence").cast("long").alias("prevalence"),
@@ -1812,8 +1806,8 @@ def q_hfe_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
     params = CompetitionParams(
         lowest_level=1, nperm=4, num_trees=5, seed=42, super_filter_nperm_factor=4
     )
-    resolved, state = taxa_hfe(meta, long, params=params, filter_prevalence=0.05)
-    return winner_feature_matrix(resolved, state, metadata=meta)
+    tree, state = taxa_hfe(meta, long, params=params, filter_prevalence=0.05)
+    return winner_feature_matrix(tree, state, metadata=meta)
 
 
 def q_hfe_corr_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:

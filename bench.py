@@ -356,8 +356,8 @@ def _collapse(spark, sf_dir: str, mult: int = 1):
     params = CompetitionParams(
         lowest_level=1, nperm=8, num_trees=6, seed=42, super_filter_nperm_factor=4
     )
-    resolved, state = taxa_hfe(meta, long, params=params, filter_prevalence=0.01)
-    return winner_feature_matrix(resolved, state, metadata=meta)
+    tree, state = taxa_hfe(meta, long, params=params, filter_prevalence=0.01)
+    return winner_feature_matrix(tree, state, metadata=meta)
 
 
 def run_once(cpus: int, sf_dir: str, scaling: bool = False) -> dict:

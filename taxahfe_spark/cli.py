@@ -267,7 +267,7 @@ def _run_hfe(spark, opts) -> None:
     )
 
     meta, long = _read_inputs(spark, opts)
-    resolved, state = taxa_hfe(
+    tree, state = taxa_hfe(
         meta, long, params=_hfe_params(opts),
         filter_prevalence=opts.prevalence,
         filter_mean_abundance=opts.abundance,
@@ -275,14 +275,15 @@ def _run_hfe(spark, opts) -> None:
         k_splits=int(opts.k_splits),
     )
     use_sf = not opts.disable_super_filter
-    out = winner_feature_matrix(resolved, state, metadata=meta, use_super_filter=use_sf)
+    out = winner_feature_matrix(tree, state, metadata=meta, use_super_filter=use_sf)
     write_output_file(out, os.path.join(opts.output_dir, "output"))
     if opts.write_both_outputs and use_sf:
-        pre = winner_feature_matrix(resolved, state, metadata=meta, use_super_filter=False)
+        pre = winner_feature_matrix(tree, state, metadata=meta, use_super_filter=False)
         write_output_file(pre, os.path.join(opts.output_dir, "output_pre_sf"))
     if opts.write_old_files:
         from taxahfe_spark.pipeline import write_oudah_input, write_v1_input_file
 
+        resolved = tree.frame()
         write_level_summary_csvs(resolved, state, meta, os.path.join(opts.output_dir, "levels"))
         write_v1_input_file(resolved, opts.output_dir)
         write_oudah_input(resolved, state, meta, os.path.join(opts.output_dir, "oudah"))

@@ -66,7 +66,7 @@ def taxa_hfe_ml(
     test_meta = split.filter("NOT is_train").drop("is_train")
 
     # competition on TRAIN only
-    resolved_train, state = taxa_hfe(
+    tree_train, state = taxa_hfe(
         train_meta,
         hierarchical_long,
         params=params,
@@ -75,7 +75,7 @@ def taxa_hfe_ml(
         k_splits=k_splits,
     )
     train_matrix = winner_feature_matrix(
-        resolved_train, state, metadata=train_meta,
+        tree_train, state, metadata=train_meta,
         use_super_filter=not params.disable_super_filter,
     )
 

@@ -36,7 +36,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
+from taxahfe_spark.session import driver_side
 from taxahfe_spark.tokens import words as _words
+
+# driver trainer budget: distinct words collected once
+DRIVER_MAX_WORDS = 2_000_000
 
 
 def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -183,9 +187,12 @@ def bpe_train(
 ) -> list[tuple[str, str]]:
     """Learn up to ``num_merges`` merges from a (word, count) frame.
 
+    Rows with a null word or count contribute no pairs (``F.sum`` skips
+    nulls), so both paths drop them first.
+
     DRIVER FAST PATH: BPE training state is vocab-sized by construction
-    (module docstring), so below ``TAXAHFE_BPE_DRIVER_MAX_WORDS`` distinct
-    words (env, default 2M — a few hundred MB of driver memory) the word
+    (module docstring), so within ``DRIVER_MAX_WORDS`` distinct words (a
+    few hundred MB of driver memory; ``session.driver_side``) the word
     table is collected ONCE and trained with the classic incremental-heap
     algorithm: zero Spark jobs per merge instead of the r7 one-job-per-merge
     loop that made 32k-merge tokenizers days of driver-bound latency
@@ -221,12 +228,8 @@ def bpe_train(
     ~batch-size/2. Stops early when the true next argmax drops below
     ``min_pair_count``. Returns the merge list in learned order.
     """
-    import os
-
-    driver_max = int(
-        os.environ.get("TAXAHFE_BPE_DRIVER_MAX_WORDS", "2000000")
-    )
-    if driver_max > 0 and wc.count() <= driver_max:
+    wc = wc.dropna(subset=["word", "count"])
+    if driver_side(wc.count(), DRIVER_MAX_WORDS):
         tbl = wc.select(
             F.col("word").cast("string"), F.col("count").cast("long")
         ).toArrow()

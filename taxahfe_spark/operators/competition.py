@@ -51,26 +51,23 @@ descendants with importance >= parent win and the parent loses; final
 from __future__ import annotations
 
 import os
-import sys
 import time
 import zlib
 from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from taxahfe_spark.functions.rf import forest_importance
-from taxahfe_spark.taxonomy import sparse_to_dense
+from taxahfe_spark.session import driver_side
+from taxahfe_spark.taxonomy import _tlog, sparse_to_dense
 
-_DEBUG_TIMING = os.environ.get("TAXAHFE_DEBUG_TIMING") == "1"
-
-
-def _tlog(msg: str) -> None:
-    if _DEBUG_TIMING:
-        print(f"[timing] {msg}", file=sys.stderr, flush=True)
+# driver-local fused stage budget: design cells (entity x competitor x fit)
+# summed over a stage's competitions
+DRIVER_STAGE_MAX_CELLS = 64_000_000
 
 
 @dataclass
@@ -505,7 +502,8 @@ def _local_stage_worker(task):
 
 def _collect_vectors_arrow(vectors: DataFrame) -> dict:
     """(path, idxs, vals) frame -> {path: (int32 idxs, float64 vals)} via one
-    Arrow transfer (flat buffer slices, no per-element deserialization)."""
+    Arrow transfer (flat buffer slices, no per-element deserialization); a
+    null value becomes NaN."""
     tbl = vectors.select("path", "idxs", "vals").toArrow()
     paths = tbl.column("path").to_pylist()
     idxs_col = tbl.column("idxs").combine_chunks()
@@ -513,7 +511,7 @@ def _collect_vectors_arrow(vectors: DataFrame) -> dict:
     off_i = idxs_col.offsets.to_numpy()
     flat_i = idxs_col.values.to_numpy().astype(np.int32, copy=False)
     off_v = vals_col.offsets.to_numpy()
-    flat_v = vals_col.values.to_numpy()
+    flat_v = vals_col.values.to_numpy(zero_copy_only=False)
     return {
         p: (flat_i[off_i[i]: off_i[i + 1]], flat_v[off_v[i]: off_v[i + 1]])
         for i, p in enumerate(paths)
@@ -621,10 +619,12 @@ def make_shuffle_stage_udf(
 
 
 class TreeCompetition:
-    """Level-by-level tree competition over a distributed vector frame.
+    """Level-by-level tree competition over sparse per-node vectors.
 
     vectors: DataFrame (path, level, idxs, vals) - SPARSE, from
-    taxonomy.to_feature_vectors; entity index order == order of ``label``.
+    taxonomy.to_feature_vectors - or the same vectors already on the driver
+    as a dict path -> (idxs, vals) (a driver ResolvedTree's ``vectors``);
+    entity index order == order of ``label``.
     flags:   pandas (path -> level, passed_filters) from feature_filter_flags.
     re_individual / re_time: per-entity arrays (aligned to ``label``) for the
     repeated-measures competition; required when params.random_effects.
@@ -632,14 +632,13 @@ class TreeCompetition:
 
     def __init__(
         self,
-        vectors: DataFrame,
+        vectors: DataFrame | dict,
         flags_pdf: pd.DataFrame,
         label: np.ndarray,
         covariates: np.ndarray | None,
         params: CompetitionParams,
         re_individual: np.ndarray | None = None,
         re_time: np.ndarray | None = None,
-        vectors_dict: dict | None = None,
     ):
         if params.random_effects and (re_individual is None or re_time is None):
             raise ValueError(
@@ -647,7 +646,9 @@ class TreeCompetition:
                 "arrays (metadata columns 'individual' and 'time', reference "
                 "lib/tree.R:116-122)"
             )
-        self.spark = vectors.sparkSession
+        self.spark = (
+            SparkSession.active() if isinstance(vectors, dict) else vectors.sparkSession
+        )
         self.params = params
         self._memo_token = _next_run_token()
         self._local_pool = None  # driver-local stage pool (see _run_stage)
@@ -687,13 +688,14 @@ class TreeCompetition:
         )
 
         strategy = params.vector_strategy
-        self.vectors = vectors
+        # driver-side copy of the broadcast vectors: serves the driver-local
+        # stages and taxa_hfe's winner matrix without unpickling the broadcast
+        self.vectors_dict = None
         self.bc_vectors = None
-        if vectors_dict is not None and strategy != "shuffle":
-            # caller already holds the collected sparse vectors (taxa_hfe's
-            # driver-prefix fast path): size the auto decision from the dict
-            # itself — no persist, no sizing agg, no second collect
-            nnz = sum(len(i) for i, _ in vectors_dict.values())
+        if isinstance(vectors, dict):
+            # already collected: size the auto decision from the dict itself
+            # — no persist, no sizing agg, no second collect
+            nnz = sum(len(i) for i, _ in vectors.values())
             if strategy == "auto":
                 strategy = (
                     "broadcast"
@@ -702,11 +704,13 @@ class TreeCompetition:
                 )
                 _tlog(f"vector_strategy auto -> {strategy} (nnz={nnz}, dict)")
             if strategy == "broadcast":
-                self.strategy = strategy
-                self.bc_vectors = self.spark.sparkContext.broadcast(
-                    vectors_dict
+                self.vectors_dict = vectors
+            else:
+                vectors = self.spark.createDataFrame(
+                    [(p, i.tolist(), v.tolist()) for p, (i, v) in vectors.items()],
+                    "path string, idxs array<int>, vals array<double>",
                 )
-        if self.bc_vectors is None and strategy == "auto":
+        elif strategy == "auto":
             # persist BEFORE the sizing agg so the (collect_list pivot)
             # vector build runs once, whichever strategy wins
             vectors = vectors.persist()
@@ -718,23 +722,23 @@ class TreeCompetition:
             )
             _tlog(f"vector_strategy auto -> {strategy} (nnz={nnz})")
         self.strategy = strategy
-        if self.bc_vectors is not None:
-            pass  # pre-collected dict already broadcast above
-        elif strategy == "broadcast":
-            # vectors are taxonomy-sized here; collect ONCE and broadcast
-            # explicitly so every stage ships only assignment rows. Stored as
-            # NUMPY arrays: a dict of Python int lists measured 13s PER
-            # UNPICKLE on executors; numpy buffers deserialize at memory speed.
-            # Collected via toArrow(), not collect(): Row deserialization of
-            # ~10^6 array elements is per-object Python work (measured 0.7 s
-            # at the sf0.1 flagship's 949k nnz), while the Arrow list columns
-            # expose flat values+offsets buffers that slice into numpy with
-            # no per-element cost (0.15 s same shape).
-            self.bc_vectors = self.spark.sparkContext.broadcast(
-                _collect_vectors_arrow(vectors)
-            )
-            if params.vector_strategy == "auto":
-                vectors.unpersist()
+        self.vectors = vectors
+        if strategy == "broadcast":
+            if self.vectors_dict is None:
+                # vectors are taxonomy-sized here; collect ONCE and broadcast
+                # explicitly so every stage ships only assignment rows.
+                # Stored as NUMPY arrays: a dict of Python int lists measured
+                # 13s PER UNPICKLE on executors; numpy buffers deserialize at
+                # memory speed. Collected via toArrow(), not collect(): Row
+                # deserialization of ~10^6 array elements is per-object
+                # Python work (measured 0.7 s at the sf0.1 flagship's 949k
+                # nnz), while the Arrow list columns expose flat
+                # values+offsets buffers that slice into numpy with no
+                # per-element cost (0.15 s same shape).
+                self.vectors_dict = _collect_vectors_arrow(vectors)
+                if params.vector_strategy == "auto":
+                    vectors.unpersist()
+            self.bc_vectors = self.spark.sparkContext.broadcast(self.vectors_dict)
         else:
             # the 100 TB path: vectors never touch the driver; persist so the
             # per-level join doesn't recompute the pivot each iteration
@@ -924,26 +928,29 @@ class TreeCompetition:
         n_chunks fits.
 
         Small stages run DRIVER-LOCAL (multiprocessing fork pool) when the
-        vectors are already on the driver (broadcast strategy) and the total
-        design work is below ``TAXAHFE_DRIVER_STAGE_MAX_CELLS`` (env,
-        default 64e6 entityxcompetitorxfit cells): a megabyte-scale stage
-        pays more in Spark scheduling + exchanges (~1 s/stage measured at
-        sf0.1) than in compute, the same size-gated driver fast-path rule as
-        dietml's small-n CV. Results are bit-identical: _run_group is a pure
-        function of (inputs, seeds) and partial sums reduce in chunk order
-        on both paths; cluster-scale inputs always take the Spark path (the
-        gate scales with n_entities, so it closes itself at scale)."""
+        vectors are already on the driver (broadcast strategy), the platform
+        can fork, and the total design work is within
+        ``DRIVER_STAGE_MAX_CELLS`` (``session.driver_side``): a
+        megabyte-scale stage pays more in Spark scheduling + exchanges (~1
+        s/stage measured at sf0.1) than in compute, the same size-gated
+        driver fast-path rule as dietml's small-n CV. Results are
+        bit-identical: _run_group is a pure function of (inputs, seeds) and
+        partial sums reduce in chunk order on both paths; cluster-scale
+        inputs always take the Spark path (the gate scales with n_entities,
+        so it closes itself at scale)."""
+        import multiprocessing as mp
+
         ranges = self._chunk_ranges(len(comps), n_chunks)
         if (
             self.strategy == "broadcast"
-            and self._driver_stage_cells(comps, n_chunks)
-            <= int(
-                os.environ.get("TAXAHFE_DRIVER_STAGE_MAX_CELLS", "64000000")
+            and "fork" in mp.get_all_start_methods()
+            and driver_side(
+                self._driver_stage_cells(comps, n_chunks), DRIVER_STAGE_MAX_CELLS
             )
         ):
             try:
                 return self._run_stage_local(comps, ranges, n_chunks)
-            except (ImportError, OSError) as e:  # no fork / pool failure
+            except (ImportError, OSError) as e:  # pool failure
                 _tlog(f"driver-local stage unavailable ({e}); Spark path")
         # "\x1f" separates the competition key from the chunk-range suffix —
         # a control char that cannot appear in taxonomy paths, so the
@@ -1036,9 +1043,16 @@ class TreeCompetition:
     def _ensure_local_ctx(self) -> None:
         label, cov, re_ind, re_time, remap = self.bc_ctx.value
         _LOCAL_STAGE_CTX[0] = (
-            self.bc_vectors.value, label, cov, re_ind, re_time, remap,
-            self.params,
+            self.vectors_dict, label, cov, re_ind, re_time, remap, self.params,
         )
+
+    def close(self) -> None:
+        """Release the per-run broadcasts (vectors and design context); the
+        caller keeps ``vectors_dict`` if it still needs the vectors."""
+        for bc in (self.bc_vectors, self.bc_ctx):
+            if bc is not None:
+                bc.destroy()
+        self.bc_vectors = self.bc_ctx = None
 
     def _close_local_pool(self) -> None:
         if self._local_pool is not None:

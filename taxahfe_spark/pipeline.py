@@ -19,13 +19,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from taxahfe_spark.naming import clean_entity, clean_entity_expr, clean_name, clean_names_df
-from taxahfe_spark.operators.competition import (
-    CompetitionParams,
-    TreeCompetition,
-    _tlog,
-)
+from taxahfe_spark.operators.competition import CompetitionParams, TreeCompetition
 from taxahfe_spark.operators.filters import feature_filter_flags
-from taxahfe_spark.taxonomy import hierarchical_rollup, melt_wide_matrix, to_feature_vectors
+from taxahfe_spark.taxonomy import (
+    ResolvedTree,
+    _tlog,
+    melt_wide_matrix,
+    resolve_tree,
+    to_feature_vectors,
+)
 
 
 def read_metadata(
@@ -175,225 +177,23 @@ def discretize_label(
     return out
 
 
-def _parent_str(p: str) -> str | None:
-    """Driver mirror of taxonomy.parent_path (any '|' -> strip last segment)."""
-    return p[: p.rfind("|")] if "|" in p else None
-
-
-class _DeferredLocalFrame:
-    """DataFrame stand-in whose local relation is built on first real use.
-
-    The driver-prefix fast path reconstructs ``resolved`` as driver-resident
-    pandas, but shipping those rows back to the JVM as a local relation costs
-    ~1.5-3 s at the sf0.1 flagship's 949k rows — and the two declared collapse
-    queries never consume the frame (winner_feature_matrix reads only the
-    ``_taxahfe_*`` handles and the session). This proxy defers the
-    ``createDataFrame`` until a consumer actually touches DataFrame API.
-
-    Deferral here is SAFE, unlike the deferred distributed level chain (see
-    hierarchical_rollup's defer_levels contract): the backing rows live in
-    driver memory, so late construction can never re-execute Spark work —
-    it only pays the same one-time serialization later, and exactly once.
-
-    Contract: attributes set on the proxy (the ``_taxahfe_*`` handles) are
-    answered from the proxy without building; ``sparkSession`` is answered
-    directly; ``unpersist`` on an unbuilt frame is a no-op (nothing was ever
-    persisted). Any other attribute or item access builds the real frame and
-    delegates to it forever after.
-    """
-
-    def __init__(self, spark, build):
-        object.__setattr__(self, "_lazy_spark", spark)
-        object.__setattr__(self, "_lazy_build", build)
-        object.__setattr__(self, "_lazy_df", None)
-
-    @property
-    def sparkSession(self) -> SparkSession:
-        return self._lazy_spark
-
-    def _materialize(self) -> DataFrame:
-        df = object.__getattribute__(self, "_lazy_df")
-        if df is None:
-            df = object.__getattribute__(self, "_lazy_build")()
-            # carry the attached handles over so readers that reached the
-            # real frame directly still see them
-            for k, v in list(self.__dict__.items()):
-                if k.startswith("_taxahfe_"):
-                    setattr(df, k, v)
-            object.__setattr__(self, "_lazy_df", df)
-        return df
-
-    def unpersist(self, *args, **kwargs):
-        df = object.__getattribute__(self, "_lazy_df")
-        if df is not None:
-            df.unpersist(*args, **kwargs)
-        return self
-
-    def __getattr__(self, name):
-        return getattr(self._materialize(), name)
-
-    def __getitem__(self, item):
-        return self._materialize()[item]
-
-
-def _driver_prefix(
-    base: DataFrame,
-    path_map: list[tuple[str, str, int]] | None,
-    meta_subjects: list[str],
-    filter_prevalence: float,
+def _driver_flags(
+    vectors: dict, n_entities: int, filter_prevalence: float,
     filter_mean_abundance: float,
-) -> tuple[list[str], list[str], dict, pd.DataFrame, pd.DataFrame]:
-    """Observed-wins rollup + filter flags + sparse design vectors computed
-    DRIVER-SIDE from the cached long frame, in one Arrow collect.
-
-    The broadcast-strategy competition collects every node's sparse vector
-    to the driver anyway, so below the driver budget the distributed prefix
-    (level-chain materialization, entity distinct, vectors groupBy, flags
-    job — 4 Spark jobs over data-sized frames) reduces to one Arrow
-    transfer of the base pairs plus taxonomy-sized numpy (guide §8: decide
-    with small rows). Semantics mirror hierarchical_rollup +
-    feature_filter_flags + to_feature_vectors exactly: observed nodes keep
-    their pairs verbatim, missing ancestors sum resolved children
-    (deterministically, children in sorted path order), prevalence counts
-    nonzero present values, mean divides by the full entity universe,
-    vector entries sort by (entity index, value).
-
-    Returns (present_entities_sorted, entity_ids, vectors_dict, flags_pdf,
-    resolved_pdf) — resolved_pdf is the full resolved long frame (path,
-    level, entity_id, value, observed) reconstructed driver-side so
-    taxa_hfe can hand callers a local-relation `resolved` instead of an
-    unmaterialized distributed level chain.
-    """
-    tbl = base.toArrow()
-    pdf = tbl.to_pandas()
-    raw_col = "__raw" if "__raw" in pdf.columns else "path"
-    # raw path -> (clean path, level): factorize once, map the small universe
-    rcodes, runiq = pd.factorize(pdf[raw_col])
-    if path_map is not None:
-        pmap = {r: (p, lvl) for r, p, lvl in path_map}
-        u_paths = [pmap[r][0] for r in runiq]
-        u_levels = {pmap[r][0]: pmap[r][1] for r in runiq}
-    else:
-        u_paths = list(runiq)
-        u_levels = {p: p.count("|") + 1 for p in u_paths}
-    # clean collisions merge distinct raws into one path: re-factorize
-    pcodes_u, puniq = pd.factorize(pd.Series(u_paths))
-    pcodes = pcodes_u[rcodes]
-    obs_paths = list(puniq)
-
-    ecodes, euniq = pd.factorize(pdf["entity_id"])
-    present = sorted(euniq)
-    present_set = set(present)
-    entity_ids = [s for s in meta_subjects if s in present_set]
-    n_entities = len(entity_ids)
-    # entity universe == meta INTERSECT data by construction upstream;
-    # unknown entities (slot -1) are dropped like the inner idx join
-    idx_map = {e: i for i, e in enumerate(entity_ids)}
-    slot = np.array([idx_map.get(e, -1) for e in euniq], dtype=np.int64)
-    eidx = slot[ecodes]
-    vals = pdf["value"].to_numpy(dtype=np.float64)
-    keep = eidx >= 0
-    pcodes, eidx, vals = pcodes[keep], eidx[keep], vals[keep]
-
-    # leaf vectors: rows grouped per path, entries sorted by (idx, value) —
-    # the array_sort((eidx, value)) layout of to_feature_vectors
-    order = np.lexsort((vals, eidx, pcodes))
-    pcodes_o, eidx_o, vals_o = pcodes[order], eidx[order], vals[order]
-    bounds = np.searchsorted(pcodes_o, np.arange(len(obs_paths) + 1))
-    vecs: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-    for k, p in enumerate(obs_paths):
-        lo, hi = bounds[k], bounds[k + 1]
-        vecs[p] = (
-            eidx_o[lo:hi].astype(np.int32),
-            vals_o[lo:hi],
-        )
-
-    # observed-wins rollup of MISSING ancestors (taxonomy-sized numpy):
-    # identical traversal to hierarchical_rollup's missing_by_level driver
-    # precompute — resolved(lvl) = observed(lvl) + missing parents of
-    # resolved(lvl+1); each missing parent is the elementwise sum of its
-    # resolved children
-    obs_by_level: dict[int, set[str]] = {}
-    for p in obs_paths:
-        obs_by_level.setdefault(u_levels[p], set()).add(p)
-    levels_dict: dict[str, int] = {p: u_levels[p] for p in obs_paths}
-    max_level = max(obs_by_level, default=0)
-    resolved_at = {max_level: sorted(obs_by_level.get(max_level, set()))}
-    for lvl in range(max_level - 1, 0, -1):
-        children_of: dict[str, list[str]] = {}
-        for q in resolved_at[lvl + 1]:
-            par = _parent_str(q)
-            if par:
-                children_of.setdefault(par, []).append(q)
-        obs_lvl = obs_by_level.get(lvl, set())
-        missing = sorted(set(children_of) - obs_lvl)
-        for p in missing:
-            # PRESENCE mask, not nonzero: the distributed groupBy emits a
-            # row for every entity present in ANY child even when the sums
-            # cancel to exactly 0.0 — mirror that so the reconstructed
-            # resolved frame and the design vectors are row-identical
-            acc = np.zeros(n_entities)
-            mask = np.zeros(n_entities, dtype=bool)
-            for q in sorted(children_of[p]):
-                i, v = vecs[q]
-                i64 = i.astype(np.int64)
-                np.add.at(acc, i64, v)
-                mask[i64] = True
-            pres = np.flatnonzero(mask)
-            vecs[p] = (pres.astype(np.int32), acc[pres])
-            levels_dict[p] = lvl
-        resolved_at[lvl] = sorted(obs_lvl | set(missing))
-
-    flags_rows = []
-    for p, (i, v) in vecs.items():
-        prev = int(np.count_nonzero(v))
+) -> pd.DataFrame:
+    """feature_filter_flags over driver-held sparse vectors: prevalence
+    counts nonzero present values, the mean divides by the full entity
+    universe (absent pairs are implicit zeros), strict > on both."""
+    rows = []
+    for p, (_, v) in vectors.items():
         mean = float(v.sum()) / n_entities if n_entities else 0.0
-        flags_rows.append(
-            {
-                "path": p,
-                "level": int(levels_dict[p]),
-                "passed_filters": (
-                    prev > n_entities * filter_prevalence
-                    and mean > filter_mean_abundance
-                ),
-            }
-        )
-    flags_pdf = pd.DataFrame(flags_rows)
-
-    # resolved reconstruction: observed rows verbatim from the base pairs
-    # (cleaned path + level, duplicates preserved), missing ancestors from
-    # the rollup above — the exact content the distributed level chain
-    # would materialize, as driver arrays (gated smallness by construction)
-    ent_arr = np.asarray(entity_ids, dtype=object)
-    obs_paths_arr = np.asarray(obs_paths, dtype=object)
-    res_parts = [
-        pd.DataFrame(
-            {
-                "path": obs_paths_arr[pcodes],
-                "level": np.asarray(
-                    [u_levels[p] for p in obs_paths], dtype=np.int64
-                )[pcodes],
-                "entity_id": ent_arr[eidx],
-                "value": vals,
-                "observed": True,
-            }
-        )
-    ]
-    for p in sorted(set(vecs) - set(obs_paths)):
-        i, v = vecs[p]
-        res_parts.append(
-            pd.DataFrame(
-                {
-                    "path": p,
-                    "level": int(levels_dict[p]),
-                    "entity_id": ent_arr[i.astype(np.int64)],
-                    "value": v,
-                    "observed": False,
-                }
-            )
-        )
-    resolved_pdf = pd.concat(res_parts, ignore_index=True)
-    return present, entity_ids, vecs, flags_pdf, resolved_pdf
+        rows.append((
+            p,
+            p.count("|") + 1,
+            int(np.count_nonzero(v)) > n_entities * filter_prevalence
+            and mean > filter_mean_abundance,
+        ))
+    return pd.DataFrame(rows, columns=["path", "level", "passed_filters"])
 
 
 def taxa_hfe(
@@ -405,7 +205,7 @@ def taxa_hfe(
     from_reference_levels: bool = False,
     resume_dir: str | None = None,
     k_splits: int = 3,
-) -> tuple[DataFrame, pd.DataFrame]:
+) -> tuple[ResolvedTree, pd.DataFrame]:
     """Run the full HFE collapse.
 
     ``k_splits``: kmeans bin count for discretizing a numeric response under
@@ -430,8 +230,13 @@ def taxa_hfe(
     sample.fraction analog); the taxonomy/abundance side stays fully
     distributed either way and has no such bound.
 
-    Returns (resolved long frame with per-node values, node-state pandas frame
-    with winner/sf_winner flags and audit outcomes).
+    Returns (tree, state). ``tree`` is the :class:`ResolvedTree` of the
+    metadata subjects' rows (taxonomy.resolve_tree decides driver vs
+    distributed once): ``tree.frame()`` is the resolved long frame with
+    per-node values, built on first call; ``tree.vectors`` holds every
+    node's sparse vector whenever the competition had them on the driver.
+    ``state`` is the node-state pandas frame with winner/sf_winner flags and
+    audit outcomes.
     """
     params = params or CompetitionParams()
     if from_reference_levels:
@@ -460,149 +265,35 @@ def taxa_hfe(
     long = hierarchical_long.withColumn(
         "entity_id", clean_entity_expr("entity_id")
     ).join(F.broadcast(ids_df), "entity_id", "left_semi")
-
-    # the rollup checkpoints its levels, so after the first action below
-    # `resolved` is served from stored blocks for every later consumer.
-    # COALESCE the union first: it stacks max_level per-level shuffles
-    # (~200 narrow partitions at default config) and five downstream
-    # consumers (entity distinct, flags, vectors, winner pivot, final
-    # materialize) each paid ~200 near-empty task launches per scan —
-    # measured ~10 s/scan of pure scheduling at sf0.1 local[8]. Target is
-    # parallelism-sized, never below the source count on a big cluster.
-    spark_par = metadata.sparkSession.sparkContext.defaultParallelism
     _tlog(f"taxa_hfe: meta prep {_time.time()-_t0:.2f}s")
     _t0 = _time.time()
-    # DEFERRED levels: the rollup's only actions here are the base cache
-    # fill + the taxonomy-sized mapping collect. If the driver-prefix fast
-    # path wins below, the distributed level chain is never needed (the
-    # returned `resolved` is replaced by a driver-reconstructed local
-    # relation); if the distributed path runs, the rollup is re-issued with
-    # level checkpoints (its base plan matches the already-filled cache, so
-    # the re-issue costs the level chain only — exactly the r7 build)
-    rolled = hierarchical_rollup(long, defer_levels=True)
-    resolved = rolled.coalesce(max(2 * spark_par, 16))
-    # coalesce() returns a new frame: re-attach the rollup's scratch-cache
-    # handle so the unpersist below still finds it
-    resolved._taxahfe_scratch = getattr(rolled, "_taxahfe_scratch", None)
-
+    tree = resolve_tree(long, entity_order=meta_pdf["subject_id"].tolist())
     # the design universe is metadata INTERSECT data subjects (reference
     # lib/tree.R:177-178 prunes data columns to metadata, and every
     # downstream denominator/merge is over the data's sample columns);
     # metadata-only subjects contribute neither filter denominators nor
-    # competition rows
-    _tlog(f"taxa_hfe: meta+rollup build {_time.time()-_t0:.2f}s")
-    _t0 = _time.time()
-    # Driver-prefix fast path (guide §8 — decide with small rows): below the
-    # driver budget the whole prefix (entity distinct, rollup level chain,
-    # flags, vector build + collect) reduces to one Arrow transfer of the
-    # cached base pairs plus taxonomy-sized numpy — the competition's
-    # broadcast strategy collects exactly these vectors anyway. The gate is
-    # row-based and scale-adaptive: past TAXAHFE_DRIVER_PREFIX_MAX_ROWS
-    # (env, default 2M — roughly where a single-threaded collect stops
-    # beating the 4-job distributed prefix on a 32-core box) the original
-    # distributed path runs unchanged, as it always does for the shuffle
-    # vector strategy.
-    import os as _os
-
-    base_info = getattr(rolled, "_taxahfe_base", None)
-    vecs_dict = None
-    use_driver_prefix = False
-    if base_info is not None and params.vector_strategy != "shuffle":
-        base_df, path_map = base_info
-        max_rows = int(
-            _os.environ.get("TAXAHFE_DRIVER_PREFIX_MAX_ROWS", "2000000")
+    # competition rows. tree.entities keeps metadata order, so it indexes
+    # the label/covariate rows below.
+    entity_ids = tree.entities
+    meta_pdf = meta_pdf[meta_pdf["subject_id"].isin(set(entity_ids))].reset_index(
+        drop=True
+    )
+    if tree.on_driver:
+        vectors = tree.vectors
+        flags_pdf = _driver_flags(
+            vectors, len(entity_ids), filter_prevalence, filter_mean_abundance
         )
-        # count served from the cache the rollup's distinct collect filled
-        use_driver_prefix = base_df.count() <= max_rows
-    if use_driver_prefix:
-        present_list, entity_ids, vecs_dict, flags_pdf, resolved_pdf = (
-            _driver_prefix(
-                base_df,
-                path_map,
-                meta_pdf["subject_id"].tolist(),
-                filter_prevalence,
-                filter_mean_abundance,
-            )
-        )
-        present = set(present_list)
-        scratch = getattr(resolved, "_taxahfe_scratch", None)
-        if scratch is not None:
-            scratch.unpersist()
-        meta_pdf = meta_pdf[meta_pdf["subject_id"].isin(present)].reset_index(
-            drop=True
-        )
-        # the deferred distributed chain is UNSAFE to materialize (see
-        # hierarchical_rollup's defer_levels contract) — replace the
-        # returned frame with the driver-reconstructed resolved content
-        # (identical rows; gated smallness by construction). The local
-        # relation itself is built on FIRST USE (_DeferredLocalFrame): the
-        # declared collapse queries consume only the _taxahfe_* handles, so
-        # they skip the ~1.5-3 s row serialization outright, while flagship
-        # consumers (summary/v1/oudah sinks, dietML) build it transparently
-        # from the driver-held pandas at the same one-time cost
-        _resolved_schema = (
-            "path string, level int, entity_id string, "
-            "value double, observed boolean"
-        )
-        resolved = _DeferredLocalFrame(
-            spark,
-            lambda: spark.createDataFrame(resolved_pdf, schema=_resolved_schema),
-        )
-        resolved._taxahfe_entities = present_list
-        # lazy frame only for TreeCompetition's session handle / shuffle
-        # fallback — never materialized when the dict broadcast wins
-        vectors = _DeferredLocalFrame(
-            spark,
-            lambda: to_feature_vectors(resolved._materialize(), entity_ids),
-        )
-        _tlog(f"taxa_hfe: driver prefix {_time.time()-_t0:.2f}s")
-        _t0 = _time.time()
     else:
-        # re-issue the rollup WITH level checkpoints (the deferred frame is
-        # unsafe to consume); its base subtree matches the already-filled
-        # cache, so this pays the level chain once — the r7 build shape.
-        # allow_driver=False: this branch exists precisely because the data
-        # is past the driver budget or the caller forced the distributed
-        # vector strategy — the rollup must stay distributed with it
-        rolled = hierarchical_rollup(long, allow_driver=False)
-        resolved = rolled.coalesce(max(2 * spark_par, 16))
-        resolved._taxahfe_scratch = getattr(rolled, "_taxahfe_scratch", None)
-        present = {
-            r["entity_id"]
-            for r in resolved.select("entity_id").distinct().collect()
-        }
-        _tlog(
-            f"taxa_hfe: rollup materialize + entity distinct "
-            f"{_time.time()-_t0:.2f}s"
-        )
-        _t0 = _time.time()
-        # ^ that action materialized every level cache; the rollup's scratch
-        # cache can go (ADVICE: repeated invocations must not accumulate)
-        scratch = getattr(resolved, "_taxahfe_scratch", None)
-        if scratch is not None:
-            scratch.unpersist()
-        meta_pdf = meta_pdf[meta_pdf["subject_id"].isin(present)].reset_index(
-            drop=True
-        )
-        entity_ids = meta_pdf["subject_id"].tolist()
-        # the data's entity universe is already on the driver: hand it to
-        # winner_feature_matrix (via the same attribute idiom as the scratch
-        # handle) so the export does not pay ANOTHER full distinct scan of
-        # resolved for a list this function already computed
-        resolved._taxahfe_entities = sorted(present)
-
         # Vectors FIRST, flags FROM the vectors: both filter statistics are
         # pure functions of a path's (entity, value) pairs, and the vector
         # frame already groups exactly those pairs per path — so the filter
         # pass is a map-only job over the taxonomy-sized vector frame
         # instead of a second full groupBy scan + shuffle of resolved
         # (measured ~0.6 s at sf0.1). Semantics identical to
-        # feature_filter_flags (strict > on both, absent pairs are implicit
-        # zeros: prevalence counts nonzero PRESENT values and the mean
-        # divides by the full entity universe). The persist is released
+        # feature_filter_flags and _driver_flags. The persist is released
         # after the competition (TreeCompetition's auto branch also
         # unpersists once it has chosen a delivery strategy).
-        vectors = to_feature_vectors(resolved, entity_ids).persist()
+        vectors = to_feature_vectors(tree.frame(), entity_ids).persist()
         flags_pdf = (
             vectors.select(
                 "path",
@@ -622,8 +313,8 @@ def taxa_hfe(
             )
             .toPandas()
         )
-        _tlog(f"taxa_hfe: vectors + flags {_time.time()-_t0:.2f}s")
-        _t0 = _time.time()
+    _tlog(f"taxa_hfe: rollup + vectors + flags {_time.time()-_t0:.2f}s")
+    _t0 = _time.time()
     re_individual = re_time = None
     if params.random_effects:
         # reference lib/tree.R:116-131: individual/time required; a numeric
@@ -651,22 +342,21 @@ def taxa_hfe(
     comp = TreeCompetition(
         vectors, flags_pdf, label, cov, params,
         re_individual=re_individual, re_time=re_time,
-        vectors_dict=vecs_dict,
     )
     _tlog(f"taxa_hfe: competition init {_time.time()-_t0:.2f}s")
     _t0 = _time.time()
     try:
         state = comp.run(resume_dir=resume_dir)
     finally:
-        vectors.unpersist()  # no-op when TreeCompetition already released it
+        comp.close()
+        if not tree.on_driver:
+            vectors.unpersist()  # no-op when TreeCompetition already released it
     _tlog(f"taxa_hfe: competition run {_time.time()-_t0:.2f}s")
-    if comp.bc_vectors is not None:
-        # the broadcast-strategy vector dict is already driver-resident:
-        # hand it to winner_feature_matrix (same attribute idiom as
-        # _taxahfe_entities) so the winner pivot can be assembled driver-
-        # side instead of re-scanning resolved for a taxonomy-sized slice
-        resolved._taxahfe_vecs = (entity_ids, comp.bc_vectors.value)
-    return resolved, state
+    if tree.vectors is None:
+        # a broadcast competition collected the vectors to the driver: the
+        # winner matrix then densifies them instead of re-scanning resolved
+        tree.vectors = comp.vectors_dict
+    return tree, state
 
 
 def levels_tree(
@@ -689,70 +379,64 @@ def levels_tree(
     long = hierarchical_long.withColumn(
         "entity_id", clean_entity_expr("entity_id")
     ).join(F.broadcast(ids_df), "entity_id", "left_semi")
-    resolved = hierarchical_rollup(long)
-    n_entities = resolved.select("entity_id").distinct().count()
-    scratch = getattr(resolved, "_taxahfe_scratch", None)
-    if scratch is not None:
-        scratch.unpersist()
+    tree = resolve_tree(long)
+    resolved = tree.frame()
     flags = feature_filter_flags(
-        resolved, n_entities, filter_prevalence, filter_mean_abundance
+        resolved, len(tree.entities), filter_prevalence, filter_mean_abundance
     )
     return resolved, flags.select("path", "level", "passed_filters").toPandas()
 
 
 def winner_feature_matrix(
-    resolved: DataFrame,
+    tree: ResolvedTree | DataFrame,
     state: pd.DataFrame,
     metadata: DataFrame | None = None,
     use_super_filter: bool = False,
 ) -> DataFrame:
     """Collapsed output matrix: one row per entity, one column per winning
     feature (reference lib/tree.R:880-950 prepare_flattened_df +
-    write_output_file). Winner count is small by construction, so the pivot
-    is a bounded-width groupBy."""
+    write_output_file).
+
+    ``tree`` is taxa_hfe's :class:`ResolvedTree`, or any resolved long frame
+    (e.g. a hierarchical_rollup result). A tree already knows its entities,
+    and when its vectors are on the driver the winner columns (winner count
+    x entities — small by construction, the whole point of the collapse)
+    densify locally and ship back as ONE Arrow createDataFrame, leaving
+    ``tree.frame()`` unbuilt. Otherwise the winners are a filter + pivot of
+    the resolved frame — winner count is small, so a bounded-width groupBy.
+    Both give the same values: present pairs keep their value, absent pairs
+    are zeros."""
     flag = "sf_winner" if use_super_filter else "winner"
     winners = [r.path for r in state[state[flag]].itertuples()]
     # ALL data entities appear in the output, even those whose every winner
     # value is an implicit zero (the reference's transposed flattened frame
-    # keeps one row per sample column regardless of abundance). taxa_hfe
-    # attaches the already-collected entity universe; fall back to a
-    # distinct scan for frames from other producers
-    known = getattr(resolved, "_taxahfe_entities", None)
-    if known is not None:
-        entities = resolved.sparkSession.createDataFrame(
-            [(e,) for e in known], ["subject_id"]
+    # keeps one row per sample column regardless of abundance)
+    if isinstance(tree, ResolvedTree):
+        spark, entity_ids, vecs = tree.spark, tree.entities, tree.vectors
+        entities = spark.createDataFrame(  # key=str: a null id sorts too
+            [(e,) for e in sorted(entity_ids, key=str)], "subject_id string"
         )
     else:
-        entities = resolved.select(
-            F.col("entity_id").alias("subject_id")
-        ).distinct()
-    vecs_ctx = getattr(resolved, "_taxahfe_vecs", None)
+        spark, vecs = tree.sparkSession, None
+        entities = tree.select(F.col("entity_id").alias("subject_id")).distinct()
     if not winners:
         base = entities
     elif (
-        vecs_ctx is not None
-        and all(w in vecs_ctx[1] for w in winners)
-        and len(vecs_ctx[0]) * len(winners) <= 50_000_000
+        vecs is not None
+        and all(w in vecs for w in winners)
+        and len(entity_ids) * len(winners) <= 50_000_000
         and len({clean_name(w) for w in winners}) == len(winners)
     ):
-        # driver fast path: taxa_hfe's broadcast-strategy competition
-        # already collected every node's sparse vector, so the winner
-        # matrix (winner count x entities — small by construction, the
-        # whole point of the collapse) densifies locally and ships back as
-        # ONE Arrow createDataFrame instead of a filter+pivot re-scan of
-        # resolved. Values identical to the pivot: present pairs keep their
-        # value, absent pairs are the same zeros na.fill produced. The cell
-        # gate falls back to the distributed pivot for pathological winner
-        # counts.
-        w_entities, vecs = vecs_ctx
-        pdf = pd.DataFrame({"subject_id": list(w_entities)})
+        # the cell gate falls back to the pivot for pathological winner counts
+        pdf = pd.DataFrame({"subject_id": list(entity_ids)})
         for w in winners:
             idxs, vals = vecs[w]
-            col = np.zeros(len(w_entities))
+            col = np.zeros(len(entity_ids))
             col[np.asarray(idxs, dtype=np.int64)] = vals
             pdf[clean_name(w)] = col
-        base = resolved.sparkSession.createDataFrame(pdf)
+        base = spark.createDataFrame(pdf)
     else:
+        resolved = tree.frame() if isinstance(tree, ResolvedTree) else tree
         pivoted = (
             resolved.filter(F.col("path").isin(winners))
             .groupBy(F.col("entity_id").alias("subject_id"))

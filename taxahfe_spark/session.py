@@ -16,6 +16,15 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def driver_side(size: int, limit: int) -> bool:
+    """The one driver-vs-distributed policy: work of ``size`` units runs on
+    the driver when it is at most ``limit`` (each caller's named constant),
+    unless ``TAXAHFE_DISTRIBUTED=1`` pins every caller to its distributed
+    path — the parity tests and the scaling runner need those paths at
+    small sizes."""
+    return size <= limit and os.environ.get("TAXAHFE_DISTRIBUTED") != "1"
+
+
 def get_spark(
     app_name: str = "taxahfe_spark",
     master: str | None = None,

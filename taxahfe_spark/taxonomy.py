@@ -2,21 +2,27 @@
 
 Re-expresses the reference's mutable ``data.tree`` graph (reference:
 lib/tree.R:396-449 build_tree, lib/tree.R:372-388 fix_unpopulated_node) as
-pure DataFrame transformations:
+DataFrame transformations plus one taxonomy-sized driver kernel:
 
 - the *tree* is just the set of distinct path prefixes of the observed rows
   (small — broadcastable even for 10^5-node taxonomies);
-- the *per-node abundance state* is a long (path, entity_id, value) frame
-  (big — stays distributed, shuffle-partitioned on (path, entity_id));
-- post-order traversal becomes a driver loop over levels from deepest to
-  shallowest; within a level every node is independent, so each iteration is
-  ONE map-side-combined groupBy — no per-node work, no driver data movement.
+- the *per-node abundance state* is a long (path, entity_id, value) frame;
+- :func:`resolve_tree` turns that frame into a :class:`ResolvedTree` and
+  decides driver vs distributed ONCE, on the measured row count
+  (``session.driver_side``). Small inputs are collected in one Arrow
+  transfer and rolled up by one numpy kernel, which also yields every
+  node's sparse vector. Large ones run the distributed level chain:
+  post-order traversal becomes a driver loop over levels from deepest to
+  shallowest; within a level every node is independent, so each iteration
+  is ONE map-side-combined groupBy — no per-node work, no driver data
+  movement.
 
 Correctness-critical invariant ("observed wins", lib/tree.R:374-376): a node
 that appears in the input keeps its own vector verbatim; only missing
 ancestors are synthesized as the elementwise sum of their (already-resolved)
 children, so grandchildren roll up transitively exactly like the reference's
-post-order ``fix_unpopulated_node``.
+post-order ``fix_unpopulated_node``. Both paths produce the same rows
+(tests/test_taxonomy.py::test_driver_rollup_parity_with_distributed).
 
 Level convention: ``level == size(split(path, '|'))`` (number of path
 segments). The reference counts its synthetic root as level 1, so
@@ -26,13 +32,29 @@ bounds (see pipeline.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import os
+import sys
+import time
+from dataclasses import dataclass, field
+from typing import Callable
+
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from taxahfe_spark.naming import clean_value_col
+from taxahfe_spark.session import driver_side
 
 PATH_SEP = "|"
 _SPLIT_RE = r"\|"
+
+_DEBUG_TIMING = os.environ.get("TAXAHFE_DEBUG_TIMING") == "1"
+
+
+def _tlog(msg: str) -> None:
+    if _DEBUG_TIMING:
+        print(f"[timing] {msg}", file=sys.stderr, flush=True)
 
 
 def parent_path(col) -> F.Column:
@@ -108,58 +130,77 @@ def melt_wide_matrix(
     )
 
 
-def _driver_rollup_pdf(pdf, raw_map):
-    """Observed-wins rollup computed DRIVER-SIDE from the collected base
-    pairs — the exact content the distributed level chain materializes,
-    as one pandas frame (r8 guide §8: decide with small rows).
+# the driver kernel's budget: base rows collected through one Arrow transfer
+# (a few hundred MB of driver memory; roughly where one single-threaded
+# collect stops beating the distributed level chain on a 32-core box)
+DRIVER_MAX_ROWS = 2_000_000
 
-    Mirrors pipeline._driver_prefix's resolved reconstruction (minus the
-    metadata entity pruning, which the plain rollup does not do): observed
-    rows keep their (possibly duplicated) pairs verbatim; each MISSING
-    ancestor gets one row per entity PRESENT in any resolved child (even
-    when the sums cancel to exactly 0.0 — the groupBy-presence semantics),
-    values summed over child rows with children visited in sorted path
-    order. ``raw_map`` is the (raw, clean path, level) mapping for
-    clean_paths inputs (collision-merging included) or None for identity.
+RESOLVED_SCHEMA = (
+    "path string, level int, entity_id string, value double, observed boolean"
+)
+
+
+def _entity_order(present: set, first: list[str] | None) -> list:
+    """``first`` (e.g. metadata order) restricted to ``present``, then the
+    remaining present ids sorted, a null id last."""
+    head = [e for e in first or () if e in present]
+    rest = present.difference(head)
+    return head + sorted(rest - {None}) + [None] * (None in rest)
+
+
+def _observed_wins(pdf, raw_map, entity_order):
+    """The driver kernel: observed-wins rollup of the collected base pairs
+    in numpy — the content the distributed level chain materializes.
+
+    Observed rows keep their (possibly duplicated) pairs verbatim; each
+    MISSING ancestor gets one entry per entity present in any resolved
+    child (even when the sums cancel to exactly 0.0 — the groupBy-presence
+    semantics), summed over its children in sorted path order. ``raw_map``
+    maps raw to clean path for clean_paths inputs (collision-merging
+    included), None for identity. A node's level is its segment count, as
+    ``path_level`` computes it. The input holds no null entity or value
+    (resolve_tree routes those to the level chain).
+
+    Returns (entities, vectors, build): ``vectors`` maps every node to its
+    sparse (int32 entity indices, float64 values), entries sorted by
+    (index, value) — the to_feature_vectors layout; ``build()`` assembles
+    the resolved long pandas frame.
     """
-    import numpy as np
-    import pandas as pd
-
     if raw_map is not None:
         rcodes, runiq = pd.factorize(pdf["__raw"])
-        pmap = {r: (p, lvl) for r, p, lvl in raw_map}
-        u_paths = [pmap[r][0] for r in runiq]
-        u_lvls = [pmap[r][1] for r in runiq]
+        u_paths = [raw_map[r] for r in runiq]
     else:
         rcodes, runiq = pd.factorize(pdf["path"])
         u_paths = list(runiq)
-        u_lvls = [p.count("|") + 1 for p in u_paths]
     # clean collisions merge distinct raws into one path: re-factorize
     pcodes_u, puniq = pd.factorize(pd.Series(u_paths))
     pcodes = pcodes_u[rcodes]
     obs_paths = list(puniq)
-    levels: dict[str, int] = {}
-    for p, lvl in zip(u_paths, u_lvls):
-        levels[p] = int(lvl)
 
     ecodes, euniq = pd.factorize(pdf["entity_id"])
-    n_ent = len(euniq)
+    entities = _entity_order(set(euniq), entity_order)
+    slot = {e: i for i, e in enumerate(entities)}
+    eidx = np.asarray([slot[e] for e in euniq], dtype=np.int64)[ecodes]
     vals = pdf["value"].to_numpy(dtype=np.float64)
-    order = np.lexsort((vals, ecodes, pcodes))
-    p_o, e_o, v_o = pcodes[order], ecodes[order], vals[order]
+    n_ent = len(entities)
+
+    order = np.lexsort((vals, eidx, pcodes))
+    p_o, e_o, v_o = pcodes[order], eidx[order], vals[order]
     bounds = np.searchsorted(p_o, np.arange(len(obs_paths) + 1))
-    vecs = {
-        p: (e_o[bounds[k]: bounds[k + 1]], v_o[bounds[k]: bounds[k + 1]])
+    vectors = {
+        p: (e_o[bounds[k]: bounds[k + 1]].astype(np.int32), v_o[bounds[k]: bounds[k + 1]])
         for k, p in enumerate(obs_paths)
     }
 
-    obs_by_level: dict[int, set] = {}
+    # resolved(lvl) = observed(lvl) + missing parents of resolved(lvl + 1);
+    # each missing parent sums its resolved children
+    obs_by_level: dict[int, set[str]] = {}
     for p in obs_paths:
-        obs_by_level.setdefault(levels[p], set()).add(p)
+        obs_by_level.setdefault(p.count("|") + 1, set()).add(p)
     max_level = max(obs_by_level)
-    resolved_at = sorted(obs_by_level.get(max_level, set()))
+    resolved_at = sorted(obs_by_level[max_level])
     for lvl in range(max_level - 1, 0, -1):
-        children_of: dict[str, list] = {}
+        children_of: dict[str, list[str]] = {}
         for q in resolved_at:
             par = q[: q.rfind("|")] if "|" in q else None
             if par:
@@ -169,80 +210,104 @@ def _driver_rollup_pdf(pdf, raw_map):
         for p in missing:
             acc = np.zeros(n_ent)
             mask = np.zeros(n_ent, dtype=bool)
-            for q in sorted(children_of[p]):
-                i, v = vecs[q]
-                i64 = i.astype(np.int64)
-                np.add.at(acc, i64, v)
-                mask[i64] = True
+            for q in children_of[p]:
+                i, v = vectors[q]
+                np.add.at(acc, i, v)
+                mask[i] = True
             pres = np.flatnonzero(mask)
-            vecs[p] = (pres, acc[pres])
-            levels[p] = lvl
+            vectors[p] = (pres.astype(np.int32), acc[pres])
         resolved_at = sorted(obs_lvl | set(missing))
 
-    ent_arr = np.asarray(list(euniq), dtype=object)
-    obs_paths_arr = np.asarray(obs_paths, dtype=object)
-    lvl_by_code = np.asarray([levels[p] for p in obs_paths], dtype=np.int64)
-    parts = [
-        pd.DataFrame(
+    def build() -> pd.DataFrame:
+        # observed rows verbatim, then the missing ancestors (dict order)
+        miss = list(vectors)[len(obs_paths):]
+        sizes = [len(vectors[p][0]) for p in miss]
+
+        def level_of(paths):
+            return np.asarray([p.count("|") + 1 for p in paths], dtype=np.int64)
+
+        return pd.DataFrame(
             {
-                "path": obs_paths_arr[pcodes],
-                "level": lvl_by_code[pcodes],
-                "entity_id": ent_arr[ecodes],
-                "value": vals,
-                "observed": True,
+                "path": np.concatenate([
+                    np.asarray(obs_paths, dtype=object)[pcodes],
+                    np.repeat(np.asarray(miss, dtype=object), sizes),
+                ]),
+                "level": np.concatenate([
+                    level_of(obs_paths)[pcodes], np.repeat(level_of(miss), sizes)
+                ]),
+                "entity_id": np.asarray(entities, dtype=object)[
+                    np.concatenate([eidx, *(vectors[p][0] for p in miss)])
+                ],
+                "value": np.concatenate([vals, *(vectors[p][1] for p in miss)]),
+                "observed": np.arange(len(pcodes) + sum(sizes)) < len(pcodes),
             }
         )
-    ]
-    for p in sorted(set(vecs) - set(obs_paths)):
-        i, v = vecs[p]
-        parts.append(
-            pd.DataFrame(
-                {
-                    "path": p,
-                    "level": int(levels[p]),
-                    "entity_id": ent_arr[i.astype(np.int64)],
-                    "value": v,
-                    "observed": False,
-                }
-            )
-        )
-    return pd.concat(parts, ignore_index=True)
+
+    return entities, vectors, build
 
 
-def hierarchical_rollup(
+@dataclass(eq=False)
+class ResolvedTree:
+    """The observed-wins rollup of one long frame, with the driver-vs-
+    distributed decision already made (``on_driver``).
+
+    ``entities`` fixes the entity index order of ``vectors``. ``vectors``
+    maps every node path to its sparse (int32 entity indices, float64
+    values); the driver kernel fills it, and on the distributed path it is
+    ``None`` until taxa_hfe's broadcast competition fills it. ``frame()`` is
+    the resolved long DataFrame (path, level, entity_id, value, observed),
+    built on first call and cached — a driver tree whose consumers only read
+    the vectors never ships its rows to the JVM.
+    """
+
+    spark: SparkSession
+    entities: list
+    vectors: dict | None
+    on_driver: bool
+    _build: Callable[[], DataFrame] | None = field(default=None, repr=False)
+    _frame: DataFrame | None = field(default=None, repr=False)
+
+    def frame(self) -> DataFrame:
+        if self._frame is None:
+            self._frame = self._build()
+        return self._frame
+
+
+def resolve_tree(
     long_df: DataFrame,
     clean_paths: bool = True,
     checkpoint: bool = True,
-    defer_levels: bool = False,
-    allow_driver: bool = True,
-) -> DataFrame:
-    """Observed-wins hierarchical rollup (reference: lib/tree.R:372-449).
+    entity_order: list[str] | None = None,
+) -> ResolvedTree:
+    """Long frame (clade_name, entity_id, value) -> :class:`ResolvedTree`,
+    deciding driver vs distributed once.
 
-    Input: long frame (clade_name, entity_id, value) — one row per observed
-    (feature-path, entity) pair; absent pairs are implicit zeros.
+    The base projection is cached and its distinct paths collected (the
+    clean regex runs on those only). Then ONE job over the cache measures
+    the rows and counts the null/NaN entity ids and values, and:
 
-    Output: resolved long frame (path, level, entity_id, value, observed)
-    covering EVERY node of the taxonomy: observed nodes keep their input
-    vector verbatim; unobserved ancestors get the elementwise sum of their
-    resolved children (transitive, deepest-first).
+    - below ``DRIVER_MAX_ROWS`` (``session.driver_side``), with no nulls
+      and ``checkpoint`` on, the base is collected in one Arrow transfer
+      and rolled up by the numpy kernel — vectors included, the frame built
+      only on demand;
+    - otherwise the distributed level chain runs: one shuffle per level
+      that has missing parents (groupBy(parent, entity) with map-side
+      partial aggregation, broadcast semi-join of the taxonomy-sized
+      missing set), a lazy ``localCheckpoint`` per level, then one
+      entity-distinct action that materializes every level. The checkpoint
+      is MANDATORY for consumers: without it each level's plan nests the
+      previous level's and Spark re-executes deep levels combinatorially on
+      every action (measured ~100 s per action on a 7-level tree).
+      ``checkpoint=False`` exists for plan inspection only.
 
-    Scale shape: one shuffle per level (groupBy(parent, entity) with map-side
-    partial aggregation), broadcast semi-join of the taxonomy-sized missing
-    sets, localCheckpoint per level to truncate lineage — MANDATORY for any
-    consumer: without it each missing level's plan nests the previous
-    level's, so Spark re-executes deep levels combinatorially on every
-    action (r8 measured a 7-level tree at ~100 s PER ACTION when per-level
-    truncation was replaced by lazy persist markers; the eager checkpoint
-    computes each level exactly once from the previous level's stored
-    blocks). ``defer_levels=True`` skips the truncation and returns raw
-    lazy level plans — STRICTLY for callers that never materialize the
-    result (taxa_hfe's driver-prefix fast path, which replaces the frame
-    before returning it); materializing a deferred result on a deep tree
-    is the combinatorial case above.
+    Nulls go to the chain because its ``F.sum`` skips null values, keeps
+    null entity ids as their own group and keeps NaN, which the kernel does
+    not model. ``entity_order`` (taxa_hfe: metadata order) leads the entity
+    index; other entities follow sorted. The base cache is released before
+    returning.
     """
     spark = long_df.sparkSession
-    import os as _os, sys as _sys, time as _time
-    _t0 = _time.time()
+    t0 = time.time()
     if clean_paths:
         # The janitor-style clean regex is data-INVARIANT per distinct path,
         # and distinct paths are taxonomy-sized by contract (<= ~1e5) while
@@ -272,12 +337,12 @@ def hierarchical_rollup(
         )
         map_rows = map_df.collect()  # taxonomy-sized; materializes the cache
         obs_pairs = {(r["path"], r["level"]) for r in map_rows}
+        raw_map = {r["__raw"]: r["path"] for r in map_rows}
         observed = base.join(F.broadcast(map_df), "__raw").select(
             "path", "entity_id", "value", "level"
         )
-        scratch = base
     else:
-        observed = (
+        observed = base = (
             long_df.select(
                 F.col("clade_name").cast("string").alias("path"),
                 F.col("entity_id").cast("string").alias("entity_id"),
@@ -288,9 +353,7 @@ def hierarchical_rollup(
             # re-sliced once per level (filter level == lvl) and the in-memory
             # columnar relation serves those with stats-based batch pruning;
             # checkpoint blocks are row-format and rescan everything (measured
-            # 3.6x slower end-to-end). Callers that materialize the result can
-            # release it via the attached `_taxahfe_scratch` handle (taxa_hfe
-            # does); one cached input frame is the cost for direct callers.
+            # 3.6x slower end-to-end)
             .persist()
         )
         # distinct observed paths per level — tiny, broadcast into anti-joins.
@@ -300,57 +363,46 @@ def hierarchical_rollup(
             (r["path"], r["level"])
             for r in observed.select("path", "level").distinct().collect()
         }
-        scratch = observed
+        raw_map = None
+    if any(path is None for path, _ in obs_pairs):
+        base.unpersist()
+        raise ValueError(
+            "clade_name holds null values: every row needs a taxonomy path"
+        )
     obs_paths_by_level: dict[int, list[str]] = {}
     for path, level in obs_pairs:
         # taxonomy-sized (<=1e5), not data-sized
         obs_paths_by_level.setdefault(level, []).append(path)
-    if _os.environ.get("TAXAHFE_DEBUG_TIMING") == "1":
-        print(f"[timing] rollup: observed persist + distinct collect "
-              f"{_time.time()-_t0:.2f}s", file=_sys.stderr, flush=True)
-    max_level = max(obs_paths_by_level, default=None)
-    if max_level is None:
-        return observed.select(
+    _tlog(f"rollup: observed persist + distinct collect {time.time()-t0:.2f}s")
+    if not obs_paths_by_level:
+        base.unpersist()
+        empty = observed.select(
             "path", "level", "entity_id", "value", F.lit(True).alias("observed")
         ).limit(0)
+        return ResolvedTree(spark, [], None, False, _frame=empty)
 
-    # Driver fast path (r8, guide §8 — decide with small rows): below the
-    # row gate the whole level chain (one localCheckpoint job per level —
-    # ~1 s of pure scheduling at sf0.1's 3-level/15k-row hfe inputs)
-    # reduces to one Arrow collect of the already-cached base plus
-    # taxonomy-sized numpy, returned as a single local relation. Identical
-    # rows to the distributed chain (pinned by
-    # tests/test_taxonomy.py::test_driver_rollup_parity_with_distributed
-    # on top of the DuckDB oracles); the gate is scale-adaptive — past
-    # TAXAHFE_ROLLUP_DRIVER_MAX_ROWS (env, default 2M) or under
-    # allow_driver=False (taxa_hfe's distributed re-issue, which must keep
-    # the r7 checkpoint shape) the level chain runs unchanged.
-    raw_map = (
-        [(r["__raw"], r["path"], r["level"]) for r in map_rows]
-        if clean_paths
-        else None
-    )
-    if allow_driver and checkpoint and not defer_levels:
-        gate = int(
-            _os.environ.get("TAXAHFE_ROLLUP_DRIVER_MAX_ROWS", "2000000")
-        )
-        # count served from the cache the distinct collect just filled
-        if gate > 0 and scratch.count() <= gate:
-            _t0 = _time.time()
-            pdf = scratch.toArrow().to_pandas()
-            out = spark.createDataFrame(
-                _driver_rollup_pdf(pdf, raw_map),
-                schema="path string, level int, entity_id string, "
-                       "value double, observed boolean",
+    # one job, served from the cache the distinct collect just filled
+    n_rows, n_valid = base.agg(
+        F.count(F.lit(1)),
+        F.count(
+            F.when(
+                F.col("entity_id").isNotNull()
+                & F.col("value").isNotNull()
+                & ~F.isnan("value"),
+                F.lit(1),
             )
-            if _os.environ.get("TAXAHFE_DEBUG_TIMING") == "1":
-                print(
-                    f"[timing] rollup: driver resolve {_time.time()-_t0:.2f}s",
-                    file=_sys.stderr, flush=True,
-                )
-            out._taxahfe_scratch = scratch
-            out._taxahfe_base = (scratch, raw_map)
-            return out
+        ),
+    ).first()
+    if checkpoint and n_valid == n_rows and driver_side(n_rows, DRIVER_MAX_ROWS):
+        t0 = time.time()
+        pdf = base.toArrow().to_pandas()
+        base.unpersist()
+        entities, vectors, build = _observed_wins(pdf, raw_map, entity_order)
+        _tlog(f"rollup: driver kernel {time.time()-t0:.2f}s")
+        return ResolvedTree(
+            spark, entities, vectors, True,
+            _build=lambda: spark.createDataFrame(build(), schema=RESOLVED_SCHEMA),
+        )
 
     # which parents are actually MISSING per level, precomputed from path
     # strings alone (taxonomy-sized, pure driver arithmetic): resolved
@@ -359,35 +411,29 @@ def hierarchical_rollup(
     # parents — a fully-observed level (the common case for well-formed
     # taxonomies) costs zero shuffle instead of a whole-level groupBy whose
     # every output row the old anti-join then discarded.
-    def _parent(p: str) -> str | None:
-        # exact mirror of parent_path(): any "|" present -> strip the last
-        # segment (a pathological leading-pipe path yields "")
-        return p[: p.rfind("|")] if "|" in p else None
-
+    max_level = max(obs_paths_by_level)
     missing_by_level: dict[int, set[str]] = {}
-    resolved_paths = set(obs_paths_by_level.get(max_level, []))
+    resolved_paths = set(obs_paths_by_level[max_level])
     for lvl in range(max_level - 1, 0, -1):
-        parents = {q for q in (_parent(p) for p in resolved_paths) if q}
+        # exact mirror of parent_path(): any "|" present -> strip the last
+        # segment (a pathological leading-pipe path yields "", dropped)
+        parents = {p[: p.rfind("|")] for p in resolved_paths if "|" in p} - {""}
         missing_by_level[lvl] = parents - set(obs_paths_by_level.get(lvl, []))
         resolved_paths = set(obs_paths_by_level.get(lvl, [])) | missing_by_level[lvl]
 
-    _t0 = _time.time()
+    t0 = time.time()
     # LAZY per-level checkpoints (r7 mechanism, kept deliberately): the
-    # first action computes every level in ONE fused chain off the stored
-    # input cache, then each level's blocks serve all later consumers.
-    # Under AQE even eager=False executes the level's stages at call time
-    # (toRdd finalizes the adaptive plan) — that build-time cost is the
-    # price of a SAFE resolved frame; per-level persist() markers were
-    # tried in r8 and do NOT reliably serve these nested level plans
-    # (measured ~100 s per action on the reference example's 7-level tree
-    # vs seconds with checkpoints). Callers that never consume the frame
-    # can skip the cost with defer_levels (see docstring).
-    truncate = checkpoint and not defer_levels
+    # entity-distinct action below computes every level in ONE fused chain
+    # off the stored input cache, then each level's blocks serve all later
+    # consumers. Under AQE even eager=False executes the level's stages at
+    # call time (toRdd finalizes the adaptive plan); per-level persist()
+    # markers were tried in r8 and do NOT reliably serve these nested level
+    # plans (see the docstring).
     resolved_per_level: list[DataFrame] = []
     current = observed.filter(F.col("level") == max_level).withColumn(
         "observed", F.lit(True)
     )
-    if truncate:
+    if checkpoint:
         current = current.localCheckpoint(eager=False)
     resolved_per_level.append(current)
 
@@ -438,30 +484,51 @@ def hierarchical_rollup(
                 .withColumn("observed", F.lit(False))
             )
             current = obs_lvl.unionByName(rolled.select(*obs_lvl.columns))
-        if truncate:
+        if checkpoint:
             current = current.localCheckpoint(eager=False)
         resolved_per_level.append(current)
 
-    if _os.environ.get("TAXAHFE_DEBUG_TIMING") == "1":
-        print(f"[timing] rollup: level-loop build {_time.time()-_t0:.2f}s",
-              file=_sys.stderr, flush=True)
-    _t0 = _time.time()
     out = resolved_per_level[0]
     for lvl_df in resolved_per_level[1:]:
         out = out.unionByName(lvl_df)
-    out = out.select("path", "level", "entity_id", "value", "observed")
-    if _os.environ.get("TAXAHFE_DEBUG_TIMING") == "1":
-        print(f"[timing] rollup: union build {_time.time()-_t0:.2f}s",
-              file=_sys.stderr, flush=True)
-    # cleanup handle: safe to unpersist once the result has been fully
-    # materialized (the level checkpoints pin the data from then on)
-    out._taxahfe_scratch = scratch
-    # driver-prefix handle (taxa_hfe fast path): the cached INPUT frame plus
-    # the raw-path -> (clean path, level) mapping already collected above —
-    # enough to rebuild flags/vectors driver-side without materializing the
-    # distributed level chain. clean_paths=False passes None (identity map).
-    out._taxahfe_base = (scratch, raw_map)
-    return out
+    # COALESCE the union: it stacks max_level per-level shuffles (~200
+    # narrow partitions at default config) and every downstream consumer
+    # (entity distinct, flags, vectors, winner pivot, sinks) paid ~200
+    # near-empty task launches per scan — measured ~10 s/scan of pure
+    # scheduling at sf0.1 local[8]. Target is parallelism-sized, never below
+    # the source count on a big cluster.
+    out = out.select("path", "level", "entity_id", "value", "observed").coalesce(
+        max(2 * spark.sparkContext.defaultParallelism, 16)
+    )
+    # the one action: materializes every level, after which the base cache
+    # can go (repeated invocations must not accumulate cached inputs)
+    present = {r["entity_id"] for r in out.select("entity_id").distinct().collect()}
+    base.unpersist()
+    _tlog(f"rollup: level chain + entity distinct {time.time()-t0:.2f}s")
+    return ResolvedTree(
+        spark, _entity_order(present, entity_order), None, False, _frame=out
+    )
+
+
+def hierarchical_rollup(
+    long_df: DataFrame,
+    clean_paths: bool = True,
+    checkpoint: bool = True,
+) -> DataFrame:
+    """Observed-wins hierarchical rollup (reference: lib/tree.R:372-449).
+
+    Input: long frame (clade_name, entity_id, value) — one row per observed
+    (feature-path, entity) pair; absent pairs are implicit zeros.
+
+    Output: resolved long frame (path, level, entity_id, value, observed)
+    covering EVERY node of the taxonomy: observed nodes keep their input
+    vector verbatim; unobserved ancestors get the elementwise sum of their
+    resolved children (transitive, deepest-first). It is ``frame()`` of
+    :func:`resolve_tree` (driver kernel or checkpointed level chain, decided
+    there); use that directly to keep the entity list and, on the driver
+    path, the per-node vectors.
+    """
+    return resolve_tree(long_df, clean_paths, checkpoint).frame()
 
 
 def to_feature_vectors(resolved: DataFrame, entity_ids: list[str]) -> DataFrame:
@@ -497,8 +564,6 @@ def to_feature_vectors(resolved: DataFrame, entity_ids: list[str]) -> DataFrame:
 
 def sparse_to_dense(idxs, vals, n: int):
     """numpy densifier for one sparse vector row (executor-side, O(nnz))."""
-    import numpy as np
-
     out = np.zeros(n, dtype=np.float64)
     if len(idxs):
         out[np.asarray(idxs, dtype=np.int64)] = np.asarray(vals, dtype=np.float64)

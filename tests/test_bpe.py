@@ -138,7 +138,8 @@ def test_bpe_both_paths_match_oracle_200_merges_random_corpus(spark, monkeypatch
     randomized corpus at depth (VERDICT r7 §2 acceptance): 200 merges,
     Zipfian-ish word frequencies, small alphabet so created symbols collide
     and interact often — for BOTH the driver fast path (incremental heap)
-    and the distributed batched loop (gate forced off)."""
+    and the distributed batched loop (TAXAHFE_DISTRIBUTED=1). Rows with a
+    null word or count contribute nothing on either path."""
     import random
 
     rng = random.Random(1234)
@@ -150,11 +151,16 @@ def test_bpe_both_paths_match_oracle_200_merges_random_corpus(spark, monkeypatch
     pairs = [(w, rng.randint(1, 50)) for w in sorted(set(vocab))]
     wc = spark.createDataFrame(pairs, "word string, count long")
     want, _ = oracle_train(pairs, 200, min_pair_count=1)
-    got_driver = bpe_train(wc, num_merges=200, min_pair_count=1)
-    assert got_driver == want
-    monkeypatch.setenv("TAXAHFE_BPE_DRIVER_MAX_WORDS", "0")
-    got_dist = bpe_train(wc, num_merges=200, min_pair_count=1)
-    assert got_dist == want
+    with_nulls = wc.unionByName(
+        spark.createDataFrame([(None, 7), ("abcab", None)], wc.schema)
+    )
+    for frame in (wc, with_nulls):
+        monkeypatch.delenv("TAXAHFE_DISTRIBUTED", raising=False)
+        got_driver = bpe_train(frame, num_merges=200, min_pair_count=1)
+        assert got_driver == want
+        monkeypatch.setenv("TAXAHFE_DISTRIBUTED", "1")
+        got_dist = bpe_train(frame, num_merges=200, min_pair_count=1)
+        assert got_dist == want
 
 
 def test_bpe_driver_path_job_count(spark):

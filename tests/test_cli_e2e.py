@@ -71,6 +71,35 @@ def test_run_hfe_re_numeric_label_kmeans_binning(tmp_path, spark):
     assert list(log["status"]) == ["started", "finished"]
 
 
+def test_run_hfe_distributed_lane_matches_driver(tmp_path, spark, monkeypatch):
+    """run-hfe end to end under TAXAHFE_DISTRIBUTED=1 — level-chain rollup,
+    distributed vectors and flags, Spark competition stages — writes the
+    same winner matrix and legacy sinks as the driver run."""
+    from taxahfe_spark import cli
+
+    meta_path, data_path = _write_inputs(tmp_path)
+    outputs = {}
+    for mode in ("0", "1"):
+        monkeypatch.setenv("TAXAHFE_DISTRIBUTED", mode)
+        out_dir = tmp_path / f"out{mode}"
+        cli.main(
+            [
+                "run-hfe", meta_path, data_path,
+                "-s", "Sample", "-l", "Category", "--seed", "7", "-p", "0.01",
+                "-L", "2", "--nperm", "2", "-n", "4", "-w", "-o", str(out_dir),
+            ],
+            spark=spark,
+        )
+        frames = []
+        for sink in ("output", "v1_input"):
+            (csv,) = glob.glob(str(out_dir / sink / "*.csv"))
+            df = pd.read_csv(csv)
+            frames.append(df.sort_values(df.columns[0]).reset_index(drop=True))
+        outputs[mode] = frames
+    for driver, distributed in zip(outputs["0"], outputs["1"]):
+        pd.testing.assert_frame_equal(driver, distributed)
+
+
 def test_run_hfe_ml_summarized_levels_and_sinks(tmp_path, spark):
     """run-hfe-ml --summarized_levels: S8 sink trio + one ml_results block
     per depth tagged program=summarized_level_{d} + per-level CSV export."""

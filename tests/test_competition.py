@@ -256,7 +256,10 @@ def test_corr_spearman_monotone():
 
 def test_shuffle_strategy_identical(spark, competition_state):
     """The 100 TB vector path (applyInPandas over a distributed join, no
-    driver collect) must produce bit-identical decisions and outcomes."""
+    driver collect) must produce bit-identical decisions and outcomes —
+    also when the vectors arrive as a driver tree's dict."""
+    from taxahfe_spark.taxonomy import resolve_tree
+
     long = spark.createDataFrame(
         _long_rows(), "clade_name string, entity_id string, value double"
     )
@@ -271,14 +274,15 @@ def test_shuffle_strategy_identical(spark, competition_state):
         lowest_level=1, max_level=14, nperm=2, num_trees=40, seed=11,
         vector_strategy="shuffle",
     )
-    state2 = (
-        TreeCompetition(vectors, flags_pdf, LABEL, None, params)
-        .run()
-        .set_index("path")
-    )
-    pd.testing.assert_frame_equal(
-        competition_state.sort_index(), state2.sort_index()
-    )
+    for vecs in (vectors, resolve_tree(long, entity_order=ENTITIES).vectors):
+        state2 = (
+            TreeCompetition(vecs, flags_pdf, LABEL, None, params)
+            .run()
+            .set_index("path")
+        )
+        pd.testing.assert_frame_equal(
+            competition_state.sort_index(), state2.sort_index()
+        )
 
 
 def test_corr_only_mode_deterministic_collapse(spark):
@@ -338,3 +342,47 @@ def test_collapse_matches_frozen_golden(spark):
         assert got[0] == want[0]
         for gv, wv in zip(got[1:], want[1:]):
             assert gv == pytest.approx(wv, abs=1e-9)
+
+
+def test_forkless_platform_takes_spark_stage_with_same_state(spark, monkeypatch):
+    """Where the platform offers no ``fork`` start method the driver-local
+    stage is not attempted (``get_context("fork")`` raises ValueError
+    there): every stage runs on Spark and the state equals the fork-pool
+    run's."""
+    import multiprocessing
+
+    long = spark.createDataFrame(
+        _long_rows(), "clade_name string, entity_id string, value double"
+    )
+    resolved = hierarchical_rollup(long)
+    flags_pdf = (
+        feature_filter_flags(resolved, N, 0.1, 0.0)
+        .select("path", "level", "passed_filters")
+        .toPandas()
+    )
+    vectors = to_feature_vectors(resolved, ENTITIES)
+    params = CompetitionParams(
+        lowest_level=1, max_level=14, nperm=2, num_trees=10, seed=5
+    )
+    real_get_context = multiprocessing.get_context
+    contexts = []
+
+    def spy(method=None):
+        contexts.append(method)
+        return real_get_context(method)
+
+    monkeypatch.setattr(multiprocessing, "get_context", spy)
+    forked = TreeCompetition(vectors, flags_pdf, LABEL, None, params).run()
+    assert "fork" in contexts  # the reference run used the fork pool
+
+    def no_fork(method=None):
+        if method == "fork":
+            raise ValueError("cannot find context for 'fork'")
+        return real_get_context(method)
+
+    monkeypatch.setattr(multiprocessing, "get_context", no_fork)
+    monkeypatch.setattr(
+        multiprocessing, "get_all_start_methods", lambda: ["spawn"]
+    )
+    staged = TreeCompetition(vectors, flags_pdf, LABEL, None, params).run()
+    pd.testing.assert_frame_equal(forked, staged)

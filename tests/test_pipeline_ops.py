@@ -858,103 +858,164 @@ def test_incremental_minhash_dedup_keeps_caller_cache(spark):
     sigs.unpersist()
 
 
+def _hfe_inputs_with_nulls(spark, sf_dir):
+    """The supplier hierarchy, plus the same frame with a null-entity row and
+    a null-value row appended (the null entity is pruned by the metadata
+    join; the null value routes the rollup to the level chain)."""
+    import __spark_entry__ as em
+
+    long, meta = em.supplier_hierarchy(spark, sf_dir)
+    first = long.first()
+    extra = spark.createDataFrame(
+        [(first["clade_name"], None, 5.0), (first["clade_name"], first["entity_id"], None)],
+        long.schema,
+    )
+    return [(long, meta), (long.unionByName(extra), meta)]
+
+
 def test_driver_prefix_parity_with_distributed(spark, sf_dir, monkeypatch):
-    """The r8 driver-prefix fast path (Arrow collect + numpy rollup/flags/
-    vectors) must produce the exact same competition state and winner
-    matrix as the distributed prefix it replaces below the row gate."""
+    """The driver tree (numpy rollup/flags/vectors, fork-pool stages) must
+    produce the exact same competition state and winner matrix as the
+    distributed path (TAXAHFE_DISTRIBUTED=1: level chain, vectors groupBy,
+    Spark competition stages) — null inputs included."""
     import pandas as pd
 
+    from taxahfe_spark.operators.competition import CompetitionParams
+    from taxahfe_spark.pipeline import taxa_hfe, winner_feature_matrix
+
+    params = CompetitionParams(
+        lowest_level=1, nperm=2, num_trees=4, seed=7,
+        super_filter_nperm_factor=2,
+    )
+    for long, meta in _hfe_inputs_with_nulls(spark, sf_dir):
+        frames = {}
+        for tag, switch in (("driver", "0"), ("distributed", "1")):
+            monkeypatch.setenv("TAXAHFE_DISTRIBUTED", switch)
+            tree, state = taxa_hfe(
+                meta, long, params=params, filter_prevalence=0.05
+            )
+            mat = winner_feature_matrix(tree, state, metadata=meta).toPandas()
+            frames[tag] = (
+                state.reset_index(drop=True),
+                mat.sort_values("subject_id").reset_index(drop=True)[
+                    sorted(mat.columns)
+                ],
+            )
+        pd.testing.assert_frame_equal(frames["driver"][0], frames["distributed"][0])
+        pd.testing.assert_frame_equal(frames["driver"][1], frames["distributed"][1])
+
+
+def test_driver_prefix_resolved_content_matches_distributed(spark, sf_dir, monkeypatch):
+    """A driver tree's frame() is a driver-built local relation — its rows
+    (incl. explicit zero-sum ancestor pairs and the observed flags) must
+    equal the distributed level chain's output, null inputs included."""
+    import pandas as pd
+
+    from taxahfe_spark.operators.competition import CompetitionParams
+    from taxahfe_spark.pipeline import taxa_hfe
+
+    params = CompetitionParams(
+        lowest_level=1, nperm=2, num_trees=3, seed=3,
+        super_filter_nperm_factor=2,
+    )
+    for long, meta in _hfe_inputs_with_nulls(spark, sf_dir):
+        frames = {}
+        for tag, switch in (("driver", "0"), ("distributed", "1")):
+            monkeypatch.setenv("TAXAHFE_DISTRIBUTED", switch)
+            tree, _ = taxa_hfe(meta, long, params=params, filter_prevalence=0.05)
+            pdf = tree.frame().toPandas()
+            pdf["value"] = pdf["value"].round(9)
+            frames[tag] = (
+                pdf.sort_values(["path", "entity_id", "value"], kind="mergesort")
+                .reset_index(drop=True)[sorted(pdf.columns)]
+            )
+        pd.testing.assert_frame_equal(
+            frames["driver"], frames["distributed"], check_dtype=False
+        )
+
+
+def test_driver_prefix_resolved_is_deferred_until_consumed(spark, sf_dir, monkeypatch):
+    """A driver tree's local relation must NOT be serialized to the JVM when
+    the caller only needs the winner matrix (the two declared collapse
+    queries) — and frame() must build it once, on first call."""
     import __spark_entry__ as em
     from taxahfe_spark.operators.competition import CompetitionParams
     from taxahfe_spark.pipeline import taxa_hfe, winner_feature_matrix
 
     long, meta = em.supplier_hierarchy(spark, sf_dir)
     params = CompetitionParams(
-        lowest_level=1, nperm=2, num_trees=4, seed=7,
-        super_filter_nperm_factor=2,
-    )
-    frames = {}
-    for tag, gate in (("driver", "2000000"), ("distributed", "0")):
-        monkeypatch.setenv("TAXAHFE_DRIVER_PREFIX_MAX_ROWS", gate)
-        resolved, state = taxa_hfe(
-            meta, long, params=params, filter_prevalence=0.05
-        )
-        mat = winner_feature_matrix(resolved, state, metadata=meta).toPandas()
-        frames[tag] = (
-            state.reset_index(drop=True),
-            mat.sort_values("subject_id").reset_index(drop=True)[
-                sorted(mat.columns)
-            ],
-        )
-    pd.testing.assert_frame_equal(frames["driver"][0], frames["distributed"][0])
-    pd.testing.assert_frame_equal(frames["driver"][1], frames["distributed"][1])
-
-
-def test_driver_prefix_resolved_content_matches_distributed(spark, sf_dir, monkeypatch):
-    """The fast path replaces `resolved` with a driver-reconstructed local
-    relation — its rows (incl. explicit zero-sum ancestor pairs and the
-    observed flags) must equal the distributed level chain's output."""
-    import pandas as pd
-
-    import __spark_entry__ as em
-    from taxahfe_spark.operators.competition import CompetitionParams
-    from taxahfe_spark.pipeline import taxa_hfe
-
-    long, meta = em.supplier_hierarchy(spark, sf_dir)
-    params = CompetitionParams(
         lowest_level=1, nperm=2, num_trees=3, seed=3,
         super_filter_nperm_factor=2,
     )
-    frames = {}
-    for tag, gate in (("driver", "2000000"), ("distributed", "0")):
-        monkeypatch.setenv("TAXAHFE_DRIVER_PREFIX_MAX_ROWS", gate)
-        resolved, _ = taxa_hfe(meta, long, params=params, filter_prevalence=0.05)
-        pdf = resolved.toPandas()
-        pdf["value"] = pdf["value"].round(9)
-        frames[tag] = (
-            pdf.sort_values(["path", "entity_id"], kind="mergesort")
-            .reset_index(drop=True)[sorted(pdf.columns)]
-        )
-    pd.testing.assert_frame_equal(
-        frames["driver"], frames["distributed"], check_dtype=False
-    )
+    monkeypatch.delenv("TAXAHFE_DISTRIBUTED", raising=False)
+    tree, state = taxa_hfe(meta, long, params=params, filter_prevalence=0.05)
+    assert tree.on_driver and tree._frame is None
 
-
-def test_driver_prefix_resolved_is_deferred_until_consumed(spark, sf_dir, monkeypatch):
-    """r8: the fast path's `resolved` local relation must NOT be serialized
-    to the JVM when the caller only reads the _taxahfe_* handles (the two
-    declared collapse queries) — and must build transparently, with the
-    handles carried over, on first real DataFrame use."""
-    import __spark_entry__ as em
-    from taxahfe_spark.operators.competition import CompetitionParams
-    from taxahfe_spark.pipeline import (
-        _DeferredLocalFrame,
-        taxa_hfe,
-        winner_feature_matrix,
-    )
-
-    long, meta = em.supplier_hierarchy(spark, sf_dir)
-    params = CompetitionParams(
-        lowest_level=1, nperm=2, num_trees=3, seed=3,
-        super_filter_nperm_factor=2,
-    )
-    monkeypatch.setenv("TAXAHFE_DRIVER_PREFIX_MAX_ROWS", "2000000")
-    resolved, state = taxa_hfe(meta, long, params=params, filter_prevalence=0.05)
-    assert isinstance(resolved, _DeferredLocalFrame)
-    assert object.__getattribute__(resolved, "_lazy_df") is None
-
-    # the declared-query consumption pattern: winner matrix from the
-    # driver-resident handles only — the local relation must stay unbuilt
-    mat = winner_feature_matrix(resolved, state, metadata=meta)
+    mat = winner_feature_matrix(tree, state, metadata=meta)
     mat.count()
-    assert object.__getattribute__(resolved, "_lazy_df") is None, (
-        "winner_feature_matrix materialized the deferred resolved frame"
+    assert tree._frame is None, "winner_feature_matrix built the resolved frame"
+
+    built = tree.frame()
+    n = built.count()
+    assert n > 0
+    assert tree.frame() is built
+    assert {r["entity_id"] for r in built.select("entity_id").distinct().collect()} == set(
+        tree.entities
     )
 
-    # first real DataFrame access builds it, once, with handles attached
-    n = resolved.count()
-    built = object.__getattribute__(resolved, "_lazy_df")
-    assert built is not None and n > 0
-    assert getattr(built, "_taxahfe_entities", None) == resolved._taxahfe_entities
-    assert resolved.count() == n
-    assert object.__getattribute__(resolved, "_lazy_df") is built
+
+def test_only_the_policy_function_reads_the_env():
+    """Driver-vs-distributed is one policy (session.driver_side) with one
+    switch: no other package module reads a TAXAHFE_* variable, apart from
+    the TAXAHFE_DEBUG_TIMING stderr timer."""
+    import ast
+    import pathlib
+
+    import taxahfe_spark
+
+    root = pathlib.Path(taxahfe_spark.__file__).parent
+    found = set()
+    for path in root.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and node.value.startswith("TAXAHFE_")
+                and node.value.isidentifier()
+                and node.value != "TAXAHFE_DEBUG_TIMING"
+            ):
+                found.add((path.relative_to(root).as_posix(), node.value))
+    assert found == {("session.py", "TAXAHFE_DISTRIBUTED")}
+
+
+def test_taxa_hfe_destroys_vector_broadcast(spark, sf_dir, monkeypatch):
+    """The per-run vector broadcast (and the design-context broadcast) is
+    destroyed before taxa_hfe returns, on both paths; the tree keeps the
+    driver-side vectors, so the winner matrix still uses them."""
+    from pyspark.broadcast import Broadcast
+
+    import __spark_entry__ as em
+    from taxahfe_spark.operators.competition import CompetitionParams
+    from taxahfe_spark.pipeline import taxa_hfe, winner_feature_matrix
+
+    destroyed = []
+    real_destroy = Broadcast.destroy
+
+    def counting_destroy(self, blocking=False):
+        destroyed.append(self)
+        return real_destroy(self, blocking)
+
+    monkeypatch.setattr(Broadcast, "destroy", counting_destroy)
+    long, meta = em.supplier_hierarchy(spark, sf_dir)
+    params = CompetitionParams(
+        lowest_level=1, nperm=2, num_trees=3, seed=3,
+        super_filter_nperm_factor=2,
+    )
+    for distributed in (False, True):
+        if distributed:
+            monkeypatch.setenv("TAXAHFE_DISTRIBUTED", "1")
+        destroyed.clear()
+        tree, state = taxa_hfe(meta, long, params=params, filter_prevalence=0.05)
+        assert len(destroyed) == 2
+        assert tree.vectors is not None
+        assert winner_feature_matrix(tree, state, metadata=meta).count() > 0

@@ -163,7 +163,7 @@ def test_full_reference_run_collapses(spark, ref_frames):
         lowest_level=3, max_level=15, corr_threshold=0.95,
         nperm=2, num_trees=25, seed=1234,
     )
-    resolved, state = taxa_hfe(
+    tree, state = taxa_hfe(
         meta, melt_wide_matrix(wide), params=params,
         filter_prevalence=0.01, filter_mean_abundance=0.0,
         from_reference_levels=True,
@@ -184,7 +184,7 @@ def test_full_reference_run_collapses(spark, ref_frames):
     meta_samples = {
         clean_entity(r["subject_id"]) for r in meta.select("subject_id").collect()
     }
-    m = winner_feature_matrix(resolved, state, metadata=meta)
+    m = winner_feature_matrix(tree, state, metadata=meta)
     assert m.count() == len(matrix_samples & meta_samples)
     assert len(m.columns) == len(winners) + 2  # subject_id + label
     # determinism across runs

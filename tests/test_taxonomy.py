@@ -148,13 +148,14 @@ def test_filter_flags(spark, resolved):
 
 
 def test_driver_rollup_parity_with_distributed(spark, sf_dir, monkeypatch):
-    """r8: the driver fast path of hierarchical_rollup (Arrow collect +
-    numpy observed-wins rollup, returned as one local relation) must
-    produce the same rows as the distributed level chain it replaces
-    below the row gate — for both clean_paths modes, on real testdata
-    (duplicates, zero-sum presence rows and multi-level missing ancestors
-    included) and on the synthetic observed-wins fixture."""
+    """The driver kernel of resolve_tree (Arrow collect + numpy
+    observed-wins rollup) must produce the same rows as the distributed
+    level chain (TAXAHFE_DISTRIBUTED=1) — for both clean_paths modes, on
+    real testdata (duplicates, zero-sum presence rows and multi-level
+    missing ancestors included), on the synthetic observed-wins fixture,
+    and on null entity ids / null values, which F.sum skips or groups."""
     import __spark_entry__ as em
+    from taxahfe_spark.taxonomy import resolve_tree
 
     def norm(df):
         pdf = df.toPandas()
@@ -168,17 +169,48 @@ def test_driver_rollup_parity_with_distributed(spark, sf_dir, monkeypatch):
     wide = spark.createDataFrame(
         [(c, *v) for c, *v in WIDE_ROWS], ["clade_name", *ENTITIES]
     )
+    nulls = spark.createDataFrame(
+        [
+            ("a|b|c", "s1", 1.0),
+            ("a|b|d", "s1", None),
+            ("a|b|d", "s2", 2.0),
+            ("a|e|f", None, 3.0),
+            ("a|e|f", "s1", 4.0),
+        ],
+        "clade_name string, entity_id string, value double",
+    )
     inputs = [
         em._hfe_long(spark, sf_dir),
         melt_wide_matrix(wide),
+        nulls,
     ]
     for long in inputs:
         for cp in (False, True):
-            monkeypatch.setenv("TAXAHFE_ROLLUP_DRIVER_MAX_ROWS", "2000000")
-            fast = hierarchical_rollup(long, clean_paths=cp)
+            monkeypatch.delenv("TAXAHFE_DISTRIBUTED", raising=False)
+            tree = resolve_tree(long, clean_paths=cp)
+            # nulls are routed to the level chain, everything else stays local
+            assert tree.on_driver is (long is not nulls)
+            fast = tree.frame()
             assert fast.rdd.getNumPartitions() >= 1  # local relation, usable
-            monkeypatch.setenv("TAXAHFE_ROLLUP_DRIVER_MAX_ROWS", "0")
-            slow = hierarchical_rollup(long, clean_paths=cp)
+            monkeypatch.setenv("TAXAHFE_DISTRIBUTED", "1")
+            slow_tree = resolve_tree(long, clean_paths=cp)
+            assert not slow_tree.on_driver
+            assert slow_tree.entities == tree.entities
             pd.testing.assert_frame_equal(
-                norm(fast), norm(slow), check_dtype=False
+                norm(fast), norm(slow_tree.frame()), check_dtype=False
             )
+    got = norm(slow_tree.frame()).set_index(["path", "entity_id"])["value"]
+    assert got[("a|b", "s1")] == 1.0  # the null value is skipped, not NaN
+    assert ("a|e|f", "s2") not in got.index  # the null entity stays apart
+
+
+def test_rollup_null_clade_name_raises(spark):
+    """A null taxonomy path fails loudly, naming the column, in both
+    clean_paths modes."""
+    long = spark.createDataFrame(
+        [("a|b", "s1", 1.0), (None, "s1", 2.0)],
+        "clade_name string, entity_id string, value double",
+    )
+    for cp in (False, True):
+        with pytest.raises(ValueError, match="clade_name"):
+            hierarchical_rollup(long, clean_paths=cp)

@@ -28,13 +28,12 @@ MULTS = {
     "BENCH_SCALE_MULT_TOKENS": "8",
     "BENCH_SCALE_MULT_ROLLUP": "32",
     "BENCH_SCALE_MULT_COLLAPSE": "4",
-    # scaling legs must measure the DISTRIBUTED algorithms: hard-disable
-    # the driver-size fast paths (the rollup leg's ~481k replicated rows
-    # would otherwise fall under the r8 2M gates and flatten eta — the
-    # collapse leg already exceeds both gates naturally, pinned here so a
+    # scaling legs must measure the DISTRIBUTED algorithms: pin every
+    # driver-size fast path off (the rollup leg's ~481k replicated rows
+    # would otherwise fall under the 2M-row driver limit and flatten eta —
+    # the collapse leg already exceeds it naturally, pinned here so a
     # future mult change cannot silently flip either leg driver-side)
-    "TAXAHFE_ROLLUP_DRIVER_MAX_ROWS": "0",
-    "TAXAHFE_DRIVER_PREFIX_MAX_ROWS": "0",
+    "TAXAHFE_DISTRIBUTED": "1",
 }
 
 
