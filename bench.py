@@ -110,6 +110,9 @@ def _suite(spark, sf_dir: str) -> dict[str, tuple[float, int]]:
             import gc
 
             gc.collect()
+            # a persisted result (the distributed rollup) would otherwise
+            # serve this rep from the previous rep's cache
+            spark.catalog.clearCache()
             t0 = time.time()
             rows = _materialize(qs[name](spark, sf_dir))
             times.append(time.time() - t0)
@@ -296,6 +299,7 @@ def _scaling_suite(spark, sf_dir: str) -> dict[str, tuple[float, int]]:
     for name, fn in queries.items():
         best, rows = None, 0
         for _rep in range(reps):  # warm run wins: isolates steady-state compute
+            spark.catalog.clearCache()  # no rep is served from a persisted result
             t0 = _t.time()
             rows = _materialize(fn())
             dt = _t.time() - t0

@@ -84,6 +84,7 @@ def main() -> None:
         times = []
         for _ in range(reps):
             gc.collect()
+            spark.catalog.clearCache()  # no rep is served from a persisted result
             t0 = time.time()
             if mode == "noop":
                 fn(spark, sf_dir).write.format("noop").mode("overwrite").save()

@@ -17,15 +17,14 @@ Spark's execution model:
   out so wall time is bounded by one fit; with MANY competitions (web-scale
   taxonomies) chunking collapses to one task per competition so the vector
   payload ships through the shuffle once per level.
-- vector delivery is strategy-selected (``vector_strategy``):
-  * ``broadcast`` — collect the (taxonomy-sized) sparse vectors once and
-    broadcast; stages ship only assignment rows. Fastest at reference shape.
-  * ``shuffle``  — NEVER collects to the driver: assignment rows join the
-    distributed vector frame and ``applyInPandas`` consumes one competition
-    group per task. This is the 100 TB path (at >1e5 nodes x dense entities
-    the vector dict outgrows any driver/broadcast budget).
-  * ``auto``     — broadcast below ``broadcast_max_bytes`` of vector payload,
-    shuffle above.
+- vector delivery is chosen from the measured payload (12 B per nonzero):
+  * ``broadcast`` (up to ``BROADCAST_MAX_BYTES``) — collect the
+    (taxonomy-sized) sparse vectors once and broadcast; stages ship only
+    assignment rows. Fastest at reference shape.
+  * ``shuffle`` (above it) — NEVER collects to the driver: assignment rows
+    join the distributed vector frame and ``applyInPandas`` consumes one
+    competition group per task. This is the 100 TB path (at >1e5 nodes x
+    dense entities the vector dict outgrows any driver/broadcast budget).
 - ALL decision semantics live driver-side on taxonomy-sized data: the UDFs
   return plain numbers (correlations, importances), never decisions.
 - all randomness derives from ``hash(seed, parent_path) + chunk``, so
@@ -68,6 +67,9 @@ from taxahfe_spark.taxonomy import _tlog, sparse_to_dense
 # driver-local fused stage budget: design cells (entity x competitor x fit)
 # summed over a stage's competitions
 DRIVER_STAGE_MAX_CELLS = 64_000_000
+# vector payload up to which the vectors are collected and broadcast; above
+# it they stay distributed (see the module docstring)
+BROADCAST_MAX_BYTES = 128 * 1024 * 1024
 
 
 @dataclass
@@ -88,9 +90,6 @@ class CompetitionParams:
     competition_mode: str = "full"
     # repeated-measures competition (reference --random_effects)
     random_effects: bool = False
-    # "auto" | "broadcast" | "shuffle" (see module docstring)
-    vector_strategy: str = "auto"
-    broadcast_max_bytes: int = 128 * 1024 * 1024
     # Entity-dimension bound. The competition design matrix is inherently
     # n_entities wide (the reference's RF is fit over all samples), so the
     # label/covariate context broadcast is n_entities x 8B x (1 + n_cov) and
@@ -687,44 +686,29 @@ class TreeCompetition:
             (label, covariates, re_individual, re_time, remap)
         )
 
-        strategy = params.vector_strategy
         # driver-side copy of the broadcast vectors: serves the driver-local
         # stages and taxa_hfe's winner matrix without unpickling the broadcast
         self.vectors_dict = None
         self.bc_vectors = None
-        if isinstance(vectors, dict):
-            # already collected: size the auto decision from the dict itself
-            # — no persist, no sizing agg, no second collect
+        self.vectors = None  # the shuffle path's distributed vector frame
+        collected = isinstance(vectors, dict)
+        if collected:
+            # size the decision from the dict itself — no persist, no sizing
+            # agg, no second collect
             nnz = sum(len(i) for i, _ in vectors.values())
-            if strategy == "auto":
-                strategy = (
-                    "broadcast"
-                    if nnz * 12 <= params.broadcast_max_bytes
-                    else "shuffle"
-                )
-                _tlog(f"vector_strategy auto -> {strategy} (nnz={nnz}, dict)")
-            if strategy == "broadcast":
-                self.vectors_dict = vectors
-            else:
-                vectors = self.spark.createDataFrame(
-                    [(p, i.tolist(), v.tolist()) for p, (i, v) in vectors.items()],
-                    "path string, idxs array<int>, vals array<double>",
-                )
-        elif strategy == "auto":
+        else:
             # persist BEFORE the sizing agg so the (collect_list pivot)
             # vector build runs once, whichever strategy wins
             vectors = vectors.persist()
             nnz = vectors.agg(F.sum(F.size("idxs"))).first()[0] or 0
-            strategy = (
-                "broadcast"
-                if nnz * 12 <= params.broadcast_max_bytes
-                else "shuffle"
-            )
-            _tlog(f"vector_strategy auto -> {strategy} (nnz={nnz})")
-        self.strategy = strategy
-        self.vectors = vectors
-        if strategy == "broadcast":
-            if self.vectors_dict is None:
+        self.strategy = (
+            "broadcast" if nnz * 12 <= BROADCAST_MAX_BYTES else "shuffle"
+        )
+        _tlog(f"vector strategy -> {self.strategy} (nnz={nnz})")
+        if self.strategy == "broadcast":
+            if collected:
+                self.vectors_dict = vectors
+            else:
                 # vectors are taxonomy-sized here; collect ONCE and broadcast
                 # explicitly so every stage ships only assignment rows.
                 # Stored as NUMPY arrays: a dict of Python int lists measured
@@ -736,16 +720,19 @@ class TreeCompetition:
                 # values+offsets buffers that slice into numpy with no
                 # per-element cost (0.15 s same shape).
                 self.vectors_dict = _collect_vectors_arrow(vectors)
-                if params.vector_strategy == "auto":
-                    vectors.unpersist()
+                vectors.unpersist()
             self.bc_vectors = self.spark.sparkContext.broadcast(self.vectors_dict)
         else:
+            if collected:
+                vectors = self.spark.createDataFrame(
+                    [(p, i.tolist(), v.tolist()) for p, (i, v) in vectors.items()],
+                    "path string, idxs array<int>, vals array<double>",
+                )
             # the 100 TB path: vectors never touch the driver; persist so the
             # per-level join doesn't recompute the pivot each iteration
             self.vectors = vectors.select("path", "idxs", "vals").persist()
             self.vectors.count()
-            if params.vector_strategy == "auto":
-                vectors.unpersist()  # superseded by the projected cache
+            vectors.unpersist()  # superseded by the projected cache
 
         self.nodes: dict[str, NodeState] = {}
         for r in flags_pdf.itertuples():

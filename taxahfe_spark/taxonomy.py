@@ -11,18 +11,21 @@ DataFrame transformations plus one taxonomy-sized driver kernel:
   decides driver vs distributed ONCE, on the measured row count
   (``session.driver_side``). Small inputs are collected in one Arrow
   transfer and rolled up by one numpy kernel, which also yields every
-  node's sparse vector. Large ones run the distributed level chain:
-  post-order traversal becomes a driver loop over levels from deepest to
-  shallowest; within a level every node is independent, so each iteration
-  is ONE map-side-combined groupBy — no per-node work, no driver data
-  movement.
+  node's sparse vector. Large ones run ONE exchange: every observed row is
+  broadcast-joined to the missing ancestors it feeds and a single
+  map-side-combined groupBy sums them — no level loop, no per-node work,
+  no data-sized driver movement.
 
-Correctness-critical invariant ("observed wins", lib/tree.R:374-376): a node
+Correctness-critical invariant ("observed wins", lib/tree.R:372-388): a node
 that appears in the input keeps its own vector verbatim; only missing
-ancestors are synthesized as the elementwise sum of their (already-resolved)
-children, so grandchildren roll up transitively exactly like the reference's
-post-order ``fix_unpopulated_node``. Both paths produce the same rows
-(tests/test_taxonomy.py::test_driver_rollup_parity_with_distributed).
+ancestors are synthesized as the elementwise sum of their resolved children.
+Unrolled, a missing ancestor is the sum of the observed paths that reach it
+through missing nodes only — a set that depends on the path strings alone
+(:func:`missing_runs`, taxonomy-sized), so grandchildren roll up
+transitively exactly like the reference's post-order
+``fix_unpopulated_node``. Both paths take that set from the same function
+and produce the same rows
+(tests/test_taxonomy.py::test_deep_tree_rollup_paths_match_oracle).
 
 Level convention: ``level == size(split(path, '|'))`` (number of path
 segments). The reference counts its synthetic root as level 1, so
@@ -132,7 +135,8 @@ def melt_wide_matrix(
 
 # the driver kernel's budget: base rows collected through one Arrow transfer
 # (a few hundred MB of driver memory; roughly where one single-threaded
-# collect stops beating the distributed level chain on a 32-core box)
+# collect stopped beating the per-level distributed rollup on a 32-core box,
+# not re-measured against the one-exchange rollup)
 DRIVER_MAX_ROWS = 2_000_000
 
 RESOLVED_SCHEMA = (
@@ -148,18 +152,44 @@ def _entity_order(present: set, first: list[str] | None) -> list:
     return head + sorted(rest - {None}) + [None] * (None in rest)
 
 
+def missing_runs(observed_paths) -> dict[str, list[str]]:
+    """Each observed path -> the run of MISSING ancestors directly above it,
+    nearest first.
+
+    The run climbs ``parent_path`` and stops at the first observed ancestor
+    (observed wins: that ancestor keeps its own vector, and everything above
+    it sums that vector, not this path's) or at ``""`` (a leading-pipe
+    path). A missing node is therefore the sum of the observed paths whose
+    runs contain it — the recursive observed-wins rule of the reference
+    (lib/tree.R:372-388) unrolled, from path strings alone. Both rollup
+    paths take their missing set from here.
+    """
+    observed = set(observed_paths)
+    runs: dict[str, list[str]] = {}
+    for p in observed:
+        run, a = [], p
+        while "|" in a:
+            a = a[: a.rfind("|")]
+            if not a or a in observed:
+                break
+            run.append(a)
+        runs[p] = run
+    return runs
+
+
 def _observed_wins(pdf, raw_map, entity_order):
     """The driver kernel: observed-wins rollup of the collected base pairs
-    in numpy — the content the distributed level chain materializes.
+    in numpy — the rows the distributed exchange materializes.
 
     Observed rows keep their (possibly duplicated) pairs verbatim; each
-    MISSING ancestor gets one entry per entity present in any resolved
-    child (even when the sums cancel to exactly 0.0 — the groupBy-presence
-    semantics), summed over its children in sorted path order. ``raw_map``
-    maps raw to clean path for clean_paths inputs (collision-merging
-    included), None for identity. A node's level is its segment count, as
-    ``path_level`` computes it. The input holds no null entity or value
-    (resolve_tree routes those to the level chain).
+    MISSING ancestor (:func:`missing_runs`) gets one entry per entity
+    present in any resolved child (even when the sums cancel to exactly
+    0.0 — the groupBy-presence semantics), summed over its children in
+    sorted path order, deepest ancestors first. ``raw_map`` maps raw to
+    clean path for clean_paths inputs (collision-merging included), None
+    for identity. A node's level is its segment count, as ``path_level``
+    computes it. The input holds no null entity or value (resolve_tree
+    routes those to the distributed path).
 
     Returns (entities, vectors, build): ``vectors`` maps every node to its
     sparse (int32 entity indices, float64 values), entries sorted by
@@ -192,31 +222,21 @@ def _observed_wins(pdf, raw_map, entity_order):
         for k, p in enumerate(obs_paths)
     }
 
-    # resolved(lvl) = observed(lvl) + missing parents of resolved(lvl + 1);
-    # each missing parent sums its resolved children
-    obs_by_level: dict[int, set[str]] = {}
-    for p in obs_paths:
-        obs_by_level.setdefault(p.count("|") + 1, set()).add(p)
-    max_level = max(obs_by_level)
-    resolved_at = sorted(obs_by_level[max_level])
-    for lvl in range(max_level - 1, 0, -1):
-        children_of: dict[str, list[str]] = {}
-        for q in resolved_at:
-            par = q[: q.rfind("|")] if "|" in q else None
-            if par:
-                children_of.setdefault(par, []).append(q)
-        obs_lvl = obs_by_level.get(lvl, set())
-        missing = sorted(set(children_of) - obs_lvl)
-        for p in missing:
-            acc = np.zeros(n_ent)
-            mask = np.zeros(n_ent, dtype=bool)
-            for q in children_of[p]:
-                i, v = vectors[q]
-                np.add.at(acc, i, v)
-                mask[i] = True
-            pres = np.flatnonzero(mask)
-            vectors[p] = (pres.astype(np.int32), acc[pres])
-        resolved_at = sorted(obs_lvl | set(missing))
+    # each missing ancestor sums its resolved children: the observed path
+    # below it or the next missing ancestor of the same run
+    children_of: dict[str, set[str]] = {}
+    for p, run in missing_runs(obs_paths).items():
+        for child, anc in zip([p, *run], run):
+            children_of.setdefault(anc, set()).add(child)
+    for p in sorted(children_of, key=lambda a: (-a.count("|"), a)):
+        acc = np.zeros(n_ent)
+        mask = np.zeros(n_ent, dtype=bool)
+        for q in sorted(children_of[p]):
+            i, v = vectors[q]
+            np.add.at(acc, i, v)
+            mask[i] = True
+        pres = np.flatnonzero(mask)
+        vectors[p] = (pres.astype(np.int32), acc[pres])
 
     def build() -> pd.DataFrame:
         # observed rows verbatim, then the missing ancestors (dict order)
@@ -276,7 +296,6 @@ class ResolvedTree:
 def resolve_tree(
     long_df: DataFrame,
     clean_paths: bool = True,
-    checkpoint: bool = True,
     entity_order: list[str] | None = None,
 ) -> ResolvedTree:
     """Long frame (clade_name, entity_id, value) -> :class:`ResolvedTree`,
@@ -286,25 +305,22 @@ def resolve_tree(
     clean regex runs on those only). Then ONE job over the cache measures
     the rows and counts the null/NaN entity ids and values, and:
 
-    - below ``DRIVER_MAX_ROWS`` (``session.driver_side``), with no nulls
-      and ``checkpoint`` on, the base is collected in one Arrow transfer
-      and rolled up by the numpy kernel — vectors included, the frame built
-      only on demand;
-    - otherwise the distributed level chain runs: one shuffle per level
-      that has missing parents (groupBy(parent, entity) with map-side
-      partial aggregation, broadcast semi-join of the taxonomy-sized
-      missing set), a lazy ``localCheckpoint`` per level, then one
-      entity-distinct action that materializes every level. The checkpoint
-      is MANDATORY for consumers: without it each level's plan nests the
-      previous level's and Spark re-executes deep levels combinatorially on
-      every action (measured ~100 s per action on a 7-level tree).
-      ``checkpoint=False`` exists for plan inspection only.
+    - below ``DRIVER_MAX_ROWS`` (``session.driver_side``) and with no
+      nulls, the base is collected in one Arrow transfer and rolled up by
+      the numpy kernel — vectors included, the frame built only on demand;
+    - otherwise the rollup is ONE exchange: the observed rows broadcast-join
+      the taxonomy-sized (path, anc_path, anc_level) pairs of
+      :func:`missing_runs`, one groupBy(anc_path, anc_level, entity_id) sum
+      with map-side partial aggregation yields every missing ancestor, and
+      the observed rows are unioned back. One entity-distinct action fills
+      the persisted result. Being a Spark cache entry, it also serves a
+      later identical call; ``frame().unpersist()`` releases it.
 
-    Nulls go to the chain because its ``F.sum`` skips null values, keeps
-    null entity ids as their own group and keeps NaN, which the kernel does
-    not model. ``entity_order`` (taxa_hfe: metadata order) leads the entity
-    index; other entities follow sorted. The base cache is released before
-    returning.
+    Nulls go to the distributed path because its ``F.sum`` skips null
+    values, keeps null entity ids as their own group and keeps NaN, which
+    the kernel does not model. ``entity_order`` (taxa_hfe: metadata order)
+    leads the entity index; other entities follow sorted. The base cache is
+    released before returning.
     """
     spark = long_df.sparkSession
     t0 = time.time()
@@ -312,74 +328,43 @@ def resolve_tree(
         # The janitor-style clean regex is data-INVARIANT per distinct path,
         # and distinct paths are taxonomy-sized by contract (<= ~1e5) while
         # the long frame is data-sized — so clean the DISTINCT paths once
-        # and re-attach via a broadcast join instead of running two regex
-        # passes over every row (measured 2.7 s of pure regexp_replace at
-        # sf0.1's 587k rows vs ~0 on the 1000-row distinct frame). The
-        # distinct collect below doubles as the obs_paths_by_level source,
-        # so no separate (path, level) distinct job runs at all.
-        base = (
-            long_df.select(
-                F.col("clade_name").cast("string").alias("__raw"),
-                F.col("entity_id").cast("string").alias("entity_id"),
-                F.col("value").cast("double").alias("value"),
-            )
-            # COLUMNAR cache (see the clean_paths=False branch note)
-            .persist()
-        )
-        map_df = (
-            base.select("__raw")
+        # and re-attach them via a broadcast join of the collected map
+        # instead of running two regex passes over every row (measured
+        # 2.7 s of pure regexp_replace at sf0.1's 587k rows vs ~0 on the
+        # 1000-row distinct frame).
+        base = long_df.select(
+            F.col("clade_name").cast("string").alias("__raw"),
+            F.col("entity_id").cast("string").alias("entity_id"),
+            F.col("value").cast("double").alias("value"),
+        ).persist()
+        raw_map = {
+            r["__raw"]: r["path"]
+            for r in base.select("__raw")
             .distinct()
-            .select(
-                "__raw",
-                clean_value_col("__raw").alias("path"),
-                path_level(clean_value_col("__raw")).alias("level"),
-            )
-        )
-        map_rows = map_df.collect()  # taxonomy-sized; materializes the cache
-        obs_pairs = {(r["path"], r["level"]) for r in map_rows}
-        raw_map = {r["__raw"]: r["path"] for r in map_rows}
-        observed = base.join(F.broadcast(map_df), "__raw").select(
-            "path", "entity_id", "value", "level"
-        )
-    else:
-        observed = base = (
-            long_df.select(
-                F.col("clade_name").cast("string").alias("path"),
-                F.col("entity_id").cast("string").alias("entity_id"),
-                F.col("value").cast("double").alias("value"),
-            )
-            .withColumn("level", path_level("path"))
-            # COLUMNAR cache, deliberately not localCheckpoint: the frame is
-            # re-sliced once per level (filter level == lvl) and the in-memory
-            # columnar relation serves those with stats-based batch pruning;
-            # checkpoint blocks are row-format and rescan everything (measured
-            # 3.6x slower end-to-end)
-            .persist()
-        )
-        # distinct observed paths per level — tiny, broadcast into anti-joins.
-        # ONE action: max_level falls out of the same collect (a separate
-        # agg(max) paid a full extra scan of the cached join per run)
-        obs_pairs = {
-            (r["path"], r["level"])
-            for r in observed.select("path", "level").distinct().collect()
+            .select("__raw", clean_value_col("__raw").alias("path"))
+            .collect()  # taxonomy-sized; materializes the cache
         }
+        obs_paths = set(raw_map.values())
+    else:
+        base = long_df.select(
+            F.col("clade_name").cast("string").alias("path"),
+            path_level(F.col("clade_name").cast("string")).alias("level"),
+            F.col("entity_id").cast("string").alias("entity_id"),
+            F.col("value").cast("double").alias("value"),
+        ).persist()
         raw_map = None
-    if any(path is None for path, _ in obs_pairs):
+        obs_paths = {r["path"] for r in base.select("path").distinct().collect()}
+    if None in obs_paths:
         base.unpersist()
         raise ValueError(
             "clade_name holds null values: every row needs a taxonomy path"
         )
-    obs_paths_by_level: dict[int, list[str]] = {}
-    for path, level in obs_pairs:
-        # taxonomy-sized (<=1e5), not data-sized
-        obs_paths_by_level.setdefault(level, []).append(path)
     _tlog(f"rollup: observed persist + distinct collect {time.time()-t0:.2f}s")
-    if not obs_paths_by_level:
+    if not obs_paths:
         base.unpersist()
-        empty = observed.select(
-            "path", "level", "entity_id", "value", F.lit(True).alias("observed")
-        ).limit(0)
-        return ResolvedTree(spark, [], None, False, _frame=empty)
+        return ResolvedTree(
+            spark, [], None, False, _frame=spark.createDataFrame([], RESOLVED_SCHEMA)
+        )
 
     # one job, served from the cache the distinct collect just filled
     n_rows, n_valid = base.agg(
@@ -393,7 +378,7 @@ def resolve_tree(
             )
         ),
     ).first()
-    if checkpoint and n_valid == n_rows and driver_side(n_rows, DRIVER_MAX_ROWS):
+    if n_valid == n_rows and driver_side(n_rows, DRIVER_MAX_ROWS):
         t0 = time.time()
         pdf = base.toArrow().to_pandas()
         base.unpersist()
@@ -404,117 +389,57 @@ def resolve_tree(
             _build=lambda: spark.createDataFrame(build(), schema=RESOLVED_SCHEMA),
         )
 
-    # which parents are actually MISSING per level, precomputed from path
-    # strings alone (taxonomy-sized, pure driver arithmetic): resolved
-    # paths at lvl = observed(lvl) + missing parents of resolved(lvl+1).
-    # The per-level rollup only needs to aggregate the children of MISSING
-    # parents — a fully-observed level (the common case for well-formed
-    # taxonomies) costs zero shuffle instead of a whole-level groupBy whose
-    # every output row the old anti-join then discarded.
-    max_level = max(obs_paths_by_level)
-    missing_by_level: dict[int, set[str]] = {}
-    resolved_paths = set(obs_paths_by_level[max_level])
-    for lvl in range(max_level - 1, 0, -1):
-        # exact mirror of parent_path(): any "|" present -> strip the last
-        # segment (a pathological leading-pipe path yields "", dropped)
-        parents = {p[: p.rfind("|")] for p in resolved_paths if "|" in p} - {""}
-        missing_by_level[lvl] = parents - set(obs_paths_by_level.get(lvl, []))
-        resolved_paths = set(obs_paths_by_level.get(lvl, [])) | missing_by_level[lvl]
-
     t0 = time.time()
-    # LAZY per-level checkpoints (r7 mechanism, kept deliberately): the
-    # entity-distinct action below computes every level in ONE fused chain
-    # off the stored input cache, then each level's blocks serve all later
-    # consumers. Under AQE even eager=False executes the level's stages at
-    # call time (toRdd finalizes the adaptive plan); per-level persist()
-    # markers were tried in r8 and do NOT reliably serve these nested level
-    # plans (see the docstring).
-    resolved_per_level: list[DataFrame] = []
-    current = observed.filter(F.col("level") == max_level).withColumn(
-        "observed", F.lit(True)
-    )
-    if checkpoint:
-        current = current.localCheckpoint(eager=False)
-    resolved_per_level.append(current)
 
-    for lvl in range(max_level - 1, 0, -1):
-        child = resolved_per_level[-1]
-        has_obs = bool(obs_paths_by_level.get(lvl))
-        obs_lvl = observed.filter(F.col("level") == lvl).withColumn(
-            "observed", F.lit(True)
+    def local(rows, columns):  # taxonomy-sized, broadcast into a join
+        return F.broadcast(spark.createDataFrame(pd.DataFrame(rows, columns=columns)))
+
+    # the observed rows, and each one's contributions to the missing
+    # ancestors above it, keyed by the base's own path column
+    if raw_map is None:
+        key, path_of = "path", {p: p for p in obs_paths}
+        out = base
+    else:
+        key, path_of = "__raw", raw_map
+        out = base.join(
+            local(
+                [(r, p, p.count("|") + 1) for r, p in raw_map.items()],
+                ["__raw", "path", "level"],
+            ),
+            "__raw",
+        ).select("path", F.col("level").cast("int"), "entity_id", "value")
+    out = out.withColumn("observed", F.lit(True))
+    runs = missing_runs(obs_paths)
+    pairs = [
+        (k, a, a.count("|") + 1) for k, p in path_of.items() for a in runs[p]
+    ]
+    if pairs:
+        rolled = (
+            base.join(local(pairs, [key, "anc_path", "anc_level"]), key)
+            .groupBy("anc_path", "anc_level", "entity_id")
+            .agg(F.sum("value").alias("value"))
         )
-        missing = missing_by_level.get(lvl, set())
-        if not missing:
-            # every parent at this level is observed: the old shape ran a
-            # whole-level groupBy and anti-joined away 100% of its output
-            current = obs_lvl
-        elif not has_obs:
-            # NOTHING observed at this level: the obs_lvl slice would scan
-            # the cached input only to yield 0 rows — every node here is a
-            # rolled-up missing parent, so skip the union (and its scan)
-            current = (
-                child.withColumn("path", parent_path("path"))
-                .filter(F.col("path").isNotNull())
-                .groupBy("path", "entity_id")
-                .agg(F.sum("value").alias("value"))
-                .withColumn("level", F.lit(lvl))
-                .withColumn("observed", F.lit(False))
-                .select(*obs_lvl.columns)
+        out = out.unionByName(
+            rolled.select(
+                F.col("anc_path").alias("path"),
+                F.col("anc_level").cast("int").alias("level"),
+                "entity_id",
+                "value",
+                F.lit(False).alias("observed"),
             )
-        else:
-            # roll up ONLY the children of missing parents. Parent derived
-            # from the path string, no join to find it; the old
-            # observed-wins anti-join is unnecessary because the
-            # aggregation now produces missing parents only.
-            parents = child.withColumn("path", parent_path("path")).filter(
-                F.col("path").isNotNull()
-            )
-            # partially observed level: broadcast semi-join on the
-            # taxonomy-sized missing set (not an IN-list — a 10^5-path
-            # isin builds a megabyte expression tree re-parsed per
-            # level) prunes the children to the needed subtrees
-            miss_df = spark.createDataFrame(
-                [(p,) for p in sorted(missing)], ["path"]
-            )
-            parents = parents.join(F.broadcast(miss_df), "path", "left_semi")
-            rolled = (
-                parents.groupBy("path", "entity_id")
-                .agg(F.sum("value").alias("value"))
-                .withColumn("level", F.lit(lvl))
-                .withColumn("observed", F.lit(False))
-            )
-            current = obs_lvl.unionByName(rolled.select(*obs_lvl.columns))
-        if checkpoint:
-            current = current.localCheckpoint(eager=False)
-        resolved_per_level.append(current)
-
-    out = resolved_per_level[0]
-    for lvl_df in resolved_per_level[1:]:
-        out = out.unionByName(lvl_df)
-    # COALESCE the union: it stacks max_level per-level shuffles (~200
-    # narrow partitions at default config) and every downstream consumer
-    # (entity distinct, flags, vectors, winner pivot, sinks) paid ~200
-    # near-empty task launches per scan — measured ~10 s/scan of pure
-    # scheduling at sf0.1 local[8]. Target is parallelism-sized, never below
-    # the source count on a big cluster.
-    out = out.select("path", "level", "entity_id", "value", "observed").coalesce(
-        max(2 * spark.sparkContext.defaultParallelism, 16)
-    )
-    # the one action: materializes every level, after which the base cache
-    # can go (repeated invocations must not accumulate cached inputs)
+        )
+    # the one action fills the cache, after which the base cache can go
+    # (repeated invocations must not accumulate cached inputs)
+    out = out.persist()
     present = {r["entity_id"] for r in out.select("entity_id").distinct().collect()}
     base.unpersist()
-    _tlog(f"rollup: level chain + entity distinct {time.time()-t0:.2f}s")
+    _tlog(f"rollup: exchange + entity distinct {time.time()-t0:.2f}s")
     return ResolvedTree(
         spark, _entity_order(present, entity_order), None, False, _frame=out
     )
 
 
-def hierarchical_rollup(
-    long_df: DataFrame,
-    clean_paths: bool = True,
-    checkpoint: bool = True,
-) -> DataFrame:
+def hierarchical_rollup(long_df: DataFrame, clean_paths: bool = True) -> DataFrame:
     """Observed-wins hierarchical rollup (reference: lib/tree.R:372-449).
 
     Input: long frame (clade_name, entity_id, value) — one row per observed
@@ -524,11 +449,11 @@ def hierarchical_rollup(
     covering EVERY node of the taxonomy: observed nodes keep their input
     vector verbatim; unobserved ancestors get the elementwise sum of their
     resolved children (transitive, deepest-first). It is ``frame()`` of
-    :func:`resolve_tree` (driver kernel or checkpointed level chain, decided
-    there); use that directly to keep the entity list and, on the driver
-    path, the per-node vectors.
+    :func:`resolve_tree` (driver kernel or one distributed exchange,
+    decided there); use that directly to keep the entity list and, on the
+    driver path, the per-node vectors.
     """
-    return resolve_tree(long_df, clean_paths, checkpoint).frame()
+    return resolve_tree(long_df, clean_paths).frame()
 
 
 def to_feature_vectors(resolved: DataFrame, entity_ids: list[str]) -> DataFrame:

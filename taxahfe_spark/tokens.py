@@ -8,9 +8,10 @@ over token ids, "metadata label" -> point-in-time joined label table.
 
 Because only LEAVES are observed in token space (a token maps to exactly one
 leaf clade per snapshot), the full multi-level rollup collapses to ONE
-ancestor-prefix explode + ONE groupBy — no level loop and no observed-wins
-arbitration needed. The level loop in taxonomy.hierarchical_rollup is only
-required when mid-level rows can be observed (the microbiome CSV case).
+ancestor-prefix explode + ONE groupBy — no observed-wins arbitration
+needed. taxonomy.hierarchical_rollup adds that arbitration (observed rows
+feed only the missing ancestors below their first observed one) for when
+mid-level rows can be observed (the microbiome CSV case).
 """
 
 from __future__ import annotations

@@ -254,11 +254,15 @@ def test_corr_spearman_monotone():
     assert r_p < 1.0
 
 
-def test_shuffle_strategy_identical(spark, competition_state):
+def test_shuffle_strategy_identical(spark, competition_state, monkeypatch):
     """The 100 TB vector path (applyInPandas over a distributed join, no
     driver collect) must produce bit-identical decisions and outcomes —
-    also when the vectors arrive as a driver tree's dict."""
+    also when the vectors arrive as a driver tree's dict. A zero broadcast
+    budget forces that path."""
+    from taxahfe_spark.operators import competition
     from taxahfe_spark.taxonomy import resolve_tree
+
+    monkeypatch.setattr(competition, "BROADCAST_MAX_BYTES", 0)
 
     long = spark.createDataFrame(
         _long_rows(), "clade_name string, entity_id string, value double"
@@ -272,14 +276,11 @@ def test_shuffle_strategy_identical(spark, competition_state):
     vectors = to_feature_vectors(resolved, ENTITIES)
     params = CompetitionParams(
         lowest_level=1, max_level=14, nperm=2, num_trees=40, seed=11,
-        vector_strategy="shuffle",
     )
     for vecs in (vectors, resolve_tree(long, entity_order=ENTITIES).vectors):
-        state2 = (
-            TreeCompetition(vecs, flags_pdf, LABEL, None, params)
-            .run()
-            .set_index("path")
-        )
+        comp = TreeCompetition(vecs, flags_pdf, LABEL, None, params)
+        assert comp.strategy == "shuffle"
+        state2 = comp.run().set_index("path")
         pd.testing.assert_frame_equal(
             competition_state.sort_index(), state2.sort_index()
         )

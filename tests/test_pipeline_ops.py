@@ -861,7 +861,7 @@ def test_incremental_minhash_dedup_keeps_caller_cache(spark):
 def _hfe_inputs_with_nulls(spark, sf_dir):
     """The supplier hierarchy, plus the same frame with a null-entity row and
     a null-value row appended (the null entity is pruned by the metadata
-    join; the null value routes the rollup to the level chain)."""
+    join; the null value routes the rollup to the distributed path)."""
     import __spark_entry__ as em
 
     long, meta = em.supplier_hierarchy(spark, sf_dir)
@@ -876,7 +876,7 @@ def _hfe_inputs_with_nulls(spark, sf_dir):
 def test_driver_prefix_parity_with_distributed(spark, sf_dir, monkeypatch):
     """The driver tree (numpy rollup/flags/vectors, fork-pool stages) must
     produce the exact same competition state and winner matrix as the
-    distributed path (TAXAHFE_DISTRIBUTED=1: level chain, vectors groupBy,
+    distributed path (TAXAHFE_DISTRIBUTED=1: one-exchange rollup, vectors groupBy,
     Spark competition stages) — null inputs included."""
     import pandas as pd
 
@@ -908,7 +908,7 @@ def test_driver_prefix_parity_with_distributed(spark, sf_dir, monkeypatch):
 def test_driver_prefix_resolved_content_matches_distributed(spark, sf_dir, monkeypatch):
     """A driver tree's frame() is a driver-built local relation — its rows
     (incl. explicit zero-sum ancestor pairs and the observed flags) must
-    equal the distributed level chain's output, null inputs included."""
+    equal the distributed rollup's output, null inputs included."""
     import pandas as pd
 
     from taxahfe_spark.operators.competition import CompetitionParams

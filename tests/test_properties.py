@@ -4,7 +4,9 @@ These target the Spark-free functions whose contracts the distributed plans
 lean on: correlation math, competition decision rules, collinearity pruning,
 label binning, per-group slopes, name cleaning, and the media decoders.
 Spark-side equivalents are covered by the example-based suites; here the
-input space is explored adversarially.
+input space is explored adversarially. One property does run Spark: the
+rollup's driver kernel against its one-exchange distributed path, on few
+examples to keep the suite fast.
 """
 
 from __future__ import annotations
@@ -232,3 +234,95 @@ def test_ppm_roundtrip_property(w, h, seed):
     payload = b"P6\n%d %d\n255\n" % (w, h) + px.tobytes()
     img = decode_ppm(payload)
     assert np.array_equal((img * 255).round().astype(np.uint8), px)
+
+
+# -- observed-wins rollup: driver kernel vs the one-exchange path -------------
+
+
+def _nested_rollup(rows):
+    """Pure-Python observed-wins rollup with F.sum's null semantics: each
+    missing ancestor is the nested sum over its resolved children (null
+    values skipped, a null entity its own key, all-null sums null);
+    observed rows stay verbatim."""
+    obs: dict[str, list] = {}
+    for p, e, v in rows:
+        obs.setdefault(p, []).append((e, v))
+
+    def parent(q):
+        return (q[: q.rfind("|")] or None) if "|" in q else None
+
+    children: dict[str, set] = {}
+    for p in obs:
+        q, a = p, parent(p)
+        while a is not None:
+            children.setdefault(a, set()).add(q)
+            q, a = a, parent(a)
+    memo: dict[str, dict] = {}
+
+    def resolve(n):
+        if n not in memo:
+            acc: dict = {}
+            for q in sorted(children[n]):
+                for e, v in obs[q] if q in obs else resolve(q).items():
+                    acc[e] = acc.get(e) if v is None else (acc.get(e) or 0.0) + v
+            memo[n] = acc
+        return memo[n]
+
+    out = [(p, p.count("|") + 1, e, v, True) for p, e, v in rows]
+    for n in children:
+        if n not in obs:
+            out += [(n, n.count("|") + 1, e, v, False) for e, v in resolve(n).items()]
+    return out
+
+
+def _rows_close(got, want):
+    def key(r):
+        return (r[0], r[2] is None, r[2] or "", r[4], r[3] is None, r[3] or 0.0)
+
+    got, want = sorted(got, key=key), sorted(want, key=key)
+    assert [r[:3] + r[4:] for r in got] == [r[:3] + r[4:] for r in want]
+    for g, w in zip(got, want):
+        assert (g[3] is None) == (w[3] is None), (g, w)
+        assert g[3] is None or np.isclose(g[3], w[3], rtol=1e-9, atol=1e-9), (g, w)
+
+
+@st.composite
+def _taxonomy_rows(draw):
+    """Up to 7-level paths over a tiny alphabet (shared prefixes, runs of
+    missing ancestors, empty segments), duplicate rows, values that cancel
+    to 0.0 and — in half the inputs — null values and null entity ids."""
+    path = st.lists(st.sampled_from(["a", "b", "c", ""]), min_size=1, max_size=7)
+    entity = st.sampled_from(["s1", "s2", "s3"])
+    value = st.one_of(
+        st.sampled_from([1.0, -1.0, 0.5, -0.5, 0.0]),
+        st.floats(-100, 100, allow_nan=False),
+    )
+    if draw(st.booleans()):
+        entity, value = st.one_of(entity, st.none()), st.one_of(value, st.none())
+    rows = draw(
+        st.lists(st.tuples(path.map("|".join), entity, value), min_size=1, max_size=20)
+    )
+    return rows + draw(st.lists(st.sampled_from(rows), max_size=3))
+
+
+@settings(max_examples=15, deadline=None)
+@given(_taxonomy_rows(), st.booleans())
+def test_rollup_paths_agree_property(spark, rows, clean_paths):
+    import os
+    from unittest import mock
+
+    from taxahfe_spark.taxonomy import resolve_tree
+
+    long = spark.createDataFrame(
+        rows, "clade_name string, entity_id string, value double"
+    )
+    with mock.patch.dict(os.environ, {"TAXAHFE_DISTRIBUTED": "1"}):
+        dist = resolve_tree(long, clean_paths).frame().collect()
+    _rows_close(dist, _nested_rollup(rows))
+    with mock.patch.dict(os.environ):
+        os.environ.pop("TAXAHFE_DISTRIBUTED", None)
+        tree = resolve_tree(long, clean_paths)
+    has_nulls = any(e is None or v is None for _, e, v in rows)
+    assert tree.on_driver is not has_nulls
+    if not has_nulls:
+        _rows_close(dist, tree.frame().collect())

@@ -147,24 +147,26 @@ def test_filter_flags(spark, resolved):
     assert flags["k__a|p__x|c__n"]["passed_abundance"] is False
 
 
+def _norm(df):
+    """A resolved frame as sorted pandas rows, values rounded to 9 places."""
+    pdf = df.toPandas()
+    pdf["level"] = pdf["level"].astype("int64")
+    pdf["value"] = pdf["value"].round(9)
+    return (
+        pdf.sort_values(["path", "entity_id", "value"], kind="mergesort")
+        .reset_index(drop=True)[sorted(pdf.columns)]
+    )
+
+
 def test_driver_rollup_parity_with_distributed(spark, sf_dir, monkeypatch):
     """The driver kernel of resolve_tree (Arrow collect + numpy
-    observed-wins rollup) must produce the same rows as the distributed
-    level chain (TAXAHFE_DISTRIBUTED=1) — for both clean_paths modes, on
+    observed-wins rollup) must produce the same rows as the one-exchange
+    distributed rollup (TAXAHFE_DISTRIBUTED=1) — for both clean_paths modes, on
     real testdata (duplicates, zero-sum presence rows and multi-level
     missing ancestors included), on the synthetic observed-wins fixture,
     and on null entity ids / null values, which F.sum skips or groups."""
     import __spark_entry__ as em
     from taxahfe_spark.taxonomy import resolve_tree
-
-    def norm(df):
-        pdf = df.toPandas()
-        pdf["level"] = pdf["level"].astype("int64")
-        pdf["value"] = pdf["value"].round(9)
-        return (
-            pdf.sort_values(["path", "entity_id", "value"], kind="mergesort")
-            .reset_index(drop=True)[sorted(pdf.columns)]
-        )
 
     wide = spark.createDataFrame(
         [(c, *v) for c, *v in WIDE_ROWS], ["clade_name", *ENTITIES]
@@ -188,7 +190,7 @@ def test_driver_rollup_parity_with_distributed(spark, sf_dir, monkeypatch):
         for cp in (False, True):
             monkeypatch.delenv("TAXAHFE_DISTRIBUTED", raising=False)
             tree = resolve_tree(long, clean_paths=cp)
-            # nulls are routed to the level chain, everything else stays local
+            # nulls are routed to the distributed path, everything else stays local
             assert tree.on_driver is (long is not nulls)
             fast = tree.frame()
             assert fast.rdd.getNumPartitions() >= 1  # local relation, usable
@@ -197,9 +199,9 @@ def test_driver_rollup_parity_with_distributed(spark, sf_dir, monkeypatch):
             assert not slow_tree.on_driver
             assert slow_tree.entities == tree.entities
             pd.testing.assert_frame_equal(
-                norm(fast), norm(slow_tree.frame()), check_dtype=False
+                _norm(fast), _norm(slow_tree.frame()), check_dtype=False
             )
-    got = norm(slow_tree.frame()).set_index(["path", "entity_id"])["value"]
+    got = _norm(slow_tree.frame()).set_index(["path", "entity_id"])["value"]
     assert got[("a|b", "s1")] == 1.0  # the null value is skipped, not NaN
     assert ("a|e|f", "s2") not in got.index  # the null entity stays apart
 
@@ -214,3 +216,36 @@ def test_rollup_null_clade_name_raises(spark):
     for cp in (False, True):
         with pytest.raises(ValueError, match="clade_name"):
             hierarchical_rollup(long, clean_paths=cp)
+
+
+def test_deep_tree_rollup_paths_match_oracle(spark, monkeypatch):
+    """On a seeded 7-level tree with runs of missing ancestors, the driver
+    kernel and the one-exchange distributed rollup give the same rows, and
+    both equal the independent oracle's vectors."""
+    import numpy as np
+    from deep_tree import deep_tree_long
+    from oracle_collapse import rollup
+
+    from taxahfe_spark.taxonomy import missing_runs, resolve_tree
+
+    long_pdf = deep_tree_long(seed=5)
+    runs = missing_runs(long_pdf["clade_name"])
+    assert max(len(r) for r in runs.values()) >= 2, "fixture lost its deep runs"
+    entities = sorted(long_pdf["entity_id"].unique())
+    want = rollup(long_pdf.rename(columns={"clade_name": "path"}), entities)
+    long = spark.createDataFrame(long_pdf)
+    for cp in (False, True):
+        monkeypatch.delenv("TAXAHFE_DISTRIBUTED", raising=False)
+        driver = resolve_tree(long, clean_paths=cp)
+        monkeypatch.setenv("TAXAHFE_DISTRIBUTED", "1")
+        dist = resolve_tree(long, clean_paths=cp)
+        assert driver.on_driver and not dist.on_driver
+        assert driver.entities == dist.entities == entities
+        got = _norm(driver.frame())
+        pd.testing.assert_frame_equal(got, _norm(dist.frame()), check_dtype=False)
+        assert set(got["path"]) == set(want)
+        slot = {e: i for i, e in enumerate(entities)}
+        for path, grp in got.groupby("path"):
+            vec = np.zeros(len(entities))
+            vec[[slot[e] for e in grp["entity_id"]]] = grp["value"]
+            np.testing.assert_array_equal(vec, want[path].round(9), err_msg=path)

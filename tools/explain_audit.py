@@ -11,7 +11,9 @@ Usage: python tools/explain_audit.py [sf_dir]   (default sf0.01)
 
 from __future__ import annotations
 
+import os
 import sys
+from unittest import mock
 
 sys.path.insert(0, "/root/repo")
 
@@ -89,18 +91,25 @@ def main() -> None:
         "SortMergeJoin" not in p,
     )
 
-    # 5. rollup: map-side partial aggregation before the exchange
+    # 5. distributed rollup: ONE exchange for every missing ancestor, with
+    #    map-side partial aggregation before it. The result is persisted, so
+    #    its plan is the cached adaptive plan; count the executed (final)
+    #    plan, not the initial one printed below it
     from taxahfe_spark.taxonomy import hierarchical_rollup
 
     long = spark.createDataFrame(
-        [("a|b|c", "e1", 1.0), ("a|b|d", "e1", 2.0)],
+        [("a|b|c", "e1", 1.0), ("a|b|d", "e1", 2.0), ("a|x|y|z", "e2", 3.0)],
         "clade_name string, entity_id string, value double",
     )
-    p = plan(hierarchical_rollup(long, checkpoint=False))
+    with mock.patch.dict(os.environ, {"TAXAHFE_DISTRIBUTED": "1"}):
+        p = plan(hierarchical_rollup(long)).split("== Initial Plan ==")[0]
     check(
         "rollup: partial_sum before the exchange (map-side combine)",
         "partial_sum" in p,
     )
+    n_exchange = p.count("Exchange hashpartitioning")
+    check("rollup: exactly one Exchange hashpartitioning", n_exchange == 1,
+          f"found {n_exchange}")
 
     # 6. whole-stage codegen covers the text/token hot path (no Python UDFs)
     from taxahfe_spark.tokens import tokenize
