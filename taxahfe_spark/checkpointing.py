@@ -4,13 +4,22 @@ A run is a DAG of named stages. Each stage is materialized to parquet under
 ``{base}/{run_id}/{stage}/data`` with a manifest recording:
 
 - lineage: stage name, declared inputs, a fingerprint of the logical plan;
-- per-partition metrics: rows per partition written by the stage.
+- per-partition metrics: rows per parquet file the stage wrote. A write
+  task writes one file (one per partition directory under
+  ``partition_by``), so this is rows per write task; ``n_partitions`` is
+  the number of files and ``rows`` their total.
+
+A commit runs no Spark job after the write: the row counts come from the
+parquet footers of the written files, and the stage is read back with the
+schema of the DataFrame it came from (no schema-inference job).
 
 ``checkpoint()`` is resume-aware: if the stage directory already carries a
 committed manifest whose plan fingerprint matches, the stage is NOT
 recomputed — the parquet is read back, truncating both work and lineage
 (the iterative analog of the reference rerunning from saved flat files;
-also how the level-loop competition survives a mid-run restart).
+also how the level-loop competition survives a mid-run restart). The
+commit and the resume read the stage back the same way, so the plans built
+on top of it fingerprint the same.
 
 The manifest is written AFTER the data (write-ahead data, commit-last), so a
 crash mid-stage leaves no committed marker and the stage reruns cleanly.
@@ -21,33 +30,45 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import re
 import time
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 MANIFEST = "manifest.json"
 
 
 def plan_fingerprint(df: DataFrame) -> str:
-    """Stable fingerprint of the analyzed logical plan (expression ids are
-    normalized away so the same query text fingerprints identically)."""
-    import re
-
+    """Stable fingerprint of the analyzed logical plan. Expression ids are
+    normalized away, and lambda variables (``lambda x_12``, numbered by a
+    JVM-wide counter) are renumbered by first appearance, so the same query
+    built twice fingerprints identically, in one session or two."""
     plan = df._jdf.queryExecution().analyzed().toString()
+    names: dict[str, int] = {}
+    plan = re.sub(
+        r"(lambda \w+?_)(\d+)#",
+        lambda m: f"{m[1]}{names.setdefault(m[0], len(names))}#",
+        plan,
+    )
     plan = re.sub(r"#\d+L?", "#x", plan)
     return hashlib.sha256(plan.encode()).hexdigest()[:16]
 
 
-def partition_metrics(df: DataFrame) -> list[dict]:
-    """Rows per physical partition — one tiny aggregation, no collect of data."""
-    rows = (
-        df.withColumn("__pid", F.spark_partition_id())
-        .groupBy("__pid")
-        .count()
-        .collect()
-    )
-    return [{"partition": r["__pid"], "rows": r["count"]} for r in rows]
+def partition_metrics(data_path: str) -> list[dict]:
+    """Rows per written parquet file, read from the file footers: no Spark
+    job. ``partition`` is the number of the write task that wrote the file
+    (the ``part-NNNNN`` of its name)."""
+    out = []
+    for root, dirs, files in os.walk(data_path):
+        dirs.sort()
+        for name in sorted(files):
+            m = re.match(r"part-(\d+)", name)
+            if m:
+                rows = pq.read_metadata(os.path.join(root, name)).num_rows
+                out.append({"partition": int(m[1]), "rows": rows})
+    return out
 
 
 class StageCheckpointer:
@@ -78,17 +99,21 @@ class StageCheckpointer:
         """Materialize ``df`` as ``stage`` (or reuse the committed result)."""
         data_path, mpath = self._paths(stage)
         fp = plan_fingerprint(df)
+        # the data columns' schema: partition columns are discovered from
+        # the directory names, as schema inference would, so the read-back
+        # equals spark.read.parquet(data_path) without its inference job
+        schema = StructType([f for f in df.schema if f.name not in (partition_by or ())])
+        read_back = self.spark.read.schema(schema).parquet
         manifest = self.load_manifest(stage)
         if manifest and manifest.get("plan_fingerprint") == fp and not force:
-            return self.spark.read.parquet(data_path)
+            return read_back(data_path)
 
         t0 = time.time()
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(data_path)
-        out = self.spark.read.parquet(data_path)
-        metrics = partition_metrics(out)
+        metrics = partition_metrics(data_path)
         with open(mpath + ".tmp", "w") as f:
             json.dump(
                 {
@@ -105,7 +130,7 @@ class StageCheckpointer:
                 indent=2,
             )
         os.replace(mpath + ".tmp", mpath)  # commit-last
-        return out
+        return read_back(data_path)
 
     def lineage(self) -> list[dict]:
         """All committed stage manifests for this run (audit surface)."""

@@ -5,8 +5,9 @@ All four families are expressed shuffle-consciously:
 - exact: hash the normalized text FIRST so the shuffle moves 8-byte keys,
   not document bodies; keep the min id per group.
 - MinHash + LSH: shingle -> per-shingle xxhash64 with k seeds -> min per
-  seed (one map-side-combinable groupBy), band the signature, bucket-join on
-  (band_idx, band_hash). Candidate verification by signature-estimated
+  seed (one map-side-combinable groupBy), band the signature, collect the
+  ids of each (band_idx, band_hash) bucket in one aggregate and pair them
+  inside the bucket. Candidate verification by signature-estimated
   Jaccard. No driver participation at any step.
 - SimHash: 64 weighted bit-sums per doc from word hashes, banded into 4x16
   bit chunks for Hamming<=3-style candidate generation.
@@ -128,6 +129,9 @@ def minhash_signatures(
         ).alias("__pos"),
     )
     shingle = F.substr("__norm", F.col("__pos"), F.lit(shingle_k))
+    # the lanes are ONE SQL aggregate built from expression strings: the
+    # same 64 Column trees built through the Python API cost ~5,000 py4j
+    # round trips per call, more than the aggregate itself on small inputs
     if hash_fn == "md5":
         sh = ex.select(
             id_col,
@@ -135,17 +139,18 @@ def minhash_signatures(
                 F.concat(shingle, F.lit(f":{seed}")).cast("binary")
             ).alias("h0"),
         )
+        # md5_hash60(concat(h0, ':i')), spelled out
         lanes = [
-            F.min(
-                md5_hash60(F.concat(F.col("h0"), F.lit(f":{i}")))
-            ).alias(f"h{i}")
+            "CAST(conv(substring(md5(CAST(concat(h0, ':%d') AS BINARY)), 1, 15), 16, 10)"
+            " AS BIGINT)" % i
             for i in range(num_hashes)
         ]
     else:
         # (a_i * h + b_i) mod 2^31: 31-bit operands keep the product under
         # 2^62 (ANSI bigint arithmetic never overflows); odd a_i makes each
         # lane a bijection of Z_2^31, so lane argmins decorrelate like
-        # independent permutations
+        # independent permutations. a_i, b_i and 2^31 - 1 are int literals
+        # and h0 is a bigint, so the lane arithmetic is bigint
         m31 = (1 << 31) - 1
         sh = ex.select(
             id_col,
@@ -155,15 +160,9 @@ def minhash_signatures(
         for i in range(num_hashes):
             a = (zlib.crc32(f"{seed}:a{i}".encode()) & m31) | 1
             b = zlib.crc32(f"{seed}:b{i}".encode()) & m31
-            lanes.append(
-                F.min(
-                    (F.lit(a) * F.col("h0") + F.lit(b)).bitwiseAND(F.lit(m31))
-                ).alias(f"h{i}")
-            )
-    mins = sh.groupBy(id_col).agg(*lanes)
-    return mins.select(
-        id_col, F.array(*[f"h{i}" for i in range(num_hashes)]).alias("sig")
-    )
+            lanes.append(f"(({a} * h0) + {b}) & {m31}")
+    sig = "array(" + ", ".join(f"min({lane})" for lane in lanes) + ") AS sig"
+    return sh.groupBy(id_col).agg(F.expr(sig))
 
 
 def _band_keys_col(num_bands: int, rows_per_band: int, hash_fn: str):
@@ -210,15 +209,23 @@ def minhash_lsh_pairs(
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Candidate near-duplicate pairs (a < b) whose signature-estimated
-    Jaccard >= threshold. Bucket join on (band_idx, band_hash).
+    Jaccard >= threshold. Band buckets are ONE aggregate: collect the ids
+    per (band_idx, band_hash), then pair them inside each bucket.
 
-    The signature frame feeds BOTH sides of the self-join (and sig_len when
-    not given) — persist it so the shingle+hash DAG runs once, not 3x.
+    The bucket exchange moves ids and band keys only; the signatures are
+    rejoined to the distinct candidate pairs afterwards. A doc appears once
+    per band, so a bucket's id list is exactly its members and the pairs
+    are those of a (band_idx, band_hash) self-join.
 
-    ``max_bucket_size`` drops band buckets larger than the cap before the
-    self-join: a bucket of m docs yields m^2/2 candidate pairs, so one
+    The signature frame feeds the bucket aggregate and both sides of the
+    rejoin (and sig_len when not given) — persist it so the shingle+hash
+    DAG runs once, not 3x.
+
+    ``max_bucket_size`` drops band buckets of more than that many docs
+    before pairing: a bucket of m docs yields m^2/2 candidate pairs, so one
     boilerplate-heavy bucket can dominate the whole job (the documented
-    coverage cap for this operator — same role as ngram max_df).
+    coverage cap for this operator — same role as ngram max_df). ``None``
+    keeps every bucket; null ids are not bucket members.
     """
     sigs = sigs.persist()
     sigs.count()  # materialize ONCE: the band job references sigs 3x and
@@ -227,31 +234,22 @@ def minhash_lsh_pairs(
         sig_len = sigs.select(F.size("sig")).first()[0]
     rows_per_band = max(1, sig_len // num_bands)
     bands = _band_keys_col(num_bands, rows_per_band, hash_fn)
-    banded = sigs.select(
-        F.col(id_col).alias("id"),
-        "sig",
-        F.posexplode(bands).alias("band_idx", "band_hash"),
-    )
-    if max_bucket_size is not None:
-        hot = (
-            banded.groupBy("band_idx", "band_hash")
-            .count()
-            .filter(F.col("count") > max_bucket_size)
-            .select("band_idx", "band_hash")
+    buckets = (
+        sigs.select(
+            F.col(id_col).alias("id"), F.posexplode(bands).alias("band_idx", "band_hash")
         )
-        banded = banded.join(F.broadcast(hot), ["band_idx", "band_hash"], "left_anti")
-    a = banded.select(
-        F.col("id").alias("a"), F.col("sig").alias("sig_a"), "band_idx", "band_hash"
+        .groupBy("band_idx", "band_hash")
+        .agg(F.collect_list("id").alias("ids"))
     )
-    b = banded.select(
-        F.col("id").alias("b"), F.col("sig").alias("sig_b"), "band_idx", "band_hash"
-    )
+    size = F.size("ids")
+    keep = size > 1 if max_bucket_size is None else (size > 1) & (size <= max_bucket_size)
     # distinct on the bare id pair (cheap), then rejoin the persisted
     # signatures once - distinct over 64-long arrays shuffles k x more bytes
     ids = (
-        a.drop("sig_a").join(b.drop("sig_b"), ["band_idx", "band_hash"])
+        buckets.filter(keep)
+        .select(F.explode("ids").alias("a"), "ids")
+        .select("a", F.explode("ids").alias("b"))
         .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
         .distinct()
     )
     sa = sigs.select(F.col(id_col).alias("a"), F.col("sig").alias("sig_a"))

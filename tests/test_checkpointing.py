@@ -1,5 +1,5 @@
 """Checkpoint/lineage tests: commit-last semantics, resume skips recompute,
-per-partition metrics recorded."""
+per-partition metrics recorded, no job after the write."""
 
 from __future__ import annotations
 
@@ -101,3 +101,67 @@ def test_competition_level_resume(spark, tmp_path):
         CompetitionParams(lowest_level=1, nperm=2, num_trees=20, seed=4),
     )
     assert comp3._load_progress(rdir) == []
+
+
+def test_same_lambda_stage_built_twice_resumes(spark, tmp_path):
+    """Lambda variables are numbered by a JVM-wide counter (x_12, x_13, ...);
+    the fingerprint renumbers them, so a stage built again in the same
+    session fingerprints like the committed one and is reused."""
+    cp = StageCheckpointer(spark, str(tmp_path), "run4")
+
+    def build():
+        arr = spark.range(6).select(F.array("id", F.col("id") + 1).alias("a"))
+        return arr.select(
+            F.filter("a", lambda x: x > 2).alias("b"),
+            F.aggregate("a", F.lit(0).cast("long"), lambda acc, v: acc + v).alias("s"),
+        )
+
+    cp.checkpoint(build(), "lam", inputs=[])
+    committed = cp.load_manifest("lam")["committed_at"]
+    out = cp.checkpoint(build(), "lam", inputs=[])
+    assert cp.load_manifest("lam")["committed_at"] == committed
+    assert sorted(r["s"] for r in out.collect()) == [1, 3, 5, 7, 9, 11]
+
+
+def _new_jobs(sc, action) -> int:
+    """Spark jobs started by ``action`` (the test_bpe job-count idiom)."""
+    tracker = sc.statusTracker()
+    before = max(tracker.getJobIdsForGroup() or [0])
+    action()
+    return max(tracker.getJobIdsForGroup() or [0]) - before
+
+
+def test_commit_runs_no_job_beyond_its_write(spark, tmp_path):
+    """A commit of a narrow stage runs the write's jobs and nothing else: no
+    per-partition metrics job and no schema-inference read. The footer
+    metrics still add up to the stage's row count."""
+    cp = StageCheckpointer(spark, str(tmp_path), "run5")
+    df = spark.range(0, 5000, 1, 3).withColumn("v", F.col("id") * 2)
+    sc = spark.sparkContext
+    n_write = _new_jobs(sc, lambda: df.write.parquet(str(tmp_path / "plain")))
+    n_commit = _new_jobs(sc, lambda: cp.checkpoint(df, "narrow", inputs=[]))
+    assert n_commit == n_write, (n_commit, n_write)
+    m = cp.load_manifest("narrow")
+    assert m["rows"] == sum(p["rows"] for p in m["partition_metrics"]) == df.count()
+    assert m["n_partitions"] == len(m["partition_metrics"]) == 3
+
+
+@pytest.mark.parametrize("partition_by", [None, ["k"]])
+def test_read_back_schema_matches_inference(spark, tmp_path, partition_by):
+    """The stage is read back with the DataFrame's own schema, yet the result
+    is what schema inference gives (nullable fields; partition columns last,
+    typed from the directory names)."""
+    cp = StageCheckpointer(spark, str(tmp_path), "run6")
+    df = spark.range(40).select(
+        "id",
+        (F.col("id") % 3).alias("k"),
+        F.array("id").alias("arr"),
+        F.struct(F.col("id").cast("string").alias("s")).alias("st"),
+    )
+    out = cp.checkpoint(df, "st", inputs=[], partition_by=partition_by)
+    data = os.path.join(str(tmp_path), "run6", "st", "data")
+    assert out.schema == spark.read.parquet(data).schema
+    assert out.count() == cp.load_manifest("st")["rows"] == 40
+    assert cp.load_manifest("st")["partition_metrics"] == partition_metrics(data)
+    resumed = cp.checkpoint(df, "st", inputs=[], partition_by=partition_by)
+    assert resumed.schema == out.schema

@@ -67,6 +67,66 @@ def test_minhash_near_dup(spark):
     assert sorted(r["doc_id"] for r in kept.collect()) == [1, 3]
 
 
+def _lsh_pairs_reference(sigs, num_bands, max_bucket_size, threshold):
+    """Band self-join in pure Python: a band bucket is the exact lane slice
+    (the operator hashes it), buckets of more than max_bucket_size docs are
+    dropped, and each candidate pair is scored by matching lanes."""
+    from collections import defaultdict
+
+    rows = max(1, len(next(iter(sigs.values()))) // num_bands)
+    buckets = defaultdict(list)
+    for doc, sig in sigs.items():
+        for b in range(num_bands):
+            buckets[(b, tuple(sig[b * rows:(b + 1) * rows]))].append(doc)
+    cand = {
+        (a, b)
+        for members in buckets.values()
+        if len(members) <= max_bucket_size
+        for a in members
+        for b in members
+        if a < b
+    }
+    out = set()
+    for a, b in cand:
+        est = sum(x == y for x, y in zip(sigs[a], sigs[b])) / len(sigs[a])
+        if est >= threshold:
+            out.add((a, b, est))
+    return out
+
+
+@pytest.mark.parametrize("hash_fn", ["xxhash64", "md5"])
+def test_minhash_lsh_bucket_cap_boundary(spark, hash_fn):
+    """Identical texts share every band bucket: a bucket of exactly
+    max_bucket_size docs is kept, one of max_bucket_size + 1 is dropped, and
+    the candidate set (threshold 0) and the scored pairs match a pure-Python
+    band self-join."""
+    import random
+
+    rng = random.Random(5)
+    vocab = ["".join(rng.choice("abcdefghij") for _ in range(rng.randint(3, 7))) for _ in range(60)]
+    rows = [(i, " ".join(rng.choice(vocab) for _ in range(30))) for i in range(1, 21)]
+    # near-duplicates: one letter of the first word changed
+    rows += [(20 + i, "z" + t[1:]) for i, t in rows[:5]]
+    cap = 4
+    kept_text, dropped_text = (" ".join(rng.choice(vocab) for _ in range(30)) for _ in range(2))
+    rows += [(100 + i, kept_text) for i in range(cap)]
+    rows += [(200 + i, dropped_text) for i in range(cap + 1)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    sigs = minhash_signatures(df, hash_fn=hash_fn)
+    sig_map = {r["doc_id"]: list(r["sig"]) for r in sigs.collect()}
+    kept_pairs = {(100 + i, 100 + j, 1.0) for i in range(cap) for j in range(i + 1, cap)}
+    for threshold in (0.0, 0.5):
+        want = _lsh_pairs_reference(sig_map, 16, cap, threshold)
+        got = minhash_lsh_pairs(
+            sigs, threshold=threshold, max_bucket_size=cap, hash_fn=hash_fn
+        ).collect()
+        got = {(r["a"], r["b"], r["est_jaccard"]) for r in got}
+        assert got == want
+        assert kept_pairs <= got
+        assert not any(b >= 200 for _, b, _ in got)
+    sigs.unpersist()
+
+
 def test_connected_components(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (7, 8)], ["a", "b"]

@@ -12,6 +12,7 @@ Usage: python tools/explain_audit.py [sf_dir]   (default sf0.01)
 from __future__ import annotations
 
 import os
+import re
 import sys
 from unittest import mock
 
@@ -128,12 +129,22 @@ def main() -> None:
     p = plan(minhash_signatures(docs))
     check("minhash: partial min agg before exchange", "partial_min" in p)
 
+    #    LSH: the band buckets are one aggregate, so there is exactly one
+    #    exchange keyed on the band and no (band_idx, band_hash) self-join
+    from taxahfe_spark.operators.dedup import minhash_lsh_pairs
+
+    sigs = minhash_signatures(docs)
+    p = plan(minhash_lsh_pairs(sigs))
+    sigs.unpersist()
+    n_exchange = len(re.findall(r"Exchange hashpartitioning\(band_idx#\d+, band_hash#\d+L?,", p))
+    check("minhash LSH: exactly one Exchange on (band_idx, band_hash)", n_exchange == 1,
+          f"found {n_exchange}")
+    check("minhash LSH: no join on band_hash", not re.search(r"Join \[[^\]]*band_hash", p))
+
     # 8. dietML path: NO unpartitioned window anywhere (an unpartitioned
     #    windowspecdefinition starts with an ORDER col, i.e. "col#N ASC|DESC";
     #    a partitioned one lists partition cols first) — the round-2 global
     #    ntile/rank trio funnelled every row through one task
-    import re
-
     def unpartitioned_windows(p: str) -> list[str]:
         return re.findall(r"windowspecdefinition\(\w+#\d+L? (?:ASC|DESC)", p)
 
