@@ -354,6 +354,8 @@ def _write_ml_sinks(res, opts, program: str) -> None:
 
 
 def _run_hfe_ml(spark, opts) -> None:
+    from pyspark.sql import functions as F
+
     from taxahfe_spark.dietml import run_dietml
     from taxahfe_spark.ml import taxa_hfe_ml
     from taxahfe_spark.pipeline import write_output_file
@@ -367,18 +369,24 @@ def _run_hfe_ml(spark, opts) -> None:
         seed=opts.seed,
         k_splits=int(opts.k_splits),
     )
-    write_output_file(train_m, os.path.join(opts.output_dir, "train"))
-    write_output_file(test_m, os.path.join(opts.output_dir, "test"))
-    # dietML must honor the SAME split the competition saw (leakage contract)
-    from pyspark.sql import functions as F
-
-    full = train_m.withColumn("is_train", F.lit(True)).unionByName(
-        test_m.withColumn("is_train", F.lit(False))
-    )
-    res = run_dietml(full, split_col="is_train", **_dietml_kwargs(opts))
-    _write_ml_sinks(res, opts, program="taxaHFE-ML")
-    if opts.summarized_levels:
-        _run_summarized_levels(spark, opts, meta, long, train_m)
+    # each matrix is computed once: its CSV write fills the cache, and
+    # dietML's union and the summarized levels read it from there
+    train_m, test_m = train_m.persist(), test_m.persist()
+    try:
+        write_output_file(train_m, os.path.join(opts.output_dir, "train"))
+        write_output_file(test_m, os.path.join(opts.output_dir, "test"))
+        # dietML must honor the SAME split the competition saw (leakage
+        # contract)
+        full = train_m.withColumn("is_train", F.lit(True)).unionByName(
+            test_m.withColumn("is_train", F.lit(False))
+        )
+        res = run_dietml(full, split_col="is_train", **_dietml_kwargs(opts))
+        _write_ml_sinks(res, opts, program="taxaHFE-ML")
+        if opts.summarized_levels:
+            _run_summarized_levels(spark, opts, meta, long, train_m)
+    finally:
+        train_m.unpersist()
+        test_m.unpersist()
     print(res.full_results.to_string(index=False))
 
 

@@ -187,6 +187,7 @@ def fit_recipe(
     info_gain_n: int = 0,
     label_col: str | None = None,
     feature_type: str = "factor",
+    corr: pd.DataFrame | None = None,
 ) -> Recipe:
     """step_novel -> step_dummy -> step_zv -> (center+scale) -> step_corr
     -> (step_select_infgain when info_gain_n > 0).
@@ -194,7 +195,13 @@ def fit_recipe(
     One-hot categories come from train; unseen test levels encode to
     all-zeros (the effect of step_novel's synthetic level, which is all-zero
     in train). Zero-variance and correlation decisions use train statistics
-    only. All stats come from two Spark jobs regardless of p.
+    only. The cost does not grow with p in jobs: one distinct collect per
+    nominal column, one aggregate for every variance and mean, and for
+    step_corr the Pearson matrix (:func:`_corr_matrix`). ``corr`` is a
+    Pearson matrix of the same train rows labelled by column (the one
+    :func:`reduce_collinearity` returns); when it covers every
+    post-zero-variance column, step_corr reads its submatrix and runs no
+    job. Otherwise (one-hot dummies, or no matrix given) it computes one.
     """
     dtypes = dict(train.dtypes)
     nominal = [c for c in feature_cols if dtypes[c] == "string"]
@@ -229,8 +236,11 @@ def fit_recipe(
 
     dropped_corr: list[str] = []
     if cor_level < 1.0 and len(keep) > 1:
-        corr = _corr_matrix(expanded.select(*keep), keep)
-        dropped_corr = _find_correlated(corr, keep, cor_level)
+        if corr is not None and set(keep) <= set(corr.index):
+            m = corr.loc[keep, keep].to_numpy()
+        else:
+            m = _corr_matrix(expanded.select(*keep), keep)
+        dropped_corr = _find_correlated(m, keep, cor_level)
         keep = [c for c in keep if c not in dropped_corr]
 
     if info_gain_n > 0 and label_col is not None and len(keep) > info_gain_n:
@@ -324,8 +334,9 @@ def _info_gain_scores(
 
 
 def _corr_matrix(df: DataFrame, cols: list[str]) -> np.ndarray:
-    """p x p Pearson matrix via pyspark.ml.stat.Correlation (one job; the
-    matrix is feature-count-sized, the only thing that reaches the driver)."""
+    """p x p Pearson matrix via pyspark.ml.stat.Correlation (4-5 Spark
+    jobs, each a pass over ``df``; the matrix is feature-count-sized, the
+    only thing that reaches the driver)."""
     from pyspark.ml.feature import VectorAssembler
     from pyspark.ml.stat import Correlation
 
@@ -360,11 +371,13 @@ def reduce_collinearity(
     feature_cols: list[str],
     vif_threshold: float = 0.0,
     cor_level: float = 1.0,
-) -> tuple[list[str], pd.DataFrame]:
+) -> tuple[list[str], pd.DataFrame, pd.DataFrame | None]:
     """M6: pairwise-corr prune then iterative VIF prune on TRAIN numerics
     (reference reduce_collinearity_train, lib/diet_ml_funcs.R:1029-1163).
     VIF_j = diag(inv(R))_j; drop the max until all below threshold.
-    Returns (kept columns, audit frame of drops)."""
+    Returns (kept columns, audit frame of drops, Pearson matrix of the kept
+    numeric columns labelled by name — None when no prune ran); fit_recipe
+    reuses the matrix instead of computing it again."""
     audit_rows = []
     dtypes = dict(train.dtypes)
     numeric = [c for c in feature_cols if dtypes[c] != "string"]
@@ -394,8 +407,11 @@ def reduce_collinearity(
             )
             keep.pop(worst)
             corr = np.delete(np.delete(corr, worst, 0), worst, 1)
+        corr = pd.DataFrame(corr, index=keep, columns=keep)
+    else:
+        corr = None
     kept = keep + [c for c in feature_cols if dtypes[c] == "string"]
-    return kept, pd.DataFrame(audit_rows, columns=["column", "reason"])
+    return kept, pd.DataFrame(audit_rows, columns=["column", "reason"]), corr
 
 
 # -- model registry (M1) ------------------------------------------------------
@@ -794,19 +810,25 @@ def run_dietml(
     test = split.filter("NOT is_train").drop("is_train")
 
     _dtlog(f"dietml: split {_ptime.time()-_pt0:.2f}s"); _pt0 = _ptime.time()
-    kept, audit = reduce_collinearity(train, feature_cols, vif_threshold, cor_level)
+    kept, audit, corr = reduce_collinearity(
+        train, feature_cols, vif_threshold, cor_level
+    )
     _dtlog(f"dietml: collinearity {_ptime.time()-_pt0:.2f}s"); _pt0 = _ptime.time()
     standardize = model in ("ridge", "lasso", "enet", "svm")
     recipe = fit_recipe(
         train, kept, standardize, cor_level,
         info_gain_n=info_gain_n, label_col=label_col, feature_type=feature_type,
+        corr=corr,
     )
 
     classes = None
     if feature_type == "factor":
-        classes = sorted(
-            str(r[label_col]) for r in train.select(label_col).distinct().collect()
-        )
+        # the class list and the train size from one aggregate
+        counts = train.groupBy(label_col).count().collect()
+        classes = sorted(str(r[label_col]) for r in counts)
+        n_train = sum(r["count"] for r in counts)
+    else:
+        n_train = train.count()
 
     def prep(d: DataFrame) -> DataFrame:
         return _assemble(
@@ -821,15 +843,22 @@ def run_dietml(
     # (thread-pooled fits still use every core via concurrent jobs); large
     # frames keep their partitioning untouched.
     _dtlog(f"dietml: recipe {_ptime.time()-_pt0:.2f}s"); _pt0 = _ptime.time()
-    n_train = train.count()
     small_parts = (
         max(1, -(-n_train // 25_000)) if n_train <= 100_000 else None
+    )
+    # the small-n fast path (below) collects the CV frame once; only the
+    # pyspark.ml path's thread-pooled fits need both frames materialized
+    fit_local = (
+        model in ("rf", "mars")
+        and n_train <= local_fit_threshold
+        and not reprep_per_fold
     )
     train_p = prep(train)
     if small_parts:
         train_p = train_p.coalesce(small_parts)
     train_p = train_p.persist()
-    train_p.count()
+    if not fit_local:
+        train_p.count()
     test_p = prep(test)
 
     fold_df = fold_assignments(
@@ -839,7 +868,8 @@ def run_dietml(
     if small_parts:
         train_cv = train_cv.coalesce(small_parts)
     train_cv = train_cv.persist()
-    train_cv.count()
+    if not fit_local:
+        train_cv.count()
 
     # small-n fast path (rf): below local_fit_threshold train rows, every CV
     # fit runs the in-repo deterministic numpy forest (functions/rf.py
@@ -866,7 +896,7 @@ def run_dietml(
 
     _dtlog(f"dietml: prep+cv frames {_ptime.time()-_pt0:.2f}s"); _pt0 = _ptime.time()
     local_cv = None
-    if model in ("rf", "mars") and n_train <= local_fit_threshold and not reprep_per_fold:
+    if fit_local:
         local_cv = (
             train_cv.select(id_col, "label", "repeat", "fold", *recipe.keep_cols)
             .toPandas()

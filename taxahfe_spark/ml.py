@@ -4,7 +4,8 @@ projection (reference cmd/taxa_hfe_ml.R + lib/methods.R:55-141).
 The leakage contract (reference lib/methods.R:65-123, the static analog of
 the north rule's zero-temporal-leakage): the tree competition sees ONLY
 training subjects; test features are the training winner set evaluated on
-test subjects — the test tree is built with no filters and no competition.
+test subjects — the test tree is resolved (taxonomy.resolve_tree) with no
+filters and no competition, and only the training winners are read from it.
 """
 
 from __future__ import annotations
@@ -16,7 +17,7 @@ from pyspark.sql import functions as F
 from taxahfe_spark.naming import clean_entity_expr
 from taxahfe_spark.operators.competition import CompetitionParams
 from taxahfe_spark.pipeline import taxa_hfe, winner_feature_matrix
-from taxahfe_spark.taxonomy import hierarchical_rollup
+from taxahfe_spark.taxonomy import resolve_tree
 
 
 def stratified_split(
@@ -61,7 +62,12 @@ def taxa_hfe_ml(
     structural by construction).
     """
     params = params or CompetitionParams()
+    # the split window runs ONCE: its rows come back as a local relation
+    # with the split's own schema, so the train/test filters below, the
+    # metadata joins and the matrix writes never re-run the window. The
+    # metadata is entity-sized, a bound taxa_hfe already holds in pandas.
     split = stratified_split(metadata, train_frac=train_frac, seed=seed)
+    split = metadata.sparkSession.createDataFrame(split.toPandas(), split.schema)
     train_meta = split.filter("is_train").drop("is_train")
     test_meta = split.filter("NOT is_train").drop("is_train")
 
@@ -79,18 +85,18 @@ def taxa_hfe_ml(
         use_super_filter=not params.disable_super_filter,
     )
 
-    # TEST: tree materialized with NO filters and NO competition
+    # TEST: tree resolved with NO filters and NO competition
     # (lib/methods.R:97-100: build_tree(p=0, a=0)), then projected onto the
-    # training winner set
+    # training winner set — a driver tree densifies its vectors, a
+    # distributed one pivots its frame (winner_feature_matrix)
     test_ids = test_meta.select(
         clean_entity_expr("subject_id").alias("entity_id")
     )
     long_test = hierarchical_long.withColumn(
         "entity_id", clean_entity_expr("entity_id")
     ).join(F.broadcast(test_ids), "entity_id", "left_semi")
-    resolved_test = hierarchical_rollup(long_test)
     test_matrix = winner_feature_matrix(
-        resolved_test, state, metadata=test_meta,
+        resolve_tree(long_test), state, metadata=test_meta,
         use_super_filter=not params.disable_super_filter,
     )
     # structural column alignment

@@ -66,15 +66,14 @@ def read_metadata(
             "models; its primary purpose is hierarchical feature engineering."
         )
     if feature_type == "factor":
-        n_levels = df.select("feature_of_interest").distinct().count()
-        # try_cast: ANSI mode makes a plain cast THROW on non-numeric strings
-        numeric_like = (
-            df.filter(
-                F.col("feature_of_interest").try_cast("double").isNotNull()
-            ).count()
-            == df.count()
-        )
-        if numeric_like and n_levels > 10:
+        # one aggregate; try_cast: ANSI mode makes a plain cast THROW on
+        # non-numeric strings
+        n_levels, n_numeric, n_rows = df.selectExpr(
+            "count(DISTINCT feature_of_interest)",
+            "count(try_cast(feature_of_interest AS double))",
+            "count(*)",
+        ).first()
+        if n_numeric == n_rows and n_levels > 10:
             warnings.warn(
                 f"feature_type=factor with a numeric-valued label produces "
                 f"one class PER VALUE ({n_levels} levels). If the response "
@@ -108,14 +107,15 @@ def read_hierarchical_data(
 
 def assert_no_na(df: DataFrame) -> None:
     """NA-fatal guard (reference lib/tree.R:193-196, P8): raise if ANY cell
-    is null/NaN. One aggregation pass; counts per column for the message."""
+    is null/NaN. One aggregation pass; counts per column for the message.
+    The aggregate is SQL text, one string per column: a wide matrix then
+    costs one py4j call, not several per column to build Column trees."""
     checks = []
     for c, t in df.dtypes:
-        cond = F.col(c).isNull()
-        if t in ("double", "float"):
-            cond = cond | F.isnan(F.col(c))
-        checks.append(F.sum(cond.cast("long")).alias(c))
-    row = df.agg(*checks).first()
+        q = "`" + c.replace("`", "``") + "`"
+        cond = f"{q} IS NULL" + (f" OR isnan({q})" if t in ("double", "float") else "")
+        checks.append(f"count_if({cond}) AS {q}")
+    row = df.selectExpr(*checks).first()
     bad = {c: row[c] for c, _ in df.dtypes if row[c]}
     if bad:
         raise ValueError(
@@ -397,15 +397,16 @@ def winner_feature_matrix(
     feature (reference lib/tree.R:880-950 prepare_flattened_df +
     write_output_file).
 
-    ``tree`` is taxa_hfe's :class:`ResolvedTree`, or any resolved long frame
-    (e.g. a hierarchical_rollup result). A tree already knows its entities,
-    and when its vectors are on the driver the winner columns (winner count
-    x entities — small by construction, the whole point of the collapse)
+    ``tree`` is a :class:`ResolvedTree` (taxa_hfe's, or ml.py's test tree,
+    whose winners come from another tree), or any resolved long frame (e.g.
+    a hierarchical_rollup result). A tree already knows its entities, and
+    when its vectors are on the driver the winner columns (winner count x
+    entities — small by construction, the whole point of the collapse)
     densify locally and ship back as ONE Arrow createDataFrame, leaving
     ``tree.frame()`` unbuilt. Otherwise the winners are a filter + pivot of
     the resolved frame — winner count is small, so a bounded-width groupBy.
     Both give the same values: present pairs keep their value, absent pairs
-    are zeros."""
+    (a winner the tree never saw included) are zeros."""
     flag = "sf_winner" if use_super_filter else "winner"
     winners = [r.path for r in state[state[flag]].itertuples()]
     # ALL data entities appear in the output, even those whose every winner
@@ -423,16 +424,16 @@ def winner_feature_matrix(
         base = entities
     elif (
         vecs is not None
-        and all(w in vecs for w in winners)
         and len(entity_ids) * len(winners) <= 50_000_000
         and len({clean_name(w) for w in winners}) == len(winners)
     ):
         # the cell gate falls back to the pivot for pathological winner counts
         pdf = pd.DataFrame({"subject_id": list(entity_ids)})
         for w in winners:
-            idxs, vals = vecs[w]
             col = np.zeros(len(entity_ids))
-            col[np.asarray(idxs, dtype=np.int64)] = vals
+            if w in vecs:
+                idxs, vals = vecs[w]
+                col[np.asarray(idxs, dtype=np.int64)] = vals
             pdf[clean_name(w)] = col
         base = spark.createDataFrame(pdf)
     else:

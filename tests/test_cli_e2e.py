@@ -165,3 +165,28 @@ def test_run_hfe_ml_shap_writes_ranking_and_beeswarm(tmp_path, spark):
     # every ranked feature appears as an axis label in the plot
     texts = {t.text for t in root.iter() if t.tag.endswith("text")}
     assert set(ranking["feature"]) <= texts
+
+
+def test_run_hfe_ml_leaves_nothing_cached(tmp_path, spark):
+    """run-hfe-ml releases every cache it makes (the split, the train/test
+    matrices, dietML's frames): after cli.main returns, the session holds
+    no persisted RDD and no cached Dataset."""
+    from taxahfe_spark import cli
+
+    spark.catalog.clearCache()
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist()
+    meta_path, data_path = _write_inputs(tmp_path)
+    cli.main(
+        [
+            "run-hfe-ml", meta_path, data_path,
+            "-s", "Sample", "-l", "Category", "-t", "factor",
+            "-p", "0.01", "-L", "2", "--nperm", "2", "-n", "4",
+            "--model", "rf", "--folds", "2", "--cv_repeats", "1",
+            "--tune_length", "1", "--seed", "11", "--shap",
+            "--summarized_levels", "-o", str(tmp_path / "out"),
+        ],
+        spark=spark,
+    )
+    assert dict(spark.sparkContext._jsc.getPersistentRDDs()) == {}
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -280,8 +280,9 @@ def test_reduce_collinearity_vif(spark):
     c = a + b + rng.normal(0, 0.01, 200)  # near-exact linear combo -> huge VIF
     rows = [(f"s{i}", float(a[i]), float(b[i]), float(c[i])) for i in range(200)]
     df = spark.createDataFrame(rows, "subject_id string, a double, b double, c double")
-    kept, audit = reduce_collinearity(df, ["a", "b", "c"], vif_threshold=5.0)
+    kept, audit, corr = reduce_collinearity(df, ["a", "b", "c"], vif_threshold=5.0)
     assert len(kept) == 2 and len(audit) == 1
+    assert list(corr.index) == list(corr.columns) == kept
     assert audit.iloc[0]["reason"].startswith("vif=")
 
 
@@ -366,6 +367,46 @@ def test_dietml_classification_rf(spark):
     assert fr.loc["accuracy", "estimate"] > fr.loc["accuracy", "null_model_avg"]
     assert fr.loc["kap", "estimate"] > 0.8
     assert not np.isnan(fr.loc["roc_auc", "estimate"])
+
+
+def test_one_pearson_matrix_per_numeric_run(spark, monkeypatch):
+    """A numeric-only run with cor_level < 1 computes the train Pearson
+    matrix once: reduce_collinearity returns it and fit_recipe's step_corr
+    reads its submatrix (a matrix with one-hot dummies is still computed,
+    test_recipe_dummies_zv_corr_scale)."""
+    from taxahfe_spark import dietml
+
+    calls = []
+    orig = dietml._corr_matrix
+
+    def counting(df, cols):
+        calls.append(list(cols))
+        return orig(df, cols)
+
+    monkeypatch.setattr(dietml, "_corr_matrix", counting)
+    rng = np.random.default_rng(5)
+    rows = []
+    for i in range(60):
+        lab = "pos" if i % 2 else "neg"
+        sig = (3.0 if lab == "pos" else 0.5) + rng.normal(0, 0.3)
+        rows.append(
+            (f"s{i}", float(sig), float(sig * 2 + rng.normal(0, 1e-3)),
+             float(rng.normal(0, 1)), 5.0, lab)
+        )
+    df = spark.createDataFrame(
+        rows,
+        "subject_id string, sig double, sig2 double, noise double, "
+        "konst double, feature_of_interest string",
+    )
+    res = run_dietml(
+        df, feature_type="factor", model="rf", folds=2, cv_repeats=1,
+        tune_length=1, num_trees=10, seed=3, cor_level=0.9,
+    )
+    assert len(calls) == 1
+    (dropped,) = res.collinearity_audit["column"]
+    assert dropped in ("sig", "sig2")
+    assert "konst" in res.recipe.dropped_zv
+    assert set(res.recipe.keep_cols) == {"sig", "sig2", "noise"} - {dropped}
 
 
 def test_summarized_levels_mode(spark):

@@ -99,3 +99,96 @@ def test_taxa_hfe_ml_feeds_dietml_on_same_split(spark):
     fr = res.full_results.set_index(".metric")
     assert fr.loc["accuracy", "estimate"] > fr.loc["accuracy", "null_model_avg"]
     assert fr.loc["accuracy", "estimate"] > 0.9
+
+
+@pytest.mark.parametrize("distributed", ["0", "1"])
+def test_test_matrix_routes_agree(spark, monkeypatch, distributed):
+    """The test matrix of taxa_hfe_ml — vectors of the test ResolvedTree on
+    the driver, a pivot of its frame when distributed — equals, as a set of
+    rows, the pivot of the same tree's frame() and the winner matrix of a
+    hierarchical_rollup of the test rows. One test subject has explicit
+    zeros on every path, another has no row on the competing clade."""
+    import pandas as pd
+
+    from taxahfe_spark.naming import clean_entity_expr, clean_name
+    from taxahfe_spark.pipeline import winner_feature_matrix
+    from taxahfe_spark.taxonomy import hierarchical_rollup, resolve_tree
+
+    monkeypatch.setenv("TAXAHFE_DISTRIBUTED", distributed)
+    rng = np.random.default_rng(17)
+    n = 60
+    subjects = [f"s{i}" for i in range(n)]
+    label = ["x" if i % 2 else "y" for i in range(n)]
+    meta = spark.createDataFrame(
+        list(zip(subjects, label)), ["subject_id", "feature_of_interest"]
+    )
+    split = stratified_split(meta, train_frac=0.8, seed=3).toPandas()
+    test_subjects = sorted(split.loc[~split["is_train"], "subject_id"])
+    all_zero, off_clade = test_subjects[:2]
+    rows = []
+    for s, lab in zip(subjects, label):
+        sig = (3.0 if lab == "x" else 0.5) + rng.normal(0, 0.1)
+        vals = {
+            "k__m|p__sig|g__a": sig,
+            "k__m|p__sig|g__b": abs(rng.normal(1, 0.3)),
+            "k__m|p__noise": abs(rng.normal(1, 0.3)),
+            "k__z|p__other": abs(rng.normal(1, 0.3)),
+        }
+        if s == all_zero:
+            vals = dict.fromkeys(vals, 0.0)
+        if s == off_clade:
+            vals = {"k__z|p__other": vals["k__z|p__other"]}
+        rows += [(path, s, float(v)) for path, v in vals.items()]
+    long = spark.createDataFrame(
+        rows, "clade_name string, entity_id string, value double"
+    )
+    params = CompetitionParams(
+        lowest_level=1, nperm=2, num_trees=20, seed=3, disable_super_filter=True
+    )
+    train, test, state = taxa_hfe_ml(
+        meta, long, params=params, filter_prevalence=0.01, seed=3
+    )
+    assert state["winner"].any()
+
+    test_meta = meta.filter(F.col("subject_id").isin(test_subjects))
+    long_test = long.withColumn(
+        "entity_id", clean_entity_expr("entity_id")
+    ).filter(F.col("entity_id").isin(test_subjects))
+    tree = resolve_tree(long_test)
+    assert tree.on_driver == (distributed == "0")
+
+    def rows_of(df):
+        pdf = df.select(*train.columns).toPandas()
+        return pdf.sort_values("subject_id").reset_index(drop=True)
+
+    got = rows_of(test)
+    rolled = hierarchical_rollup(long_test)
+    routes = {
+        "tree": winner_feature_matrix(tree, state, metadata=test_meta),
+        "frame pivot": winner_feature_matrix(tree.frame(), state, metadata=test_meta),
+        "hierarchical_rollup": winner_feature_matrix(rolled, state, metadata=test_meta),
+    }
+    assert sorted(got["subject_id"]) == test_subjects
+    features = [c for c in got.columns if c not in ("subject_id", "feature_of_interest")]
+    assert features
+    zero_row = got[got["subject_id"] == all_zero][features]
+    assert (zero_row.to_numpy() == 0.0).all()
+    for name, df in routes.items():
+        pd.testing.assert_frame_equal(rows_of(df), got, obj=name)
+    # a winner the test tree never saw is a zero column on every route
+    absent = "k__q|p__train_only"
+    state_x = pd.concat(
+        [state, pd.DataFrame({"path": [absent], "winner": [True]})],
+        ignore_index=True,
+    )
+    cols = [*got.columns, clean_name(absent)]
+    wide = [
+        winner_feature_matrix(t, state_x, metadata=test_meta).select(*cols).toPandas()
+        .sort_values("subject_id").reset_index(drop=True)
+        for t in (tree, tree.frame(), rolled)
+    ]
+    assert (wide[0][clean_name(absent)] == 0.0).all()
+    for other in wide[1:]:
+        pd.testing.assert_frame_equal(other, wide[0])
+    tree.frame().unpersist()
+    rolled.unpersist()

@@ -1079,3 +1079,71 @@ def test_taxa_hfe_destroys_vector_broadcast(spark, sf_dir, monkeypatch):
         assert len(destroyed) == 2
         assert tree.vectors is not None
         assert winner_feature_matrix(tree, state, metadata=meta).count() > 0
+
+
+def test_assert_no_na_names_each_bad_column_with_its_count(spark):
+    """The NA-fatal guard finds nulls (in a column whose name has a space)
+    and NaN (in a double column), reports each bad column with its count,
+    and passes clean and empty input."""
+    from taxahfe_spark.pipeline import assert_no_na
+
+    schema = "`s 2` string, d double, ok string"
+    rows = [("x", 1.0, "k"), (None, float("nan"), "k"), (None, 2.0, "k")]
+    df = spark.createDataFrame(rows, schema)
+    assert df.filter(F.isnan("d")).count() == 1
+    with pytest.raises(ValueError, match="NA cells") as err:
+        assert_no_na(df)
+    msg = str(err.value)
+    assert "'s 2': 2" in msg and "'d': 1" in msg
+    assert "'ok'" not in msg
+    assert_no_na(spark.createDataFrame(rows[:1], schema))
+    assert_no_na(spark.createDataFrame([], schema))
+
+
+def test_assert_no_na_quotes_column_names(spark):
+    """Column names with a dot or a back-quote are checked as names, not
+    parsed as field paths (a CSV header can hold either)."""
+    from taxahfe_spark.pipeline import assert_no_na
+
+    schema = "`s.1` string, `a``b` string, d double"
+    rows = [(None, "y", 1.0), (None, None, 2.0), ("x", "y", float("nan"))]
+    with pytest.raises(ValueError, match="NA cells") as err:
+        assert_no_na(spark.createDataFrame(rows, schema))
+    msg = str(err.value)
+    for col, n in (("s.1", 2), ("a`b", 1), ("d", 1)):
+        assert f"{col!r}: {n}" in msg
+    assert_no_na(spark.createDataFrame([("x", "y", 1.0)], schema))
+
+
+def _factor_label_warnings(spark, tmp_path, labels):
+    import warnings
+
+    from taxahfe_spark.pipeline import read_metadata
+
+    path = tmp_path / "meta.csv"
+    lines = ["Sample,Category"] + [
+        f"s{i},{'' if lab is None else lab}" for i, lab in enumerate(labels)
+    ]
+    path.write_text("\n".join(lines) + "\n")
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        df = read_metadata(
+            spark, str(path), "Sample", "Category", feature_type="factor"
+        )
+    assert df.count() == sum(lab is not None for lab in labels)
+    return [w for w in caught if "PER VALUE" in str(w.message)]
+
+
+def test_read_metadata_warns_on_numeric_factor_past_ten_levels(spark, tmp_path):
+    """feature_type=factor warns for a numeric-valued label with more than
+    10 levels, not at 10 and not for a non-numeric label; a null-label row
+    is dropped before the levels and the numeric share are counted."""
+    eleven = [str(1.5 * (i % 11)) for i in range(33)]
+    ten = [str(i % 10) for i in range(30)]
+    words = [f"w{i % 12}" for i in range(36)]
+    (warning,) = _factor_label_warnings(spark, tmp_path, eleven)
+    assert "(11 levels)" in str(warning.message)
+    assert len(_factor_label_warnings(spark, tmp_path, eleven + [None])) == 1
+    assert not _factor_label_warnings(spark, tmp_path, ten)
+    assert not _factor_label_warnings(spark, tmp_path, ten + [None])
+    assert not _factor_label_warnings(spark, tmp_path, words)

@@ -112,6 +112,37 @@ def main() -> None:
     check("rollup: exactly one Exchange hashpartitioning", n_exchange == 1,
           f"found {n_exchange}")
 
+    # 5b. taxa_hfe_ml on a driver-sized tree: the test matrix densifies the
+    #     test tree's vectors into a local relation (and the split is one),
+    #     so its plan has no pivot and no shuffle
+    from taxahfe_spark.ml import taxa_hfe_ml
+    from taxahfe_spark.operators.competition import CompetitionParams
+
+    subjects = [f"s{i}" for i in range(20)]
+    meta = spark.createDataFrame(
+        [(s, "x" if i % 2 else "y") for i, s in enumerate(subjects)],
+        "subject_id string, feature_of_interest string",
+    )
+    long = spark.createDataFrame(
+        [
+            (path, s, float((i % 2) * 3 + k + (i % 5) * 0.1))
+            for i, s in enumerate(subjects)
+            for k, path in enumerate(("k__m|p__a|g__b", "k__m|p__c", "k__z"))
+        ],
+        "clade_name string, entity_id string, value double",
+    )
+    _, test_matrix, _ = taxa_hfe_ml(
+        meta, long,
+        params=CompetitionParams(lowest_level=1, nperm=2, num_trees=5, seed=3),
+        seed=3,
+    )
+    p = plan(test_matrix)
+    check("taxa_hfe_ml test matrix (driver tree): no Pivot",
+          not re.search("pivot", p, re.I))
+    n_exchange = p.count("Exchange hashpartitioning")
+    check("taxa_hfe_ml test matrix (driver tree): no Exchange hashpartitioning",
+          n_exchange == 0, f"found {n_exchange}")
+
     # 6. whole-stage codegen covers the text/token hot path (no Python UDFs)
     from taxahfe_spark.tokens import tokenize
 
