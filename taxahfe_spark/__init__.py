@@ -17,7 +17,10 @@ tokenized training sequences:
 Everything is DataFrame-first: built-in pyspark.sql.functions in the hot path,
 Arrow-vectorized pandas UDFs (applyInPandas / mapInPandas) only where the
 semantics genuinely need per-group imperative logic (the RF competition), and
-never row-at-a-time Python.
+never row-at-a-time Python. Every frame built from driver-side data (id
+lists, offset tables, small pandas results) is an Arrow local relation made
+by ``session.local_frame``; no package code calls ``createDataFrame`` on a
+Python list, whose pickled rows would need a Spark Python worker to decode.
 """
 
 __version__ = "0.1.0"

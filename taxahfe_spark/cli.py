@@ -222,6 +222,7 @@ def _read_inputs(spark, opts):
         read_hierarchical_data,
         read_metadata,
     )
+    from taxahfe_spark.session import local_frame
     from taxahfe_spark.taxonomy import melt_wide_matrix
 
     meta = read_metadata(
@@ -235,8 +236,8 @@ def _read_inputs(spark, opts):
         # matrix, summaries, dietML) — not just the competition design
         pdf = meta.toPandas()
         pdf["feature_of_interest"] = pdf["feature_of_interest"].astype(float)
-        meta = spark.createDataFrame(
-            discretize_label(pdf, k=int(opts.k_splits), seed=opts.seed)
+        meta = local_frame(
+            spark, discretize_label(pdf, k=int(opts.k_splits), seed=opts.seed), None
         )
         opts.feature_type = "factor"
     long = melt_wide_matrix(read_hierarchical_data(spark, opts.DATA, validate_na=True))
@@ -265,6 +266,7 @@ def _run_hfe(spark, opts) -> None:
         write_level_summary_csvs,
         write_output_file,
     )
+    from taxahfe_spark.session import local_frame
 
     meta, long = _read_inputs(spark, opts)
     tree, state = taxa_hfe(
@@ -274,25 +276,28 @@ def _run_hfe(spark, opts) -> None:
         from_reference_levels=True,
         k_splits=int(opts.k_splits),
     )
-    use_sf = not opts.disable_super_filter
-    out = winner_feature_matrix(tree, state, metadata=meta, use_super_filter=use_sf)
-    write_output_file(out, os.path.join(opts.output_dir, "output"))
-    if opts.write_both_outputs and use_sf:
-        pre = winner_feature_matrix(tree, state, metadata=meta, use_super_filter=False)
-        write_output_file(pre, os.path.join(opts.output_dir, "output_pre_sf"))
-    if opts.write_old_files:
-        from taxahfe_spark.pipeline import write_oudah_input, write_v1_input_file
+    try:
+        use_sf = not opts.disable_super_filter
+        out = winner_feature_matrix(tree, state, metadata=meta, use_super_filter=use_sf)
+        write_output_file(out, os.path.join(opts.output_dir, "output"))
+        if opts.write_both_outputs and use_sf:
+            pre = winner_feature_matrix(tree, state, metadata=meta, use_super_filter=False)
+            write_output_file(pre, os.path.join(opts.output_dir, "output_pre_sf"))
+        if opts.write_old_files:
+            from taxahfe_spark.pipeline import write_oudah_input, write_v1_input_file
 
-        resolved = tree.frame()
-        write_level_summary_csvs(resolved, state, meta, os.path.join(opts.output_dir, "levels"))
-        write_v1_input_file(resolved, opts.output_dir)
-        write_oudah_input(resolved, state, meta, os.path.join(opts.output_dir, "oudah"))
-    if opts.write_flattened_tree:
-        spark.createDataFrame(state).coalesce(1).write.mode("overwrite").option(
-            "header", True
-        ).option("compression", "gzip").csv(
-            os.path.join(opts.output_dir, "flattened_tree")
-        )
+            resolved = tree.frame()
+            write_level_summary_csvs(resolved, state, meta, os.path.join(opts.output_dir, "levels"))
+            write_v1_input_file(resolved, opts.output_dir)
+            write_oudah_input(resolved, state, meta, os.path.join(opts.output_dir, "oudah"))
+        if opts.write_flattened_tree:
+            local_frame(spark, state, None).coalesce(1).write.mode("overwrite").option(
+                "header", True
+            ).option("compression", "gzip").csv(
+                os.path.join(opts.output_dir, "flattened_tree")
+            )
+    finally:
+        tree.unpersist()  # the distributed tree's cache
     print(f"taxaHFE collapse complete -> {opts.output_dir} (seed {opts.seed})")
 
 
@@ -361,7 +366,7 @@ def _run_hfe_ml(spark, opts) -> None:
     from taxahfe_spark.pipeline import write_output_file
 
     meta, long = _read_inputs(spark, opts)
-    train_m, test_m, state = taxa_hfe_ml(
+    train_m, test_m, state, trees = taxa_hfe_ml(
         meta, long, params=_hfe_params(opts),
         filter_prevalence=opts.prevalence,
         filter_mean_abundance=opts.abundance,
@@ -387,6 +392,8 @@ def _run_hfe_ml(spark, opts) -> None:
     finally:
         train_m.unpersist()
         test_m.unpersist()
+        for tree in trees:
+            tree.unpersist()
     print(res.full_results.to_string(index=False))
 
 
@@ -414,13 +421,16 @@ def _run_summarized_levels(spark, opts, meta, long, train_m) -> None:
         )
         .na.fill(False, subset=["is_train"])
     )
-    results = summarized_levels(
-        resolved, flags, meta,
-        split_assign=split_assign,
-        csv_dir=opts.output_dir,
-        csv_seed=opts.seed,
-        **_dietml_kwargs(opts),
-    )
+    try:
+        results = summarized_levels(
+            resolved, flags, meta,
+            split_assign=split_assign,
+            csv_dir=opts.output_dir,
+            csv_seed=opts.seed,
+            **_dietml_kwargs(opts),
+        )
+    finally:
+        resolved.unpersist()  # the distributed tree's cache
     for lvl, r in sorted(results.items()):
         append_results_csv(
             r, os.path.join(opts.output_dir, "ml_analysis", "ml_results.csv"),

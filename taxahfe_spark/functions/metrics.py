@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from taxahfe_spark.session import local_frame
+
 
 def confusion_matrix(
     pred: DataFrame, truth_col: str = "truth", estimate_col: str = "estimate"
@@ -196,7 +198,7 @@ def hand_till_auc(
             )
             for t, n in per_cb[(c, b)].items():
                 acc[t] += n
-    off_df = pred.sparkSession.createDataFrame(pd.DataFrame(off_rows))
+    off_df = local_frame(pred.sparkSession, pd.DataFrame(off_rows), None)
 
     w_cum = Window.partitionBy("__c", "__b").orderBy("__p")  # RANGE ..current
     w_tie = Window.partitionBy("__c", "__b", "__p")

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from taxahfe_spark.session import local_frame
+
 
 def adaptive_nsim(n_rows: int, n_features: int) -> int:
     """Reference nsim heuristic (lib/shap_funcs.R:84-87)."""
@@ -181,9 +183,7 @@ def shap_mean_abs(
     agg_pdf["rank"] = np.arange(1, len(agg_pdf) + 1, dtype=np.int32)
     if top_k:
         agg_pdf = agg_pdf[agg_pdf["rank"] <= top_k]
-    return spark.createDataFrame(
-        agg_pdf, "feature string, mean_abs_shap double, rank int"
-    )
+    return local_frame(spark, agg_pdf, "feature string, mean_abs_shap double, rank int")
 
 # fork-inherited context for the local-SHAP row pool: a closure over a
 # fitted model can't pickle, but a forked child inherits this module global.

@@ -17,7 +17,8 @@ from pyspark.sql import functions as F
 from taxahfe_spark.naming import clean_entity_expr
 from taxahfe_spark.operators.competition import CompetitionParams
 from taxahfe_spark.pipeline import taxa_hfe, winner_feature_matrix
-from taxahfe_spark.taxonomy import resolve_tree
+from taxahfe_spark.session import local_frame
+from taxahfe_spark.taxonomy import ResolvedTree, resolve_tree
 
 
 def stratified_split(
@@ -53,13 +54,16 @@ def taxa_hfe_ml(
     train_frac: float = 0.8,
     seed: int = 42,
     k_splits: int = 3,
-) -> tuple[DataFrame, DataFrame, pd.DataFrame]:
-    """Returns (train_matrix, test_matrix, train_state).
+) -> tuple[DataFrame, DataFrame, pd.DataFrame, tuple[ResolvedTree, ResolvedTree]]:
+    """Returns (train_matrix, test_matrix, train_state, (train_tree,
+    test_tree)).
 
     train_matrix: train subjects x train-winner features (+ metadata);
     test_matrix: test subjects x THE SAME columns (reference
     lib/methods.R:114-135 column alignment — mismatch there is fatal, here
-    structural by construction).
+    structural by construction). The matrices read the trees lazily, so
+    the caller releases the trees (:meth:`ResolvedTree.unpersist`) once
+    it is done with the matrices.
     """
     params = params or CompetitionParams()
     # the split window runs ONCE: its rows come back as a local relation
@@ -67,7 +71,7 @@ def taxa_hfe_ml(
     # metadata joins and the matrix writes never re-run the window. The
     # metadata is entity-sized, a bound taxa_hfe already holds in pandas.
     split = stratified_split(metadata, train_frac=train_frac, seed=seed)
-    split = metadata.sparkSession.createDataFrame(split.toPandas(), split.schema)
+    split = local_frame(metadata.sparkSession, split.toPandas(), split.schema)
     train_meta = split.filter("is_train").drop("is_train")
     test_meta = split.filter("NOT is_train").drop("is_train")
 
@@ -95,10 +99,11 @@ def taxa_hfe_ml(
     long_test = hierarchical_long.withColumn(
         "entity_id", clean_entity_expr("entity_id")
     ).join(F.broadcast(test_ids), "entity_id", "left_semi")
+    tree_test = resolve_tree(long_test)
     test_matrix = winner_feature_matrix(
-        resolve_tree(long_test), state, metadata=test_meta,
+        tree_test, state, metadata=test_meta,
         use_super_filter=not params.disable_super_filter,
     )
     # structural column alignment
     test_matrix = test_matrix.select(*train_matrix.columns)
-    return train_matrix, test_matrix, state
+    return train_matrix, test_matrix, state, (tree_train, tree_test)

@@ -61,7 +61,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from taxahfe_spark.functions.rf import forest_importance
-from taxahfe_spark.session import driver_side
+from taxahfe_spark.session import driver_side, local_frame
 from taxahfe_spark.taxonomy import _tlog, sparse_to_dense
 
 # driver-local fused stage budget: design cells (entity x competitor x fit)
@@ -724,8 +724,9 @@ class TreeCompetition:
             self.bc_vectors = self.spark.sparkContext.broadcast(self.vectors_dict)
         else:
             if collected:
-                vectors = self.spark.createDataFrame(
-                    [(p, i.tolist(), v.tolist()) for p, (i, v) in vectors.items()],
+                vectors = local_frame(
+                    self.spark,
+                    [(p, i, v) for p, (i, v) in vectors.items()],
                     "path string, idxs array<int>, vals array<double>",
                 )
             # the 100 TB path: vectors never touch the driver; persist so the
@@ -949,7 +950,8 @@ class TreeCompetition:
         ]
         t0 = time.time()
         if self.strategy == "broadcast":
-            adf = self.spark.createDataFrame(
+            adf = local_frame(
+                self.spark,
                 rows_in,
                 "competition_id string, parent_path string, paths array<string>, "
                 "chunk_lo int, chunk_hi int",
@@ -972,7 +974,8 @@ class TreeCompetition:
                 for (cid, parent, paths, lo, hi) in rows_in
                 for path in paths
             ]
-            adf = self.spark.createDataFrame(
+            adf = local_frame(
+                self.spark,
                 assign,
                 "competition_id string, parent_path string, path string, "
                 "chunk_lo int, chunk_hi int",

@@ -30,6 +30,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from taxahfe_spark.session import local_frame
+
 MEDIA_SCHEMA = (
     "media_id string, modality string, payload binary, mime string, "
     "width int, height int, duration_ms int"
@@ -342,4 +344,4 @@ def synthesize_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
         else:
             payload, mime, wd, ht, dur = make_y4m(seed + i), "video/x-yuv4mpeg", 16, 16, 200
         rows.append((f"m{i:04d}", modality, bytearray(payload), mime, wd, ht, dur))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from taxahfe_spark.operators.dedup import md5_hash60
+from taxahfe_spark.session import local_frame
 from taxahfe_spark.tokens import words
 
 
@@ -101,8 +102,7 @@ def dsir_logweights(
         )
         for b in sorted(set(tc) | set(rc))
     ]
-    spark = raw.sparkSession
-    lam_df = spark.createDataFrame(lam, "__b long, __lam double")
+    lam_df = local_frame(raw.sparkSession, lam, "__b long, __lam double")
     feats = _features(raw, [id_col], text_col).select(
         id_col, _bucket(F.col("__feat"), n_buckets, hash_fn).alias("__b")
     )

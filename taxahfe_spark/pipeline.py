@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from taxahfe_spark.naming import clean_entity, clean_entity_expr, clean_name, clean_names_df
 from taxahfe_spark.operators.competition import CompetitionParams, TreeCompetition
 from taxahfe_spark.operators.filters import feature_filter_flags
+from taxahfe_spark.session import local_frame
 from taxahfe_spark.taxonomy import (
     ResolvedTree,
     _tlog,
@@ -259,9 +260,7 @@ def taxa_hfe(
 
     # entity pruning to metadata subjects (left-semi in long layout)
     spark = metadata.sparkSession
-    ids_df = spark.createDataFrame(
-        [(e,) for e in meta_pdf["subject_id"]], ["entity_id"]
-    )
+    ids_df = local_frame(spark, meta_pdf[["subject_id"]], "entity_id string")
     long = hierarchical_long.withColumn(
         "entity_id", clean_entity_expr("entity_id")
     ).join(F.broadcast(ids_df), "entity_id", "left_semi")
@@ -373,9 +372,7 @@ def levels_tree(
     meta_pdf = metadata.select("subject_id").toPandas()
     meta_pdf["subject_id"] = meta_pdf["subject_id"].map(clean_entity)
     spark = metadata.sparkSession
-    ids_df = spark.createDataFrame(
-        [(e,) for e in meta_pdf["subject_id"]], ["entity_id"]
-    )
+    ids_df = local_frame(spark, meta_pdf[["subject_id"]], "entity_id string")
     long = hierarchical_long.withColumn(
         "entity_id", clean_entity_expr("entity_id")
     ).join(F.broadcast(ids_df), "entity_id", "left_semi")
@@ -402,26 +399,30 @@ def winner_feature_matrix(
     a hierarchical_rollup result). A tree already knows its entities, and
     when its vectors are on the driver the winner columns (winner count x
     entities — small by construction, the whole point of the collapse)
-    densify locally and ship back as ONE Arrow createDataFrame, leaving
+    densify locally and ship back as ONE Arrow local frame, leaving
     ``tree.frame()`` unbuilt. Otherwise the winners are a filter + pivot of
     the resolved frame — winner count is small, so a bounded-width groupBy.
     Both give the same values: present pairs keep their value, absent pairs
     (a winner the tree never saw included) are zeros."""
     flag = "sf_winner" if use_super_filter else "winner"
     winners = [r.path for r in state[state[flag]].itertuples()]
+    if isinstance(tree, ResolvedTree):
+        spark, entity_ids, vecs = tree.spark, tree.entities, tree.vectors
+    else:
+        spark, vecs = tree.sparkSession, None
+
     # ALL data entities appear in the output, even those whose every winner
     # value is an implicit zero (the reference's transposed flattened frame
     # keeps one row per sample column regardless of abundance)
-    if isinstance(tree, ResolvedTree):
-        spark, entity_ids, vecs = tree.spark, tree.entities, tree.vectors
-        entities = spark.createDataFrame(  # key=str: a null id sorts too
-            [(e,) for e in sorted(entity_ids, key=str)], "subject_id string"
-        )
-    else:
-        spark, vecs = tree.sparkSession, None
-        entities = tree.select(F.col("entity_id").alias("subject_id")).distinct()
+    def entities() -> DataFrame:
+        if isinstance(tree, ResolvedTree):
+            return local_frame(  # key=str: a null id sorts too
+                spark, [(e,) for e in sorted(entity_ids, key=str)], "subject_id string"
+            )
+        return tree.select(F.col("entity_id").alias("subject_id")).distinct()
+
     if not winners:
-        base = entities
+        base = entities()
     elif (
         vecs is not None
         and len(entity_ids) * len(winners) <= 50_000_000
@@ -435,7 +436,7 @@ def winner_feature_matrix(
                 idxs, vals = vecs[w]
                 col[np.asarray(idxs, dtype=np.int64)] = vals
             pdf[clean_name(w)] = col
-        base = spark.createDataFrame(pdf)
+        base = local_frame(spark, pdf, None)
     else:
         resolved = tree.frame() if isinstance(tree, ResolvedTree) else tree
         pivoted = (
@@ -444,7 +445,7 @@ def winner_feature_matrix(
             .pivot("path", winners)
             .agg(F.first("value"))
         )
-        base = entities.join(pivoted, "subject_id", "left").na.fill(
+        base = entities().join(pivoted, "subject_id", "left").na.fill(
             0.0, subset=winners
         )
         renames = {w: clean_name(w) for w in winners}
@@ -467,7 +468,7 @@ def write_summary_files(
     single parquet partitioned by level instead of one CSV per depth."""
     keep = state[state["passed_filters"]]["path"] if flags_passed_only else state["path"]
     spark = resolved.sparkSession
-    keep_df = spark.createDataFrame([(p,) for p in keep], ["path"])
+    keep_df = local_frame(spark, [(p,) for p in keep], "path string")
     out = resolved.join(F.broadcast(keep_df), "path", "left_semi")
     out.write.mode("overwrite").partitionBy("level").parquet(output_path)
 
@@ -549,7 +550,7 @@ def write_oudah_input(
         r["entity_id"] for r in resolved.select("entity_id").distinct().collect()
     )
     spark = resolved.sparkSession
-    keep_df = spark.createDataFrame([(p,) for p in keep], ["path"])
+    keep_df = local_frame(spark, [(p,) for p in keep], "path string")
     abundance = (
         resolved.filter(F.col("level") == max_level)
         .join(F.broadcast(keep_df), "path", "left_semi")

@@ -5,13 +5,23 @@ per-executor. AQE is always on (runtime coalesce + skew-join splitting), Arrow
 is always on (every pandas UDF crosses the JVM/Python boundary in columnar
 batches), and the session timezone is pinned to UTC so results compare
 bit-for-bit against UTC-naive engines (DuckDB oracle).
+
+Every frame built from driver-side data (id lists, offset tables, small
+pandas results) goes through :func:`local_frame`: it becomes an Arrow
+``LocalRelation`` that lives in the JVM. ``spark.createDataFrame`` on a
+Python list instead ships pickled rows that a Spark Python worker must
+decode, so the first action that reads the frame starts the worker daemon
+and its workers (about 300 MB on a driver-sized ``run-hfe-ml``); on an
+empty pandas frame, or one Arrow fails on, it silently falls back to that
+path.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -23,6 +33,43 @@ def driver_side(size: int, limit: int) -> bool:
     path — the parity tests and the scaling runner need those paths at
     small sizes."""
     return size <= limit and os.environ.get("TAXAHFE_DISTRIBUTED") != "1"
+
+
+def local_frame(spark: SparkSession, data, schema: str | StructType | None) -> DataFrame:
+    """A frame of driver-side ``data`` as an Arrow ``LocalRelation``.
+
+    ``data`` is a sequence of row tuples or a pandas frame; ``schema`` is a
+    DDL string (or a ``StructType``) whose fields match the rows or the
+    frame's columns by position. A pandas frame may pass ``None`` to keep
+    the types Arrow infers from its dtypes. Zero rows give an empty
+    ``LocalRelation`` too, and data Arrow cannot convert to the schema
+    raises: no input takes the pickled-rows path.
+    """
+    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    if schema is None and isinstance(data, pd.DataFrame):
+        return spark.createDataFrame(pa.Table.from_pandas(data, preserve_index=False))
+    arrow = to_arrow_schema(schema)
+    if isinstance(data, pd.DataFrame):
+        # by position; pandas semantics, as in Spark's own Arrow path: NaN
+        # and None are null
+        values = [data.iloc[:, i] for i in range(data.shape[1])]
+        convert = pa.Array.from_pandas
+    else:
+        rows = list(data)
+        values = list(zip(*rows, strict=True)) if rows else [[]] * len(arrow)
+        convert = pa.array
+    if len(values) != len(arrow):
+        raise ValueError(f"{len(values)} columns for a schema of {len(arrow)} fields")
+    columns = [
+        convert(v, type=f.type) if len(v) else pa.array([], type=f.type)
+        for v, f in zip(values, arrow)
+    ]
+    return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow), schema)
 
 
 def get_spark(

@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from taxahfe_spark.naming import clean_value_col
-from taxahfe_spark.session import driver_side
+from taxahfe_spark.session import driver_side, local_frame
 
 PATH_SEP = "|"
 _SPLIT_RE = r"\|"
@@ -292,6 +292,11 @@ class ResolvedTree:
             self._frame = self._build()
         return self._frame
 
+    def unpersist(self) -> None:
+        """Release the cached frame, if one was built."""
+        if self._frame is not None:
+            self._frame.unpersist()
+
 
 def resolve_tree(
     long_df: DataFrame,
@@ -363,7 +368,7 @@ def resolve_tree(
     if not obs_paths:
         base.unpersist()
         return ResolvedTree(
-            spark, [], None, False, _frame=spark.createDataFrame([], RESOLVED_SCHEMA)
+            spark, [], None, False, _frame=local_frame(spark, [], RESOLVED_SCHEMA)
         )
 
     # one job, served from the cache the distinct collect just filled
@@ -386,13 +391,13 @@ def resolve_tree(
         _tlog(f"rollup: driver kernel {time.time()-t0:.2f}s")
         return ResolvedTree(
             spark, entities, vectors, True,
-            _build=lambda: spark.createDataFrame(build(), schema=RESOLVED_SCHEMA),
+            _build=lambda: local_frame(spark, build(), RESOLVED_SCHEMA),
         )
 
     t0 = time.time()
 
-    def local(rows, columns):  # taxonomy-sized, broadcast into a join
-        return F.broadcast(spark.createDataFrame(pd.DataFrame(rows, columns=columns)))
+    def local(rows, schema):  # taxonomy-sized, broadcast into a join
+        return F.broadcast(local_frame(spark, rows, schema))
 
     # the observed rows, and each one's contributions to the missing
     # ancestors above it, keyed by the base's own path column
@@ -404,7 +409,7 @@ def resolve_tree(
         out = base.join(
             local(
                 [(r, p, p.count("|") + 1) for r, p in raw_map.items()],
-                ["__raw", "path", "level"],
+                "__raw string, path string, level bigint",
             ),
             "__raw",
         ).select("path", F.col("level").cast("int"), "entity_id", "value")
@@ -415,7 +420,7 @@ def resolve_tree(
     ]
     if pairs:
         rolled = (
-            base.join(local(pairs, [key, "anc_path", "anc_level"]), key)
+            base.join(local(pairs, f"{key} string, anc_path string, anc_level bigint"), key)
             .groupBy("anc_path", "anc_level", "entity_id")
             .agg(F.sum("value").alias("value"))
         )
@@ -467,8 +472,8 @@ def to_feature_vectors(resolved: DataFrame, entity_ids: list[str]) -> DataFrame:
     dense layout would ship n_entities doubles per node through Arrow.
     """
     spark = resolved.sparkSession
-    idx = spark.createDataFrame(
-        [(e, i) for i, e in enumerate(entity_ids)], ["entity_id", "_eidx"]
+    idx = local_frame(
+        spark, [(e, i) for i, e in enumerate(entity_ids)], "entity_id string, _eidx bigint"
     )
     pairs = resolved.join(F.broadcast(idx), "entity_id", "inner")
     return (

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from taxahfe_spark.session import local_frame
 from taxahfe_spark.taxonomy import explode_ancestors
 
 # ASCII-only split so word boundaries are engine-independent (the same
@@ -71,8 +72,7 @@ def build_vocab(
     for r in sorted(counts, key=lambda r: r["__p"]):
         offsets.append((r["__p"], acc))
         acc += r["count"]
-    spark = df_words.sparkSession
-    off_df = spark.createDataFrame(offsets, ["__p", "__off"])
+    off_df = local_frame(df_words.sparkSession, offsets, "__p string, __off bigint")
     w = Window.partitionBy("__p").orderBy("word")
     return (
         distinct.withColumn("__p", pfx)
@@ -641,11 +641,10 @@ def pack_sequences(
             edges,
             F.lit(0),
         )
-    stats = (
-        seqs.groupBy(*keys, chunk.alias("__chunk"))
-        .agg(F.count(F.lit(1)).alias("__cnt"), F.sum(ntok_col).alias("__tok"))
-        .collect()
+    per_chunk = seqs.groupBy(*keys, chunk.alias("__chunk")).agg(
+        F.count(F.lit(1)).alias("__cnt"), F.sum(ntok_col).alias("__tok")
     )
+    stats = per_chunk.collect()
     total = sum(r["__cnt"] for r in stats)
     if total <= small_n:
         w = Window.partitionBy(*keys).orderBy(F.col(id_col).asc())
@@ -666,10 +665,10 @@ def pack_sequences(
             g = r[group_col] if group_col else ""
             offsets.append(((g,) if group_col else ()) + (r["__chunk"], acc.get(g, 0)))
             acc[g] = acc.get(g, 0) + (r["__tok"] or 0)
-        spark = seqs.sparkSession
-        off_df = spark.createDataFrame(
-            offsets, ([group_col] if group_col else []) + ["__chunk", "__off"]
+        off_schema = (
+            per_chunk.select(*keys, "__chunk", F.col("__tok").alias("__off")).schema
         )
+        off_df = local_frame(seqs.sparkSession, offsets, off_schema)
         w = Window.partitionBy(*keys, "__chunk").orderBy(F.col(id_col).asc())
         local_before = F.coalesce(
             F.sum(ntok_col).over(w.rowsBetween(Window.unboundedPreceding, -1)),
@@ -764,7 +763,7 @@ def epoch_shuffle(
     for r in sorted(counts, key=lambda r: r["__p"]):
         offsets.append((r["__p"], acc))
         acc += r["count"]
-    off_df = df.sparkSession.createDataFrame(offsets, ["__p", "__off"])
+    off_df = local_frame(df.sparkSession, offsets, "__p string, __off bigint")
     w = Window.partitionBy("__p").orderBy("__k", F.col(id_col).asc())
     return (
         keyed.withColumn("__p", pfx)

@@ -74,13 +74,17 @@ def test_run_hfe_re_numeric_label_kmeans_binning(tmp_path, spark):
 def test_run_hfe_distributed_lane_matches_driver(tmp_path, spark, monkeypatch):
     """run-hfe end to end under TAXAHFE_DISTRIBUTED=1 — level-chain rollup,
     distributed vectors and flags, Spark competition stages — writes the
-    same winner matrix and legacy sinks as the driver run."""
+    same winner matrix and legacy sinks as the driver run, and leaves no
+    persisted RDD behind on either path."""
     from taxahfe_spark import cli
 
     meta_path, data_path = _write_inputs(tmp_path)
     outputs = {}
     for mode in ("0", "1"):
         monkeypatch.setenv("TAXAHFE_DISTRIBUTED", mode)
+        spark.catalog.clearCache()
+        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+            rdd.unpersist()
         out_dir = tmp_path / f"out{mode}"
         cli.main(
             [
@@ -90,6 +94,7 @@ def test_run_hfe_distributed_lane_matches_driver(tmp_path, spark, monkeypatch):
             ],
             spark=spark,
         )
+        assert dict(spark.sparkContext._jsc.getPersistentRDDs()) == {}, mode
         frames = []
         for sink in ("output", "v1_input"):
             (csv,) = glob.glob(str(out_dir / sink / "*.csv"))
@@ -167,26 +172,76 @@ def test_run_hfe_ml_shap_writes_ranking_and_beeswarm(tmp_path, spark):
     assert set(ranking["feature"]) <= texts
 
 
-def test_run_hfe_ml_leaves_nothing_cached(tmp_path, spark):
+def test_run_hfe_ml_leaves_nothing_cached(tmp_path, spark, monkeypatch):
     """run-hfe-ml releases every cache it makes (the split, the train/test
-    matrices, dietML's frames): after cli.main returns, the session holds
-    no persisted RDD and no cached Dataset."""
+    matrices and trees, dietML's frames), on the driver paths and under
+    TAXAHFE_DISTRIBUTED=1: after cli.main returns, the session holds no
+    persisted RDD and no cached Dataset."""
     from taxahfe_spark import cli
 
-    spark.catalog.clearCache()
-    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        rdd.unpersist()
     meta_path, data_path = _write_inputs(tmp_path)
-    cli.main(
-        [
-            "run-hfe-ml", meta_path, data_path,
-            "-s", "Sample", "-l", "Category", "-t", "factor",
-            "-p", "0.01", "-L", "2", "--nperm", "2", "-n", "4",
-            "--model", "rf", "--folds", "2", "--cv_repeats", "1",
-            "--tune_length", "1", "--seed", "11", "--shap",
-            "--summarized_levels", "-o", str(tmp_path / "out"),
-        ],
-        spark=spark,
+    for mode in ("0", "1"):
+        monkeypatch.setenv("TAXAHFE_DISTRIBUTED", mode)
+        spark.catalog.clearCache()
+        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+            rdd.unpersist()
+        cli.main(
+            [
+                "run-hfe-ml", meta_path, data_path,
+                "-s", "Sample", "-l", "Category", "-t", "factor",
+                "-p", "0.01", "-L", "2", "--nperm", "2", "-n", "4",
+                "--model", "rf", "--folds", "2", "--cv_repeats", "1",
+                "--tune_length", "1", "--seed", "11", "--shap",
+                "--summarized_levels", "-o", str(tmp_path / f"out{mode}"),
+            ],
+            spark=spark,
+        )
+        assert dict(spark.sparkContext._jsc.getPersistentRDDs()) == {}, mode
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), mode
+
+
+_NO_WORKER_SCRIPT = """
+import sys
+from taxahfe_spark import cli
+from taxahfe_spark.session import get_spark
+
+spark = get_spark("no_python_worker", master="local[2]", shuffle_partitions=4)
+meta_path, data_path, out_dir = sys.argv[1:4]
+cli.main(
+    [
+        "run-hfe-ml", meta_path, data_path,
+        "-s", "Sample", "-l", "Category", "-t", "factor",
+        "-p", "0.01", "-L", "2", "--nperm", "2", "-n", "4",
+        "--model", "rf", "--folds", "2", "--cv_repeats", "1",
+        "--tune_length", "1", "--seed", "11", "--shap", "-o", out_dir,
+    ],
+    spark=spark,
+)
+idle = spark._jvm.org.apache.spark.SparkEnv.get().pythonWorkers().isEmpty()
+print("PYTHON_WORKERS_IDLE", idle)
+spark.stop()
+"""
+
+
+def test_run_hfe_ml_starts_no_python_worker(tmp_path):
+    """Every frame run-hfe-ml builds from driver-side data is an Arrow local
+    relation, so a fresh session that runs it never starts a Spark Python
+    worker (the daemon and its workers hold ~300 MB)."""
+    import subprocess
+    import sys
+
+    meta_path, data_path = _write_inputs(tmp_path)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {
+        **os.environ,
+        "SPARK_DRIVER_MEMORY": "1g",
+        "PYTHONPATH": os.pathsep.join([repo, os.environ.get("PYTHONPATH", "")]),
+    }
+    env.pop("TAXAHFE_DISTRIBUTED", None)
+    r = subprocess.run(
+        [sys.executable, "-c", _NO_WORKER_SCRIPT, meta_path, data_path,
+         str(tmp_path / "out")],
+        env=env, capture_output=True, text=True, timeout=600,
     )
-    assert dict(spark.sparkContext._jsc.getPersistentRDDs()) == {}
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert r.returncode == 0, r.stderr[-3000:]
+    assert "PYTHON_WORKERS_IDLE True" in r.stdout, r.stdout[-3000:]

@@ -49,7 +49,7 @@ def test_taxa_hfe_ml_alignment_and_leakage(ml_inputs):
     params = CompetitionParams(
         lowest_level=1, nperm=2, num_trees=40, seed=3, disable_super_filter=True
     )
-    train, test, state = taxa_hfe_ml(
+    train, test, state, _ = taxa_hfe_ml(
         meta, long, params=params, filter_prevalence=0.1, seed=3
     )
     # identical schemas (reference lib/methods.R:114-135 alignment contract)
@@ -86,7 +86,7 @@ def test_taxa_hfe_ml_feeds_dietml_on_same_split(spark):
     params = CompetitionParams(
         lowest_level=1, nperm=2, num_trees=20, seed=5, disable_super_filter=True
     )
-    train_m, test_m, state = taxa_hfe_ml(
+    train_m, test_m, state, _ = taxa_hfe_ml(
         meta, long, params=params, filter_prevalence=0.01, seed=5
     )
     full = train_m.withColumn("is_train", F.lit(True)).unionByName(
@@ -145,7 +145,7 @@ def test_test_matrix_routes_agree(spark, monkeypatch, distributed):
     params = CompetitionParams(
         lowest_level=1, nperm=2, num_trees=20, seed=3, disable_super_filter=True
     )
-    train, test, state = taxa_hfe_ml(
+    train, test, state, _ = taxa_hfe_ml(
         meta, long, params=params, filter_prevalence=0.01, seed=3
     )
     assert state["winner"].any()

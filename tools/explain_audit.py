@@ -25,6 +25,27 @@ def plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def subtree(p: str, node: str) -> str:
+    """The plan-text lines below the first ``node`` operator."""
+    lines = p.splitlines()
+    i = next((i for i, line in enumerate(lines) if node in line), None)
+    if i is None:
+        return ""
+    col = lines[i].index(node)
+    out = []
+    for line in lines[i + 1:]:
+        if len(line) <= col or line[:col].strip(" :") or line[col].isalnum():
+            break
+        out.append(line)
+    return "\n".join(out)
+
+
+def local_scan(p: str) -> bool:
+    """A driver-built frame's plan: a LocalTableScan and no scan of an RDD
+    (``Scan ExistingRDD`` is what a list-built frame's pickled rows give)."""
+    return "LocalTableScan" in p and "Scan ExistingRDD" not in p
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     from taxahfe_spark.session import get_spark
@@ -131,7 +152,7 @@ def main() -> None:
         ],
         "clade_name string, entity_id string, value double",
     )
-    _, test_matrix, _ = taxa_hfe_ml(
+    _, test_matrix, _, _ = taxa_hfe_ml(
         meta, long,
         params=CompetitionParams(lowest_level=1, nperm=2, num_trees=5, seed=3),
         seed=3,
@@ -142,6 +163,40 @@ def main() -> None:
     n_exchange = p.count("Exchange hashpartitioning")
     check("taxa_hfe_ml test matrix (driver tree): no Exchange hashpartitioning",
           n_exchange == 0, f"found {n_exchange}")
+
+    # 5c. frames built from driver-side data are Arrow local relations, so
+    #     no Python worker decodes pickled rows: the build side of
+    #     taxa_hfe's entity semi-join and, under TAXAHFE_DISTRIBUTED=1, the
+    #     competition stage's assignment frame are LocalTableScans
+    from taxahfe_spark import pipeline
+
+    frame_cls = type(meta)  # the session's DataFrame implementation
+    seen: dict[str, list[str]] = {"semi_join": [], "stage": []}
+    resolve_tree, map_in_pandas = pipeline.resolve_tree, frame_cls.mapInPandas
+
+    def record_semi_join(long_df, **kwargs):
+        seen["semi_join"].append(plan(long_df))
+        return resolve_tree(long_df, **kwargs)
+
+    def record_stage(df, *args, **kwargs):
+        if "competition_id" in df.columns:
+            seen["stage"].append(plan(df))
+        return map_in_pandas(df, *args, **kwargs)
+
+    with mock.patch.dict(os.environ, {"TAXAHFE_DISTRIBUTED": "1"}), \
+            mock.patch.object(pipeline, "resolve_tree", record_semi_join), \
+            mock.patch.object(frame_cls, "mapInPandas", record_stage):
+        pipeline.taxa_hfe(
+            meta, long,
+            params=CompetitionParams(lowest_level=1, nperm=2, num_trees=5, seed=3),
+        )
+    build = [subtree(p, "BroadcastExchange") for p in seen["semi_join"]]
+    check("taxa_hfe entity semi-join: build side is a LocalTableScan, no RDD scan",
+          bool(build) and all(local_scan(b) for b in build), "; ".join(build))
+    stage = seen["stage"]
+    check("competition stage (distributed): assignment frame is a LocalTableScan, "
+          "no RDD scan", bool(stage) and all(local_scan(p) for p in stage),
+          f"{len(stage)} stage inputs")
 
     # 6. whole-stage codegen covers the text/token hot path (no Python UDFs)
     from taxahfe_spark.tokens import tokenize
