@@ -12,7 +12,7 @@ tokenized training sequences:
 - point-in-time layer: as-of joins to taxonomy snapshots, lag/lead windows,
   gap sessionization, LOCF backfill (generalizes lib/tree.R:1086-1144)
 - training-data-pipeline ops: dedup (exact / minhash-LSH / simhash / n-gram
-  jaccard), similarity search, text quality stats, multimodal plumbing.
+  jaccard), similarity search, text quality stats.
 
 Everything is DataFrame-first: built-in pyspark.sql.functions in the hot path,
 Arrow-vectorized pandas UDFs (applyInPandas / mapInPandas) only where the

@@ -46,7 +46,6 @@ from taxahfe_spark.functions.metrics import (
 )
 
 MAXIMIZE = {"roc_auc", "bal_accuracy", "accuracy", "kap", "f_meas", "rsq", "ccc"}
-MINIMIZE = {"mae", "rmse"}
 
 
 def _hash_rank_col(id_col: str, seed: int, hash_fn: str) -> F.Column:
@@ -791,10 +790,6 @@ def run_dietml(
     run with model="svm" raises with that explanation (declared non-goal,
     SURVEY §7.5).
     """
-    from taxahfe_spark.operators.competition import _tlog as _dtlog
-    import time as _ptime
-
-    _pt0 = _ptime.time()
     metric = metric or ("bal_accuracy" if feature_type == "factor" else "rmse")
     feature_cols = [
         c for c in df.columns if c not in (id_col, label_col, split_col)
@@ -809,11 +804,9 @@ def run_dietml(
     train = split.filter("is_train").drop("is_train")
     test = split.filter("NOT is_train").drop("is_train")
 
-    _dtlog(f"dietml: split {_ptime.time()-_pt0:.2f}s"); _pt0 = _ptime.time()
     kept, audit, corr = reduce_collinearity(
         train, feature_cols, vif_threshold, cor_level
     )
-    _dtlog(f"dietml: collinearity {_ptime.time()-_pt0:.2f}s"); _pt0 = _ptime.time()
     standardize = model in ("ridge", "lasso", "enet", "svm")
     recipe = fit_recipe(
         train, kept, standardize, cor_level,
@@ -842,7 +835,6 @@ def run_dietml(
     # reference scale. Coalesce small cached frames to ~25k rows/partition
     # (thread-pooled fits still use every core via concurrent jobs); large
     # frames keep their partitioning untouched.
-    _dtlog(f"dietml: recipe {_ptime.time()-_pt0:.2f}s"); _pt0 = _ptime.time()
     small_parts = (
         max(1, -(-n_train // 25_000)) if n_train <= 100_000 else None
     )
@@ -894,7 +886,6 @@ def run_dietml(
         train_cv_raw = train_cv_raw.persist()
         train_cv_raw.count()
 
-    _dtlog(f"dietml: prep+cv frames {_ptime.time()-_pt0:.2f}s"); _pt0 = _ptime.time()
     local_cv = None
     if fit_local:
         local_cv = (
@@ -911,7 +902,6 @@ def run_dietml(
             "reprep_per_fold=False"
         )
 
-    _dtlog(f"dietml: local cv collect {_ptime.time()-_pt0:.2f}s (local={local_cv is not None})"); _pt0 = _ptime.time()
     # -- grid tune (M7) with tune_stop / tune_time early stopping -----------
     candidates = _grid(model, tune_length, seed)
     maximize = metric in MAXIMIZE
@@ -1141,7 +1131,6 @@ def run_dietml(
     if pool is not None:
         pool.shutdown(wait=False)
     cv_results = pd.DataFrame(rows)
-    _dtlog(f"dietml: tuning loop {_ptime.time()-_pt0:.2f}s"); _pt0 = _ptime.time()
     best_params = select_by_pct_loss(cv_results, metric, pct_loss, model)
 
     # -- evaluation stages (M9 null model, M10 last_fit, S8 predictions) ------
@@ -1271,7 +1260,6 @@ def run_dietml(
         }
     )
 
-    _dtlog(f"dietml: eval stages {_ptime.time()-_pt0:.2f}s"); _pt0 = _ptime.time()
     shap_ranking = None
     shap_values = shap_inputs = None
     if shap:

@@ -246,43 +246,6 @@ def ranking_from_phi(
     return pdf
 
 
-def shap_mean_abs_local(
-    predict,
-    X: np.ndarray,
-    feature_cols: list[str],
-    nsim: int | None = None,
-    seed: int = 42,
-    max_background: int = 100,
-    top_k: int | None = None,
-    workers: int | None = None,
-) -> pd.DataFrame:
-    """Driver-local twin of shap_mean_abs for a numpy scoring function —
-    the SAME Strumbelj-Kononenko estimator (permutation + background draw
-    per sim, with/without-j difference), used by the dietML small-n fast
-    path where the final model is the in-repo numpy forest and a cluster
-    fan-out would cost more in scheduling than the arithmetic.
-
-    ``predict``: (m, p) float64 -> (m,) scores (P(class 0) for
-    classification, prediction for regression). Background selection uses a
-    stable content hash (crc32 of the row bytes + seed) instead of the
-    distributed version's xxhash64 ordering — both are arbitrary-but-
-    deterministic subsample rules; SHAP values are estimator-level parity,
-    not bit parity, with the distributed path (pinned by ranking tests).
-    Returns (feature, mean_abs_shap, rank) like shap_mean_abs.
-
-    Rows fan out over a fork pool (``workers``, default up to 8): the cost
-    is n x nsim x 2p model evaluations — serial, the replica's 230 x 12
-    frame measured ~50 s, the reference's own fastshap forks here too
-    (lib/shap_funcs.R:99-100). Per-row rngs make the result identical for
-    every worker count; non-fork platforms fall back to serial.
-    """
-    phi = shap_values_local(
-        predict, X, nsim=nsim, seed=seed,
-        max_background=max_background, workers=workers,
-    )
-    return ranking_from_phi(phi, feature_cols, top_k)
-
-
 def shap_values_local(
     predict,
     X: np.ndarray,

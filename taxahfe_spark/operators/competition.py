@@ -50,7 +50,7 @@ descendants with importance >= parent win and the parent loses; final
 from __future__ import annotations
 
 import os
-import time
+import warnings
 import zlib
 from dataclasses import dataclass, field
 
@@ -62,7 +62,7 @@ from pyspark.sql import types as T
 
 from taxahfe_spark.functions.rf import forest_importance
 from taxahfe_spark.session import driver_side, local_frame
-from taxahfe_spark.taxonomy import _tlog, sparse_to_dense
+from taxahfe_spark.taxonomy import sparse_to_dense
 
 # driver-local fused stage budget: design cells (entity x competitor x fit)
 # summed over a stage's competitions
@@ -336,22 +336,6 @@ def make_importance_runner(
         return ((_rank_avg(imp_a) + _rank_avg(imp_s)) / 2.0)[:p]
 
     return run_re
-
-
-def chunk_importance(
-    Xf: np.ndarray,
-    label: np.ndarray,
-    cov: np.ndarray | None,
-    re_individual: np.ndarray | None,
-    re_time: np.ndarray | None,
-    params: "CompetitionParams",
-    seed: int,
-) -> np.ndarray:
-    """One permutation-fit's importance (single-shot wrapper around
-    make_importance_runner)."""
-    return make_importance_runner(
-        Xf, label, cov, re_individual, re_time, params
-    )(seed)
 
 
 # executor-process design memo: the chunk fan-out runs MANY tasks per
@@ -704,7 +688,6 @@ class TreeCompetition:
         self.strategy = (
             "broadcast" if nnz * 12 <= BROADCAST_MAX_BYTES else "shuffle"
         )
-        _tlog(f"vector strategy -> {self.strategy} (nnz={nnz})")
         if self.strategy == "broadcast":
             if collected:
                 self.vectors_dict = vectors
@@ -939,7 +922,12 @@ class TreeCompetition:
             try:
                 return self._run_stage_local(comps, ranges, n_chunks)
             except (ImportError, OSError) as e:  # pool failure
-                _tlog(f"driver-local stage unavailable ({e}); Spark path")
+                warnings.warn(
+                    f"driver-local competition stage unavailable ({e}); "
+                    "running the stage on Spark",
+                    RuntimeWarning,
+                    stacklevel=2,
+                )
         # "\x1f" separates the competition key from the chunk-range suffix —
         # a control char that cannot appear in taxonomy paths, so the
         # Spark-side substring_index split-back is unambiguous
@@ -948,7 +936,6 @@ class TreeCompetition:
             for key, (parent, paths) in comps.items()
             for (lo, hi) in ranges
         ]
-        t0 = time.time()
         if self.strategy == "broadcast":
             adf = local_frame(
                 self.spark,
@@ -1006,10 +993,6 @@ class TreeCompetition:
             )
             .collect()
         )
-        _tlog(
-            f"fused stage [{self.strategy}]: {len(comps)} comps x {n_chunks} "
-            f"chunks in {len(rows_in)} tasks, {time.time()-t0:.2f}s"
-        )
         corrs: dict[str, dict[str, float]] = {}
         imps: dict[str, dict[str, float]] = {}
         for r in agg_rows:
@@ -1065,7 +1048,6 @@ class TreeCompetition:
         order, NaN corr masked to absent."""
         import multiprocessing as mp
 
-        t0 = time.time()
         tasks = []
         for key, (parent, paths) in comps.items():
             names = ([parent] if parent else []) + sorted(
@@ -1108,10 +1090,6 @@ class TreeCompetition:
             for _, v in sorted(pl):
                 total += v
             imps.setdefault(key, {})[pth] = total / n_chunks
-        _tlog(
-            f"fused stage [driver-local]: {len(comps)} comps x {n_chunks} "
-            f"chunks in {len(tasks)} tasks, {time.time()-t0:.2f}s"
-        )
         return corrs, imps
 
     # -- level competition ---------------------------------------------------

@@ -9,8 +9,9 @@ All four families are expressed shuffle-consciously:
   ids of each (band_idx, band_hash) bucket in one aggregate and pair them
   inside the bucket. Candidate verification by signature-estimated
   Jaccard. No driver participation at any step.
-- SimHash: 64 weighted bit-sums per doc from word hashes, banded into 4x16
-  bit chunks for Hamming<=3-style candidate generation.
+- SimHash: 64 weighted bit-sums per doc from word hashes, reassembled into
+  one fingerprint per doc; near duplicates are within a small Hamming
+  distance of each other.
 - n-gram Jaccard: exact pairwise Jaccard via inverted-index self-join with a
   document-frequency cap (hot shingles are the skew killer at 100 TB — a
   shingle in 10^6 docs creates 10^12 candidate pairs; the cap bounds it).
@@ -20,7 +21,7 @@ from __future__ import annotations
 
 import zlib
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from taxahfe_spark.tokens import words
@@ -66,22 +67,6 @@ def exact_dedup(
     uniq = keyed.join(anti_right, "__k", "left_anti")
     kept_dup = keyed.join(semi_right, ["__k", id_col], "left_semi")
     return uniq.unionByName(kept_dup).drop("__k")
-
-
-def char_shingles(df: DataFrame, text_col: str = "text", k: int = 5) -> DataFrame:
-    """Distinct k-char shingles per doc. Built-ins only.
-
-    The normalized text is PROJECTED before the transform: an expression
-    referenced inside a lambda is re-evaluated per array element (Catalyst
-    does not CSE across the lambda boundary), so inlining the regex
-    normalization costs O(len^2) regex work per document."""
-    with_norm = df.withColumn("__norm", normalize_text(text_col))
-    norm = F.col("__norm")
-    sh = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(norm) - k + 1, F.lit(1))),
-        lambda i: norm.substr(i, F.lit(k)),
-    )
-    return with_norm.withColumn("__shingles", F.array_distinct(sh)).drop("__norm")
 
 
 def minhash_signatures(
@@ -439,33 +424,6 @@ def simhash(
             )
         )
     return bit_sums.select(id_col, fp.alias("simhash"))
-
-
-def simhash_pairs(
-    fps: DataFrame, id_col: str = "doc_id", max_hamming: int = 3
-) -> DataFrame:
-    """Candidate pairs with Hamming distance <= max_hamming via 4x16-bit band
-    join (any pair within distance 3 shares at least one exact 16-bit chunk)."""
-    chunks = fps.select(
-        F.col(id_col).alias("id"),
-        "simhash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright("simhash", 16 * i).bitwiseAND(F.lit(0xFFFF))
-                    for i in range(4)
-                ]
-            )
-        ).alias("chunk_idx", "chunk"),
-    )
-    a = chunks.select(F.col("id").alias("a"), F.col("simhash").alias("sh_a"), "chunk_idx", "chunk")
-    b = chunks.select(F.col("id").alias("b"), F.col("simhash").alias("sh_b"), "chunk_idx", "chunk")
-    cand = (
-        a.join(b, ["chunk_idx", "chunk"]).filter(F.col("a") < F.col("b"))
-        .select("a", "b", "sh_a", "sh_b").distinct()
-    )
-    ham = cand.withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
-    return ham.filter(F.col("hamming") <= max_hamming).select("a", "b", "hamming")
 
 
 def ngram_jaccard_pairs(

@@ -1,19 +1,18 @@
 """Similarity search over embedding columns (array<float>).
 
-Three paths:
-- brute-force cosine top-k (the correctness baseline): broadcast the query
-  set, JVM-side dot products via zip_with/aggregate, per-query top-k window.
-- LSH-bucketed top-k (a scale path): random-hyperplane signatures bucket
-  the corpus; only same-bucket candidates are scored. Recall < 1 by design;
-  multiple hash tables raise it. Planes are generated from a seed on the
-  driver (tiny) and inlined as literals — no UDF, no shuffle of the corpus
-  beyond the bucket join.
-- IVF top-k (the other scale path): a seeded spherical k-means coarse
+- Exact cosine top-k (the correctness baseline): broadcast the query set,
+  score each corpus partition with one Arrow-batched numpy matmul, keep
+  each batch's local top-k, then a per-query top-k window.
+- IVF top-k (the scale path): a seeded spherical k-means coarse
   quantizer (trained on a hash-sampled, driver-bounded slice) partitions
   the corpus into inverted lists; each query scores only its nprobe
   nearest lists. The pruning happens inside a single corpus scan — no
   shuffle, no index table — and nprobe >= n_centroids degenerates to the
   exact brute-force result, which is how the driver value-oracle gates it.
+- All-pairs cosine over one corpus: exact (``cosine_allpairs``) or
+  random-hyperplane LSH buckets with exact rescoring (``ann_self_pairs``,
+  planes generated from a seed on the driver and inlined as literals), and
+  ``embedding_dedup`` on top of either.
 """
 
 from __future__ import annotations
@@ -129,7 +128,6 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     exclude_self: bool = True,
-    strategy: str = "arrow",
 ) -> DataFrame:
     """Exact top-k by cosine: (query_id, match_id, cosine, rank).
 
@@ -137,37 +135,15 @@ def cosine_topk(
     corpus); the corpus is scanned once with no shuffle before the per-query
     top-k reduction.
 
-    ``strategy="arrow"`` (default): one Arrow-batched numpy matmul per
-    corpus partition, emitting only each batch's LOCAL top-k per query — a
-    candidate outside its batch's top-k under (cosine desc, id asc) can
-    never enter the global top-k, so the final per-query window ranks
-    (partitions x k) rows, not the full score matrix. Spark's array
-    higher-order functions evaluate INTERPRETED per element (measured ~25x
-    slower than the BLAS path on a 2k x 100 x 64 score job), which makes
-    this the sanctioned vectorized-UDF exception to built-ins-first.
-    ``strategy="sql"``: the pure built-ins plan (JVM fold per element) —
-    engine-portable and used to cross-check the Arrow path.
+    Each corpus partition is scored by one Arrow-batched numpy matmul that
+    emits only the batch's LOCAL top-k per query — a candidate outside its
+    batch's top-k under (cosine desc, id asc) can never enter the global
+    top-k, so the final per-query window ranks (partitions x k) rows, not
+    the full score matrix. Spark's array higher-order functions evaluate
+    INTERPRETED per element (measured ~25x slower than the BLAS path on a
+    2k x 100 x 64 score job), which makes this the sanctioned vectorized-UDF
+    exception to built-ins-first.
     """
-    if strategy == "sql":
-        q = queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-        )
-        c = corpus.select(F.col(id_col).alias("match_id"), F.col(vec_col).alias("c_vec"))
-        scored = c.join(F.broadcast(q)).withColumn(
-            "cosine", F.round(cosine_similarity_col("q_vec", "c_vec"), 8)
-        )
-        if exclude_self:
-            scored = scored.filter(F.col("query_id") != F.col("match_id"))
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col("match_id").asc()
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "match_id", "cosine", "rank")
-        )
-
-    import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
@@ -231,64 +207,6 @@ def hyperplane_signature(
         bit = (_dot(F.col(vec_col), plane) > 0).cast("long")
         sig = sig.bitwiseOR(F.shiftleft(bit, i))
     return df.withColumn(out_col, sig)
-
-
-def lsh_cosine_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 12,
-    n_tables: int = 4,
-    seed: int = 42,
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Approximate top-k: candidates share a hyperplane bucket in >=1 of
-    n_tables tables, then exact cosine rerank."""
-    def with_buckets(df, prefix, vcol):
-        out = df
-        for t in range(n_tables):
-            out = hyperplane_signature(
-                out, vcol, n_planes=n_planes, seed=seed + 131 * t,
-                out_col=f"{prefix}b{t}",
-            )
-        return out
-
-    q = with_buckets(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")),
-        "q", "q_vec",
-    )
-    c = with_buckets(
-        corpus.select(F.col(id_col).alias("match_id"), F.col(vec_col).alias("c_vec")),
-        "c", "c_vec",
-    )
-    qb = q.select(
-        "query_id", "q_vec",
-        F.posexplode(F.array(*[f"qb{t}" for t in range(n_tables)])).alias("table", "bucket"),
-    )
-    cb = c.select(
-        "match_id", "c_vec",
-        F.posexplode(F.array(*[f"cb{t}" for t in range(n_tables)])).alias("table", "bucket"),
-    )
-    cand = (
-        cb.join(F.broadcast(qb), ["table", "bucket"])
-        .select("query_id", "match_id", "q_vec", "c_vec")
-        .distinct()
-    )
-    if exclude_self:
-        cand = cand.filter(F.col("query_id") != F.col("match_id"))
-    scored = cand.withColumn(
-        "cosine", F.round(cosine_similarity_col("q_vec", "c_vec"), 8)
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("match_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "match_id", "cosine", "rank")
-    )
 
 
 def train_ivf_centroids(

@@ -177,26 +177,6 @@ def contamination_score(
     )
 
 
-def doc_fingerprint(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 5,
-    n_mins: int = 8,
-) -> DataFrame:
-    """Winnowing-style fingerprint: the n smallest word-k-gram hashes per doc
-    as a sorted array (rolling-hash family; robust to local edits)."""
-    dw = words(df, text_col)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size("words") - k + 1, F.lit(1))),
-        lambda i: F.xxhash64(F.array_join(F.slice("words", i, k), " ")),
-    )
-    return dw.select(
-        id_col,
-        F.slice(F.array_sort(F.array_distinct(grams)), 1, n_mins).alias("fingerprint"),
-    )
-
-
 def repetition_stats(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 2
 ) -> DataFrame:

@@ -24,7 +24,6 @@ from taxahfe_spark.operators.filters import feature_filter_flags
 from taxahfe_spark.session import local_frame
 from taxahfe_spark.taxonomy import (
     ResolvedTree,
-    _tlog,
     melt_wide_matrix,
     resolve_tree,
     to_feature_vectors,
@@ -245,9 +244,6 @@ def taxa_hfe(
             params, lowest_level=params.lowest_level - 1, max_level=params.max_level - 1
         )
 
-    import time as _time
-
-    _t0 = _time.time()
     meta_pdf = metadata.toPandas()
     meta_pdf["subject_id"] = meta_pdf["subject_id"].map(clean_entity)
     if meta_pdf["subject_id"].duplicated().any():
@@ -264,8 +260,6 @@ def taxa_hfe(
     long = hierarchical_long.withColumn(
         "entity_id", clean_entity_expr("entity_id")
     ).join(F.broadcast(ids_df), "entity_id", "left_semi")
-    _tlog(f"taxa_hfe: meta prep {_time.time()-_t0:.2f}s")
-    _t0 = _time.time()
     tree = resolve_tree(long, entity_order=meta_pdf["subject_id"].tolist())
     # the design universe is metadata INTERSECT data subjects (reference
     # lib/tree.R:177-178 prunes data columns to metadata, and every
@@ -312,8 +306,6 @@ def taxa_hfe(
             )
             .toPandas()
         )
-    _tlog(f"taxa_hfe: rollup + vectors + flags {_time.time()-_t0:.2f}s")
-    _t0 = _time.time()
     re_individual = re_time = None
     if params.random_effects:
         # reference lib/tree.R:116-131: individual/time required; a numeric
@@ -342,15 +334,12 @@ def taxa_hfe(
         vectors, flags_pdf, label, cov, params,
         re_individual=re_individual, re_time=re_time,
     )
-    _tlog(f"taxa_hfe: competition init {_time.time()-_t0:.2f}s")
-    _t0 = _time.time()
     try:
         state = comp.run(resume_dir=resume_dir)
     finally:
         comp.close()
         if not tree.on_driver:
             vectors.unpersist()  # no-op when TreeCompetition already released it
-    _tlog(f"taxa_hfe: competition run {_time.time()-_t0:.2f}s")
     if tree.vectors is None:
         # a broadcast competition collected the vectors to the driver: the
         # winner matrix then densifies them instead of re-scanning resolved
@@ -461,27 +450,15 @@ def write_output_file(matrix: DataFrame, output_path: str) -> None:
     matrix.coalesce(1).write.mode("overwrite").option("header", True).csv(output_path)
 
 
-def write_summary_files(
-    resolved: DataFrame, state: pd.DataFrame, flags_passed_only: bool, output_path: str
-) -> None:
-    """Per-level summary export (reference lib/tree.R:205-245), written as a
-    single parquet partitioned by level instead of one CSV per depth."""
-    keep = state[state["passed_filters"]]["path"] if flags_passed_only else state["path"]
-    spark = resolved.sparkSession
-    keep_df = local_frame(spark, [(p,) for p in keep], "path string")
-    out = resolved.join(F.broadcast(keep_df), "path", "left_semi")
-    out.write.mode("overwrite").partitionBy("level").parquet(output_path)
-
-
 def write_level_summary_csvs(
     resolved: DataFrame,
     state: pd.DataFrame,
     metadata: DataFrame,
     output_dir: str,
 ) -> list[str]:
-    """True per-depth transposed summary CSVs (reference lib/tree.R:205-245
-    write_summary_files): for each tree depth, the features passing filters
-    at that level become columns, one row per entity, joined to metadata.
+    """True per-depth transposed summary CSVs (reference lib/tree.R:205-245):
+    for each tree depth, the features passing filters at that level become
+    columns, one row per entity, joined to metadata.
 
     Feature counts per level are taxonomy-sized, so each pivot is a
     bounded-width groupBy; levels are independent jobs.

@@ -23,8 +23,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-DEFAULT_SHUFFLE_PARTITIONS = 32
-
 
 def driver_side(size: int, limit: int) -> bool:
     """The one driver-vs-distributed policy: work of ``size`` units runs on

@@ -35,9 +35,6 @@ bounds (see pipeline.py).
 
 from __future__ import annotations
 
-import os
-import sys
-import time
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -52,16 +49,9 @@ from taxahfe_spark.session import driver_side, local_frame
 PATH_SEP = "|"
 _SPLIT_RE = r"\|"
 
-_DEBUG_TIMING = os.environ.get("TAXAHFE_DEBUG_TIMING") == "1"
-
-
-def _tlog(msg: str) -> None:
-    if _DEBUG_TIMING:
-        print(f"[timing] {msg}", file=sys.stderr, flush=True)
-
 
 def parent_path(col) -> F.Column:
-    """Parent path = path minus its last segment ('' for depth-1 nodes)."""
+    """Parent path = path minus its last segment (null for depth-1 nodes)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.when(F.instr(c, PATH_SEP) > 0, F.regexp_replace(c, r"\|[^|]*$", "")).otherwise(F.lit(None))
 
@@ -86,32 +76,6 @@ def explode_ancestors(df: DataFrame, path_col: str = "path") -> DataFrame:
     return df.select(
         "*", F.posexplode(prefixes).alias("_anc_pos", "anc_path")
     ).withColumn("anc_level", F.col("_anc_pos") + 1).drop("_anc_pos")
-
-
-def node_skeleton(observed_paths: DataFrame, path_col: str = "path") -> DataFrame:
-    """All distinct nodes (observed paths + every ancestor prefix).
-
-    Returns (path, level, name, parent_path, observed). This is the
-    broadcastable tree skeleton — the analog of the reference's node graph
-    minus the per-node abundance state.
-    """
-    obs = observed_paths.select(F.col(path_col).alias("path")).distinct()
-    all_nodes = (
-        explode_ancestors(obs, "path")
-        .groupBy(F.col("anc_path").alias("path"))
-        .agg(F.max("anc_level").alias("level"))
-    )
-    obs_flag = obs.withColumn("observed", F.lit(True))
-    return (
-        all_nodes.join(obs_flag, "path", "left")
-        .select(
-            "path",
-            "level",
-            F.element_at(F.split("path", _SPLIT_RE), -1).alias("name"),
-            parent_path("path").alias("parent_path"),
-            F.coalesce("observed", F.lit(False)).alias("observed"),
-        )
-    )
 
 
 def melt_wide_matrix(
@@ -328,7 +292,6 @@ def resolve_tree(
     released before returning.
     """
     spark = long_df.sparkSession
-    t0 = time.time()
     if clean_paths:
         # The janitor-style clean regex is data-INVARIANT per distinct path,
         # and distinct paths are taxonomy-sized by contract (<= ~1e5) while
@@ -364,7 +327,6 @@ def resolve_tree(
         raise ValueError(
             "clade_name holds null values: every row needs a taxonomy path"
         )
-    _tlog(f"rollup: observed persist + distinct collect {time.time()-t0:.2f}s")
     if not obs_paths:
         base.unpersist()
         return ResolvedTree(
@@ -384,17 +346,13 @@ def resolve_tree(
         ),
     ).first()
     if n_valid == n_rows and driver_side(n_rows, DRIVER_MAX_ROWS):
-        t0 = time.time()
         pdf = base.toArrow().to_pandas()
         base.unpersist()
         entities, vectors, build = _observed_wins(pdf, raw_map, entity_order)
-        _tlog(f"rollup: driver kernel {time.time()-t0:.2f}s")
         return ResolvedTree(
             spark, entities, vectors, True,
             _build=lambda: local_frame(spark, build(), RESOLVED_SCHEMA),
         )
-
-    t0 = time.time()
 
     def local(rows, schema):  # taxonomy-sized, broadcast into a join
         return F.broadcast(local_frame(spark, rows, schema))
@@ -438,7 +396,6 @@ def resolve_tree(
     out = out.persist()
     present = {r["entity_id"] for r in out.select("entity_id").distinct().collect()}
     base.unpersist()
-    _tlog(f"rollup: exchange + entity distinct {time.time()-t0:.2f}s")
     return ResolvedTree(
         spark, _entity_order(present, entity_order), None, False, _frame=out
     )

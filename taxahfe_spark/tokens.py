@@ -165,13 +165,6 @@ def dedup_sequences(
     return uniq.unionByName(kept_dup).drop("__h")
 
 
-def assert_n_tok_invariant(seqs: DataFrame) -> None:
-    """Per-row invariant from BASELINE.json input_hint: n_tok == size(tokens)."""
-    bad = seqs.filter(F.size("tokens") != F.col("n_tok")).count()
-    if bad:
-        raise AssertionError(f"n_tok invariant violated on {bad} rows")
-
-
 def substring_dedup(
     df: DataFrame,
     tokens_col: str = "tokens",
@@ -792,10 +785,9 @@ def incremental_dedup_sequences(
     Ingestion batches are small relative to the corpus by definition, so
     AQE turns the anti join into a broadcast of the batch side's hashes.
 
-    64-bit cross-check caveat (same trade as streaming_exact_dedup): a
-    hash collision between a new row and an unrelated corpus row drops the
-    new row (~|new| x |corpus| / 2^64). The WITHIN-batch stage stays
-    collision-exact via dedup_sequences.
+    64-bit cross-check caveat: a hash collision between a new row and an
+    unrelated corpus row drops the new row (~|new| x |corpus| / 2^64). The
+    WITHIN-batch stage stays collision-exact via dedup_sequences.
     """
     batch = dedup_sequences(
         new, tokens_col=tokens_col, id_col=id_col,

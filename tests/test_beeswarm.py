@@ -8,11 +8,7 @@ import xml.etree.ElementTree as ET
 import numpy as np
 
 from taxahfe_spark.functions.beeswarm import beeswarm_svg
-from taxahfe_spark.functions.shap import (
-    ranking_from_phi,
-    shap_mean_abs_local,
-    shap_values_local,
-)
+from taxahfe_spark.functions.shap import ranking_from_phi, shap_values_local
 
 SVG_NS = "{http://www.w3.org/2000/svg}"
 
@@ -26,14 +22,9 @@ def test_shap_values_local_matches_ranking_path():
     X = rng.random((40, 4))
     cols = ["a", "b", "c", "d"]
     phi = shap_values_local(_linear_predict, X, seed=7)
-    rank_direct = ranking_from_phi(phi, cols)
-    rank_legacy = shap_mean_abs_local(_linear_predict, X, cols, seed=7)
-    assert list(rank_direct["feature"]) == list(rank_legacy["feature"])
-    assert np.allclose(
-        rank_direct["mean_abs_shap"], rank_legacy["mean_abs_shap"]
-    )
+    rank = ranking_from_phi(phi, cols)
     # linear model: phi_j ~ w_j * (x_j - E[x_j]); the big-weight feature wins
-    assert rank_direct.iloc[0]["feature"] == "a"
+    assert rank.iloc[0]["feature"] == "a"
 
 
 def test_shap_values_local_worker_invariant():

@@ -349,7 +349,8 @@ def test_forkless_platform_takes_spark_stage_with_same_state(spark, monkeypatch)
     """Where the platform offers no ``fork`` start method the driver-local
     stage is not attempted (``get_context("fork")`` raises ValueError
     there): every stage runs on Spark and the state equals the fork-pool
-    run's."""
+    run's. Where the pool itself fails (``OSError``), the stage also moves
+    to Spark, with a RuntimeWarning, and the state is the same again."""
     import multiprocessing
 
     long = spark.createDataFrame(
@@ -387,3 +388,13 @@ def test_forkless_platform_takes_spark_stage_with_same_state(spark, monkeypatch)
     )
     staged = TreeCompetition(vectors, flags_pdf, LABEL, None, params).run()
     pd.testing.assert_frame_equal(forked, staged)
+
+    monkeypatch.undo()
+
+    def pool_fails(self, comps, ranges, n_chunks):
+        raise OSError("cannot start the fork pool")
+
+    monkeypatch.setattr(TreeCompetition, "_run_stage_local", pool_fails)
+    with pytest.warns(RuntimeWarning, match="running the stage on Spark"):
+        fell_back = TreeCompetition(vectors, flags_pdf, LABEL, None, params).run()
+    pd.testing.assert_frame_equal(forked, fell_back)

@@ -11,6 +11,8 @@ drift gate (which the engine itself produced) to an independent derivation.
 
 from __future__ import annotations
 
+import pathlib
+
 import pandas as pd
 
 from oracle_collapse import oracle_collapse
@@ -114,9 +116,11 @@ def test_committed_golden_certified_by_independent_oracle(spark):
         filter_prevalence=0.05, lowest_level=1, nperm=4, num_trees=5,
         seed=42, super_filter_nperm_factor=4,
     )
-    with gzip.open(
-        "/root/repo/taxahfe_spark/golden/hfe_collapse_sf001.json.gz", "rt"
-    ) as f:
+    golden = (
+        pathlib.Path(__file__).resolve().parent.parent
+        / "taxahfe_spark" / "golden" / "hfe_collapse_sf001.json.gz"
+    )
+    with gzip.open(golden, "rt") as f:
         g = json.load(f)
     gpdf = pd.DataFrame(g["rows"], columns=g["columns"])
     feat_cols = [

@@ -1,4 +1,4 @@
-"""Tests for dedup, text stats, similarity, multimodal plumbing — on the
+"""Tests for dedup, text stats and similarity — on the
 real documents/embeddings testdata plus engineered cases."""
 
 from __future__ import annotations
@@ -15,17 +15,14 @@ from taxahfe_spark.operators.dedup import (
     minhash_signatures,
     ngram_jaccard_pairs,
     simhash,
-    simhash_pairs,
 )
 from taxahfe_spark.operators.similarity import (
     cosine_topk,
     ivf_topk,
-    lsh_cosine_topk,
     train_ivf_centroids,
 )
 from taxahfe_spark.operators.textstats import (
     contamination_score,
-    doc_fingerprint,
     language_id,
     text_stats,
     token_counts,
@@ -141,11 +138,13 @@ def test_simhash_near_dup(spark):
     near = base.replace("dog", "dogs", 2)
     far = "unrelated text about query optimizers and shuffles " * 10
     df = spark.createDataFrame([(1, base), (2, near), (3, far)], ["doc_id", "text"])
-    fps = simhash(df)
-    pairs = simhash_pairs(fps, max_hamming=6).collect()
-    found = {(r["a"], r["b"]) for r in pairs}
-    assert (1, 2) in found
-    assert (1, 3) not in found
+    fp = {r["doc_id"]: r["simhash"] for r in simhash(df).collect()}
+
+    def hamming(a, b):
+        return bin((fp[a] ^ fp[b]) & 0xFFFFFFFFFFFFFFFF).count("1")
+
+    assert hamming(1, 2) <= 6
+    assert hamming(1, 3) > 6
 
 
 def test_ngram_jaccard(spark):
@@ -278,16 +277,6 @@ def test_ivf_centroids_no_count_sample_path(emb):
     np.testing.assert_array_equal(C3, C4)
 
 
-def test_doc_fingerprint_stability(spark):
-    df = spark.createDataFrame(
-        [(1, "a b c d e f g h i j"), (2, "a b c d e f g h i j"), (3, "x y z w v u t s r q")],
-        ["doc_id", "text"],
-    )
-    fps = {r["doc_id"]: tuple(r["fingerprint"]) for r in doc_fingerprint(df).collect()}
-    assert fps[1] == fps[2]
-    assert fps[1] != fps[3]
-
-
 def test_cosine_topk_vs_numpy(emb):
     queries = emb.filter("vec_id < 3")
     got = cosine_topk(queries, emb, k=5).toPandas()
@@ -365,134 +354,6 @@ def test_ivf_recall_on_clustered_corpus(spark):
         a = set(approx[approx["query_id"] == qid]["match_id"])
         recalls.append(len(e & a) / len(e))
     assert np.mean(recalls) >= 0.9  # tight clusters: own-list probing recalls
-
-
-def test_lsh_topk_finds_planted_neighbors(spark, emb):
-    # LSH recalls STRONG neighbors; plant a near-duplicate (cos ~0.99) of
-    # each query into the corpus and require the approximate path to find it
-    pdf = emb.toPandas()
-    rng = np.random.default_rng(5)
-    q = pdf[pdf["vec_id"] < 10]
-    planted = []
-    for _, r in q.iterrows():
-        v = np.asarray(r["embedding"], dtype=np.float64)
-        twin = v + rng.normal(0, 0.02 * np.linalg.norm(v) / np.sqrt(len(v)), len(v))
-        planted.append((int(r["vec_id"]) + 100000, twin.astype(np.float32).tolist(), 0))
-    corpus = emb.unionByName(
-        spark.createDataFrame(planted, "vec_id long, embedding array<float>, label int")
-    )
-    approx = lsh_cosine_topk(
-        emb.filter("vec_id < 10"), corpus, k=3, n_planes=10, n_tables=8
-    ).toPandas()
-    hits = 0
-    for qid in range(10):
-        a = set(approx[approx["query_id"] == qid]["match_id"])
-        hits += int(qid + 100000 in a)
-    assert hits >= 8  # recall>=0.8 on planted strong neighbors
-
-
-def test_multimodal_real_decoders():
-    """The pure-numpy WAV / PPM / BMP / y4m decoders round-trip known
-    payloads exactly — decode is REAL for uncompressed container formats."""
-    import struct
-
-    import numpy as np
-
-    from taxahfe_spark.operators.multimodal import (
-        decode_bmp,
-        decode_ppm,
-        decode_wav,
-        decode_y4m,
-        make_ppm,
-        make_wav,
-        make_y4m,
-    )
-
-    # WAV: a pure 440 Hz sine decodes to the same samples
-    rate = 8000
-    t = np.arange(2000) / rate
-    x = 0.5 * np.sin(2 * np.pi * 440 * t)
-    pcm = (x * 32767).astype("<i2").tobytes()
-    fmt = struct.pack("<HHIIHH", 1, 1, rate, rate * 2, 2, 16)
-    chunks = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    chunks += b"data" + struct.pack("<I", len(pcm)) + pcm
-    wav = b"RIFF" + struct.pack("<I", len(chunks)) + chunks
-    got, got_rate = decode_wav(wav)
-    assert got_rate == rate and got.shape == (2000, 1)
-    assert np.allclose(got[:, 0], np.frombuffer(pcm, "<i2") / 32768.0)
-    # RMS of a sine is amp/sqrt(2)
-    assert abs(np.sqrt((got**2).mean()) - 0.5 / np.sqrt(2)) < 0.01
-
-    # PPM: solid color round-trips bit-exactly
-    px = np.zeros((4, 6, 3), dtype=np.uint8)
-    px[..., 0], px[..., 1], px[..., 2] = 200, 100, 50
-    ppm = b"P6\n# comment\n6 4\n255\n" + px.tobytes()
-    img = decode_ppm(ppm)
-    assert img.shape == (4, 6, 3)
-    assert np.allclose(img[0, 0], [200 / 255, 100 / 255, 50 / 255])
-
-    # BMP: 24-bit bottom-up with row padding, BGR order
-    w, h = 3, 2
-    stride = (w * 3 + 3) & ~3
-    rows = bytearray()
-    for r in range(h):  # bottom-up: row 0 in file = bottom image row
-        row = bytes([10 + r, 20 + r, 30 + r] * w)  # B,G,R
-        rows += row + b"\x00" * (stride - len(row))
-    header = b"BM" + struct.pack("<IHHI", 54 + len(rows), 0, 0, 54)
-    info = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(rows), 0, 0, 0, 0)
-    bmp = header + info + bytes(rows)
-    img = decode_bmp(bmp)
-    assert img.shape == (2, 3, 3)
-    # top image row came from file row 1 (bottom-up), RGB order
-    assert np.allclose(img[0, 0] * 255, [31, 21, 11])
-    assert np.allclose(img[1, 0] * 255, [30, 20, 10])
-
-    # y4m: constant-luma frames decode to those lumas
-    y4m = make_y4m(0, w=8, h=4, frames=3)
-    frames, fps = decode_y4m(y4m)
-    assert frames.shape == (3, 4, 8) and fps == 25.0
-    assert (frames.std(axis=(1, 2)) == 0).all()
-
-    # synthesized fixtures are self-consistent
-    decode_wav(make_wav(7))
-    decode_ppm(make_ppm(7))
-
-
-def test_multimodal_plumbing(spark):
-    from taxahfe_spark.operators.multimodal import (
-        extract_media_features,
-        frame_sample_plan,
-        synthesize_media,
-    )
-
-    media = synthesize_media(spark, n=30)
-    feats = extract_media_features(media, dim=16)
-    rows = feats.collect()
-    assert len(rows) == 30
-    assert all(r["ok"] and len(r["feature"]) == 16 for r in rows)
-    # determinism across runs
-    again = {r["media_id"]: r["feature"] for r in extract_media_features(media, dim=16).collect()}
-    first = {r["media_id"]: r["feature"] for r in rows}
-    assert first == again
-    plan = frame_sample_plan(media, every_ms=5000)
-    assert plan.count() > 0
-    assert plan.filter("frame_ts_ms < 0").count() == 0
-
-
-def test_multimodal_unsupported_codec_quarantined(spark):
-    """Compressed codecs must produce error rows, never a failed job."""
-    from taxahfe_spark.operators.multimodal import MEDIA_SCHEMA, extract_media_features
-
-    rows = [
-        ("bad1", "image", bytearray(b"\x89PNG\r\n\x1a\nxxxx"), "image/png", 4, 4, None),
-        ("bad2", "audio", bytearray(b"\x00" * 16), "audio/mpeg", None, None, 100),
-        ("bad3", "video", None, "video/mp4", None, None, 100),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    got = {r["media_id"]: r for r in extract_media_features(media, dim=8).collect()}
-    assert not any(r["ok"] for r in got.values())
-    assert "PPM" in got["bad1"]["error"] or "BMP" in got["bad1"]["error"]
-    assert "null payload" in got["bad3"]["error"]
 
 
 def test_ann_self_pairs_recall_vs_exact(spark):
@@ -1026,8 +887,7 @@ def test_driver_prefix_resolved_is_deferred_until_consumed(spark, sf_dir, monkey
 
 def test_only_the_policy_function_reads_the_env():
     """Driver-vs-distributed is one policy (session.driver_side) with one
-    switch: no other package module reads a TAXAHFE_* variable, apart from
-    the TAXAHFE_DEBUG_TIMING stderr timer."""
+    switch: no other package module reads a TAXAHFE_* variable."""
     import ast
     import pathlib
 
@@ -1042,7 +902,6 @@ def test_only_the_policy_function_reads_the_env():
                 and isinstance(node.value, str)
                 and node.value.startswith("TAXAHFE_")
                 and node.value.isidentifier()
-                and node.value != "TAXAHFE_DEBUG_TIMING"
             ):
                 found.add((path.relative_to(root).as_posix(), node.value))
     assert found == {("session.py", "TAXAHFE_DISTRIBUTED")}

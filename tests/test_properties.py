@@ -2,7 +2,7 @@
 
 These target the Spark-free functions whose contracts the distributed plans
 lean on: correlation math, competition decision rules, collinearity pruning,
-label binning, per-group slopes, name cleaning, and the media decoders.
+label binning, per-group slopes and name cleaning.
 Spark-side equivalents are covered by the example-based suites; here the
 input space is explored adversarially. One property does run Spark: the
 rollup's driver kernel against its one-exchange distributed path, on few
@@ -10,8 +10,6 @@ examples to keep the suite fast.
 """
 
 from __future__ import annotations
-
-import struct
 
 import numpy as np
 import pandas as pd
@@ -196,44 +194,6 @@ def test_clean_names_unique(names):
 
     out = clean_names(names)
     assert len(out) == len(names) and len(set(out)) == len(out)
-
-
-# -- media decoders ------------------------------------------------------------
-
-
-@SET
-@given(
-    st.integers(1, 2),
-    st.lists(st.integers(-32768, 32767), min_size=2, max_size=400),
-)
-def test_wav_roundtrip_property(channels, samples):
-    from taxahfe_spark.operators.multimodal import decode_wav
-
-    n = (len(samples) // channels) * channels
-    if n == 0:
-        return
-    pcm = np.array(samples[:n], dtype="<i2").tobytes()
-    fmt = struct.pack("<HHIIHH", 1, channels, 8000, 8000 * 2 * channels,
-                      2 * channels, 16)
-    chunks = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    chunks += b"data" + struct.pack("<I", len(pcm)) + pcm
-    got, rate = decode_wav(b"RIFF" + struct.pack("<I", len(chunks)) + chunks)
-    assert rate == 8000 and got.shape == (n // channels, channels)
-    assert np.allclose(
-        got.ravel(), np.array(samples[:n]) / 32768.0
-    )
-
-
-@SET
-@given(st.integers(1, 12), st.integers(1, 12), st.integers(0, 10_000))
-def test_ppm_roundtrip_property(w, h, seed):
-    from taxahfe_spark.operators.multimodal import decode_ppm
-
-    rng = np.random.default_rng(seed)
-    px = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-    payload = b"P6\n%d %d\n255\n" % (w, h) + px.tobytes()
-    img = decode_ppm(payload)
-    assert np.array_equal((img * 255).round().astype(np.uint8), px)
 
 
 # -- observed-wins rollup: driver kernel vs the one-exchange path -------------

@@ -18,7 +18,7 @@ from taxahfe_spark.operators.competition import (
     TreeCompetition,
     _group_slopes,
     _rank_avg,
-    chunk_importance,
+    make_importance_runner,
 )
 from taxahfe_spark.operators.filters import feature_filter_flags
 from taxahfe_spark.pipeline import discretize_label, taxa_hfe
@@ -73,9 +73,9 @@ def test_re_importance_finds_mean_and_slope_signal():
             tim.append(float(t))
     X = np.array(rows_X)
     params = CompetitionParams(random_effects=True, num_trees=60, feature_type="factor")
-    imp = chunk_importance(
-        X, np.array(lab), None, np.array(ind), np.array(tim), params, seed=9
-    )
+    imp = make_importance_runner(
+        X, np.array(lab), None, np.array(ind), np.array(tim), params
+    )(9)
     # feature 1 is informative in BOTH designs -> must top the rank average;
     # feature 0 (mean-only) can tie noise in the slope fit, so only the
     # combined-signal ordering is a stable property of rank averaging

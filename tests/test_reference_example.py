@@ -50,24 +50,30 @@ def test_scan_shapes(ref_frames):
 
 def test_tree_structure_matches_reference_histogram(spark, ref_frames):
     from taxahfe_spark.naming import clean_value_col
-    from taxahfe_spark.taxonomy import melt_wide_matrix, node_skeleton
+    from taxahfe_spark.taxonomy import melt_wide_matrix, missing_runs
 
     _, wide = ref_frames
     long = melt_wide_matrix(wide)
-    paths = long.select(clean_value_col("clade_name").alias("path")).distinct()
-    skel = node_skeleton(paths).toPandas()
+    observed = {
+        r["path"]
+        for r in long.select(clean_value_col("clade_name").alias("path"))
+        .distinct()
+        .collect()
+    }
+    # the missing ancestors both rollup paths synthesize
+    missing = {a for run in missing_runs(observed).values() for a in run}
+    nodes = observed | missing
     # measured file depth distribution {4,14,27,45,88,243,767} plus the two
     # synthesized caudovirales ancestors at levels 4 and 5
-    hist = skel.groupby("level")["path"].count().to_dict()
+    hist = pd.Series([p.count("|") + 1 for p in nodes]).value_counts().to_dict()
     assert hist == {1: 4, 2: 14, 3: 27, 4: 46, 5: 89, 6: 243, 7: 767}
     # every node's parent exists (except roots): ancestor closure complete
-    known = set(skel["path"])
-    for p in skel[skel["level"] > 1]["parent_path"]:
-        assert p in known
+    for p in nodes:
+        if "|" in p:
+            assert p.rsplit("|", 1)[0] in nodes
     # exactly two ancestors are NOT observed rows in the file (the
-    # caudovirales lineage) - the skeleton synthesizes them
-    missing = sorted(skel[~skel["observed"]]["path"])
-    assert missing == [
+    # caudovirales lineage)
+    assert sorted(missing) == [
         "k__viruses|p__viruses_unclassified|c__viruses_unclassified|o__caudovirales",
         "k__viruses|p__viruses_unclassified|c__viruses_unclassified|o__caudovirales|f__myoviridae",
     ]

@@ -1,0 +1,108 @@
+"""Source checks over the repository's Python files (AST only, no Spark):
+every public package function and class is reached from outside the tests,
+and no tool or test points at a fixed checkout instead of its own."""
+
+from __future__ import annotations
+
+import ast
+import pathlib
+
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+
+# Reached only by tests today, kept on purpose; one reason each.
+KEPT_UNREACHED = {
+    "read_tokenized_sequences": "the point-in-time pipeline's Iceberg sequence input",
+    "nocb": "backfill, the counterpart of the live LOCF window",
+    "fit_quality_model": "the only producer of the model that score_quality consumes",
+}
+
+
+def _referenced_names(node: ast.AST) -> set[str]:
+    """Identifiers a node refers to: names, attributes, import aliases and
+    identifier-shaped string constants (column and registry keys)."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name.rsplit(".", 1)[-1])
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+            if n.value.isidentifier():
+                out.add(n.value)
+    return out
+
+
+def _unreached() -> dict[str, str]:
+    """Public top-level package definitions no non-test code reaches, as
+    name -> defining module. A package definition's own body counts as
+    live code only once something live reaches it, so a name used only by
+    unreached code is unreached too."""
+    defs: dict[tuple[str, str], set[str]] = {}  # (module, name) -> names its body uses
+    live_refs: set[str] = set()  # names used by module-level and non-package code
+    for path in ROOT.rglob("*.py"):
+        rel = path.relative_to(ROOT)
+        if rel.parts[0] == "tests" or any(p.startswith(".") for p in rel.parts):
+            continue
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for stmt in tree.body:
+            if rel.parts[0] == "taxahfe_spark" and isinstance(
+                stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                defs[(rel.as_posix(), stmt.name)] = _referenced_names(stmt) - {stmt.name}
+            else:
+                live_refs |= _referenced_names(stmt)
+    live: set[tuple[str, str]] = set()
+    while True:
+        used = live_refs.union(*(defs[k] for k in live))
+        reached = {k for k in defs if k[1] in used}
+        if reached == live:
+            break
+        live = reached
+    return {
+        name: module
+        for module, name in defs
+        if (module, name) not in live and not name.startswith("_")
+    }
+
+
+def test_every_public_package_name_is_reached_outside_tests():
+    unreached = _unreached()
+    assert set(KEPT_UNREACHED) <= set(unreached), (
+        "kept names that are reached now (drop them from KEPT_UNREACHED): "
+        f"{sorted(set(KEPT_UNREACHED) - set(unreached))}"
+    )
+    dead = {n: m for n, m in unreached.items() if n not in KEPT_UNREACHED}
+    assert not dead, (
+        "package names that only tests reach (delete them, or call the live "
+        f"code they wrap from the test): {sorted(f'{m}::{n}' for n, m in dead.items())}"
+    )
+
+
+def _points_into_a_checkout(value: str) -> bool:
+    """An absolute path into this checkout, or into another checkout of
+    this repository: a directory holding our entry module, or a path whose
+    tail after some directory is a path of ours."""
+    if not value.startswith("/"):
+        return False
+    if value == str(ROOT) or value.startswith(f"{ROOT}/"):
+        return True
+    if (pathlib.Path(value) / "__spark_entry__.py").is_file():
+        return True
+    parts = pathlib.PurePosixPath(value).parts[1:]
+    return any(ROOT.joinpath(*parts[i:]).exists() for i in range(1, len(parts)))
+
+
+def test_tools_and_tests_derive_the_checkout_from_their_own_file():
+    found = []
+    for top in ("tools", "tests"):
+        for path in (ROOT / top).rglob("*.py"):
+            for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+                if (
+                    isinstance(node, ast.Constant)
+                    and isinstance(node.value, str)
+                    and _points_into_a_checkout(node.value)
+                ):
+                    found.append(f"{path.relative_to(ROOT)}:{node.lineno} {node.value}")
+    assert not found, found

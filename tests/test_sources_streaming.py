@@ -1,8 +1,8 @@
-"""Source gating + streaming session equivalence tests."""
+"""Source reader tests: format gating, the sequence contract, Iceberg DDL
+and partition pruning."""
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -37,100 +37,6 @@ def test_tokenized_sequence_contract(spark, sf_dir, tmp_path):
     assert got.count() == docs.count()
     with pytest.raises(ValueError, match="missing columns"):
         read_tokenized_sequences(spark, f"{sf_dir}/events.parquet")
-
-
-def test_streaming_sessions_match_batch(spark, sf_dir, tmp_path):
-    """session_window streaming result == batch session_stats boundaries."""
-    from taxahfe_spark.operators.windows import session_stats
-    from taxahfe_spark.streaming.sessions import streaming_session_stats
-
-    gap = 3600.0
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    batch = session_stats(events, "user_id", "ts", gap, tiebreak="event_id")
-
-    stream = (
-        spark.readStream.schema(events.schema).parquet(f"{sf_dir}")
-    )
-    # restrict to the events file via its schema match: read dir won't work
-    # (mixed schemas) -> copy events parquet alone
-    events.write.mode("overwrite").parquet(str(tmp_path / "ev"))
-    stream = spark.readStream.schema(events.schema).parquet(str(tmp_path / "ev"))
-    out = streaming_session_stats(stream, "user_id", "ts", gap)
-    q = (
-        out.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("sess_out")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = spark.sql(
-            "SELECT user_id, session_start, session_end, n_events FROM sess_out"
-        ).toPandas()
-    finally:
-        q.stop()
-    expect = batch.select(
-        "user_id", "session_start", "session_end", "n_events"
-    ).toPandas()
-    key = ["user_id", "session_start"]
-    g = got.sort_values(key).reset_index(drop=True)
-    e = expect.sort_values(key).reset_index(drop=True)
-    assert len(g) == len(e)
-    assert (g["n_events"].to_numpy() == e["n_events"].to_numpy()).all()
-    assert (g["session_end"].to_numpy() == e["session_end"].to_numpy()).all()
-
-
-def test_streaming_asof_matches_batch(spark, sf_dir, tmp_path):
-    """The streaming point-in-time join (stateless broadcast probe over a
-    file-source stream) returns the SAME matches as the batch as-of join
-    on the same events — the north rule's zero-leakage contract holds
-    under continuous ingestion."""
-    from pyspark.sql import functions as F
-
-    from taxahfe_spark.operators.asof import asof_join
-    from taxahfe_spark.streaming.sessions import streaming_asof_snapshot
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "user_id", "ts"
-    )
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    snap = orders.groupBy(
-        F.col("o_custkey").alias("user_id"),
-        F.col("o_orderdate").alias("snap_ts"),
-    ).agg(F.max("o_totalprice").alias("o_totalprice"))
-
-    batch = asof_join(
-        events, snap, on="user_id", left_ts="ts", right_ts="snap_ts",
-        value_cols=["o_totalprice"], strategy="broadcast",
-    ).toPandas()
-
-    events.write.mode("overwrite").parquet(str(tmp_path / "ev_asof"))
-    stream = spark.readStream.schema(events.schema).parquet(
-        str(tmp_path / "ev_asof")
-    )
-    out = streaming_asof_snapshot(
-        stream, snap, on="user_id", left_ts="ts", right_ts="snap_ts",
-        value_cols=["o_totalprice"],
-    )
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("asof_out")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = spark.sql("SELECT * FROM asof_out").toPandas()
-    finally:
-        q.stop()
-    b = batch.sort_values("event_id").reset_index(drop=True)
-    g = got.sort_values("event_id").reset_index(drop=True)
-    assert len(b) == len(g) == events.count()
-    assert (b["event_id"].to_numpy() == g["event_id"].to_numpy()).all()
-    bp = b["o_totalprice"].to_numpy(dtype=float)
-    gp = g["o_totalprice"].to_numpy(dtype=float)
-    same = (bp == gp) | (np.isnan(bp) & np.isnan(gp))
-    assert same.all()
 
 
 def test_iceberg_ddl_partition_contract(spark):
@@ -183,123 +89,3 @@ def test_partition_pruning_mechanism_days_layout(spark, tmp_path):
     assert got.count() == df.filter(F.col("day") == "2026-01-03").count()
 
 
-def test_streaming_locf_out_of_order_matches_batch(spark, sf_dir, tmp_path):
-    """Stateful streaming LOCF (applyInPandasWithState) == batch locf on the
-    events testdata, with micro-batches delivered OUT of event-time order
-    (middle tertile, latest tertile, earliest tertile). Rows are buffered in
-    watermark-bounded per-key state and emitted only once final, so every
-    fill matches the batch window exactly; sentinel batches advance the
-    watermark to flush the tail (finite-input harness artifact — a live
-    stream's watermark advances on its own)."""
-    import pandas as pd
-
-    from taxahfe_spark.operators.windows import locf
-    from taxahfe_spark.streaming.sessions import streaming_locf
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id",
-        "user_id",
-        F.col("ts").cast("timestamp").alias("ts"),
-        F.when(F.col("event_id") % 3 != 0, F.col("value")).alias("v"),
-    )
-    batch = (
-        locf(ev, "user_id", "ts", ["v"], tiebreak="event_id")
-        .select("event_id", F.col("v").cast("double").alias("v"), "v_filled")
-        .toPandas()
-    )
-
-    pdf = ev.toPandas().sort_values("ts").reset_index(drop=True)
-    thirds = np.array_split(pdf, 3)
-    max_ts = pdf["ts"].max()
-    sent1 = pd.DataFrame(
-        {"event_id": [10_000_001], "user_id": [int(pdf["user_id"].iloc[0])],
-         "ts": [max_ts + pd.Timedelta(days=120)], "v": [np.nan]}
-    )
-    sent2 = sent1.assign(event_id=[10_000_002], ts=[max_ts + pd.Timedelta(days=240)])
-
-    src = str(tmp_path / "locf_src")
-    spark.createDataFrame(thirds[1], ev.schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    stream = spark.readStream.schema(ev.schema).parquet(src)
-    out = streaming_locf(
-        stream, "user_id", "ts", "v", tiebreak="event_id", watermark="60 days"
-    )
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("locf_out")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        for chunk in (thirds[2], thirds[0], sent1, sent2):
-            spark.createDataFrame(chunk, ev.schema).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
-            q.processAllAvailable()
-        got = spark.sql("SELECT * FROM locf_out").toPandas()
-    finally:
-        q.stop()
-    got = got[got["event_id"] < 10_000_000]
-    assert len(got) == len(batch) == 1000
-    m = batch.merge(got, on="event_id", suffixes=("_b", "_s"))
-    assert len(m) == 1000
-    for col in ("v", "v_filled"):
-        b = m[f"{col}_b"].to_numpy(dtype=float)
-        s = m[f"{col}_s"].to_numpy(dtype=float)
-        assert ((b == s) | (np.isnan(b) & np.isnan(s))).all()
-
-
-def test_streaming_exact_dedup_matches_batch_content_set(spark, sf_dir, tmp_path):
-    """streaming_exact_dedup over the north-rule sequence shape: the kept
-    CONTENT set equals batch dedup_sequences' (one survivor per distinct
-    token array), out-of-order arrivals included, and every survivor is an
-    input row. Representative choice (first-arrival vs min-id) is the
-    documented contract difference, so ids are not compared."""
-    from taxahfe_spark.streaming.sessions import streaming_exact_dedup
-    from taxahfe_spark.tokens import dedup_sequences, tokenize
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(200)
-    seqs = tokenize(docs, "text", "doc_id", extra_cols=["source"]).select(
-        F.col("doc_id").cast("string").alias("doc_id"), "tokens", "n_tok", "source"
-    )
-    # plant duplicates: re-key a third of the corpus as new rows with the
-    # same token arrays, then give every row an event time (out of order:
-    # the duplicate COPIES arrive before their originals)
-    dups = seqs.filter(F.crc32(F.col("doc_id")) % 3 == 0).select(
-        F.concat(F.lit("copy_"), "doc_id").alias("doc_id"),
-        "tokens", "n_tok", "source",
-    )
-    both = seqs.unionByName(dups)
-    evts = both.withColumn(
-        "ts",
-        F.to_timestamp(
-            F.lit("2024-01-01 00:00:00")
-        ) + F.make_interval(secs=F.when(
-            F.col("doc_id").startswith("copy_"), F.lit(0)
-        ).otherwise(F.lit(600))),
-    )
-    p = str(tmp_path / "seq_events")
-    evts.write.parquet(p)
-
-    stream = spark.readStream.schema(evts.schema).parquet(p)
-    out = streaming_exact_dedup(stream, "tokens", ts="ts", watermark="1 hour")
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("sdedup_out")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = spark.sql("SELECT doc_id, tokens FROM sdedup_out").toPandas()
-    finally:
-        q.stop()
-
-    batch = dedup_sequences(evts.drop("ts")).toPandas()
-    got_contents = sorted(tuple(t) for t in got["tokens"])
-    batch_contents = sorted(tuple(t) for t in batch["tokens"])
-    assert got_contents == batch_contents  # one survivor per distinct array
-    in_ids = {r["doc_id"] for r in both.select("doc_id").collect()}
-    assert set(got["doc_id"]) <= in_ids

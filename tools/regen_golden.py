@@ -10,7 +10,8 @@ pytest tests/test_competition.py -k frozen_golden.
 Usage: python tools/regen_golden.py
 """
 import sys, json, gzip, os
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 from taxahfe_spark.session import get_spark
 import __spark_entry__ as em
 spark = get_spark("golden", master="local[8]", shuffle_partitions=8)
@@ -34,7 +35,7 @@ print("dtypes:", df.dtypes[:6])
 # pure-pandas dual implementation (tests/oracle_collapse.py — shares only
 # the seeded-RNG contract) agrees on the winner set. This makes the golden
 # a certified value oracle, not a self-produced drift gate.
-sys.path.insert(0, "/root/repo/tests")
+sys.path.insert(0, os.path.join(ROOT, "tests"))
 from oracle_collapse import oracle_collapse
 long, meta = em.supplier_hierarchy(spark, "/root/testdata/sf0.01")
 ostate = oracle_collapse(
@@ -51,8 +52,9 @@ if oracle_cols != engine_cols:
         f"oracle-only={sorted(oracle_cols - engine_cols)[:5]}"
     )
 print("independent oracle certifies the winner set:", len(oracle_cols), "columns")
-os.makedirs("/root/repo/taxahfe_spark/golden", exist_ok=True)
-with gzip.open("/root/repo/taxahfe_spark/golden/hfe_collapse_sf001.json.gz", "wt") as f:
+GOLDEN = os.path.join(ROOT, "taxahfe_spark", "golden")
+os.makedirs(GOLDEN, exist_ok=True)
+with gzip.open(os.path.join(GOLDEN, "hfe_collapse_sf001.json.gz"), "wt") as f:
     json.dump({"columns": cols, "types": [t for _, t in df.dtypes], "rows": rows}, f)
 # second run for determinism check
 df2 = em.q_hfe_collapse(spark, "/root/testdata/sf0.01")
