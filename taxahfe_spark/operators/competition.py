@@ -8,23 +8,33 @@ Spark's execution model:
 - post-order traversal -> driver loop over levels, deepest first; within a
   level every competition (one per competing parent node) touches a disjoint
   subtree, so a whole level fans out in parallel.
-- each level runs ONE grouped Arrow stage: every group is a
-  (competition x permutation-chunk) that computes the parent-vs-descendant
+- each level runs ONE fused stage: every task is a (competition x
+  permutation-chunk range) that computes the parent-vs-descendant
   correlations, prunes locally, and fits its forests in the same pass —
   halving the per-level driver barriers vs separate corr + RF jobs. Chunking
-  the nperm averaged fits across groups keeps the engine scalable both ways:
+  the nperm averaged fits across tasks keeps the engine scalable both ways:
   with FEW competitions (reference shape, super filter) the nperm fits fan
   out so wall time is bounded by one fit; with MANY competitions (web-scale
   taxonomies) chunking collapses to one task per competition so the vector
   payload ships through the shuffle once per level.
+- one stage protocol, three executors: ``_run_stage`` builds the task list
+  once; a driver fork pool (small stages), a ``mapInPandas`` stage or an
+  ``applyInPandas`` stage runs ``_run_group`` on every task, each yields the
+  same flat (key, path, chunk_lo, corr, importance) rows, and one reducer
+  (``_reduce_stage``) sums the partials in chunk order. The driver collects
+  a Spark stage's rows directly through Arrow (taxonomy-sized: descendants
+  plus competitors x ranges per level): no aggregation exchange follows the
+  stage.
 - vector delivery is chosen from the measured payload (12 B per nonzero):
   * ``broadcast`` (up to ``BROADCAST_MAX_BYTES``) — collect the
-    (taxonomy-sized) sparse vectors once and broadcast; stages ship only
-    assignment rows. Fastest at reference shape.
-  * ``shuffle`` (above it) — NEVER collects to the driver: assignment rows
-    join the distributed vector frame and ``applyInPandas`` consumes one
-    competition group per task. This is the 100 TB path (at >1e5 nodes x
-    dense entities the vector dict outgrows any driver/broadcast budget).
+    (taxonomy-sized) sparse vectors once; a Spark stage broadcasts them
+    (created at the first such stage) and ships only task rows. Fastest at
+    reference shape, and the only strategy the fork pool serves.
+  * ``shuffle`` (above it) — NEVER collects the vectors to the driver: the
+    task rows, one per name, join the distributed vector frame and
+    ``applyInPandas`` consumes one task group per (competition, chunk
+    range). This is the 100 TB path (at >1e5 nodes x dense entities the
+    vector dict outgrows any driver/broadcast budget).
 - ALL decision semantics live driver-side on taxonomy-sized data: the UDFs
   return plain numbers (correlations, importances), never decisions.
 - all randomness derives from ``hash(seed, parent_path) + chunk``, so
@@ -401,50 +411,44 @@ def _prepare_design(
 
 
 def _run_group(
-    parent_path: str | None,
-    names: list[str],
-    get_dense,
-    chunk_lo: int,
-    chunk_hi: int,
-    label: np.ndarray,
-    cov: np.ndarray | None,
-    re_individual: np.ndarray | None,
-    re_time: np.ndarray | None,
-    params: "CompetitionParams",
-    emit_corr: bool,
-    memo_key: str | None = None,
-) -> tuple[list[str], list[float | None], list[float | None]]:
-    """Fused corr + prune + forest pass for one competition x chunk-range.
+    task: tuple, vecs, ctx: tuple, params: "CompetitionParams",
+    memo_prefix: str | None,
+) -> list[tuple]:
+    """Fused corr + prune + forest pass for one task — the one body every
+    executor runs (fork pool, ``mapInPandas``, ``applyInPandas``).
 
-    Returns parallel (path, corr, importance) row lists — ONE importance row
-    per competitor carrying the sum over this range's chunk fits (summed
-    HERE, in ascending chunk order, so the cross-range reduction on the
-    driver stays bit-deterministic regardless of task scheduling). ``names``
-    is the deterministic competitor order: parent first (when present), then
-    sorted descendants — layout-stable in every delivery strategy.
-    ``get_dense``: name -> dense design column; densification, the corr
-    prune, and the design stack are chunk-invariant and served from
-    _DESIGN_MEMO when another range of the same competition already ran in
-    this worker process.
+    ``task`` is (competition key, parent | None, names, chunk_lo, chunk_hi);
+    ``names`` is the parent first (when present), then the sorted
+    descendants. ``vecs``: path -> sparse (idxs, vals); ``ctx``: the run's
+    (label, covariates, re_individual, re_time, remap). Returns the flat
+    stage rows (key, path, chunk_lo, corr, importance): on the first range
+    one corr row per descendant, then ONE importance row per competitor
+    carrying the sum over this range's chunk fits (summed HERE, in ascending
+    chunk order, so :func:`_reduce_stage` stays bit-deterministic regardless
+    of task scheduling). Densification, the corr prune and the design stack
+    are chunk-invariant and served from _DESIGN_MEMO when another range of
+    the same competition already ran in this worker process;
+    ``memo_prefix`` names the run in the memo key (None: no memo).
     """
-    out_paths: list[str] = []
-    out_corr: list[float | None] = []
-    out_imp: list[float | None] = []
-    descs = [n for n in names if n != parent_path]
-    r, competitors, Xf = _prepare_design(
-        parent_path, names, get_dense, params, memo_key
+    key, parent_path, names, chunk_lo, chunk_hi = task
+    label, cov, re_ind, re_time, remap = ctx
+    memo_key = None if memo_prefix is None else (
+        f"{memo_prefix}|{key}|{zlib.crc32('|'.join(names).encode())}"
     )
+    r, competitors, Xf = _prepare_design(
+        parent_path, names, lambda n: _to_dense(*vecs[n], len(label), remap),
+        params, memo_key,
+    )
+    rows: list[tuple] = []
     if parent_path is not None:
-        if emit_corr:
-            out_paths.extend(descs)
-            out_corr.extend(float(v) for v in r)
-            out_imp.extend([None] * len(descs))
+        if chunk_lo == 0:
+            rows += [(key, d, 0, float(v), None) for d, v in zip(names[1:], r)]
         if not competitors:
-            return out_paths, out_corr, out_imp
+            return rows
     parent_key = parent_path if parent_path is not None else "__final__"
     cache_key = f"{parent_key}|{len(competitors)}|{zlib.crc32('|'.join(competitors).encode())}"
     run_fit = make_importance_runner(
-        Xf, label, cov, re_individual, re_time, params, cache_key=cache_key
+        Xf, label, cov, re_ind, re_time, params, cache_key=cache_key
     )
     imp_sum = np.zeros(len(competitors))
     imp_cnt = np.zeros(len(competitors), dtype=np.int64)
@@ -453,12 +457,48 @@ def _run_group(
         m = ~np.isnan(imp)
         imp_sum[m] += imp[m]
         imp_cnt[m] += 1
-    out_paths.extend(competitors)
-    out_corr.extend([None] * len(competitors))
-    out_imp.extend(
-        float(s) if c else None for s, c in zip(imp_sum, imp_cnt)
+    rows += [
+        (key, n, chunk_lo, None, float(s) if c else None)
+        for n, s, c in zip(competitors, imp_sum, imp_cnt)
+    ]
+    return rows
+
+
+def _reduce_stage(rows, n_chunks: int) -> tuple[dict, dict]:
+    """Flat stage rows -> (corrs, importances), each competition key ->
+    {path: value}, whichever executor produced the rows. A NaN correlation
+    (which must NOT prune) stays absent; each competitor's per-range
+    partials are summed in chunk_lo order and divided by ``n_chunks``, so
+    the float result is bit-identical regardless of scheduling."""
+    corrs: dict[str, dict[str, float]] = {}
+    parts: dict[tuple[str, str], list[tuple[int, float]]] = {}
+    for key, path, lo, c, v in rows:
+        if c is not None and not np.isnan(c):
+            corrs.setdefault(key, {})[path] = float(c)
+        if v is not None and not np.isnan(v):
+            parts.setdefault((key, path), []).append((lo, float(v)))
+    imps: dict[str, dict[str, float]] = {}
+    for (key, path), pl in parts.items():
+        total = 0.0
+        for _, v in sorted(pl):
+            total += v
+        imps.setdefault(key, {})[path] = total / n_chunks
+    return corrs, imps
+
+
+def _rows_frame(rows: list[tuple]) -> pd.DataFrame:
+    """Flat stage rows as the pandas frame a Spark runner returns."""
+    return pd.DataFrame.from_records(rows, columns=_STAGE_SCHEMA.names).astype(
+        {"chunk_lo": "int32", "corr": "float64", "importance": "float64"}
     )
-    return out_paths, out_corr, out_imp
+
+
+def _spark_task(row, names) -> tuple:
+    """A task back from its Spark input row (a null parent is the super
+    filter's)."""
+    parent = row.parent_path if isinstance(row.parent_path, str) else None
+    return (row.competition_id, parent, list(names), int(row.chunk_lo),
+            int(row.chunk_hi))
 
 
 # driver-local fused-stage context: set by _run_stage_local immediately
@@ -467,20 +507,11 @@ def _run_group(
 _LOCAL_STAGE_CTX: list = [None]
 
 
-def _local_stage_worker(task):
-    """One (competition x chunk-range) on the driver pool — the local twin
-    of make_broadcast_stage_udf's per-row body (same _run_group call, same
-    seeds, bit-identical output)."""
-    key, parent, names, lo, hi = task
-    vecs, label, cov, re_ind, re_time, remap, params = _LOCAL_STAGE_CTX[0]
-    n_entities = len(label)
-    paths, corrs, imps = _run_group(
-        parent, names,
-        lambda n: _to_dense(*vecs[n], n_entities, remap),
-        lo, hi, label, cov, re_ind, re_time, params,
-        emit_corr=lo == 0, memo_key=None,
-    )
-    return key, lo, paths, corrs, imps
+def _local_stage_worker(task) -> list[tuple]:
+    """One task on the driver pool (no design memo: the children share the
+    parent's pages)."""
+    vecs, ctx, params = _LOCAL_STAGE_CTX[0]
+    return _run_group(task, vecs, ctx, params, None)
 
 
 def _collect_vectors_arrow(vectors: DataFrame) -> dict:
@@ -515,47 +546,20 @@ def _next_run_token() -> str:
 def make_broadcast_stage_udf(
     bc_vectors, bc_ctx, params: CompetitionParams, run_token: str = ""
 ):
-    """mapInPandas runner for the broadcast strategy: one INPUT ROW per
-    (competition x chunk-range) — (competition_id, parent_path, paths,
-    chunk_lo, chunk_hi); vectors come from the explicit broadcast."""
+    """mapInPandas runner for the broadcast strategy: one INPUT ROW per task
+    (competition_id, parent_path, paths, chunk_lo, chunk_hi); vectors come
+    from the explicit broadcast."""
 
     def fn(batches):
-        vecs_sparse = bc_vectors.value
-        label, cov, re_ind, re_time, remap = bc_ctx.value
-        n_entities = len(label)
+        vecs, ctx = bc_vectors.value, bc_ctx.value
         for pdf in batches:
-            rows_p, rows_c, rows_i, rows_id, rows_lo = [], [], [], [], []
-            for row in pdf.itertuples():
-                names = ([row.parent_path] if row.parent_path else []) + sorted(
-                    p for p in row.paths if p != row.parent_path
+            yield _rows_frame([
+                row
+                for t in pdf.itertuples(index=False)
+                for row in _run_group(
+                    _spark_task(t, t.paths), vecs, ctx, params, f"b{run_token}"
                 )
-                base_key = str(row.competition_id).split("\x1f", 1)[0]
-                memo_key = (
-                    f"b{run_token}|{base_key}|"
-                    f"{zlib.crc32('|'.join(names).encode())}"
-                )
-                paths, corrs, imps = _run_group(
-                    row.parent_path or None, names,
-                    lambda n: _to_dense(*vecs_sparse[n], n_entities, remap),
-                    int(row.chunk_lo), int(row.chunk_hi),
-                    label, cov, re_ind, re_time, params,
-                    emit_corr=int(row.chunk_lo) == 0,
-                    memo_key=memo_key,
-                )
-                rows_p.extend(paths)
-                rows_c.extend(corrs)
-                rows_i.extend(imps)
-                rows_id.extend([row.competition_id] * len(paths))
-                rows_lo.extend([int(row.chunk_lo)] * len(paths))
-            yield pd.DataFrame(
-                {
-                    "competition_id": rows_id,
-                    "path": rows_p,
-                    "chunk_lo": pd.array(rows_lo, dtype="int32"),
-                    "corr": pd.array(rows_c, dtype="float64"),
-                    "importance": pd.array(rows_i, dtype="float64"),
-                }
-            )
+            ])
 
     return fn
 
@@ -563,39 +567,16 @@ def make_broadcast_stage_udf(
 def make_shuffle_stage_udf(
     bc_ctx, params: CompetitionParams, run_token: str = ""
 ):
-    """applyInPandas runner for the shuffle strategy: one GROUP per
-    (competition x chunk-range); each group's rows carry its competitors'
-    sparse vectors (joined in, never via the driver)."""
+    """applyInPandas runner for the shuffle strategy: one GROUP per task,
+    one row per name carrying its position in the task's names and its
+    sparse vector (joined in, never via the driver)."""
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        label, cov, re_ind, re_time, remap = bc_ctx.value
-        n_entities = len(label)
-        first = pdf.iloc[0]
-        parent = first["parent_path"] if pd.notna(first["parent_path"]) else None
-        chunk_lo, chunk_hi = int(first["chunk_lo"]), int(first["chunk_hi"])
-        sparse = {r.path: (r.idxs, r.vals) for r in pdf.itertuples()}
-        names = ([parent] if parent else []) + sorted(
-            p for p in sparse if p != parent
-        )
-        base_key = str(first["competition_id"]).split("\x1f", 1)[0]
-        memo_key = (
-            f"s{run_token}|{base_key}|{zlib.crc32('|'.join(names).encode())}"
-        )
-        paths, corrs, imps = _run_group(
-            parent, names,
-            lambda n: _to_dense(*sparse[n], n_entities, remap),
-            chunk_lo, chunk_hi,
-            label, cov, re_ind, re_time, params, emit_corr=chunk_lo == 0,
-            memo_key=memo_key,
-        )
-        return pd.DataFrame(
-            {
-                "competition_id": [first["competition_id"]] * len(paths),
-                "path": paths,
-                "chunk_lo": pd.array([chunk_lo] * len(paths), dtype="int32"),
-                "corr": pd.array(corrs, dtype="float64"),
-                "importance": pd.array(imps, dtype="float64"),
-            }
+        pdf = pdf.sort_values("pos")
+        vecs = dict(zip(pdf["path"], zip(pdf["idxs"], pdf["vals"])))
+        task = _spark_task(pdf.iloc[0], pdf["path"])
+        return _rows_frame(
+            _run_group(task, vecs, bc_ctx.value, params, f"s{run_token}")
         )
 
     return fn
@@ -662,18 +643,17 @@ class TreeCompetition:
                 re_individual[keep] if re_individual is not None else None
             )
             re_time = re_time[keep] if re_time is not None else None
-        self.label = label
-        self.covariates = covariates
-        # label/covariates/RE arrays are one-per-entity (not per-node): ship
-        # once per executor via an explicit broadcast, not per-task closures
-        self.bc_ctx = self.spark.sparkContext.broadcast(
-            (label, covariates, re_individual, re_time, remap)
-        )
+        # the design context: label/covariates/RE arrays are one-per-entity
+        # (not per-node), so a Spark stage ships them once per executor via
+        # an explicit broadcast, not per-task closures. Broadcasts pickle
+        # their value to a file, so each is created at the first Spark stage
+        # that needs it; the fork pool needs neither.
+        self._ctx = (label, covariates, re_individual, re_time, remap)
+        self.bc_ctx = self.bc_vectors = None
 
-        # driver-side copy of the broadcast vectors: serves the driver-local
-        # stages and taxa_hfe's winner matrix without unpickling the broadcast
+        # driver-side vectors: serve the driver-local stages, the vector
+        # broadcast and taxa_hfe's winner matrix
         self.vectors_dict = None
-        self.bc_vectors = None
         self.vectors = None  # the shuffle path's distributed vector frame
         collected = isinstance(vectors, dict)
         if collected:
@@ -692,8 +672,8 @@ class TreeCompetition:
             if collected:
                 self.vectors_dict = vectors
             else:
-                # vectors are taxonomy-sized here; collect ONCE and broadcast
-                # explicitly so every stage ships only assignment rows.
+                # vectors are taxonomy-sized here; collect ONCE, so a Spark
+                # stage broadcasts them and ships only task rows.
                 # Stored as NUMPY arrays: a dict of Python int lists measured
                 # 13s PER UNPICKLE on executors; numpy buffers deserialize at
                 # memory speed. Collected via toArrow(), not collect(): Row
@@ -704,7 +684,6 @@ class TreeCompetition:
                 # per-element cost (0.15 s same shape).
                 self.vectors_dict = _collect_vectors_arrow(vectors)
                 vectors.unpersist()
-            self.bc_vectors = self.spark.sparkContext.broadcast(self.vectors_dict)
         else:
             if collected:
                 vectors = local_frame(
@@ -770,7 +749,7 @@ class TreeCompetition:
             ]
         )
         h = hashlib.sha256(key.encode())
-        label, cov, re_ind, re_time, _ = self.bc_ctx.value
+        label, cov, re_ind, re_time, _ = self._ctx
         for a in (label, cov, re_ind, re_time):
             h.update(arr_bytes(a))
             h.update(b"\x00")
@@ -882,7 +861,7 @@ class TreeCompetition:
     ) -> int:
         """Work proxy for the fused stage: design cells x fits summed over
         competitions (n_entities x competitors x chunk fits)."""
-        n_entities = len(self.label)
+        n_entities = len(self._ctx[0])
         return sum(
             n_chunks * n_entities * (len(paths) + 1)
             for (_parent, paths) in comps.values()
@@ -898,20 +877,33 @@ class TreeCompetition:
         competition key -> {path: value}. Importances are averaged over
         n_chunks fits.
 
+        One protocol, three executors. The task list — (key, parent, names,
+        chunk_lo, chunk_hi) per competition x chunk range, names being the
+        parent then the sorted descendants — is built here once; every
+        executor runs :func:`_run_group` on each task and yields the same
+        flat rows, and :func:`_reduce_stage` turns them into the result.
+
         Small stages run DRIVER-LOCAL (multiprocessing fork pool) when the
         vectors are already on the driver (broadcast strategy), the platform
         can fork, and the total design work is within
         ``DRIVER_STAGE_MAX_CELLS`` (``session.driver_side``): a
-        megabyte-scale stage pays more in Spark scheduling + exchanges (~1
-        s/stage measured at sf0.1) than in compute, the same size-gated
-        driver fast-path rule as dietml's small-n CV. Results are
-        bit-identical: _run_group is a pure function of (inputs, seeds) and
-        partial sums reduce in chunk order on both paths; cluster-scale
-        inputs always take the Spark path (the gate scales with n_entities,
-        so it closes itself at scale)."""
+        megabyte-scale stage pays more in Spark scheduling (~1 s/stage
+        measured at sf0.1) than in compute, the same size-gated driver
+        fast-path rule as dietml's small-n CV. Otherwise the stage runs on
+        Spark (:meth:`_run_stage_spark`). Results are bit-identical:
+        _run_group is a pure function of (inputs, seeds) and the partials
+        reduce in chunk order whatever ran them; cluster-scale inputs always
+        take the Spark path (the gate scales with n_entities, so it closes
+        itself at scale)."""
         import multiprocessing as mp
 
+        tasks = []
         ranges = self._chunk_ranges(len(comps), n_chunks)
+        for key, (parent, paths) in comps.items():
+            names = [] if parent is None else [parent]
+            names += sorted(set(paths) - {parent})
+            tasks += [(key, parent, names, lo, hi) for lo, hi in ranges]
+        rows = None
         if (
             self.strategy == "broadcast"
             and "fork" in mp.get_all_start_methods()
@@ -920,7 +912,7 @@ class TreeCompetition:
             )
         ):
             try:
-                return self._run_stage_local(comps, ranges, n_chunks)
+                rows = self._run_stage_local(tasks, self.vectors_dict, self._ctx)
             except (ImportError, OSError) as e:  # pool failure
                 warnings.warn(
                     f"driver-local competition stage unavailable ({e}); "
@@ -928,100 +920,55 @@ class TreeCompetition:
                     RuntimeWarning,
                     stacklevel=2,
                 )
-        # "\x1f" separates the competition key from the chunk-range suffix —
-        # a control char that cannot appear in taxonomy paths, so the
-        # Spark-side substring_index split-back is unambiguous
-        rows_in = [
-            (f"{key}\x1f{lo}", parent, sorted(set(paths) | ({parent} if parent else set())), lo, hi)
-            for key, (parent, paths) in comps.items()
-            for (lo, hi) in ranges
-        ]
+        if rows is None:
+            rows = self._run_stage_spark(tasks)
+        return _reduce_stage(rows, n_chunks)
+
+    def _run_stage_spark(self, tasks: list[tuple]):
+        """The stage on Spark: one input row per task (broadcast strategy,
+        ``mapInPandas``) or one group per task (shuffle strategy,
+        ``applyInPandas`` over the names' vectors joined in). The driver
+        collects the flat rows through Arrow — taxonomy-sized: descendants
+        plus competitors x ranges per level — with no second exchange."""
+        sc = self.spark.sparkContext
+        if self.bc_ctx is None:
+            self.bc_ctx = sc.broadcast(self._ctx)
+        adf = local_frame(
+            self.spark,
+            tasks,
+            "competition_id string, parent_path string, paths array<string>, "
+            "chunk_lo int, chunk_hi int",
+        )
         if self.strategy == "broadcast":
-            adf = local_frame(
-                self.spark,
-                rows_in,
-                "competition_id string, parent_path string, paths array<string>, "
-                "chunk_lo int, chunk_hi int",
-            )
-            # one assignment row per task (capped): competitions differ
+            if self.bc_vectors is None:
+                self.bc_vectors = sc.broadcast(self.vectors_dict)
+            # one task row per partition (capped): competitions differ
             # wildly in cost (competitor count x prune outcome), so packing
             # 3-4 rows per partition made stage wall = the unluckiest
             # packing; single-row tasks let the scheduler level the load and
             # cost only ~50 ms each against multi-second rows
-            n_part = max(
-                1, min(len(rows_in), self.spark.sparkContext.defaultParallelism * 16)
-            )
+            n_part = max(1, min(len(tasks), sc.defaultParallelism * 16))
             fn = make_broadcast_stage_udf(
                 self.bc_vectors, self.bc_ctx, self.params, self._memo_token
             )
             stage = adf.repartition(n_part).mapInPandas(fn, _STAGE_SCHEMA)
         else:
-            assign = [
-                (cid, parent, path, lo, hi)
-                for (cid, parent, paths, lo, hi) in rows_in
-                for path in paths
-            ]
-            adf = local_frame(
-                self.spark,
-                assign,
-                "competition_id string, parent_path string, path string, "
-                "chunk_lo int, chunk_hi int",
+            assign = adf.select(
+                "competition_id", "parent_path", "chunk_lo", "chunk_hi",
+                F.posexplode("paths").alias("pos", "path"),
             )
-            joined = adf.join(self.vectors, "path")
-            fn = make_shuffle_stage_udf(
-                self.bc_ctx, self.params, self._memo_token
+            fn = make_shuffle_stage_udf(self.bc_ctx, self.params, self._memo_token)
+            stage = (
+                assign.join(self.vectors, "path")
+                .groupBy("competition_id", "chunk_lo")
+                .applyInPandas(fn, _STAGE_SCHEMA)
             )
-            stage = joined.groupBy("competition_id").applyInPandas(fn, _STAGE_SCHEMA)
-        # Pre-aggregate ON THE CLUSTER before collecting: each task already
-        # summed its own chunk range (in ascending chunk order), so the
-        # stage output is one row per (competitor x range) and this groupBy
-        # collapses it to ONE collected row per (competition, competitor) —
-        # a driver-side average over raw per-chunk rows would collect
-        # nperm-fold more (x400 at the reference's super filter). The
-        # per-range partials come back as a (chunk_lo, partial) list and are
-        # reduced IN CHUNK ORDER on the driver, so the final float sum is
-        # bit-identical regardless of task scheduling, partitioning, or
-        # vector strategy. A TRUE NaN correlation — which must NOT prune —
-        # is masked to null so it stays absent from the corr dict.
-        agg_rows = (
-            stage.groupBy(
-                F.substring_index("competition_id", "\x1f", 1).alias("key"), "path"
-            )
-            .agg(
-                F.collect_list(F.struct("chunk_lo", "importance")).alias("parts"),
-                F.max(F.when(~F.isnan("corr"), F.col("corr"))).alias("corr"),
-            )
-            .collect()
-        )
-        corrs: dict[str, dict[str, float]] = {}
-        imps: dict[str, dict[str, float]] = {}
-        for r in agg_rows:
-            if r["corr"] is not None:
-                corrs.setdefault(r["key"], {})[r["path"]] = r["corr"]
-            parts = sorted(
-                (
-                    (e["chunk_lo"], e["importance"])
-                    for e in r["parts"]
-                    if e["importance"] is not None
-                    and not np.isnan(e["importance"])
-                ),
-            )
-            if parts:
-                total = 0.0
-                for _, v in parts:
-                    total += v
-                imps.setdefault(r["key"], {})[r["path"]] = total / n_chunks
-        return corrs, imps
-
-    def _ensure_local_ctx(self) -> None:
-        label, cov, re_ind, re_time, remap = self.bc_ctx.value
-        _LOCAL_STAGE_CTX[0] = (
-            self.vectors_dict, label, cov, re_ind, re_time, remap, self.params,
-        )
+        return list(zip(*stage.toArrow().to_pydict().values()))
 
     def close(self) -> None:
-        """Release the per-run broadcasts (vectors and design context); the
-        caller keeps ``vectors_dict`` if it still needs the vectors."""
+        """Release the broadcasts a Spark stage created (vectors and design
+        context); the caller keeps ``vectors_dict`` if it still needs the
+        vectors."""
         for bc in (self.bc_vectors, self.bc_ctx):
             if bc is not None:
                 bc.destroy()
@@ -1034,63 +981,26 @@ class TreeCompetition:
             self._local_pool = None
         _LOCAL_STAGE_CTX[0] = None
 
-    def _run_stage_local(
-        self,
-        comps: dict[str, tuple[str | None, list[str]]],
-        ranges: list[tuple[int, int]],
-        n_chunks: int,
-    ) -> tuple[dict[str, dict[str, float]], dict[str, dict[str, float]]]:
-        """Driver-local fused stage: same (competition x chunk-range) task
-        list as the Spark path, run on a fork pool. The fork children
-        inherit the vector dict and design context by COW memory — zero
-        serialization, no Spark jobs. Reduction is identical to the Spark
-        path: per-range partials sorted by chunk_lo and summed in chunk
-        order, NaN corr masked to absent."""
+    def _run_stage_local(self, tasks: list[tuple], vecs: dict, ctx: tuple):
+        """The stage on a driver fork pool: the children inherit the vectors
+        and the design context by COW memory — zero serialization, no Spark
+        job, no broadcast. ONE pool per run, created at the first local
+        stage and closed in run(): 20-30 forks of a driver holding the
+        vector dict measured ~0.5 s — paid once, not per level. (vecs, ctx)
+        are stage-invariant, so a pool forked at stage 1 serves every later
+        stage unchanged. A one-task stage runs in the driver itself."""
         import multiprocessing as mp
 
-        tasks = []
-        for key, (parent, paths) in comps.items():
-            names = ([parent] if parent else []) + sorted(
-                p for p in paths if p != parent
-            )
-            for lo, hi in ranges:
-                tasks.append((key, parent, names, lo, hi))
         if len(tasks) == 1:
-            self._ensure_local_ctx()
-            try:
-                results = [_local_stage_worker(tasks[0])]
-            finally:
-                if self._local_pool is None:
-                    _LOCAL_STAGE_CTX[0] = None
-        else:
-            # ONE fork pool per run, created at the first local stage and
-            # closed in run(): 20-30 forks of a driver holding the vector
-            # dict measured ~0.5 s — paid once, not per level. The ctx is
-            # stage-invariant (vectors + design arrays + params), so a pool
-            # forked at stage 1 serves every later stage unchanged.
-            if self._local_pool is None:
-                self._ensure_local_ctx()
-                procs = min(
-                    max(len(tasks), 8),
-                    self.spark.sparkContext.defaultParallelism,
-                )
-                self._local_pool = mp.get_context("fork").Pool(procs)
-            results = self._local_pool.map(_local_stage_worker, tasks)
-        corrs: dict[str, dict[str, float]] = {}
-        parts: dict[tuple[str, str], list[tuple[int, float]]] = {}
-        for key, lo, r_paths, r_corrs, r_imps in results:
-            for pth, c, v in zip(r_paths, r_corrs, r_imps):
-                if c is not None and not np.isnan(c):
-                    corrs.setdefault(key, {})[pth] = float(c)
-                if v is not None and not np.isnan(v):
-                    parts.setdefault((key, pth), []).append((lo, float(v)))
-        imps: dict[str, dict[str, float]] = {}
-        for (key, pth), pl in parts.items():
-            total = 0.0
-            for _, v in sorted(pl):
-                total += v
-            imps.setdefault(key, {})[pth] = total / n_chunks
-        return corrs, imps
+            return _run_group(tasks[0], vecs, ctx, self.params, None)
+        if self._local_pool is None:
+            _LOCAL_STAGE_CTX[0] = (vecs, ctx, self.params)
+            procs = min(
+                max(len(tasks), 8), self.spark.sparkContext.defaultParallelism
+            )
+            self._local_pool = mp.get_context("fork").Pool(procs)
+        results = self._local_pool.map(_local_stage_worker, tasks)
+        return [row for rows in results for row in rows]
 
     # -- level competition ---------------------------------------------------
 

@@ -50,12 +50,6 @@ PATH_SEP = "|"
 _SPLIT_RE = r"\|"
 
 
-def parent_path(col) -> F.Column:
-    """Parent path = path minus its last segment (null for depth-1 nodes)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.when(F.instr(c, PATH_SEP) > 0, F.regexp_replace(c, r"\|[^|]*$", "")).otherwise(F.lit(None))
-
-
 def path_level(col) -> F.Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.size(F.split(c, _SPLIT_RE))
@@ -98,9 +92,14 @@ def melt_wide_matrix(
 
 
 # the driver kernel's budget: base rows collected through one Arrow transfer
-# (a few hundred MB of driver memory; roughly where one single-threaded
-# collect stopped beating the per-level distributed rollup on a 32-core box,
-# not re-measured against the one-exchange rollup)
+# (roughly where one single-threaded collect stopped beating the per-level
+# distributed rollup on a 32-core box, not re-measured against the
+# one-exchange rollup). Driver memory per row, measured on perfbench's
+# 7-level tables (45-character paths, 314k rows): ~66 B as Arrow, ~25 B as
+# pandas (8-B object pointers; to_pandas deduplicates the repeated strings)
+# and a ~100 B peak of numpy working arrays in the kernel. The Arrow table
+# is freed while it converts, so 2M rows peak near 2M x (25 + 100) B, about
+# 250 MB, plus the vectors; longer paths grow only the Arrow share.
 DRIVER_MAX_ROWS = 2_000_000
 
 RESOLVED_SCHEMA = (
@@ -120,13 +119,13 @@ def missing_runs(observed_paths) -> dict[str, list[str]]:
     """Each observed path -> the run of MISSING ancestors directly above it,
     nearest first.
 
-    The run climbs ``parent_path`` and stops at the first observed ancestor
-    (observed wins: that ancestor keeps its own vector, and everything above
-    it sums that vector, not this path's) or at ``""`` (a leading-pipe
-    path). A missing node is therefore the sum of the observed paths whose
-    runs contain it — the recursive observed-wins rule of the reference
-    (lib/tree.R:372-388) unrolled, from path strings alone. Both rollup
-    paths take their missing set from here.
+    The run climbs the path's prefixes (drop the last segment, repeat) and
+    stops at the first observed ancestor (observed wins: that ancestor keeps
+    its own vector, and everything above it sums that vector, not this
+    path's) or at ``""`` (a leading-pipe path). A missing node is therefore
+    the sum of the observed paths whose runs contain it — the recursive
+    observed-wins rule of the reference (lib/tree.R:372-388) unrolled, from
+    path strings alone. Both rollup paths take their missing set from here.
     """
     observed = set(observed_paths)
     runs: dict[str, list[str]] = {}
@@ -346,7 +345,9 @@ def resolve_tree(
         ),
     ).first()
     if n_valid == n_rows and driver_side(n_rows, DRIVER_MAX_ROWS):
-        pdf = base.toArrow().to_pandas()
+        # column by column, freeing each Arrow buffer once converted, so the
+        # table and its pandas copy are never both held in full
+        pdf = base.toArrow().to_pandas(self_destruct=True, split_blocks=True)
         base.unpersist()
         entities, vectors, build = _observed_wins(pdf, raw_map, entity_order)
         return ResolvedTree(

@@ -908,34 +908,44 @@ def test_only_the_policy_function_reads_the_env():
 
 
 def test_taxa_hfe_destroys_vector_broadcast(spark, sf_dir, monkeypatch):
-    """The per-run vector broadcast (and the design-context broadcast) is
-    destroyed before taxa_hfe returns, on both paths; the tree keeps the
-    driver-side vectors, so the winner matrix still uses them."""
+    """A competition creates its broadcasts (vectors and design context)
+    only when a Spark stage runs, and destroys each one it created before
+    taxa_hfe returns: none on the default fork-pool path, two under
+    TAXAHFE_DISTRIBUTED=1. The tree keeps the driver-side vectors either
+    way, so the winner matrix still uses them."""
+    from pyspark import SparkContext
     from pyspark.broadcast import Broadcast
 
     import __spark_entry__ as em
     from taxahfe_spark.operators.competition import CompetitionParams
     from taxahfe_spark.pipeline import taxa_hfe, winner_feature_matrix
 
-    destroyed = []
-    real_destroy = Broadcast.destroy
+    created, destroyed = [], []
+    real_broadcast, real_destroy = SparkContext.broadcast, Broadcast.destroy
+
+    def counting_broadcast(self, value):
+        created.append(real_broadcast(self, value))
+        return created[-1]
 
     def counting_destroy(self, blocking=False):
         destroyed.append(self)
         return real_destroy(self, blocking)
 
+    monkeypatch.setattr(SparkContext, "broadcast", counting_broadcast)
     monkeypatch.setattr(Broadcast, "destroy", counting_destroy)
     long, meta = em.supplier_hierarchy(spark, sf_dir)
     params = CompetitionParams(
         lowest_level=1, nperm=2, num_trees=3, seed=3,
         super_filter_nperm_factor=2,
     )
-    for distributed in (False, True):
+    for distributed, n_broadcasts in ((False, 0), (True, 2)):
         if distributed:
             monkeypatch.setenv("TAXAHFE_DISTRIBUTED", "1")
+        created.clear()
         destroyed.clear()
         tree, state = taxa_hfe(meta, long, params=params, filter_prevalence=0.05)
-        assert len(destroyed) == 2
+        assert len(created) == n_broadcasts
+        assert {id(b) for b in destroyed} == {id(b) for b in created}
         assert tree.vectors is not None
         assert winner_feature_matrix(tree, state, metadata=meta).count() > 0
 

@@ -4,9 +4,10 @@ These target the Spark-free functions whose contracts the distributed plans
 lean on: correlation math, competition decision rules, collinearity pruning,
 label binning, per-group slopes and name cleaning.
 Spark-side equivalents are covered by the example-based suites; here the
-input space is explored adversarially. One property does run Spark: the
-rollup's driver kernel against its one-exchange distributed path, on few
-examples to keep the suite fast.
+input space is explored adversarially. Two properties do run Spark, on few
+examples to keep the suite fast: the rollup's driver kernel against its
+one-exchange distributed path, and one competition stage on its three
+executors (fork pool, broadcast stage, shuffle stage).
 """
 
 from __future__ import annotations
@@ -286,3 +287,87 @@ def test_rollup_paths_agree_property(spark, rows, clean_paths):
     assert tree.on_driver is not has_nulls
     if not has_nulls:
         _rows_close(dist, tree.frame().collect())
+
+
+# -- competition stage: one protocol, three executors -------------------------
+
+
+@st.composite
+def _competitions(draw):
+    """(label, sparse vectors, comps, n_chunks, params) for one small stage:
+    one parent with 2-5 descendants (some corr-pruned copies, some constant
+    zero columns) or the same nodes in the super-filter form."""
+    from taxahfe_spark.operators.competition import CompetitionParams
+
+    n = draw(st.integers(20, 40))
+    kinds = draw(st.lists(st.sampled_from(["noise", "copy", "zero", "sparse"]),
+                          min_size=2, max_size=5))
+    final = draw(st.booleans())
+    nperm = draw(st.integers(1, 3))
+    mode = draw(st.sampled_from(["full", "corr_only"]))
+    rng = np.random.default_rng(draw(st.integers(0, 2**16)))
+    label = rng.permutation(np.array(["a", "b"] * n)[:n])
+    dense = {"k__p": rng.gamma(2.0, 1.0, n)}
+    for i, kind in enumerate(kinds):
+        dense[f"k__p|c__{i}"] = {
+            "noise": rng.gamma(2.0, 1.0, n),
+            "copy": 2.0 * dense["k__p"],
+            "zero": np.zeros(n),
+            "sparse": rng.gamma(2.0, 1.0, n) * (rng.random(n) < 0.3),
+        }[kind]
+    vecs = {
+        p: (np.flatnonzero(v).astype(np.int32), v[v != 0]) for p, v in dense.items()
+    }
+    params = CompetitionParams(
+        lowest_level=1, nperm=nperm, num_trees=5, seed=7,
+        competition_mode=mode, super_filter_nperm_factor=2,
+    )
+    if final:
+        comps = {"__final__": (None, list(dense))}
+        n_chunks = nperm * params.super_filter_nperm_factor
+    else:
+        comps = {"k__p": ("k__p", list(dense)[1:])}
+        n_chunks = 1 if mode == "corr_only" else nperm
+    return label, vecs, comps, n_chunks, params
+
+
+@settings(max_examples=10, deadline=None)
+@given(_competitions())
+def test_competition_stage_executors_agree_property(spark, case):
+    """The fork pool, the Spark broadcast stage and the Spark shuffle stage
+    return exactly equal (corrs, importances) for the same stage."""
+    import os
+    from unittest import mock
+
+    from taxahfe_spark.operators import competition
+
+    label, vecs, comps, n_chunks, params = case
+    flags = pd.DataFrame(
+        {"path": list(vecs), "level": [p.count("|") + 1 for p in vecs],
+         "passed_filters": True}
+    )
+
+    def stage(distributed: bool, max_bytes: int):
+        env = {"TAXAHFE_DISTRIBUTED": "1"} if distributed else {}
+        with mock.patch.dict(os.environ, env), \
+                mock.patch.object(competition, "BROADCAST_MAX_BYTES", max_bytes):
+            if not distributed:
+                os.environ.pop("TAXAHFE_DISTRIBUTED", None)
+            comp = competition.TreeCompetition(vecs, flags, label, None, params)
+            try:
+                out = comp._run_stage(comps, n_chunks)
+                return comp.strategy, comp.bc_ctx is not None, out
+            finally:
+                comp._close_local_pool()
+                comp.close()
+                if comp.vectors is not None:
+                    comp.vectors.unpersist()
+
+    budget = competition.BROADCAST_MAX_BYTES
+    pool = stage(False, budget)
+    broadcast = stage(True, budget)
+    shuffle = stage(True, 0)
+    assert pool[:2] == ("broadcast", False)  # no broadcast: the fork pool ran
+    assert broadcast[:2] == ("broadcast", True)
+    assert shuffle[:2] == ("shuffle", True)
+    assert pool[2] == broadcast[2] == shuffle[2]

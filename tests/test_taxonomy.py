@@ -13,7 +13,6 @@ import pytest
 from taxahfe_spark.taxonomy import (
     hierarchical_rollup,
     melt_wide_matrix,
-    parent_path,
     path_level,
     to_feature_vectors,
 )
@@ -110,15 +109,9 @@ def test_root_level_sum_uses_observed_parent(resolved):
     assert vals["s1"] == 10.0 and vals["s2"] == 10.0 and vals["s3"] == 9.0
 
 
-def test_parent_path_and_path_level(spark, resolved):
-    nodes = resolved.select(
-        "path",
-        parent_path("path").alias("parent_path"),
-        path_level("path").alias("level"),
-    ).distinct()
+def test_path_level(spark, resolved):
+    nodes = resolved.select("path", path_level("path").alias("level")).distinct()
     rows = {r["path"]: r for r in nodes.collect()}
-    assert rows["k__a|p__x|c__m"]["parent_path"] == "k__a|p__x"
-    assert rows["k__a"]["parent_path"] is None
     assert rows["k__a|p__x|c__m"]["level"] == 3
     assert all(r["level"] == r["path"].count("|") + 1 for r in rows.values())
 

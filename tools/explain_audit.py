@@ -171,7 +171,9 @@ def main() -> None:
     from taxahfe_spark import pipeline
 
     frame_cls = type(meta)  # the session's DataFrame implementation
-    seen: dict[str, list[str]] = {"semi_join": [], "stage": []}
+    seen: dict[str, list[str]] = {
+        "semi_join": [], "stage": [], "broadcast": [], "shuffle": [],
+    }
     resolve_tree, map_in_pandas = pipeline.resolve_tree, frame_cls.mapInPandas
 
     def record_semi_join(long_df, **kwargs):
@@ -183,13 +185,40 @@ def main() -> None:
             seen["stage"].append(plan(df))
         return map_in_pandas(df, *args, **kwargs)
 
+    # 5d. the driver collects a distributed competition stage's rows as the
+    #     Python runner yields them, with no second exchange: no Aggregate
+    #     above MapInPandas (broadcast strategy) or FlatMapGroupsInPandas
+    #     (shuffle strategy) in the collected frame's plan
+    from taxahfe_spark.operators import competition
+
+    runner = re.compile(r"MapInPandas|FlatMapGroupsInPandas")
+    strategy = ["broadcast"]
+
+    def recording(method):
+        real = getattr(frame_cls, method)
+
+        def record_collect(df, *args, **kwargs):
+            p = plan(df)
+            if "competition_id" in p and runner.search(p):
+                seen[strategy[0]].append(p)
+            return real(df, *args, **kwargs)
+
+        return mock.patch.object(frame_cls, method, record_collect)
+
     with mock.patch.dict(os.environ, {"TAXAHFE_DISTRIBUTED": "1"}), \
             mock.patch.object(pipeline, "resolve_tree", record_semi_join), \
-            mock.patch.object(frame_cls, "mapInPandas", record_stage):
-        pipeline.taxa_hfe(
-            meta, long,
-            params=CompetitionParams(lowest_level=1, nperm=2, num_trees=5, seed=3),
-        )
+            mock.patch.object(frame_cls, "mapInPandas", record_stage), \
+            recording("collect"), recording("toArrow"), recording("toPandas"):
+        for name, budget in (("broadcast", competition.BROADCAST_MAX_BYTES),
+                             ("shuffle", 0)):
+            strategy[0] = name
+            with mock.patch.object(competition, "BROADCAST_MAX_BYTES", budget):
+                pipeline.taxa_hfe(
+                    meta, long,
+                    params=CompetitionParams(
+                        lowest_level=1, nperm=2, num_trees=5, seed=3
+                    ),
+                )
     build = [subtree(p, "BroadcastExchange") for p in seen["semi_join"]]
     check("taxa_hfe entity semi-join: build side is a LocalTableScan, no RDD scan",
           bool(build) and all(local_scan(b) for b in build), "; ".join(build))
@@ -197,6 +226,12 @@ def main() -> None:
     check("competition stage (distributed): assignment frame is a LocalTableScan, "
           "no RDD scan", bool(stage) and all(local_scan(p) for p in stage),
           f"{len(stage)} stage inputs")
+    for name in ("broadcast", "shuffle"):
+        above = [p[: runner.search(p).start()] for p in seen[name]]
+        check(f"competition stage ({name}): the driver collects the runner's rows, "
+              "no Aggregate above it",
+              bool(above) and not any("Aggregate" in a for a in above),
+              f"{len(above)} collected stages")
 
     # 6. whole-stage codegen covers the text/token hot path (no Python UDFs)
     from taxahfe_spark.tokens import tokenize
