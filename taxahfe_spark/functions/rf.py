@@ -242,7 +242,7 @@ def _grow_tree_block(
     ``rec``: when a list is passed (predictive ``forest_fit`` path, requires
     corrected=False), one entry per depth is appended:
     ``(leaf_keys, leaf_vals, split_keys, split_feat, split_thr)`` — keys are
-    the walker's own (tree << (depth+1)) | node encoding, sorted ascending,
+    the (tree << (depth+1)) | node encoding, sorted ascending,
     leaf_vals are class distributions (L, C) or means (L,). A final
     depth-cap leaf level is appended for slots that survive max_depth.
     ``min_child`` feeds the split search's child-size floor (pyspark.ml
@@ -445,25 +445,57 @@ def _apply_bins(X: np.ndarray, edges: list[np.ndarray]) -> np.ndarray:
 
 
 class ForestModel:
-    """Structure-captured forest from ``forest_fit``: per-depth sorted key
-    tables (leaves + splits) in the level walker's (tree << (depth+1)) | node
-    encoding, plus the training bin edges. Driver-side object, sized by node
-    count — never data-sized."""
+    """A fitted ``forest_fit`` forest compiled into one flat node table,
+    plus the training bin edges. Node ``i`` splits on bin codes
+    ``codes[:, feat[i]] > thr[i]`` into ``child[2*i]`` (no) or
+    ``child[2*i + 1]`` (yes); a leaf points to itself on both sides and
+    carries ``value[i]``, its class distribution (C,) or mean. ``roots``
+    holds each tree's root node and ``depth`` the number of steps that take
+    every (tree, row) from its root to a leaf. Driver-side object, sized by
+    node count — never data-sized."""
 
     __slots__ = (
-        "classification", "n_classes", "num_trees", "max_depth",
-        "edges", "levels", "importance",
+        "classification", "n_classes", "num_trees", "edges", "importance",
+        "roots", "feat", "thr", "child", "value", "depth",
     )
 
-    def __init__(self, classification, n_classes, num_trees, max_depth,
-                 edges, levels, importance):
+    def __init__(self, classification, n_classes, num_trees, edges,
+                 importance, levels):
         self.classification = classification
         self.n_classes = n_classes
         self.num_trees = num_trees
-        self.max_depth = max_depth
         self.edges = edges
-        self.levels = levels
         self.importance = importance
+        self._compile(levels)
+
+    def _compile(self, levels) -> None:
+        """Flatten ``_grow_tree_block``'s per-depth key tables (entry ``d``
+        keys are ``(tree << (d+1)) | node``; a split's children at ``d+1``
+        are keys ``2*key`` and ``2*key + 1``) into the node table, numbering
+        the nodes depth by depth in key order."""
+        keys = [np.sort(np.concatenate([lk, sk])) for lk, _, sk, _, _ in levels]
+        offs = np.cumsum([0] + [len(k) for k in keys])
+        n_nodes = int(offs[-1])
+        self.feat = np.zeros(n_nodes, dtype=np.intp)
+        self.thr = np.zeros(n_nodes, dtype=np.uint8)
+        self.child = np.repeat(np.arange(n_nodes, dtype=np.intp), 2)
+        self.value = np.zeros(
+            (n_nodes, self.n_classes) if self.classification else n_nodes
+        )
+
+        def index(d: int, k: np.ndarray) -> np.ndarray:
+            return offs[d] + np.searchsorted(keys[d], k)
+
+        for d, (lk, lv, sk, sf, st) in enumerate(levels):
+            self.value[index(d, lk)] = lv
+            split = index(d, sk)
+            self.feat[split] = sf
+            self.thr[split] = st
+            if len(sk):
+                self.child[2 * split] = index(d + 1, 2 * sk)
+                self.child[2 * split + 1] = index(d + 1, 2 * sk + 1)
+        self.roots = index(0, 2 * np.arange(self.num_trees, dtype=np.int64))
+        self.depth = len(levels) - 1
 
 
 def forest_fit(
@@ -520,8 +552,7 @@ def forest_fit(
         n_classes, False, max_depth, imp, rec=rec, min_child=max(1, min_node),
     )
     return ForestModel(
-        classification, n_classes, num_trees, max_depth, edges, rec,
-        imp / num_trees,
+        classification, n_classes, num_trees, edges, imp / num_trees, rec
     )
 
 
@@ -529,42 +560,18 @@ def forest_predict(model: ForestModel, X: np.ndarray) -> np.ndarray:
     """Predictions for X: classification -> (n, n_classes) averaged leaf
     class distributions (argmax = predicted class, ties to the lowest
     index — pyspark.ml's argmax rule); regression -> (n,) mean of per-tree
-    leaf means. Fully vectorized level walk: every (tree, row) slot descends
-    one depth per pass via searchsorted into the sorted key tables."""
+    leaf means. Every (tree, row) slot walks the node table together, one
+    gather step per depth; a slot at a leaf stays there."""
     X = np.asarray(X, dtype=np.float64)
-    nv = X.shape[0]
-    codes = _apply_bins(X, model.edges)
+    nv, p = X.shape
+    codes = _apply_bins(X, model.edges).ravel()
     T = model.num_trees
-    tree = np.repeat(np.arange(T, dtype=np.int64), nv)
-    row = np.tile(np.arange(nv, dtype=np.int64), T)
-    node = np.zeros(T * nv, dtype=np.int64)
-    active = np.ones(T * nv, dtype=bool)
-    if model.classification:
-        out = np.zeros((T * nv, model.n_classes))
-    else:
-        out = np.zeros(T * nv)
-    for depth, (lk, lv, sk, sf, st) in enumerate(model.levels):
-        act = np.flatnonzero(active)
-        if act.size == 0:
-            break
-        keys = (tree[act] << (depth + 1)) | node[act]
-        if len(lk):
-            li = np.searchsorted(lk, keys)
-            li_c = np.minimum(li, len(lk) - 1)
-            isleaf = lk[li_c] == keys
-            leaf_slots = act[isleaf]
-            out[leaf_slots] = lv[li_c[isleaf]]
-            active[leaf_slots] = False
-        else:
-            isleaf = np.zeros(len(keys), dtype=bool)
-        rest = act[~isleaf]
-        if rest.size == 0:
-            continue
-        si = np.searchsorted(sk, keys[~isleaf])
-        feat = sf[si]
-        thr = st[si]
-        vals = codes[row[rest], feat]
-        node[rest] = node[rest] * 2 + (vals > thr).astype(np.int64)
+    row_at = np.tile(np.arange(nv, dtype=np.intp) * p, T)
+    idx = np.repeat(model.roots, nv)
+    for _ in range(model.depth):
+        go = codes[row_at + model.feat[idx]] > model.thr[idx]
+        idx = model.child[2 * idx + go]
+    out = model.value[idx]
     if model.classification:
         return out.reshape(T, nv, model.n_classes).mean(axis=0)
     return out.reshape(T, nv).mean(axis=0)

@@ -24,11 +24,13 @@ Spark's execution model:
   (``_reduce_stage``) sums the partials in chunk order. The driver collects
   a Spark stage's rows directly through Arrow (taxonomy-sized: descendants
   plus competitors x ranges per level): no aggregation exchange follows the
-  stage.
+  stage, and a broadcast-strategy stage reads its task list from the
+  runner's closure over ``spark.range``, so no exchange precedes it either:
+  one Spark job per level.
 - vector delivery is chosen from the measured payload (12 B per nonzero):
   * ``broadcast`` (up to ``BROADCAST_MAX_BYTES``) — collect the
     (taxonomy-sized) sparse vectors once; a Spark stage broadcasts them
-    (created at the first such stage) and ships only task rows. Fastest at
+    (created at the first such stage) and ships only the task list. Fastest at
     reference shape, and the only strategy the fork pool serves.
   * ``shuffle`` (above it) — NEVER collects the vectors to the driver: the
     task rows, one per name, join the distributed vector frame and
@@ -544,21 +546,22 @@ def _next_run_token() -> str:
 
 
 def make_broadcast_stage_udf(
-    bc_vectors, bc_ctx, params: CompetitionParams, run_token: str = ""
+    parts: list[list[tuple]], bc_vectors, bc_ctx, params: CompetitionParams,
+    run_token: str = "",
 ):
-    """mapInPandas runner for the broadcast strategy: one INPUT ROW per task
-    (competition_id, parent_path, paths, chunk_lo, chunk_hi); vectors come
-    from the explicit broadcast."""
+    """mapInPandas runner for the broadcast strategy over
+    ``spark.range(len(parts))``: input row ``i`` runs the tasks
+    ``parts[i]``, which ship in this closure; vectors come from the
+    explicit broadcast."""
 
     def fn(batches):
         vecs, ctx = bc_vectors.value, bc_ctx.value
         for pdf in batches:
             yield _rows_frame([
                 row
-                for t in pdf.itertuples(index=False)
-                for row in _run_group(
-                    _spark_task(t, t.paths), vecs, ctx, params, f"b{run_token}"
-                )
+                for i in pdf["id"]
+                for task in parts[i]
+                for row in _run_group(task, vecs, ctx, params, f"b{run_token}")
             ])
 
     return fn
@@ -925,35 +928,43 @@ class TreeCompetition:
         return _reduce_stage(rows, n_chunks)
 
     def _run_stage_spark(self, tasks: list[tuple]):
-        """The stage on Spark: one input row per task (broadcast strategy,
-        ``mapInPandas``) or one group per task (shuffle strategy,
-        ``applyInPandas`` over the names' vectors joined in). The driver
-        collects the flat rows through Arrow — taxonomy-sized: descendants
-        plus competitors x ranges per level — with no second exchange."""
+        """The stage on Spark: one input row per slot of tasks (broadcast
+        strategy, ``mapInPandas`` over ``spark.range``, the task list in the
+        runner's closure: no exchange, one Spark job) or one group per task
+        (shuffle strategy, ``applyInPandas`` over the names' vectors joined
+        in). The driver collects the flat rows through Arrow —
+        taxonomy-sized: descendants plus competitors x ranges per level —
+        with no second exchange."""
         sc = self.spark.sparkContext
         if self.bc_ctx is None:
             self.bc_ctx = sc.broadcast(self._ctx)
-        adf = local_frame(
-            self.spark,
-            tasks,
-            "competition_id string, parent_path string, paths array<string>, "
-            "chunk_lo int, chunk_hi int",
-        )
         if self.strategy == "broadcast":
             if self.bc_vectors is None:
                 self.bc_vectors = sc.broadcast(self.vectors_dict)
-            # one task row per partition (capped): competitions differ
-            # wildly in cost (competitor count x prune outcome), so packing
-            # 3-4 rows per partition made stage wall = the unluckiest
-            # packing; single-row tasks let the scheduler level the load and
-            # cost only ~50 ms each against multi-second rows
+            # one task per partition (capped): competitions differ wildly in
+            # cost (competitor count x prune outcome), so packing several
+            # per partition made stage wall = the unluckiest packing. Spark
+            # launches partitions in index order, so the costliest tasks
+            # (names x fits) go first and the capped remainder deals out
+            # round-robin
             n_part = max(1, min(len(tasks), sc.defaultParallelism * 16))
-            fn = make_broadcast_stage_udf(
-                self.bc_vectors, self.bc_ctx, self.params, self._memo_token
+            by_cost = sorted(
+                tasks, key=lambda t: len(t[2]) * (t[4] - t[3]), reverse=True
             )
-            stage = adf.repartition(n_part).mapInPandas(fn, _STAGE_SCHEMA)
+            fn = make_broadcast_stage_udf(
+                [by_cost[i::n_part] for i in range(n_part)],
+                self.bc_vectors, self.bc_ctx, self.params, self._memo_token,
+            )
+            stage = self.spark.range(n_part, numPartitions=n_part).mapInPandas(
+                fn, _STAGE_SCHEMA
+            )
         else:
-            assign = adf.select(
+            assign = local_frame(
+                self.spark,
+                tasks,
+                "competition_id string, parent_path string, "
+                "paths array<string>, chunk_lo int, chunk_hi int",
+            ).select(
                 "competition_id", "parent_path", "chunk_lo", "chunk_hi",
                 F.posexplode("paths").alias("pos", "path"),
             )

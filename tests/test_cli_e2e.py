@@ -200,6 +200,39 @@ def test_run_hfe_ml_leaves_nothing_cached(tmp_path, spark, monkeypatch):
         assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), mode
 
 
+def test_second_run_hfe_ml_compiles_no_class(tmp_path, spark):
+    """A second identical run-hfe-ml --shap in one session finds every
+    generated class it needs in the session's cache (``session`` module
+    docstring), so it compiles none, and its ml_analysis artifacts are
+    byte-identical to the first run's."""
+    from taxahfe_spark import cli
+    from test_session import compiled_classes
+
+    meta_path, data_path = _write_inputs(tmp_path)
+    compiled, artifacts = [], []
+    for run in ("first", "second"):
+        out_dir = tmp_path / run
+        before = compiled_classes(spark)
+        cli.main(
+            [
+                "run-hfe-ml", meta_path, data_path,
+                "-s", "Sample", "-l", "Category", "-t", "factor",
+                "-p", "0.01", "-L", "2", "--nperm", "2", "-n", "4",
+                "--model", "rf", "--folds", "2", "--cv_repeats", "1",
+                "--tune_length", "1", "--seed", "11", "--shap",
+                "-o", str(out_dir),
+            ],
+            spark=spark,
+        )
+        compiled.append(compiled_classes(spark) - before)
+        ml_dir = out_dir / "ml_analysis"
+        artifacts.append(
+            {f.name: f.read_bytes() for f in sorted(ml_dir.iterdir()) if f.is_file()}
+        )
+    assert compiled[1] == 0, compiled
+    assert artifacts[0] and artifacts[0] == artifacts[1]
+
+
 _NO_WORKER_SCRIPT = """
 import sys
 from taxahfe_spark import cli

@@ -398,3 +398,43 @@ def test_forkless_platform_takes_spark_stage_with_same_state(spark, monkeypatch)
     with pytest.warns(RuntimeWarning, match="running the stage on Spark"):
         fell_back = TreeCompetition(vectors, flags_pdf, LABEL, None, params).run()
     pd.testing.assert_frame_equal(forked, fell_back)
+
+
+def test_distributed_broadcast_stage_is_one_spark_job(
+    spark, competition_state, monkeypatch
+):
+    """Under TAXAHFE_DISTRIBUTED=1 every competition stage runs on Spark;
+    a broadcast-strategy stage reads its task list from the runner's
+    closure, so it runs ONE Spark job (no exchange before ``mapInPandas``)
+    and the state equals the fork-pool run's."""
+    monkeypatch.setenv("TAXAHFE_DISTRIBUTED", "1")
+    long = spark.createDataFrame(
+        _long_rows(), "clade_name string, entity_id string, value double"
+    )
+    resolved = hierarchical_rollup(long)
+    flags_pdf = (
+        feature_filter_flags(resolved, N, 0.1, 0.0)
+        .select("path", "level", "passed_filters")
+        .toPandas()
+    )
+    vectors = to_feature_vectors(resolved, ENTITIES)
+    params = CompetitionParams(
+        lowest_level=1, max_level=14, nperm=2, num_trees=40, seed=11
+    )
+    tracker = spark.sparkContext.statusTracker()
+    run_stage_spark = TreeCompetition._run_stage_spark
+    jobs_per_stage = []
+
+    def counting(self, tasks):
+        before = max(tracker.getJobIdsForGroup() or [0])
+        rows = run_stage_spark(self, tasks)
+        jobs_per_stage.append(max(tracker.getJobIdsForGroup() or [0]) - before)
+        return rows
+
+    monkeypatch.setattr(TreeCompetition, "_run_stage_spark", counting)
+    comp = TreeCompetition(vectors, flags_pdf, LABEL, None, params)
+    assert comp.strategy == "broadcast"
+    state = comp.run().set_index("path")
+    comp.close()
+    assert jobs_per_stage and set(jobs_per_stage) == {1}, jobs_per_stage
+    pd.testing.assert_frame_equal(competition_state.sort_index(), state.sort_index())

@@ -166,29 +166,26 @@ def main() -> None:
 
     # 5c. frames built from driver-side data are Arrow local relations, so
     #     no Python worker decodes pickled rows: the build side of
-    #     taxa_hfe's entity semi-join and, under TAXAHFE_DISTRIBUTED=1, the
-    #     competition stage's assignment frame are LocalTableScans
+    #     taxa_hfe's entity semi-join is a LocalTableScan
     from taxahfe_spark import pipeline
 
+    hfe_params = CompetitionParams(lowest_level=1, nperm=2, num_trees=5, seed=3)
+    pipeline.taxa_hfe(meta, long, params=hfe_params)[0].unpersist()  # see 14.
+
     frame_cls = type(meta)  # the session's DataFrame implementation
-    seen: dict[str, list[str]] = {
-        "semi_join": [], "stage": [], "broadcast": [], "shuffle": [],
-    }
-    resolve_tree, map_in_pandas = pipeline.resolve_tree, frame_cls.mapInPandas
+    seen: dict[str, list[str]] = {"semi_join": [], "broadcast": [], "shuffle": []}
+    resolve_tree = pipeline.resolve_tree
 
     def record_semi_join(long_df, **kwargs):
         seen["semi_join"].append(plan(long_df))
         return resolve_tree(long_df, **kwargs)
 
-    def record_stage(df, *args, **kwargs):
-        if "competition_id" in df.columns:
-            seen["stage"].append(plan(df))
-        return map_in_pandas(df, *args, **kwargs)
-
     # 5d. the driver collects a distributed competition stage's rows as the
     #     Python runner yields them, with no second exchange: no Aggregate
     #     above MapInPandas (broadcast strategy) or FlatMapGroupsInPandas
-    #     (shuffle strategy) in the collected frame's plan
+    #     (shuffle strategy) in the collected frame's plan. A broadcast
+    #     stage's runner reads its tasks from its closure over a range: no
+    #     Exchange (a job of its own under AQE) and no pickled rows below it
     from taxahfe_spark.operators import competition
 
     runner = re.compile(r"MapInPandas|FlatMapGroupsInPandas")
@@ -207,25 +204,22 @@ def main() -> None:
 
     with mock.patch.dict(os.environ, {"TAXAHFE_DISTRIBUTED": "1"}), \
             mock.patch.object(pipeline, "resolve_tree", record_semi_join), \
-            mock.patch.object(frame_cls, "mapInPandas", record_stage), \
             recording("collect"), recording("toArrow"), recording("toPandas"):
         for name, budget in (("broadcast", competition.BROADCAST_MAX_BYTES),
                              ("shuffle", 0)):
             strategy[0] = name
             with mock.patch.object(competition, "BROADCAST_MAX_BYTES", budget):
-                pipeline.taxa_hfe(
-                    meta, long,
-                    params=CompetitionParams(
-                        lowest_level=1, nperm=2, num_trees=5, seed=3
-                    ),
-                )
+                pipeline.taxa_hfe(meta, long, params=hfe_params)
     build = [subtree(p, "BroadcastExchange") for p in seen["semi_join"]]
     check("taxa_hfe entity semi-join: build side is a LocalTableScan, no RDD scan",
           bool(build) and all(local_scan(b) for b in build), "; ".join(build))
-    stage = seen["stage"]
-    check("competition stage (distributed): assignment frame is a LocalTableScan, "
-          "no RDD scan", bool(stage) and all(local_scan(p) for p in stage),
-          f"{len(stage)} stage inputs")
+    below = [subtree(p, "MapInPandas") for p in seen["broadcast"]]
+    check("competition stage (broadcast): the runner's input has no Exchange "
+          "and no RDD scan",
+          bool(below) and all(
+              b and "Exchange" not in b and "Scan ExistingRDD" not in b for b in below
+          ),
+          f"{len(below)} collected stages")
     for name in ("broadcast", "shuffle"):
         above = [p[: runner.search(p).start()] for p in seen[name]]
         check(f"competition stage ({name}): the driver collects the runner's rows, "
@@ -462,6 +456,19 @@ def main() -> None:
             if "tokens#" in k
         ],
     )
+
+    # 14. compile once: every check above compiled its own generated
+    #     classes, yet a second identical taxa_hfe (the first ran in 5c)
+    #     finds all of its classes still in the session's cache
+    def compiled_classes() -> int:
+        metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        return metrics.METRIC_COMPILATION_TIME().getCount()
+
+    before = compiled_classes()
+    pipeline.taxa_hfe(meta, long, params=hfe_params)[0].unpersist()
+    n_compiled = compiled_classes() - before
+    check("taxa_hfe run again in the session: no generated class compiled",
+          n_compiled == 0, f"compiled {n_compiled}")
 
     spark.stop()
     if failures:
