@@ -2057,15 +2057,15 @@ FROM split s LEFT JOIN folds f USING (subject_id)
 
 def q_ml_null_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Null-model baseline (dietML M9): majority class fit on the md5 train
-    split, reference classification null metric subset on test."""
+    split, reference classification null metric subset on test — the numpy
+    null model dietML runs, over the collected split labels."""
     from taxahfe_spark.dietml import null_model_metrics, stratified_split
 
     meta = _customer_meta(spark, sf_dir)
     split = stratified_split(meta, seed=42, hash_fn="md5")
-    m = null_model_metrics(
-        split.filter("is_train"), split.filter("NOT is_train"),
-        "feature_of_interest", "factor",
-    )
+    pdf = split.select("feature_of_interest", "is_train").toPandas()
+    labels, is_train = pdf["feature_of_interest"].to_numpy(), pdf["is_train"].to_numpy()
+    m = null_model_metrics(labels[is_train], labels[~is_train], "factor")
     rows = [(k, round(float(v), 6)) for k, v in sorted(m.items())]
     return spark.createDataFrame(rows, "metric string, value double")
 
@@ -2134,10 +2134,11 @@ SELECT metric, round(value, 6) AS value FROM vals
 
 def q_ml_auc_midrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact Mann-Whitney AUC with midranks under HEAVY ties (20 distinct
-    prob values over 10k rows — the RF/GBT regime): the bucketed two-level
-    ranking in functions.metrics.binary_auc, oracle-checked against
-    DuckDB's window-function midrank formula value-for-value."""
-    from taxahfe_spark.functions.metrics import binary_auc
+    prob values over 10k rows — the RF/GBT regime): dietML's numpy
+    functions.metrics.midrank_auc over the collected predictions,
+    oracle-checked against DuckDB's window-function midrank formula
+    value-for-value."""
+    from taxahfe_spark.functions.metrics import midrank_auc
 
     ev = _t(spark, sf_dir, "events")
     # probs derived from an INTEGER column: k/20 is the same IEEE double in
@@ -2146,7 +2147,8 @@ def q_ml_auc_midrank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("event_type") == "click", "pos").otherwise("neg").alias("truth"),
         ((F.col("event_id") % 20).cast("double") / 20).alias("prob"),
     )
-    auc = binary_auc(pred, "truth", "prob", "pos")
+    pdf = pred.toPandas()
+    auc = midrank_auc(pdf["prob"].to_numpy(), (pdf["truth"] == "pos").to_numpy())
     return spark.createDataFrame(
         [("roc_auc", round(float(auc), 6))], "metric string, value double"
     )
@@ -2179,7 +2181,8 @@ FROM agg
 def q_ml_linreg_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic train/test regression (dietML M10 metric set): one-
     feature OLS (closed form via regr_slope/intercept) fit on train events,
-    scored on test with mae/rmse/rsq/ccc — every formula value-verified."""
+    scored on test with dietML's numpy mae/rmse/rsq/ccc — every formula
+    value-verified."""
     from taxahfe_spark.functions.metrics import regression_metrics
     from taxahfe_spark.operators.windows import ts_seconds
 
@@ -2196,7 +2199,8 @@ def q_ml_linreg_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("y").alias("truth"),
         (F.lit(float(fit["a"])) + F.lit(float(fit["b"])) * F.col("x")).alias("estimate"),
     )
-    m = regression_metrics(pred)
+    pdf = pred.toPandas()
+    m = regression_metrics(pdf["truth"].to_numpy(), pdf["estimate"].to_numpy())
     rows = [(k, round(float(v), 6)) for k, v in sorted(m.items())]
     return spark.createDataFrame(rows, "metric string, value double")
 

@@ -18,16 +18,22 @@ Reference mapping (SURVEY.md §2.11):
 - M8  select_by_pct_loss with per-model simplicity    <- lib/diet_ml_funcs.R:818-834
 - M9  null model (majority class / mean)              <- lib/diet_ml_funcs.R:342-419
 - M10 last_fit + metric sets incl kap/ccc/bal_acc     <- lib/diet_ml_funcs.R:960-1027
+      (every fit's predictions reach the driver once as arrays; one numpy
+      scorer, functions/metrics.py, serves both fit engines)
 - M12 summarized-levels mode                          <- lib/methods.R:144-181
 - M13 result registry                                 <- lib/tree.R:1011-1028
 - S8  ml_results.csv-style append sink                <- lib/diet_ml_funcs.R:987-1013
 
-Scale notes: every fit is a distributed pyspark.ml estimator over the row
-dimension (the 100 TB axis — entity x timestamp samples); only
-feature-count-sized artifacts (p x p correlation matrices, confusion
-matrices, CV metric tables) ever reach the driver. Randomness is rooted in
-one seed and derived per (fold, repeat, candidate), so results are
-partition-layout-invariant.
+Scale notes: above ``LOCAL_FIT_MAX_ROWS`` train rows (and for every model
+but rf and mars) each fit is a distributed pyspark.ml estimator over the
+row dimension; at or below it the small-n fast path collects the prepped CV
+frame to the driver once and fits numpy engines there. Either way the
+predictions are sample-count-sized and reach the driver: each validation
+fold's once for scoring, and the final train and test predictions once, for
+the metrics and for raw_predictions.csv (the reference writes every row).
+The split, folds, recipe statistics and correlation matrices stay Spark
+aggregates. Randomness is rooted in one seed and derived per (fold, repeat,
+candidate), so results are partition-layout-invariant.
 """
 
 from __future__ import annotations
@@ -44,6 +50,15 @@ from taxahfe_spark.functions.metrics import (
     classification_metrics,
     regression_metrics,
 )
+
+# Train-row ceiling of the small-n fast path: at or below it, rf and mars run
+# their CV and final fits on the driver (functions/rf.py's 64-bin histogram
+# forest, functions/mars.py) over one collected copy of the prepped CV frame.
+# Deliberately not routed through session.driver_side: the local forest is a
+# different model from pyspark.ml's, so TAXAHFE_DISTRIBUTED=1 would change
+# the results, not only the execution path.
+LOCAL_FIT_MAX_ROWS = 20_000
+MARS_BAGS = 11  # bags per bagged-MARS fit, baguette's bag_mars default
 
 MAXIMIZE = {"roc_auc", "bal_accuracy", "accuracy", "kap", "f_meas", "rsq", "ccc"}
 
@@ -581,105 +596,96 @@ def _assemble(df: DataFrame, cols: list[str]) -> DataFrame:
     ).transform(df)
 
 
-def _predict_frame(
-    fitted, df: DataFrame, label_col: str, feature_type: str, classes: list[str] | None
-) -> DataFrame:
-    """(truth, estimate[, prob]) from a fitted model; estimates mapped back
-    to label strings for classification."""
-    pred = fitted.transform(df)
-    if feature_type == "factor":
-        expr = F.lit(None).cast("string")
-        for i, c in enumerate(classes):
-            expr = F.when(F.col("prediction") == float(i), c).otherwise(expr)
-        out = pred.withColumn("estimate", expr).withColumnRenamed(label_col, "truth")
-        if "probability" in pred.columns:
-            from pyspark.ml.functions import vector_to_array
+def _from_labels(y: np.ndarray, classes: list[str] | None) -> np.ndarray:
+    """Values of an encoded ``label`` (or pyspark.ml ``prediction``) column:
+    class names for classification, the numbers themselves for regression."""
+    if classes is None:
+        return np.asarray(y, dtype=np.float64)
+    return np.asarray(classes)[np.asarray(y).astype(np.int64)]
 
-            out = out.withColumn("__probs", vector_to_array("probability"))
-            out = out.withColumn("prob", F.col("__probs")[0])
-        return out
-    return pred.select(
-        F.col(label_col).cast("double").alias("truth"),
-        F.col("prediction").cast("double").alias("estimate"),
+
+def _local_outputs(
+    out: np.ndarray, classes: list[str] | None
+) -> tuple[np.ndarray, np.ndarray | None]:
+    """(estimate, class probabilities) from a numpy engine's predict output:
+    an (n, K) probability matrix (argmax class) or regression values."""
+    if classes is None:
+        return out, None
+    return np.asarray(classes)[out.argmax(axis=1)], out
+
+
+def _spark_predictions(
+    fitted, df: DataFrame, id_col: str, label_col: str, classes: list[str] | None
+) -> tuple[np.ndarray, np.ndarray, np.ndarray | None]:
+    """(truth, estimate, class probabilities or None) of a fitted pyspark.ml
+    model over ``df``, collected through Arrow in one job, in id order."""
+    from pyspark.ml.functions import vector_to_array
+
+    pred = fitted.transform(df)
+    truth = F.col(label_col) if classes is not None else F.col(label_col).cast("double")
+    cols = [id_col, truth.alias("__truth"), "prediction"]
+    has_probs = classes is not None and "probability" in pred.columns
+    if has_probs:
+        cols.append(vector_to_array("probability").alias("__probs"))
+    pdf = pred.select(*cols).toPandas().sort_values(id_col, kind="mergesort")
+    probs = np.stack(pdf["__probs"].to_numpy()) if has_probs and len(pdf) else None
+    return pdf["__truth"].to_numpy(), _from_labels(pdf["prediction"], classes), probs
+
+
+def _metrics(
+    truth: np.ndarray,
+    estimate: np.ndarray,
+    probs: np.ndarray | None,
+    classes: list[str] | None,
+) -> dict[str, float]:
+    """The reference metric set of one split's predictions: classification
+    (first level as the event) when ``classes`` is given, else regression."""
+    if classes is None:
+        return regression_metrics(truth, estimate)
+    return classification_metrics(
+        truth, estimate, probs=probs, class_levels=classes, event_class=classes[0]
     )
 
 
-def _raw_predictions_pdf(
-    pred: DataFrame, feature_type: str, classes: list[str] | None, tag: str
+def _raw_predictions(
+    truth: np.ndarray,
+    estimate: np.ndarray,
+    probs: np.ndarray | None,
+    classes: list[str] | None,
+    tag: str,
 ) -> pd.DataFrame:
-    """One split's slice of raw_predictions.csv (reference
-    lib/diet_ml_funcs.R:991-1013): classification -> .pred_class + one
-    .pred_<class> probability column per level; regression -> .pred. The
-    frame is sample-count-sized by definition (it IS the per-row prediction
-    export) — a reference-parity artifact, not a 100 TB sink."""
-    if feature_type == "factor":
-        cols = [F.col("estimate").alias(".pred_class"), F.col("truth")]
-        if "__probs" in pred.columns:
-            cols = [
-                *[
-                    F.col("__probs")[i].alias(f".pred_{c}")
-                    for i, c in enumerate(classes)
-                ],
-                *cols,
-            ]
-        pdf = pred.select(*cols).toPandas()
-        pdf = pdf.rename(columns={"truth": "feature_of_interest"})
+    """One split's rows of raw_predictions.csv (reference
+    lib/diet_ml_funcs.R:991-1013): classification -> one .pred_<class>
+    probability column per level (models with probabilities) + .pred_class;
+    regression -> .pred."""
+    if classes is None:
+        raw = pd.DataFrame({"feature_of_interest": truth, ".pred": estimate})
     else:
-        pdf = (
-            pred.select(
-                F.col("truth").alias("feature_of_interest"),
-                F.col("estimate").alias(".pred"),
-            ).toPandas()
+        raw = pd.DataFrame(
+            {f".pred_{c}": probs[:, i] for i, c in enumerate(classes)}
+            if probs is not None
+            else {}
         )
-    pdf[".model_input_type"] = tag
-    return pdf
-
-
-def _score(
-    pred: DataFrame, feature_type: str, classes: list[str] | None
-) -> dict[str, float]:
-    if feature_type == "factor":
-        binary = classes is not None and len(classes) == 2
-        return classification_metrics(
-            pred, "truth", "estimate",
-            prob_col="prob" if binary and "prob" in pred.columns else None,
-            event_class=classes[0] if classes else None,
-            # 3+ classes: Hand-Till multiclass AUC over the per-class
-            # probability array (yardstick roc_auc multiclass default)
-            probs_col="__probs" if "__probs" in pred.columns else None,
-            class_levels=classes,
-        )
-    return regression_metrics(pred, "truth", "estimate")
+        raw[".pred_class"] = estimate
+        raw["feature_of_interest"] = truth
+    raw[".model_input_type"] = tag
+    return raw
 
 
 def null_model_metrics(
-    train: DataFrame,
-    test: DataFrame,
-    label_col: str,
-    feature_type: str,
+    train_truth: np.ndarray, test_truth: np.ndarray, feature_type: str
 ) -> dict[str, float]:
-    """M9: majority-class / mean predictor fit on train, scored on test with
-    the reference null-model metric subset (lib/diet_ml_funcs.R:351-355:
-    classification bal_accuracy/f_meas/accuracy, regression mae/rmse/ccc)."""
+    """M9: majority-class / mean predictor fit on the train labels, scored on
+    the test labels with the reference null-model metric subset
+    (lib/diet_ml_funcs.R:351-355: classification bal_accuracy/f_meas/accuracy,
+    regression mae/rmse/ccc)."""
     if feature_type == "factor":
-        top = (
-            train.groupBy(label_col)
-            .count()
-            .orderBy(F.col("count").desc(), F.col(label_col).asc())
-            .first()[label_col]
-        )
-        pred = test.select(
-            F.col(label_col).cast("string").alias("truth"),
-            F.lit(str(top)).alias("estimate"),
-        )
-        m = classification_metrics(pred, "truth", "estimate")
+        vals, cnts = np.unique(np.asarray(train_truth).astype(str), return_counts=True)
+        top = min(vals[cnts == cnts.max()])  # count desc, label asc
+        m = classification_metrics(test_truth, np.full(len(test_truth), top))
         return {k: m[k] for k in ("bal_accuracy", "f_meas", "accuracy")}
-    mean_v = train.agg(F.avg(F.col(label_col).cast("double"))).first()[0]
-    pred = test.select(
-        F.col(label_col).cast("double").alias("truth"),
-        F.lit(float(mean_v)).alias("estimate"),
-    )
-    m = regression_metrics(pred, "truth", "estimate")
+    mean_v = float(np.mean(np.asarray(train_truth, dtype=np.float64)))
+    m = regression_metrics(test_truth, np.full(len(test_truth), mean_v))
     return {k: m[k] for k in ("mae", "rmse", "ccc")}
 
 
@@ -734,9 +740,7 @@ def run_dietml(
     shap_top_k: int = 10,
     parallel_workers: int = 1,
     tune_strategy: str = "grid",
-    local_fit_threshold: int = 20_000,
     reprep_per_fold: bool = False,
-    mars_bags: int = 11,  # baguette bag_mars default bag count
 ) -> DietMLResult:
     """End-to-end dietML run (reference cmd/diet_ml.R:23-85 ->
     lib/diet_ml_funcs.R:16-111): split -> collinearity -> recipe -> CV grid
@@ -842,7 +846,7 @@ def run_dietml(
     # pyspark.ml path's thread-pooled fits need both frames materialized
     fit_local = (
         model in ("rf", "mars")
-        and n_train <= local_fit_threshold
+        and n_train <= LOCAL_FIT_MAX_ROWS
         and not reprep_per_fold
     )
     train_p = prep(train)
@@ -863,19 +867,16 @@ def run_dietml(
     if not fit_local:
         train_cv.count()
 
-    # small-n fast path (rf): below local_fit_threshold train rows, every CV
-    # fit runs the in-repo deterministic numpy forest (functions/rf.py
-    # forest_fit) on a driver-collected copy of the ALREADY-prepped CV frame
-    # — one toPandas of the recipe output, then zero Spark jobs per tuning
-    # fit. Rationale: a few-hundred-sample resample pays ~10-20 scheduled
-    # Spark jobs per pyspark.ml fit (the reference-scale dietML bottleneck,
-    # BENCH.md), while the histogram-CART forest fits the same frame in tens
-    # of milliseconds. The last_fit/null/SHAP stages stay pyspark.ml, the
-    # metric formulas are the shared numpy twins (classification_metrics_np
-    # reuses classification_metrics_from_cm), and the train/test + CV-fold
-    # leakage boundaries are untouched — this swaps the FIT ENGINE for
-    # sub-threshold frames, not the protocol. Above the threshold (or for
-    # non-rf models) nothing changes.
+    # small-n fast path (rf, mars): at or below LOCAL_FIT_MAX_ROWS train rows,
+    # every CV and final fit runs a numpy engine (functions/rf.py forest_fit,
+    # functions/mars.py) on a driver-collected copy of the ALREADY-prepped CV
+    # frame — one toPandas of the recipe output, then zero Spark jobs per
+    # tuning fit. Rationale: a few-hundred-sample resample pays ~10-20
+    # scheduled Spark jobs per pyspark.ml fit (the reference-scale dietML
+    # bottleneck, BENCH.md), while the histogram-CART forest fits the same
+    # frame in tens of milliseconds. The train/test and CV-fold leakage
+    # boundaries and the scoring code are untouched — this swaps the FIT
+    # ENGINE for sub-threshold frames, not the protocol.
     # per-fold re-prep keeps the RAW train rows joined to fold assignments;
     # each fit re-runs fit_recipe on its own fold-train portion
     train_cv_raw = None
@@ -898,7 +899,7 @@ def run_dietml(
         raise NotImplementedError(
             "mars (bagged earth, lib/diet_ml_funcs.R:510-561) is a "
             "single-node engine here as in R: it requires n_train <= "
-            f"local_fit_threshold ({local_fit_threshold}) and "
+            f"dietml.LOCAL_FIT_MAX_ROWS ({LOCAL_FIT_MAX_ROWS}) and "
             "reprep_per_fold=False"
         )
 
@@ -937,7 +938,7 @@ def run_dietml(
                 num_terms=int(nt) if nt else None,
                 prod_degree=int(params.get("prod_degree", 1)),
                 prune_method=str(params.get("prune_method", "backward")),
-                n_bags=int(params.get("n_bags", mars_bags)),
+                n_bags=int(params.get("n_bags", MARS_BAGS)),
                 seed=fit_seed,
                 n_classes=len(classes) if cls else None,
             )
@@ -955,35 +956,6 @@ def run_dietml(
             n_classes=len(classes) if cls else None,
         )
         return lambda M: forest_predict(mdl, M)
-
-    def fit_one_local(params: dict, ci: int, r: int, f: int) -> float:
-        """One CV fit on the driver-collected frame: numpy engines + numpy
-        metric twins. Same (candidate, repeat) seed derivation as the
-        pyspark.ml path."""
-        from taxahfe_spark.functions.metrics import (
-            classification_metrics_np,
-            regression_metrics_np,
-        )
-
-        sub = local_cv[local_cv["repeat"] == r]
-        tr = sub[sub["fold"] != f]
-        va = sub[sub["fold"] == f]
-        cols = recipe.keep_cols
-        Xtr = tr[cols].to_numpy(np.float64)
-        Xva = va[cols].to_numpy(np.float64)
-        cls = feature_type == "factor"
-        ytr = tr["label"].to_numpy(np.float64)
-        pred = _fit_local_predictor(params, Xtr, ytr, seed + 31 * ci + r)(Xva)
-        if cls:
-            truth = np.array([classes[int(i)] for i in va["label"].to_numpy(np.int64)])
-            est = np.array([classes[int(i)] for i in pred.argmax(axis=1)])
-            m = classification_metrics_np(
-                truth, est, probs=pred, class_levels=classes,
-                event_class=classes[0],
-            )
-        else:
-            m = regression_metrics_np(va["label"].to_numpy(np.float64), pred)
-        return m[metric]
 
     # reprep_per_fold: the recipe depends only on (repeat, fold) — candidates
     # share identical fold-train data (tidymodels preps once per resample,
@@ -1027,17 +999,29 @@ def run_dietml(
         # one (id, fold) row per repeat: restrict to THIS repeat's
         # dealing, then hold out fold f. Seed depends on (candidate,
         # repeat) only — layout- and worker-count-invariant.
+        fit_seed = seed + 31 * ci + r
         if local_cv is not None:
-            return fit_one_local(params, ci, r, f)
-        if reprep_per_fold:
-            tr, va = _reprep_frames(r, f)
+            sub = local_cv[local_cv["repeat"] == r]
+            tr = sub[sub["fold"] != f]
+            va = sub[sub["fold"] == f]
+            cols = recipe.keep_cols
+            predict = _fit_local_predictor(
+                params, tr[cols].to_numpy(np.float64),
+                tr["label"].to_numpy(np.float64), fit_seed,
+            )
+            scored = (
+                _from_labels(va["label"].to_numpy(np.float64), classes),
+                *_local_outputs(predict(va[cols].to_numpy(np.float64)), classes),
+            )
         else:
-            tr = train_cv.filter((F.col("repeat") == r) & (F.col("fold") != f))
-            va = train_cv.filter((F.col("repeat") == r) & (F.col("fold") == f))
-        est = _estimator(model, feature_type, params, seed + 31 * ci + r)
-        fitted = est.fit(tr)
-        pred = _predict_frame(fitted, va, label_col, feature_type, classes)
-        return _score(pred, feature_type, classes)[metric]
+            if reprep_per_fold:
+                tr, va = _reprep_frames(r, f)
+            else:
+                tr = train_cv.filter((F.col("repeat") == r) & (F.col("fold") != f))
+                va = train_cv.filter((F.col("repeat") == r) & (F.col("fold") == f))
+            fitted = _estimator(model, feature_type, params, fit_seed).fit(tr)
+            scored = _spark_predictions(fitted, va, id_col, label_col, classes)
+        return _metrics(*scored, classes)[metric]
 
     from concurrent.futures import ThreadPoolExecutor
 
@@ -1133,35 +1117,23 @@ def run_dietml(
     cv_results = pd.DataFrame(rows)
     best_params = select_by_pct_loss(cv_results, metric, pct_loss, model)
 
-    # -- evaluation stages (M9 null model, M10 last_fit, S8 predictions) ------
+    # -- evaluation (M9 null model, M10 last_fit, S8 predictions) -----------
     #
-    # Small-n fast path (same gate as the CV fits): the tail stages each pay
-    # distributed-job scheduling on a few-hundred-row frame — post-tuning
-    # they dominated the flagship replica (~35-55 s measured r4). Below the
-    # threshold the final fit runs the same numpy forest as the CV fits and
-    # every metric uses the shared numpy twins (classification_metrics_np
-    # reuses classification_metrics_from_cm, so formulas cannot drift).
-    # Parity with the pyspark.ml path is PINNED EXPLICITLY in
-    # tests/test_dietml.py: identical metric-set names, identical null-model
-    # values, same-ballpark estimates; exact estimates differ because the
-    # final MODEL engine differs (numpy histogram forest vs pyspark.ml rf) —
-    # the same declared trade as the CV fast path itself.
+    # Both engines hand over (truth, estimate, class probabilities) arrays for
+    # the whole train split and the test split, in id order: the fast path
+    # refits its numpy engine on the CV frame it already holds and collects
+    # the test rows once; the pyspark.ml path collects each split's
+    # predictions through one Arrow job. The same scorer, null model and
+    # raw-predictions builder then run on either.
     if local_cv is not None:
-        from taxahfe_spark.functions.metrics import (
-            classification_metrics_np,
-            regression_metrics_np,
-        )
-
         cols = recipe.keep_cols
-        cls = feature_type == "factor"
         tr_pdf = (
             local_cv[local_cv["repeat"] == 0]
             .sort_values(id_col, kind="mergesort")
             .reset_index(drop=True)
         )
-        # carry the RAW label string for test: a test-only class unseen in
-        # train encodes to null in "label" but must still appear as truth
-        # (the distributed path scores on the original string column)
+        # carry the RAW label for test: a test-only class unseen in train
+        # encodes to null in "label" but must still appear as truth
         te_pdf = (
             test_p.select(id_col, F.col(label_col).alias("__raw"), "label", *cols)
             .toPandas()
@@ -1169,86 +1141,41 @@ def run_dietml(
             .reset_index(drop=True)
         )
         Xtr = tr_pdf[cols].to_numpy(np.float64)
-        Xte = te_pdf[cols].to_numpy(np.float64)
         ytr = tr_pdf["label"].to_numpy(np.float64)
         fit_params = dict(best_params)
         if model == "rf":
             fit_params.setdefault("num_trees", num_trees)
         predict_local = _fit_local_predictor(fit_params, Xtr, ytr, seed)
-
-        def _eval_local(pdf: pd.DataFrame, X: np.ndarray, tag: str):
-            pred = predict_local(X)
-            if cls:
-                if "__raw" in pdf.columns:
-                    truth = pdf["__raw"].astype(str).to_numpy()
-                else:
-                    truth = np.array(
-                        [classes[int(i)] for i in pdf["label"].to_numpy(np.int64)]
-                    )
-                est = np.array([classes[int(i)] for i in pred.argmax(axis=1)])
-                m = classification_metrics_np(
-                    truth, est, probs=pred, class_levels=classes,
-                    event_class=classes[0],
-                )
-                raw = pd.DataFrame(
-                    {f".pred_{c}": pred[:, i] for i, c in enumerate(classes)}
-                )
-                raw[".pred_class"] = est
-                raw["feature_of_interest"] = truth
-            else:
-                truth = pdf["label"].to_numpy(np.float64)
-                m = regression_metrics_np(truth, pred)
-                raw = pd.DataFrame(
-                    {"feature_of_interest": truth, ".pred": pred}
-                )
-            raw[".model_input_type"] = tag
-            return m, raw
-
-        train_m, raw_train = _eval_local(tr_pdf, Xtr, "train")
-        final_m, raw_test = _eval_local(te_pdf, Xte, "test")
-        raw_predictions = pd.concat([raw_train, raw_test], ignore_index=True)
-
-        # null model (M9), numpy twin: identical values to the distributed
-        # null_model_metrics — constant-estimate metrics through the SAME
-        # shared formula code
-        if cls:
-            truth_tr = np.array(
-                [classes[int(i)] for i in ytr.astype(np.int64)]
-            )
-            vals, cnts = np.unique(truth_tr, return_counts=True)
-            top = min(vals[cnts == cnts.max()])  # count desc, label asc
-            truth_te = te_pdf["__raw"].astype(str).to_numpy()
-            nm = classification_metrics_np(
-                truth_te, np.full(len(truth_te), top)
-            )
-            null_m = {k: nm[k] for k in ("bal_accuracy", "f_meas", "accuracy")}
-        else:
-            mean_v = float(np.mean(ytr))
-            truth_te = te_pdf["label"].to_numpy(np.float64)
-            nm = regression_metrics_np(
-                truth_te, np.full(len(truth_te), mean_v)
-            )
-            null_m = {k: nm[k] for k in ("mae", "rmse", "ccc")}
-    else:
-        # -- null model (M9) --------------------------------------------------
-        null_m = null_model_metrics(train, test, label_col, feature_type)
-
-        # -- last_fit (M10): best params on full train, scored on test --------
-        final = _estimator(model, feature_type, best_params, seed).fit(train_p)
-        test_pred = _predict_frame(final, test_p, label_col, feature_type, classes)
-        final_m = _score(test_pred, feature_type, classes)
-        train_pred = _predict_frame(final, train_p, label_col, feature_type, classes)
-        train_m = _score(train_pred, feature_type, classes)
-
-        # S8: raw train+test predictions (reference bind_rows + augment,
-        # lib/diet_ml_funcs.R:991-1013)
-        raw_predictions = pd.concat(
-            [
-                _raw_predictions_pdf(train_pred, feature_type, classes, "train"),
-                _raw_predictions_pdf(test_pred, feature_type, classes, "test"),
-            ],
-            ignore_index=True,
+        te_truth = (
+            te_pdf["__raw"].astype(str).to_numpy()
+            if classes is not None
+            else te_pdf["label"].to_numpy(np.float64)
         )
+        splits = {
+            "train": (
+                _from_labels(ytr, classes),
+                *_local_outputs(predict_local(Xtr), classes),
+            ),
+            "test": (
+                te_truth,
+                *_local_outputs(predict_local(te_pdf[cols].to_numpy(np.float64)), classes),
+            ),
+        }
+    else:
+        final = _estimator(model, feature_type, best_params, seed).fit(train_p)
+        splits = {
+            tag: _spark_predictions(final, d, id_col, label_col, classes)
+            for tag, d in (("train", train_p), ("test", test_p))
+        }
+    train_m = _metrics(*splits["train"], classes)
+    final_m = _metrics(*splits["test"], classes)
+    null_m = null_model_metrics(splits["train"][0], splits["test"][0], feature_type)
+    # S8: raw train+test predictions (reference bind_rows + augment,
+    # lib/diet_ml_funcs.R:991-1013)
+    raw_predictions = pd.concat(
+        [_raw_predictions(*splits[tag], classes, tag) for tag in ("train", "test")],
+        ignore_index=True,
+    )
 
     # J7: outer merge final vs null on metric name
     names = sorted(set(final_m) | set(null_m))

@@ -24,7 +24,7 @@ scores, predictions argmax. Bagging averages ``n_bags`` bootstrap fits
 
 Like earth itself this is a single-node engine: dietml.py runs it under the
 small-n local fast path only (the same driver-local gate as the numpy
-forest) and raises above ``local_fit_threshold``.
+forest) and raises above ``dietml.LOCAL_FIT_MAX_ROWS`` train rows.
 """
 
 from __future__ import annotations

@@ -121,6 +121,10 @@ def shap_mean_abs(
     ``features`` vector column (the dietml convention). ``prediction_col``
     defaults to P(class 0) for probabilistic classifiers, else
     ``prediction``. ``top_k`` applies the reference's slice_head(10) (W3).
+
+    This is the Spark twin of :func:`shap_values_local`, and it stays: a
+    pyspark.ml model can only score rows through Spark, so its permutation
+    SHAP runs as a Spark job; the numpy engines use the local one.
     """
     spark = df.sparkSession
     n = df.count()

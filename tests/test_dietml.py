@@ -1,18 +1,23 @@
 """dietML surface tests (SURVEY §2.11 M1-M13).
 
 Metric formulas are checked against hand-computed yardstick-parity values;
-the end-to-end runs use the reference's own bike_share fixture (regression)
-and a synthetic separable classification task, asserting the fitted model
-beats the null baseline — the reference's own acceptance shape
-(ml_results.csv compares final vs null, lib/diet_ml_funcs.R:980).
+the end-to-end runs use a bike-share-shaped regression frame (a seeded
+stand-in, tests/bike_share.py, plus the reference's own bike_share fixture
+when it is present) and a synthetic separable classification task, asserting
+the fitted model beats the null baseline — the reference's own acceptance
+shape (ml_results.csv compares final vs null, lib/diet_ml_funcs.R:980).
 """
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
+from bike_share import bike_share_day
 
+from taxahfe_spark import dietml
 from taxahfe_spark.dietml import (
     fit_recipe,
     fold_assignments,
@@ -26,10 +31,41 @@ from taxahfe_spark.dietml import (
 from taxahfe_spark.functions.metrics import (
     classification_metrics,
     classification_metrics_from_cm,
+    midrank_auc,
     regression_metrics,
 )
 
 BIKE = "/root/reference/example_inputs/bike_share_day.csv"
+
+
+@pytest.fixture(
+    params=[
+        "synthetic",
+        pytest.param(
+            "reference",
+            marks=pytest.mark.skipif(
+                not os.path.exists(BIKE), reason="reference bike_share fixture absent"
+            ),
+        ),
+    ]
+)
+def bike(spark, request):
+    """The bike-share day table as dietML input (instant -> subject_id,
+    cnt -> feature_of_interest): the seeded stand-in, or the reference's
+    CSV where it exists."""
+    if request.param == "synthetic":
+        df = spark.createDataFrame(bike_share_day())
+    else:
+        df = spark.read.option("header", True).option("inferSchema", True).csv(BIKE)
+    return df.withColumnRenamed("instant", "subject_id").withColumnRenamed(
+        "cnt", "feature_of_interest"
+    )
+
+
+def _binary_probs(p_first) -> np.ndarray:
+    """(n, 2) probability matrix whose first (event) column is ``p_first``."""
+    p = np.asarray(p_first, dtype=np.float64)
+    return np.column_stack([p, 1.0 - p])
 
 
 # -- metric formulas (M10) ----------------------------------------------------
@@ -64,13 +100,26 @@ def test_classification_metrics_hand_computed():
     assert out3["f_meas"] == pytest.approx(f1s.mean())
 
 
-def test_regression_metrics_hand_computed(spark):
+def test_classification_metrics_counts_like_a_loop():
+    """The vectorised confusion matrix equals one built row by row, classes
+    being the union of truth and estimate levels."""
+    rng = np.random.default_rng(3)
+    truth = rng.choice(["a", "b", "c"], 300)
+    estimate = rng.choice(["a", "b", "c", "d"], 300)  # "d" never true
+    classes = sorted(set(truth) | set(estimate))
+    m = np.zeros((len(classes), len(classes)))
+    for t, e in zip(truth, estimate):
+        m[classes.index(t), classes.index(e)] += 1
+    got = classification_metrics(truth, estimate)
+    want = classification_metrics_from_cm(m)
+    assert np.isnan(got.pop("roc_auc"))
+    assert got == want
+
+
+def test_regression_metrics_hand_computed():
     t = np.array([1.0, 2.0, 3.0, 4.0, 5.0])
     e = np.array([1.5, 2.2, 2.4, 4.4, 4.6])
-    df = spark.createDataFrame(
-        [(float(a), float(b)) for a, b in zip(t, e)], "truth double, estimate double"
-    )
-    out = regression_metrics(df)
+    out = regression_metrics(t, e)
     assert out["mae"] == pytest.approx(np.abs(t - e).mean())
     assert out["rmse"] == pytest.approx(np.sqrt(((t - e) ** 2).mean()))
     assert out["rsq"] == pytest.approx(np.corrcoef(t, e)[0, 1] ** 2)
@@ -80,59 +129,52 @@ def test_regression_metrics_hand_computed(spark):
     assert out["ccc"] == pytest.approx(ccc)
 
 
-def test_binary_auc_mann_whitney(spark):
-    from pyspark.sql import functions as F
-
+def test_binary_auc_mann_whitney():
     # probs: positives (a) at .9/.8/.4, negatives at .7/.3/.2
-    rows = [("a", .9), ("a", .8), ("a", .4), ("b", .7), ("b", .3), ("b", .2)]
-    df = spark.createDataFrame(rows, "truth string, prob double").withColumn(
-        "estimate", F.lit("a")
+    truth = np.array(["a", "a", "a", "b", "b", "b"])
+    probs = _binary_probs([.9, .8, .4, .7, .3, .2])
+    out = classification_metrics(
+        truth, np.full(6, "a"), probs=probs, class_levels=["a", "b"], event_class="a"
     )
-    out = classification_metrics(df, prob_col="prob", event_class="a")
     # pairs: 9 total, positive-ranked-higher: (.9,.8 beat all 3)=6, .4 beats .3,.2 = 2 -> 8/9
     assert out["roc_auc"] == pytest.approx(8 / 9)
 
 
-def test_binary_auc_tied_probs_midrank(spark):
+def test_binary_auc_tied_probs_midrank():
     """Ties must use Mann-Whitney MIDRANKS (ADVICE r2: F.rank() min-rank bug).
 
     RF/GBT probs are multiples of 1/numTrees, so ties are the common case:
     all-tied probs must give AUC 0.5, and partial ties must match the
     hand-computed midrank formula.
     """
-    from pyspark.sql import functions as F
-
     # all probabilities identical -> AUC must be exactly 0.5 (was 0.0)
-    rows = [("a", 0.5), ("a", 0.5), ("b", 0.5), ("b", 0.5)]
-    df = spark.createDataFrame(rows, "truth string, prob double").withColumn(
-        "estimate", F.lit("a")
+    truth = np.array(["a", "a", "b", "b"])
+    out = classification_metrics(
+        truth, np.full(4, "a"), probs=_binary_probs([0.5] * 4),
+        class_levels=["a", "b"], event_class="a",
     )
-    out = classification_metrics(df, prob_col="prob", event_class="a")
     assert out["roc_auc"] == pytest.approx(0.5)
 
     # partial ties: probs .9(a) .5(a) .5(b) .5(b) .1(b)
     # ranks: .1->1, .5 tie group midrank (2+3+4)/3=3, .9->5
     # rpos = 5 + 3 = 8; npos=2, nneg=3; auc = (8 - 3) / 6 = 5/6
-    rows = [("a", 0.9), ("a", 0.5), ("b", 0.5), ("b", 0.5), ("b", 0.1)]
-    df = spark.createDataFrame(rows, "truth string, prob double").withColumn(
-        "estimate", F.lit("a")
+    truth = np.array(["a", "a", "b", "b", "b"])
+    out = classification_metrics(
+        truth, np.full(5, "a"), probs=_binary_probs([0.9, 0.5, 0.5, 0.5, 0.1]),
+        class_levels=["a", "b"], event_class="a",
     )
-    out = classification_metrics(df, prob_col="prob", event_class="a")
     assert out["roc_auc"] == pytest.approx(5 / 6)
 
 
-def test_binary_auc_matches_numpy_oracle(spark):
+def test_binary_auc_matches_numpy_oracle():
     """Randomized parity vs a numpy midrank-AUC oracle, incl. many ties."""
-    from pyspark.sql import functions as F
-
     rng = np.random.default_rng(7)
     probs = rng.integers(0, 10, 200) / 10.0  # heavy ties
     truth = np.where(rng.random(200) < 1 / (1 + np.exp(-4 * (probs - 0.5))), "a", "b")
-    df = spark.createDataFrame(
-        [(str(t), float(p)) for t, p in zip(truth, probs)],
-        "truth string, prob double",
-    ).withColumn("estimate", F.lit("a"))
-    out = classification_metrics(df, prob_col="prob", event_class="a")
+    out = classification_metrics(
+        truth, np.full(200, "a"), probs=_binary_probs(probs),
+        class_levels=["a", "b"], event_class="a",
+    )
     ranks = pd.Series(probs).rank(method="average").to_numpy()
     npos = (truth == "a").sum()
     nneg = len(truth) - npos
@@ -140,11 +182,9 @@ def test_binary_auc_matches_numpy_oracle(spark):
     assert out["roc_auc"] == pytest.approx(expect)
 
 
-def test_hand_till_multiclass_auc(spark):
+def test_hand_till_multiclass_auc():
     """Hand-Till M vs an independent numpy pairwise-midrank-AUC oracle
     (yardstick roc_auc multiclass default, ref lib/diet_ml_funcs.R:963)."""
-    from taxahfe_spark.functions.metrics import hand_till_auc
-
     rng = np.random.default_rng(11)
     levels = ["a", "b", "c"]
     n = 180
@@ -154,13 +194,7 @@ def test_hand_till_multiclass_auc(spark):
     # bias toward the true class so AUC is informative, then renormalize
     raw[np.arange(n), [levels.index(t) for t in truth]] += rng.integers(0, 6, n)
     probs = np.round(raw / raw.sum(axis=1, keepdims=True), 2)
-    df = spark.createDataFrame(
-        [
-            (str(t), [float(x) for x in p], str(levels[int(np.argmax(p))]))
-            for t, p in zip(truth, probs)
-        ],
-        "truth string, probs array<double>, estimate string",
-    )
+    estimate = np.asarray(levels)[probs.argmax(axis=1)]
 
     def np_auc(scores, is_pos):
         ranks = pd.Series(scores).rank(method="average").to_numpy()
@@ -179,31 +213,23 @@ def test_hand_till_multiclass_auc(spark):
             pairs += 1
     expect = total / pairs
 
-    got = hand_till_auc(df, "truth", "probs", levels)
-    assert got == pytest.approx(expect)
-    # and via the metric-set entry point
-    out = classification_metrics(df, probs_col="probs", class_levels=levels)
+    out = classification_metrics(truth, estimate, probs=probs, class_levels=levels)
     assert out["roc_auc"] == pytest.approx(expect)
 
 
-def test_hand_till_drops_absent_levels(spark):
+def test_hand_till_drops_absent_levels():
     """Levels with zero truth observations are dropped before pairing
     (yardstick warns + drops): a 3-level problem whose data covers only 2
     levels degrades to the binary midrank AUC of the observed pair."""
-    from taxahfe_spark.functions.metrics import binary_auc, hand_till_auc
-
-    rows = [
-        ("a", [0.7, 0.2, 0.1]),
-        ("a", [0.5, 0.3, 0.2]),
-        ("b", [0.4, 0.5, 0.1]),
-        ("b", [0.1, 0.8, 0.1]),
-    ]
-    df = spark.createDataFrame(rows, "truth string, probs array<double>")
-    got = hand_till_auc(df, "truth", "probs", ["a", "b", "c"])
-    from pyspark.sql import functions as F
-
-    a_ij = binary_auc(df.withColumn("p", F.col("probs")[0]), "truth", "p", "a")
-    a_ji = binary_auc(df.withColumn("p", F.col("probs")[1]), "truth", "p", "b")
+    truth = np.array(["a", "a", "b", "b"])
+    probs = np.array(
+        [[0.7, 0.2, 0.1], [0.5, 0.3, 0.2], [0.4, 0.5, 0.1], [0.1, 0.8, 0.1]]
+    )
+    got = classification_metrics(
+        truth, np.array(["a", "a", "b", "b"]), probs=probs, class_levels=["a", "b", "c"]
+    )["roc_auc"]
+    a_ij = midrank_auc(probs[:, 0], truth == "a")
+    a_ji = midrank_auc(probs[:, 1], truth == "b")
     assert got == pytest.approx((a_ij + a_ji) / 2)
 
 
@@ -301,14 +327,10 @@ def test_select_by_pct_loss_prefers_simpler():
 # -- null model (M9) -----------------------------------------------------------
 
 
-def test_null_model_majority_class(spark):
-    tr = spark.createDataFrame(
-        [("a",)] * 7 + [("b",)] * 3, "feature_of_interest string"
-    )
-    te = spark.createDataFrame(
-        [("a",)] * 5 + [("b",)] * 5, "feature_of_interest string"
-    )
-    m = null_model_metrics(tr, te, "feature_of_interest", "factor")
+def test_null_model_majority_class():
+    tr = np.array(["a"] * 7 + ["b"] * 3)
+    te = np.array(["a"] * 5 + ["b"] * 5)
+    m = null_model_metrics(tr, te, "factor")
     assert m["accuracy"] == pytest.approx(0.5)
     assert m["bal_accuracy"] == pytest.approx(0.5)
     assert set(m) == {"bal_accuracy", "f_meas", "accuracy"}
@@ -317,15 +339,11 @@ def test_null_model_majority_class(spark):
 # -- end-to-end (M1/M7/M10) ----------------------------------------------------
 
 
-def test_dietml_regression_bike_share(spark):
-    """Reference fixture e2e (dietml.md runs ridge on bike_share_day)."""
-    df = (
-        spark.read.option("header", True).option("inferSchema", True).csv(BIKE)
-        .withColumnRenamed("instant", "subject_id")
-        .withColumnRenamed("cnt", "feature_of_interest")
-    )
+def test_dietml_regression_bike_share(bike):
+    """Bike-share e2e (the reference's dietml.md runs ridge on
+    bike_share_day)."""
     res = run_dietml(
-        df,
+        bike,
         feature_type="numeric",
         model="ridge",
         folds=3,
@@ -632,16 +650,12 @@ def test_recipe_info_gain_selects_signal(spark):
     assert rec.keep_cols == ["sig"]
 
 
-def test_local_fast_path_matches_pyspark_selection_regression(spark):
+def test_local_fast_path_matches_pyspark_selection_regression(bike, monkeypatch):
     """The small-n fast path (numpy forest_fit CV fits) must select the SAME
-    best_params as the pyspark.ml path on the reference bike_share fixture;
-    both runs share split/folds/recipe/selection code, only the fit engine
-    differs (local_fit_threshold=0 forces pyspark.ml)."""
-    df = (
-        spark.read.option("header", True).option("inferSchema", True).csv(BIKE)
-        .withColumnRenamed("instant", "subject_id")
-        .withColumnRenamed("cnt", "feature_of_interest")
-    )
+    best_params as the pyspark.ml path on the bike_share frame; both runs
+    share split/folds/recipe/selection/scoring code, only the fit engine
+    differs (LOCAL_FIT_MAX_ROWS = 0 forces pyspark.ml)."""
+    df = bike
     kwargs = dict(
         feature_type="numeric", model="rf", folds=3, cv_repeats=1,
         tune_length=3, metric="rmse", seed=99, num_trees=25,
@@ -651,7 +665,8 @@ def test_local_fast_path_matches_pyspark_selection_regression(spark):
         tune_time_min=60.0,
     )
     fast = run_dietml(df, **kwargs)
-    slow = run_dietml(df, local_fit_threshold=0, **kwargs)
+    monkeypatch.setattr(dietml, "LOCAL_FIT_MAX_ROWS", 0)
+    slow = run_dietml(df, **kwargs)
     assert fast.best_params == slow.best_params
     # same candidates evaluated, and CV scores in the same ballpark (the
     # engines differ in tree internals, not in protocol)
@@ -667,11 +682,11 @@ def test_local_fast_path_matches_pyspark_selection_regression(spark):
     # pyspark.ml's mapping) but differ in tree internals (64-bin quantile
     # histogram vs spark's 32-bin), so per-candidate CV scores drift
     assert (rel < 0.35).all()
-    # evaluation-tail parity pin: the fast path's last_fit/null/raw-pred
-    # stages run the numpy forest + numpy metric twins, the slow path runs
-    # pyspark.ml — metric SETS identical, null model bit-identical (same
-    # shared formula code on the same constant estimate), final estimates
-    # same ballpark (different final model engine, the declared trade)
+    # evaluation-tail parity pin: the fast path's last_fit runs the numpy
+    # forest, the slow path pyspark.ml, and both are scored by the same
+    # numpy code — metric SETS identical, null model bit-identical (same
+    # formula code on the same constant estimate), final estimates same
+    # ballpark (different final model engine, the declared trade)
     assert list(fast.full_results[".metric"]) == list(slow.full_results[".metric"])
     np.testing.assert_allclose(
         fast.full_results["null_model_avg"].to_numpy(),
@@ -688,8 +703,8 @@ def test_local_fast_path_matches_pyspark_selection_regression(spark):
     assert len(fast.raw_predictions) == len(slow.raw_predictions)
 
 
-def test_local_fast_path_matches_pyspark_selection_classification(spark):
-    """Same engine-swap invariance for a binary classification frame."""
+def _classification_parity_frame(spark):
+    """160 rows, binary label driven by x1 and x2, x3 pure noise."""
     rng = np.random.default_rng(5)
     n = 160
     x1 = rng.normal(0, 1, n)
@@ -700,18 +715,24 @@ def test_local_fast_path_matches_pyspark_selection_classification(spark):
         (f"s{i:03d}", str(label[i]), float(x1[i]), float(x2[i]), float(x3[i]))
         for i in range(n)
     ]
-    df = spark.createDataFrame(
+    return spark.createDataFrame(
         rows,
         "subject_id string, feature_of_interest string, "
         "x1 double, x2 double, x3 double",
     )
+
+
+def test_local_fast_path_matches_pyspark_selection_classification(spark, monkeypatch):
+    """Same engine-swap invariance for a binary classification frame."""
+    df = _classification_parity_frame(spark)
     kwargs = dict(
         feature_type="factor", model="rf", folds=3, cv_repeats=1,
         tune_length=3, metric="bal_accuracy", seed=4, num_trees=25,
         tune_time_min=60.0,  # see regression twin: no wall-clock truncation
     )
     fast = run_dietml(df, **kwargs)
-    slow = run_dietml(df, local_fit_threshold=0, **kwargs)
+    monkeypatch.setattr(dietml, "LOCAL_FIT_MAX_ROWS", 0)
+    slow = run_dietml(df, **kwargs)
     assert fast.best_params == slow.best_params
     # same parity pin as the regression test: identical metric sets +
     # bit-identical null model; estimates ballpark (different final engine)
@@ -727,17 +748,13 @@ def test_local_fast_path_matches_pyspark_selection_classification(spark):
         assert abs(f_est[mname] - s_est[mname]) < 0.2, mname
 
 
-def test_reprep_per_fold_quantifies_cv_optimism(spark):
+def test_reprep_per_fold_quantifies_cv_optimism(bike):
     """reprep_per_fold=True re-estimates the recipe inside each fold
     (tidymodels semantics); the run completes with the same protocol and
     candidate list, and the per-fold-prepped CV scores differ from the
     shared-recipe approximation (the delta the leakage-contract note
-    documents). Uses the reference bike_share fixture."""
-    df = (
-        spark.read.option("header", True).option("inferSchema", True).csv(BIKE)
-        .withColumnRenamed("instant", "subject_id")
-        .withColumnRenamed("cnt", "feature_of_interest")
-    )
+    documents). Uses the bike_share frame."""
+    df = bike
     kwargs = dict(
         feature_type="numeric", model="ridge", folds=3, cv_repeats=1,
         tune_length=2, metric="rmse", seed=7,
@@ -786,3 +803,50 @@ def test_three_class_dietml_selects_on_roc_auc(spark):
     fr = res.full_results.set_index(".metric")
     assert np.isfinite(fr.loc["roc_auc", "estimate"])
     assert fr.loc["roc_auc", "estimate"] > 0.5
+
+
+@pytest.mark.parametrize("model", ["lasso", "rf"])
+def test_full_results_rescore_from_raw_predictions(spark, model):
+    """One scorer for both fit engines: the final metrics are the metric set
+    of raw_predictions' test rows, for a pyspark.ml fit (lasso) and a
+    numpy-forest fit (rf under LOCAL_FIT_MAX_ROWS)."""
+    res = run_dietml(
+        _classification_parity_frame(spark), feature_type="factor", model=model,
+        folds=2, cv_repeats=1, tune_length=1, num_trees=10, seed=4,
+    )
+    test = res.raw_predictions[res.raw_predictions[".model_input_type"] == "test"]
+    levels = ["neg", "pos"]
+    again = classification_metrics(
+        test["feature_of_interest"].to_numpy(),
+        test[".pred_class"].to_numpy(),
+        probs=test[[f".pred_{c}" for c in levels]].to_numpy(),
+        class_levels=levels,
+        event_class=levels[0],
+    )
+    est = res.full_results.set_index(".metric")["estimate"]
+    assert sorted(est.index) == sorted(again)
+    np.testing.assert_array_equal(
+        est[sorted(again)].to_numpy(), [again[k] for k in sorted(again)]
+    )
+
+
+# Spark jobs of this run when every scored fold ran Spark-side metric
+# aggregations (a confusion-matrix groupBy plus the midrank AUC's quantile,
+# bucket-count and sum jobs, per fold)
+SPARK_SCORED_BINARY_LASSO_JOBS = 177
+
+
+def test_pyspark_ml_predictions_are_collected_once_per_fold(spark):
+    """A pyspark.ml fit's validation fold and its final train and test
+    predictions are each collected through one Arrow job and scored on the
+    driver, so the binary lasso run needs fewer Spark jobs than scoring
+    through Spark aggregations did."""
+    df = _classification_parity_frame(spark)
+    tracker = spark.sparkContext.statusTracker()
+    before = max(tracker.getJobIdsForGroup() or [0])
+    run_dietml(
+        df, feature_type="factor", model="lasso", folds=3, cv_repeats=1,
+        tune_length=3, metric="bal_accuracy", seed=4, tune_time_min=60.0,
+    )
+    jobs = max(tracker.getJobIdsForGroup() or [0]) - before
+    assert jobs < SPARK_SCORED_BINARY_LASSO_JOBS, jobs

@@ -81,7 +81,8 @@ def test_mars_rejects_unknown_prune_method():
         mars_fit(X, y, False, prune_method="exhaustive")
 
 
-def test_run_dietml_mars_regression(spark):
+def test_run_dietml_mars_regression(spark, monkeypatch):
+    from taxahfe_spark import dietml
     from taxahfe_spark.dietml import run_dietml
 
     rng = np.random.default_rng(11)
@@ -97,8 +98,9 @@ def test_run_dietml_mars_regression(spark):
     )
     kw = dict(
         feature_type="numeric", model="mars", folds=2, cv_repeats=1,
-        tune_length=2, metric="rmse", seed=5, mars_bags=3,
+        tune_length=2, metric="rmse", seed=5,
     )
+    monkeypatch.setattr(dietml, "MARS_BAGS", 3)
     r1 = run_dietml(df, **kw)
     r2 = run_dietml(df, **kw)
     assert r1.best_params == r2.best_params
@@ -108,7 +110,8 @@ def test_run_dietml_mars_regression(spark):
     assert "num_terms" in r1.best_params
 
 
-def test_run_dietml_mars_classification_with_shap(spark):
+def test_run_dietml_mars_classification_with_shap(spark, monkeypatch):
+    from taxahfe_spark import dietml
     from taxahfe_spark.dietml import run_dietml
 
     rows = [
@@ -123,9 +126,10 @@ def test_run_dietml_mars_classification_with_shap(spark):
     df = spark.createDataFrame(
         rows, "subject_id string, a double, b double, feature_of_interest string"
     )
+    monkeypatch.setattr(dietml, "MARS_BAGS", 3)
     res = run_dietml(
         df, feature_type="factor", model="mars", folds=2, cv_repeats=1,
-        tune_length=2, metric="bal_accuracy", seed=6, mars_bags=3, shap=True,
+        tune_length=2, metric="bal_accuracy", seed=6, shap=True,
     )
     fr = res.full_results.set_index(".metric")
     assert fr.loc["bal_accuracy", "estimate"] > fr.loc["bal_accuracy", "null_model_avg"]
@@ -134,15 +138,17 @@ def test_run_dietml_mars_classification_with_shap(spark):
     assert res.shap_ranking.iloc[0]["feature"] == "a"
 
 
-def test_run_dietml_mars_above_threshold_raises(spark):
+def test_run_dietml_mars_above_threshold_raises(spark, monkeypatch):
+    from taxahfe_spark import dietml
     from taxahfe_spark.dietml import run_dietml
 
     rows = [(f"s{i}", float(i), float(i % 3), float(i % 5)) for i in range(60)]
     df = spark.createDataFrame(
         rows, "subject_id string, a double, b double, feature_of_interest double"
     )
+    monkeypatch.setattr(dietml, "LOCAL_FIT_MAX_ROWS", 0)
     with pytest.raises(NotImplementedError, match="single-node"):
         run_dietml(
             df, feature_type="numeric", model="mars", folds=2, cv_repeats=1,
-            tune_length=1, seed=1, local_fit_threshold=0,
+            tune_length=1, seed=1,
         )

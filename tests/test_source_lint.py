@@ -106,3 +106,18 @@ def test_tools_and_tests_derive_the_checkout_from_their_own_file():
                 ):
                     found.append(f"{path.relative_to(ROOT)}:{node.lineno} {node.value}")
     assert not found, found
+
+
+def test_metrics_module_imports_no_spark():
+    """dietML scores every model on the driver from collected predictions,
+    so the metric module is numpy only: a Spark import here would be a
+    second, Spark-side implementation of the same formulas."""
+    path = ROOT / "taxahfe_spark" / "functions" / "metrics.py"
+    imported = []
+    for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+        if isinstance(node, ast.Import):
+            imported += [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom) and node.module:
+            imported.append(node.module)
+    spark = [m for m in imported if m.split(".")[0] == "pyspark"]
+    assert not spark, spark

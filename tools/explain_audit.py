@@ -264,7 +264,6 @@ def main() -> None:
         return re.findall(r"windowspecdefinition\(\w+#\d+L? (?:ASC|DESC)", p)
 
     from taxahfe_spark.dietml import fold_assignments, stratified_split
-    from taxahfe_spark.functions.metrics import midrank_frame
 
     ev_num = ev.select(
         F.col("event_id").cast("string").alias("subject_id"),
@@ -274,13 +273,6 @@ def main() -> None:
     check("dietML strata: no unpartitioned window", not unpartitioned_windows(p))
     p = plan(fold_assignments(ev_num, feature_type="numeric", folds=3, repeats=2))
     check("dietML folds: no unpartitioned window", not unpartitioned_windows(p))
-    pred = ev.select(
-        F.when(F.col("event_type") == "click", "a").otherwise("b").alias("truth"),
-        (F.col("value") / (F.col("value") + 1)).alias("prob"),
-    )
-    p = plan(midrank_frame(pred, "truth", "prob", "a"))
-    check("AUC midranks: no unpartitioned window", not unpartitioned_windows(p))
-    check("AUC midranks: no SinglePartition exchange", "SinglePartition" not in p)
 
     # 9. IVF ANN: the inverted-list probing is fused into the corpus scan —
     #    zero Exchange before the mapInPandas scorer (the only shuffle in the
