@@ -24,6 +24,7 @@ import zlib
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from taxahfe_spark import session
 from taxahfe_spark.tokens import words
 
 
@@ -36,7 +37,6 @@ def exact_dedup(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    dup_broadcast_max: int = 5_000_000,
 ) -> DataFrame:
     """Keep one row (min id) per exact normalized-text group.
 
@@ -45,8 +45,9 @@ def exact_dedup(
     the duplicate fraction is modest — so unique rows (the bulk of the
     corpus) are kept IN PLACE via a broadcast anti join: document bodies
     never enter an exchange. Duplicate-group keepers come back via a
-    broadcast semi join on (hash, min_id). Above ``dup_broadcast_max`` dup
-    groups (extreme-duplication regime) both joins fall back to shuffles —
+    broadcast semi join on (hash, min_id). Above
+    ``session.BROADCAST_MAX_ROWS`` dup groups (extreme-duplication regime)
+    both joins fall back to shuffles —
     the guard makes that switch explicit. Hash-keyed (64-bit) rather than
     collision-exact by design; dedup_sequences documents the collision-exact
     two-phase variant.
@@ -59,7 +60,7 @@ def exact_dedup(
         .select("__k", id_col)
         .persist()
     )
-    small = dup_keep.count() <= dup_broadcast_max
+    small = dup_keep.count() <= session.BROADCAST_MAX_ROWS
     anti_right = dup_keep.select("__k")
     semi_right = dup_keep
     if small:

@@ -35,13 +35,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from taxahfe_spark import session
+
 
 def bigram_logprob(
     seqs: DataFrame,
     tokens_col: str = "tokens",
     id_col: str = "doc_id",
     lam: float = 0.3,
-    vocab_broadcast_max: int = 5_000_000,
     materialize: bool = True,
 ) -> DataFrame:
     """Per-document mean interpolated bigram log-probability.
@@ -49,7 +50,8 @@ def bigram_logprob(
     Returns (id_col, n_tok long, mean_logp double ROUND 6). Empty docs
     emit no row (the unigram_logprob convention). ``lam`` is the unigram
     interpolation weight; the unigram lookup broadcasts while the distinct
-    vocabulary stays under ``vocab_broadcast_max`` ids, else AQE decides.
+    vocabulary stays within ``session.BROADCAST_MAX_ROWS`` ids, else AQE
+    decides.
 
     ``materialize=True`` (default) eagerly localCheckpoints the result so
     the unigram and per-doc-pair caches can be released before returning
@@ -67,7 +69,7 @@ def bigram_logprob(
     uni = tok.groupBy("__t").agg(F.count(F.lit(1)).alias("__cu")).persist()
     try:
         total = uni.agg(F.sum("__cu")).collect()[0][0] or 0
-        small = uni.count() <= vocab_broadcast_max
+        small = uni.count() <= session.BROADCAST_MAX_ROWS
         uni_r = F.broadcast(uni) if small else uni
 
         # per-document DISTINCT-pair counts, one corpus pass: the r7 shape

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from taxahfe_spark import session
 from taxahfe_spark.tokens import words
 
 STOPWORDS = {
@@ -127,7 +128,6 @@ def contamination_score(
     text_col: str = "text",
     id_col: str = "doc_id",
     bench_text_col: str | None = None,
-    bench_broadcast_max: int = 5_000_000,
 ) -> DataFrame:
     """Benchmark decontamination: per-document fraction of distinct word
     n-grams that appear anywhere in a benchmark/eval corpus —
@@ -140,8 +140,8 @@ def contamination_score(
     training corpus is the 100 TB side), so the training side pays one
     n-gram explode + a broadcast LEFT SEMI probe and one groupBy(id):
     no shuffle carries document text, and the corpus is scanned once.
-    Above ``bench_broadcast_max`` distinct benchmark grams (someone passed
-    a corpus, not a benchmark) the probe falls back to a shuffle semi join
+    Above ``session.BROADCAST_MAX_ROWS`` distinct benchmark grams (someone
+    passed a corpus, not a benchmark) the probe falls back to a shuffle semi join
     keyed on xxhash64(gram) — the exchange then carries (id, 8-byte key)
     pairs only, never gram strings or text, at a ~2^-64-per-pair false-match
     risk documented here instead of an un-guarded driver OOM.
@@ -150,7 +150,7 @@ def contamination_score(
     bench_ng = _word_ngrams(benchmark, [], bench_text_col, n).distinct().persist()
     doc_ng = _word_ngrams(docs, [id_col], text_col, n)
     totals = doc_ng.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_ngrams"))
-    if bench_ng.count() <= bench_broadcast_max:
+    if bench_ng.count() <= session.BROADCAST_MAX_ROWS:
         probed = doc_ng.join(F.broadcast(bench_ng), "ng", "left_semi")
     else:
         probed = (

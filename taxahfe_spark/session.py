@@ -46,13 +46,23 @@ from pyspark.sql.types import StructType
 # 30.2 to 23.2 s over 8 alternating benchmark pairs (4-vCPU VM).
 CODEGEN_CACHE_ENTRIES = 1000
 
+# Rows up to which a corpus operator broadcasts a hash or key set (dup
+# hashes, vocabularies, an eval cut, benchmark n-grams) instead of a shuffle
+# join; read at call time. Not a driver_side gate: a broadcast of a small set
+# is the at-scale plan, so TAXAHFE_DISTRIBUTED=1 leaves it on.
+BROADCAST_MAX_ROWS = 5_000_000
+
 
 def driver_side(size: int, limit: int) -> bool:
     """The one driver-vs-distributed policy: work of ``size`` units runs on
-    the driver when it is at most ``limit`` (each caller's named constant),
-    unless ``TAXAHFE_DISTRIBUTED=1`` pins every caller to its distributed
-    path — the parity tests and the scaling runner need those paths at
-    small sizes."""
+    the driver (or in one task) when it is at most ``limit``, unless
+    ``TAXAHFE_DISTRIBUTED=1`` pins every caller to its distributed path —
+    the parity tests and the scaling runner need those paths at small
+    sizes. Callers: the rollup (``taxonomy.DRIVER_MAX_ROWS``), the
+    competition pool (``competition.DRIVER_STAGE_MAX_CELLS``), the BPE
+    trainer (``bpe.DRIVER_MAX_WORDS``) and the four ranks of
+    ``tokens._running_total`` (``VOCAB_RANK_MAX_ROWS``: build_vocab,
+    remap_tokens; ``DOC_RANK_MAX_ROWS``: epoch_shuffle, pack_sequences)."""
     return size <= limit and os.environ.get("TAXAHFE_DISTRIBUTED") != "1"
 
 

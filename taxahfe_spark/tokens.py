@@ -18,13 +18,86 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from taxahfe_spark.session import local_frame
+from taxahfe_spark import session
 from taxahfe_spark.taxonomy import explode_ancestors
 
 # ASCII-only split so word boundaries are engine-independent (the same
 # pattern means the same thing to Spark, DuckDB, and Python re)
 TOKEN_RE = r"[^a-z0-9]+"
+
+# Rank gates (session.driver_side) of _running_total's callers: up to this
+# many rows, one task's window; above it, the chunked window.
+VOCAB_RANK_MAX_ROWS = 1 << 18  # build_vocab, remap_tokens
+DOC_RANK_MAX_ROWS = 1 << 16  # epoch_shuffle (so holdout_split), pack_sequences
+# monotone chunks: a word's or md5 key's first chars (256 md5 chunks), a
+# string doc id's first chars, and the token id's high bits (<= 2^16 chunks
+# of <= 2^16 int32 ids)
+PREFIX_CHARS = 2
+DOC_ID_PREFIX_CHARS = 6
+TOKEN_ID_CHUNK_BITS = 16
+
+
+def _running_total(
+    df: DataFrame,
+    order: list,
+    chunk: F.Column,
+    limit: int,
+    keys: list[str] | tuple = (),
+    weight: str | None = None,
+) -> DataFrame:
+    """``df`` plus ``__before``: the sum of ``weight`` (a bigint row count
+    when ``None``) over the rows strictly before each row, within ``keys``
+    and in ``order`` (ascending, nulls first).
+
+    ``chunk`` must be monotone in ``order``, so each chunk's start is the
+    sum of the chunks before it. One job collects the per-(keys, chunk)
+    totals. Up to ``limit`` rows (``session.driver_side``) one window per
+    key group does the rest; above it the chunk offsets join as a broadcast
+    local frame (null-safe, a null chunk first) and the window partitions
+    by ``keys + chunk``. Both branches agree on every row when ``order`` is
+    total.
+    """
+    keys = list(keys)
+    aggs = [F.count(F.lit(1)).alias("__rows")]
+    if weight is not None:
+        aggs.append(F.sum(weight).alias("__sum"))
+    per_chunk = df.groupBy(*keys, chunk.alias("__chunk")).agg(*aggs)
+    stats = per_chunk.collect()
+
+    def before(w: Window) -> F.Column:
+        if weight is None:
+            return (F.row_number().over(w) - 1).cast("long")
+        frame = w.rowsBetween(Window.unboundedPreceding, -1)
+        return F.coalesce(F.sum(weight).over(frame), F.lit(0))
+
+    if session.driver_side(sum(r["__rows"] for r in stats), limit):
+        # bounded-by-construction unpartitioned window: the gate proves at
+        # most ``limit`` rows reach it
+        return df.withColumn(
+            "__before", before(Window.partitionBy(*keys).orderBy(*order))
+        )
+    amount = "__rows" if weight is None else "__sum"
+    acc: dict = {}
+    offsets = []
+    for r in sorted(stats, key=lambda r: (r["__chunk"] is not None, r["__chunk"])):
+        g = tuple(r[k] for k in keys)
+        offsets.append((*g, r["__chunk"], acc.get(g, 0)))
+        acc[g] = acc.get(g, 0) + (r[amount] or 0)
+    cols = keys + ["__chunk"]
+    names = [f"__o{i}" for i in range(len(cols))]
+    off_schema = per_chunk.select(
+        *[F.col(c).alias(n) for c, n in zip(cols, names)], F.col(amount).alias("__off")
+    ).schema
+    off = F.broadcast(session.local_frame(df.sparkSession, offsets, off_schema))
+    chunked = df.withColumn("__chunk", chunk)
+    w = Window.partitionBy(*cols).orderBy(*order)
+    return (
+        chunked.join(off, [chunked[c].eqNullSafe(off[n]) for c, n in zip(cols, names)])
+        .withColumn("__before", F.col("__off") + before(w))
+        .drop("__chunk", "__off", *names)
+    )
 
 
 def words(df: DataFrame, text_col: str = "text", pattern: str = TOKEN_RE) -> DataFrame:
@@ -33,23 +106,18 @@ def words(df: DataFrame, text_col: str = "text", pattern: str = TOKEN_RE) -> Dat
     return df.withColumn("words", F.filter(arr, lambda w: w != ""))
 
 
-def build_vocab(
-    df_words: DataFrame, prefix_len: int = 2, small_vocab: int = 1 << 18
-) -> DataFrame:
+def build_vocab(df_words: DataFrame) -> DataFrame:
     """Deterministic vocabulary (word -> token_id int32, dense 0-based by
     lexicographic word order). Engine-independent: any system sorting the
     same distinct words assigns the same ids (used by the DuckDB oracle).
 
-    Scale shape: NO global single-partition sort above ``small_vocab`` ids.
-    Words are ranked within their ``prefix_len``-char prefix partitions
-    (parallel window) and offset by the cumulative per-prefix counts (a
-    prefix-universe-sized driver list). Because a string's first chars
-    dominate lexicographic order, concatenating per-prefix ranks in prefix
-    order IS the global order — identical ids to a global sort, at
-    web-corpus vocab sizes (10^8 distinct words over ~10^3 prefixes). Small
-    vocabularies take the one-task global window instead: the prefix
-    machinery's extra shuffle+join costs more than sorting a few thousand
-    rows on one core (both branches produce identical ids).
+    Scale shape (:func:`_running_total`): above ``VOCAB_RANK_MAX_ROWS``
+    ids, words are ranked within their ``PREFIX_CHARS``-char prefix
+    (parallel windows) and offset by the per-prefix counts. A string's
+    first chars dominate lexicographic order, so the prefix is a monotone
+    chunk and the ids equal a global sort's, at web-corpus vocab sizes
+    (10^8 distinct words over ~10^3 prefixes). Below it one task's window
+    costs less than the prefix shuffle + join; both give identical ids.
     """
     # the distinct-words shuffle feeds BOTH the prefix-count decision and the
     # ranking (and, via tokenize, repeated broadcast rebuilds): cache it.
@@ -57,31 +125,10 @@ def build_vocab(
     distinct = (
         df_words.select(F.explode("words").alias("word")).distinct().persist()
     )
-    pfx = F.substring("word", 1, prefix_len)
-    counts = distinct.groupBy(pfx.alias("__p")).count().collect()
-    total = sum(r["count"] for r in counts)
-    if total <= small_vocab:
-        # bounded-by-construction unpartitioned window: the count() gate
-        # above proves <= small_vocab (2^18) distinct words reach this sort,
-        # so the one-task WindowExec (and its warning) is benign here
-        w = Window.orderBy("word")
-        return distinct.select(
-            "word", (F.row_number().over(w) - 1).cast("int").alias("token_id")
-        )
-    offsets, acc = [], 0
-    for r in sorted(counts, key=lambda r: r["__p"]):
-        offsets.append((r["__p"], acc))
-        acc += r["count"]
-    off_df = local_frame(df_words.sparkSession, offsets, "__p string, __off bigint")
-    w = Window.partitionBy("__p").orderBy("word")
-    return (
-        distinct.withColumn("__p", pfx)
-        .join(F.broadcast(off_df), "__p")
-        .select(
-            "word",
-            (F.row_number().over(w) - 1 + F.col("__off")).cast("int").alias("token_id"),
-        )
+    ranked = _running_total(
+        distinct, ["word"], F.substring("word", 1, PREFIX_CHARS), VOCAB_RANK_MAX_ROWS
     )
+    return ranked.select("word", F.col("__before").cast("int").alias("token_id"))
 
 
 def tokenize(
@@ -120,7 +167,6 @@ def dedup_sequences(
     df: DataFrame,
     tokens_col: str = "tokens",
     id_col: str = "doc_id",
-    dup_broadcast_max: int = 5_000_000,
 ) -> DataFrame:
     """Exact dedup over pre-tokenized sequences — the north-rule input shape
     (doc_id, tokens array<int32>, ...). Keeps the min-id row per DISTINCT
@@ -135,9 +181,10 @@ def dedup_sequences(
     repeated-hash groups are re-partitioned for the phase-2 full-array
     tie-break — so the result is EXACT even under 64-bit hash collisions,
     unlike plain hash-keyed dedup (exact_dedup documents that trade the
-    other way). When the dup-hash set exceeds ``dup_broadcast_max`` rows
-    (an extreme-duplication corpus where the dup universe is itself
-    corpus-scale), the joins fall back to shuffles — unavoidable there,
+    other way). When the dup-hash set exceeds
+    ``session.BROADCAST_MAX_ROWS`` rows (an extreme-duplication corpus
+    where the dup universe is itself corpus-scale), the joins fall back to
+    shuffles — unavoidable there,
     and the guard makes the regime switch explicit instead of OOMing the
     driver. The source is scanned three times (counts pass, anti-join keep
     pass, semi-join dup pass): scans parallelize linearly at 100 TB,
@@ -152,7 +199,7 @@ def dedup_sequences(
         .select("__h")
         .persist()
     )
-    small = dup_hashes.count() <= dup_broadcast_max
+    small = dup_hashes.count() <= session.BROADCAST_MAX_ROWS
     right = F.broadcast(dup_hashes) if small else dup_hashes
     uniq = keyed.join(right, "__h", "left_anti")
     dup = keyed.join(right, "__h", "left_semi")
@@ -170,7 +217,6 @@ def substring_dedup(
     tokens_col: str = "tokens",
     id_col: str = "doc_id",
     k: int = 8,
-    dup_broadcast_max: int = 5_000_000,
 ) -> DataFrame:
     """Duplicated-substring removal over pre-tokenized sequences: drop every
     token position covered by a length-``k`` token window that occurs MORE
@@ -192,9 +238,9 @@ def substring_dedup(
     Scale shape (10^12 sequences): the exchanged gram stream is
     (id, pos, xxhash64) — 8-byte hashes, never token arrays — and the
     groupBy count is map-side combined. The repeated-hash set is
-    duplication-sized; under ``dup_broadcast_max`` rows it broadcasts and
-    the per-doc hit probe is shuffle-free, above it the semi join falls
-    back to a hash-key shuffle (still array-free). Arrays move exactly
+    duplication-sized; up to ``session.BROADCAST_MAX_ROWS`` rows it
+    broadcasts and the per-doc hit probe is shuffle-free, above it the semi
+    join falls back to a hash-key shuffle (still array-free). Arrays move exactly
     once: through the final Arrow mask stage, which is the output writer.
     Collision honesty: a 64-bit collision can mark a span as spuriously
     repeated (removing ~k good tokens); at 10^12 windows that is ~1e5
@@ -232,7 +278,7 @@ def substring_dedup(
         .select("__gh")
         .persist()
     )
-    small = dup_hashes.count() <= dup_broadcast_max
+    small = dup_hashes.count() <= session.BROADCAST_MAX_ROWS
     right = F.broadcast(dup_hashes) if small else dup_hashes
     starts = (
         grams.join(right, "__gh", "left_semi")
@@ -242,8 +288,6 @@ def substring_dedup(
     joined = df.select(F.col(id_col).alias("__id"), tokens_col).join(
         starts, "__id", "left"
     )
-
-    from pyspark.sql import types as T
 
     out_schema = T.StructType(
         [
@@ -296,7 +340,6 @@ def unigram_logprob(
     seqs: DataFrame,
     tokens_col: str = "tokens",
     id_col: str = "doc_id",
-    vocab_broadcast_max: int = 5_000_000,
 ) -> DataFrame:
     """Unigram-LM document scoring over pre-tokenized sequences: fit token
     frequencies on the corpus itself, then score each doc by its mean token
@@ -310,7 +353,7 @@ def unigram_logprob(
     TOKEN IDS ONLY (8-byte rows, never arrays) against the broadcast
     frequency table, and one groupBy re-aggregates per doc. Vocabularies
     are bounded by the tokenizer (10^5-10^6 ids) so the broadcast regime is
-    the normal one; above ``vocab_broadcast_max`` distinct ids the join
+    the normal one; above ``session.BROADCAST_MAX_ROWS`` distinct ids the join
     falls back to a shuffle on token_id. Empty docs emit no token rows and
     are absent from the output — mirroring the contamination_score
     convention that zero-content docs produce no score row.
@@ -318,7 +361,7 @@ def unigram_logprob(
     tok = seqs.select(F.col(id_col).alias("__id"), F.explode(tokens_col).alias("__t"))
     freq = tok.groupBy("__t").agg(F.count(F.lit(1)).alias("__c")).persist()
     total = freq.agg(F.sum("__c")).collect()[0][0] or 0
-    small = freq.count() <= vocab_broadcast_max
+    small = freq.count() <= session.BROADCAST_MAX_ROWS
     right = F.broadcast(freq) if small else freq
     scored = tok.join(right, "__t", "inner").withColumn(
         "__logp", F.log(F.col("__c") / F.lit(float(total)))
@@ -594,8 +637,6 @@ def pack_sequences(
     id_col: str = "doc_id",
     ntok_col: str = "n_tok",
     group_col: str | None = "source",
-    prefix_len: int = 6,
-    small_n: int = 1 << 16,
 ) -> DataFrame:
     """Sequence packing: assign documents to fixed-token-budget bins for
     context-window training batches.
@@ -607,23 +648,19 @@ def pack_sequences(
     used when exact first-fit is not worth a sequential pass). Adds ``bin``
     and ``bin_pos``.
 
-    Scale shape (same construction as build_vocab): the running token sum is
-    NEVER a per-group global window above ``small_n`` rows — at web scale
-    one `crawl` source is the whole corpus and a per-source window is a
-    single task. Instead, ids are partitioned into MONOTONE chunks — char
-    prefixes for string ids (prefix(a) <= prefix(b) whenever a <= b),
-    approxQuantile-edge buckets for numeric ids — the running sum runs
-    within each chunk (parallel windows) and a chunk-order cumulative token
-    offset (a chunk-universe-sized broadcast) lifts it to the global value.
-    Monotonicity makes per-chunk sums + offsets reproduce the global running
-    sum EXACTLY, so both branches produce identical bins. The final bin_pos
-    window partitions by (group, bin), which is budget-bounded by
+    Scale shape (:func:`_running_total`): above ``DOC_RANK_MAX_ROWS`` rows
+    the running token sum is NEVER a per-group window — at web scale one
+    `crawl` source is the whole corpus, and its window one task. Ids fall
+    into MONOTONE chunks (``DOC_ID_PREFIX_CHARS``-char prefixes of string
+    ids, approxQuantile-edge buckets of numeric ids), summed in parallel
+    windows and lifted by chunk-order token offsets: the same bins exactly.
+    The bin_pos window partitions by (group, bin), budget-bounded by
     construction.
     """
     keys = [group_col] if group_col else []
     dtype = dict(seqs.dtypes)[id_col]
     if dtype in ("string", "varchar"):
-        chunk = F.substring(F.col(id_col), 1, prefix_len)
+        chunk = F.substring(F.col(id_col), 1, DOC_ID_PREFIX_CHARS)
     else:
         qs = [i / 64 for i in range(1, 64)]
         edges = sorted(set(seqs.approxQuantile(id_col, qs, 0.001)))
@@ -634,45 +671,9 @@ def pack_sequences(
             edges,
             F.lit(0),
         )
-    per_chunk = seqs.groupBy(*keys, chunk.alias("__chunk")).agg(
-        F.count(F.lit(1)).alias("__cnt"), F.sum(ntok_col).alias("__tok")
-    )
-    stats = per_chunk.collect()
-    total = sum(r["__cnt"] for r in stats)
-    if total <= small_n:
-        w = Window.partitionBy(*keys).orderBy(F.col(id_col).asc())
-        cum_before = F.coalesce(
-            F.sum(ntok_col).over(w.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        )
-        out = seqs.withColumn("bin", F.floor(cum_before / budget))
-    else:
-        acc: dict = {}
-        offsets = []
-        for r in sorted(
-            stats,
-            key=lambda r: (
-                str(r[group_col]) if group_col else "", r["__chunk"]
-            ),
-        ):
-            g = r[group_col] if group_col else ""
-            offsets.append(((g,) if group_col else ()) + (r["__chunk"], acc.get(g, 0)))
-            acc[g] = acc.get(g, 0) + (r["__tok"] or 0)
-        off_schema = (
-            per_chunk.select(*keys, "__chunk", F.col("__tok").alias("__off")).schema
-        )
-        off_df = local_frame(seqs.sparkSession, offsets, off_schema)
-        w = Window.partitionBy(*keys, "__chunk").orderBy(F.col(id_col).asc())
-        local_before = F.coalesce(
-            F.sum(ntok_col).over(w.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        )
-        out = (
-            seqs.withColumn("__chunk", chunk)
-            .join(F.broadcast(off_df), keys + ["__chunk"])
-            .withColumn("bin", F.floor((F.col("__off") + local_before) / budget))
-            .drop("__chunk", "__off")
-        )
+    out = _running_total(
+        seqs, [F.col(id_col).asc()], chunk, DOC_RANK_MAX_ROWS, keys, weight=ntok_col
+    ).withColumn("bin", F.floor(F.col("__before") / budget)).drop("__before")
     wb = Window.partitionBy(*keys, "bin").orderBy(F.col(id_col).asc())
     return out.withColumn("bin_pos", F.row_number().over(wb) - 1)
 
@@ -724,21 +725,20 @@ def epoch_shuffle(
     epoch: int = 0,
     id_col: str = "doc_id",
     out_col: str = "shuffle_pos",
-    small_n: int = 1 << 16,
 ) -> DataFrame:
     """Deterministic global training order for one epoch: every row gets a
-    dense 0-based position ranked by ``md5(id:seed:epoch)`` — a different
-    but reproducible permutation per epoch, a pure function of (id, seed,
-    epoch). Layout-invariant and engine-portable (the DuckDB oracle replays
-    it with the same md5), so a resumed or re-scheduled run reads the same
-    order — the data-order reproducibility contract LLM training needs.
+    dense 0-based bigint position ranked by ``md5(id:seed:epoch)`` — a
+    different but reproducible permutation per epoch, a pure function of
+    (id, seed, epoch). Layout-invariant and engine-portable (the DuckDB
+    oracle replays it with the same md5), so a resumed or re-scheduled run
+    reads the same order — the data-order reproducibility contract LLM
+    training needs.
 
-    Scale shape (same construction as build_vocab / pack_sequences): above
-    ``small_n`` rows there is NO global one-task window. The md5 hex key is
-    uniform, so its 2-char prefix partitions the keyspace into 256 MONOTONE
-    chunks: rank within prefix (parallel window) + cumulative prefix counts
-    (a 256-row driver list) == the global rank, exactly. Below ``small_n``
-    the single window is cheaper; both branches produce identical positions.
+    Scale shape (:func:`_running_total`): above ``DOC_RANK_MAX_ROWS`` rows
+    there is NO global one-task window: the uniform md5 key's
+    ``PREFIX_CHARS``-char prefix splits it into 256 MONOTONE chunks, ranked
+    in parallel and offset by a 256-row driver list. Below it the single
+    window is cheaper; both give identical positions.
     """
     key = F.md5(
         F.concat_ws(
@@ -746,24 +746,10 @@ def epoch_shuffle(
         )
     )
     keyed = df.withColumn("__k", key)
-    pfx = F.substring("__k", 1, 2)
-    counts = keyed.groupBy(pfx.alias("__p")).count().collect()
-    total = sum(r["count"] for r in counts)
-    if total <= small_n:
-        w = Window.orderBy("__k", F.col(id_col).asc())
-        return keyed.withColumn(out_col, F.row_number().over(w) - 1).drop("__k")
-    offsets, acc = [], 0
-    for r in sorted(counts, key=lambda r: r["__p"]):
-        offsets.append((r["__p"], acc))
-        acc += r["count"]
-    off_df = local_frame(df.sparkSession, offsets, "__p string, __off bigint")
-    w = Window.partitionBy("__p").orderBy("__k", F.col(id_col).asc())
-    return (
-        keyed.withColumn("__p", pfx)
-        .join(F.broadcast(off_df), "__p")
-        .withColumn(out_col, F.row_number().over(w) - 1 + F.col("__off"))
-        .drop("__k", "__p", "__off")
-    )
+    chunk = F.substring("__k", 1, PREFIX_CHARS)
+    order = ["__k", F.col(id_col).asc()]
+    ranked = _running_total(keyed, order, chunk, DOC_RANK_MAX_ROWS)
+    return ranked.withColumn(out_col, F.col("__before")).drop("__k", "__before")
 
 
 def incremental_dedup_sequences(
@@ -771,7 +757,6 @@ def incremental_dedup_sequences(
     corpus: DataFrame,
     tokens_col: str = "tokens",
     id_col: str = "doc_id",
-    dup_broadcast_max: int = 5_000_000,
 ) -> DataFrame:
     """Incremental ingestion dedup: keep rows of ``new`` that are exact
     duplicates neither WITHIN the batch nor OF the existing ``corpus`` —
@@ -789,10 +774,7 @@ def incremental_dedup_sequences(
     unrelated corpus row drops the new row (~|new| x |corpus| / 2^64). The
     WITHIN-batch stage stays collision-exact via dedup_sequences.
     """
-    batch = dedup_sequences(
-        new, tokens_col=tokens_col, id_col=id_col,
-        dup_broadcast_max=dup_broadcast_max,
-    )
+    batch = dedup_sequences(new, tokens_col=tokens_col, id_col=id_col)
     corpus_hashes = corpus.select(
         F.xxhash64(F.col(tokens_col)).alias("__h")
     ).distinct()
@@ -839,7 +821,6 @@ def holdout_split(
     seed: int = 42,
     id_col: str = "doc_id",
     text_col: str = "text",
-    eval_broadcast_max: int = 5_000_000,
 ) -> DataFrame:
     """Dedup-aware eval-holdout creation: sample ~``frac`` of documents as
     the eval set (deterministic md5 rank, layout-invariant), then QUARANTINE
@@ -850,16 +831,16 @@ def holdout_split(
     Adds ``split`` in {'eval','quarantine','train'}. The eval membership is
     a pure function of (id, seed); the quarantine check goes through
     xxhash64(normalized text). The eval-side hash set is broadcast only
-    while the eval cut is at most ``eval_broadcast_max`` rows (k = ceil(n *
-    frac) is known exactly from the sizing count, so the gate is free): at
+    while the eval cut is at most ``session.BROADCAST_MAX_ROWS`` rows
+    (k = ceil(n * frac) is known exactly from the sizing count, so the gate
+    is free): at
     the 10^9+-doc scale a 1% eval cut is gigabytes, and force-broadcasting
     it would bypass Spark's size-based planning — above the gate the join
     falls back to an explicit shuffle on the 8-byte hash, the same
-    fallback convention as exact_dedup's ``dup_broadcast_max``.
+    fallback convention as exact_dedup.
     Hash-exact: a 64-bit collision quarantines an innocent row (~|eval| x
     |train| / 2^64) — the conservative failure direction for a holdout.
-    One count() job sizes the eval cut; ranking reuses epoch_shuffle's
-    prefix-chunked construction (no one-task window).
+    One count() job sizes the eval cut; ranking is epoch_shuffle's.
     """
     import math
 
@@ -872,7 +853,7 @@ def holdout_split(
     eval_hashes = (
         keyed.filter(F.col("__pos") < k).select(F.col("__h").alias("__eh")).distinct()
     )
-    if k <= eval_broadcast_max:
+    if k <= session.BROADCAST_MAX_ROWS:
         eval_hashes = F.broadcast(eval_hashes)
     marked = keyed.join(
         eval_hashes, keyed["__h"] == eval_hashes["__eh"], "left"
@@ -1024,7 +1005,6 @@ def remap_tokens(
     tokens_col: str = "tokens",
     id_col: str = "doc_id",
     unk_id: int = 0,
-    small_vocab: int = 1 << 18,
 ) -> DataFrame:
     """Vocabulary pruning + dense re-id: tokens occurring fewer than
     ``min_count`` times corpus-wide fold to ``unk_id``; surviving tokens
@@ -1033,24 +1013,20 @@ def remap_tokens(
     determinism contract). Returns (id_col, tokens array<int>, n_tok) with
     n_tok preserved (remapping never drops positions).
 
-    Scale shape: the old->new map is vocab-sized by definition (the
-    count-gated one-task ranking window carries build_vocab's bounded-by-
-    construction justification); arrays are rebuilt by the tokenize idiom
-    — posexplode -> broadcast map join -> array_sort((pos, id)) collect —
-    so the only shuffle keys are (doc, pos, id) scalars, never arrays.
+    Scale shape: the old->new map is vocab-sized by definition and ranked
+    like build_vocab's (:func:`_running_total`): one task's window up to
+    ``VOCAB_RANK_MAX_ROWS`` kept ids, above it ranks within monotone chunks
+    of the old id (``old >> TOKEN_ID_CHUNK_BITS``) plus chunk offsets.
+    Arrays are rebuilt by the tokenize idiom — posexplode -> broadcast map
+    join -> array_sort((pos, id)) collect — so the only shuffle keys are
+    (doc, pos, id) scalars, never arrays.
     """
     tok = seqs.select(F.col(id_col).alias("__id"), F.posexplode(tokens_col).alias("__pos", "__t"))
     counts = tok.groupBy("__t").agg(F.count(F.lit(1)).alias("__c"))
     kept = counts.filter(F.col("__c") >= min_count).select("__t").persist()
-    n_kept = kept.count()
-    if n_kept > small_vocab:
-        raise ValueError(
-            f"{n_kept} kept ids exceed the one-task ranking gate ({small_vocab}); "
-            "raise min_count or extend with the build_vocab prefix ranking"
-        )
-    # gate above proves <= small_vocab rows reach this one-task sort
-    w = Window.orderBy("__t")
-    idmap = kept.select("__t", F.row_number().over(w).cast("int").alias("__new"))
+    chunk = F.shiftright("__t", TOKEN_ID_CHUNK_BITS)
+    ranked = _running_total(kept, ["__t"], chunk, VOCAB_RANK_MAX_ROWS)
+    idmap = ranked.select("__t", (F.col("__before") + 1).cast("int").alias("__new"))
     remapped = tok.join(F.broadcast(idmap), "__t", "left").withColumn(
         "__new", F.coalesce("__new", F.lit(unk_id).cast("int"))
     )

@@ -2,16 +2,21 @@
 (VERDICT r5 task 4): tests/oracle_dietml.py re-derives fold assignment,
 every CV fit + RMSE, the pct-loss selection, and the final/null metric table
 with zero dietml.py / functions/rf.py code, and the engine must agree to
-float identity on the reference bike-share fixture.
+float identity on a bike-share day table: the seeded stand-in
+(tests/bike_share.py) always, and the reference's own fixture where it
+exists.
 
 Reference: lib/diet_ml_funcs.R:722-1027 (run_dietML grid tuning + last_fit).
 """
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
+from bike_share import bike_share_day
 from pyspark.sql import functions as F
 
 from oracle_dietml import (
@@ -42,13 +47,26 @@ def test_xxhash64_rederivation_matches_spark(spark):
         assert got == [spark_xxhash64_str_int(str(i), seed) for i in ids]
 
 
-@pytest.fixture(scope="module")
-def bike(spark):
-    """The bike-share fixture in a PINNED single-partition file-order layout
+@pytest.fixture(
+    scope="module",
+    params=[
+        "synthetic",
+        pytest.param(
+            "reference",
+            marks=pytest.mark.skipif(
+                not os.path.exists(BIKE), reason="reference bike_share fixture absent"
+            ),
+        ),
+    ],
+)
+def bike(spark, request):
+    """The bike-share day table (the seeded stand-in, or the reference's CSV
+    where it exists) in a PINNED single-partition file-order layout
     (oracle_dietml docstring: the fold-strata approxQuantile sketch is
     layout-sensitive, so the layout is part of the measurement), plus the
     oracle-injected hash split column."""
-    pdf = pd.read_csv(BIKE).rename(
+    day = bike_share_day() if request.param == "synthetic" else pd.read_csv(BIKE)
+    pdf = day.rename(
         columns={"instant": "subject_id", "cnt": "feature_of_interest"}
     )
     train_ids = hash_split_train_ids(

@@ -7,6 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from taxahfe_spark import session
 from taxahfe_spark.operators.dedup import (
     connected_components,
     exact_dedup,
@@ -221,8 +222,8 @@ def test_contamination_score_engineered(spark):
     assert got[3]["n_matched"] == 0 and got[3]["contamination"] == 0.0
 
 
-def test_contamination_shuffle_fallback_matches_broadcast(spark):
-    """bench_broadcast_max=0 forces the hashed shuffle semi join; values must
+def test_contamination_shuffle_fallback_matches_broadcast(spark, monkeypatch):
+    """BROADCAST_MAX_ROWS=0 forces the hashed shuffle semi join; values must
     equal the broadcast path exactly (the xxhash64 key is an 1:1 stand-in for
     the gram at test scale)."""
     bench = spark.createDataFrame(
@@ -238,8 +239,9 @@ def test_contamination_shuffle_fallback_matches_broadcast(spark):
         ["doc_id", "text"],
     )
     fast = contamination_score(docs, bench, n=3).orderBy("doc_id").collect()
+    monkeypatch.setattr(session, "BROADCAST_MAX_ROWS", 0)
     slow = (
-        contamination_score(docs, bench, n=3, bench_broadcast_max=0)
+        contamination_score(docs, bench, n=3)
         .orderBy("doc_id")
         .collect()
     )
@@ -671,21 +673,23 @@ def test_gopher_rules_reasons(spark):
     assert "low_alpha_ratio" in got[4]["reject_reasons"]
 
 
-def test_epoch_shuffle_dense_deterministic_and_epoch_varying(spark):
+def test_epoch_shuffle_dense_deterministic_and_epoch_varying(spark, monkeypatch):
     from taxahfe_spark.tokens import epoch_shuffle
 
     rows = [(i, "s") for i in range(300)]
     df = spark.createDataFrame(rows, "doc_id long, source string")
+    monkeypatch.delenv("TAXAHFE_DISTRIBUTED", raising=False)
     a = {r["doc_id"]: r["shuffle_pos"] for r in epoch_shuffle(df, seed=1, epoch=0).collect()}
     b = {r["doc_id"]: r["shuffle_pos"] for r in epoch_shuffle(df, seed=1, epoch=0).collect()}
     c = {r["doc_id"]: r["shuffle_pos"] for r in epoch_shuffle(df, seed=1, epoch=1).collect()}
     assert a == b                              # reproducible
     assert sorted(a.values()) == list(range(300))  # dense permutation
     assert a != c                              # epoch changes the order
-    # chunked branch (small_n=0) produces the IDENTICAL permutation
+    # chunked branch (TAXAHFE_DISTRIBUTED=1) produces the IDENTICAL permutation
+    monkeypatch.setenv("TAXAHFE_DISTRIBUTED", "1")
     d = {
         r["doc_id"]: r["shuffle_pos"]
-        for r in epoch_shuffle(df, seed=1, epoch=0, small_n=0).collect()
+        for r in epoch_shuffle(df, seed=1, epoch=0).collect()
     }
     assert d == a
 

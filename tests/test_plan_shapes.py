@@ -38,17 +38,18 @@ def test_chunk_sequences_is_narrow(spark):
     assert "Generate" in plan  # posexplode fan-out, not a join/shuffle
 
 
-def test_epoch_shuffle_chunked_branch_has_no_global_window(spark):
-    """Above small_n the rank window partitions by the md5 prefix — the
-    plan must show a partitioned Window (no 'Window [...]' over a
-    SinglePartition exchange)."""
+def test_epoch_shuffle_chunked_branch_has_no_global_window(spark, monkeypatch):
+    """Above DOC_RANK_MAX_ROWS (or under TAXAHFE_DISTRIBUTED=1) the rank
+    window partitions by the md5 prefix — the plan must show a partitioned
+    Window (no 'Window [...]' over a SinglePartition exchange)."""
     from taxahfe_spark.tokens import epoch_shuffle
 
     df = spark.createDataFrame([(i, "s") for i in range(400)], "doc_id long, source string")
-    plan = _plan(epoch_shuffle(df, seed=2, epoch=0, small_n=0))
+    monkeypatch.setenv("TAXAHFE_DISTRIBUTED", "1")
+    plan = _plan(epoch_shuffle(df, seed=2, epoch=0))
     # the global-sort smell is an Exchange SinglePartition feeding a Window
     assert "Exchange SinglePartition" not in plan, plan
-    assert "__p" in plan  # prefix-partitioned window + offset join
+    assert "__chunk" in plan  # prefix-partitioned window + offset join
 
 
 def test_quality_scoring_is_codegen_only(spark):

@@ -371,3 +371,64 @@ def test_competition_stage_executors_agree_property(spark, case):
     assert broadcast[:2] == ("broadcast", True)
     assert shuffle[:2] == ("shuffle", True)
     assert pool[2] == broadcast[2] == shuffle[2]
+
+
+# -- running total: one-task window vs chunked window -------------------------
+
+
+@st.composite
+def _running_total_cases(draw):
+    """(key type, keyed, weighted, rows): up to 30 (id, key, weight) rows
+    with unique ids, 0-3 key values of one type plus null keys, and
+    weights that may be null."""
+    key_type = draw(st.sampled_from(["string", "int"]))
+    n_groups = draw(st.integers(0, 3))
+    weighted = draw(st.booleans())
+    groups = [f"g{i}" if key_type == "string" else i for i in range(n_groups)]
+    ids = draw(st.lists(st.integers(-500, 500), max_size=30, unique=True))
+    rows = [
+        (
+            i,
+            draw(st.sampled_from(groups + [None])) if groups else None,
+            draw(st.one_of(st.none(), st.integers(0, 50))) if weighted else None,
+        )
+        for i in ids
+    ]
+    return key_type, n_groups > 0, weighted, rows
+
+
+@settings(max_examples=15, deadline=None)
+@given(_running_total_cases())
+def test_running_total_branches_agree_property(spark, case):
+    """tokens._running_total gives every row the same __before on its
+    one-task branch and its chunked branch (TAXAHFE_DISTRIBUTED=1), and
+    both equal a per-key running sum in id order."""
+    import os
+    from unittest import mock
+
+    from pyspark.sql import functions as F
+
+    from taxahfe_spark.tokens import _running_total
+
+    key_type, keyed, weighted, rows = case
+    df = spark.createDataFrame(rows, f"id int, g {key_type}, w int")
+
+    def run(distributed: bool):
+        with mock.patch.dict(os.environ):
+            os.environ.pop("TAXAHFE_DISTRIBUTED", None)
+            if distributed:
+                os.environ["TAXAHFE_DISTRIBUTED"] = "1"
+            out = _running_total(
+                df, ["id"], F.floor(F.col("id") / 100), 1 << 16,
+                keys=["g"] if keyed else (), weight="w" if weighted else None,
+            )
+            return {r["id"]: r["__before"] for r in out.collect()}
+
+    expected, acc = {}, {}
+    for i, g, w in sorted(rows):
+        g = g if keyed else None
+        expected[i] = acc.get(g, 0)
+        acc[g] = acc.get(g, 0) + ((w or 0) if weighted else 1)
+    one_task = run(False)
+    assert one_task == expected
+    assert run(True) == one_task

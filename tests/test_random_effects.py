@@ -9,9 +9,13 @@ per-pair SLOPES over time; each fit's importances are rank-transformed
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
+from microbiome_time import write_time_pair
+from test_reference_example import REF
 
 from taxahfe_spark.operators.competition import (
     CompetitionParams,
@@ -104,23 +108,42 @@ def test_discretize_label_center_sorted_deterministic():
     assert set(lv[20:]) == {"feature_of_interest_3"}
 
 
-@pytest.fixture(scope="module")
-def re_state(spark):
-    """taxa_hfe with random_effects on the reference's own time-series
-    fixture (metadata_time.txt / microbiome_time.txt), reference CLI levels."""
+@pytest.fixture(
+    scope="module",
+    params=[
+        "synthetic",
+        pytest.param(
+            "reference",
+            marks=pytest.mark.skipif(
+                not os.path.exists(f"{REF}/metadata_time.txt"),
+                reason="reference time-series fixture absent",
+            ),
+        ),
+    ],
+)
+def re_paths(request, tmp_path_factory):
+    """(metadata, microbiome) paths of a time-series pair: the seeded
+    stand-in (tests/microbiome_time.py), or the reference's own
+    metadata_time.txt / microbiome_time.txt where they exist."""
+    if request.param == "synthetic":
+        return write_time_pair(str(tmp_path_factory.mktemp("re_time")))
+    return (
+        f"{REF}/metadata_time.txt",
+        f"{REF}/microbiome_time.txt",
+    )
+
+
+def _re_run(spark, re_paths):
+    """taxa_hfe with random_effects on a time-series pair, reference CLI
+    levels."""
     from taxahfe_spark.pipeline import read_hierarchical_data, read_metadata
     from taxahfe_spark.taxonomy import melt_wide_matrix
 
+    meta_path, data_path = re_paths
     meta = read_metadata(
-        spark,
-        "/root/reference/example_inputs/metadata_time.txt",
-        subject_identifier="subject_id",
-        label="Intervention",
+        spark, meta_path, subject_identifier="subject_id", label="Intervention"
     )
-    wide = read_hierarchical_data(
-        spark, "/root/reference/example_inputs/microbiome_time.txt"
-    )
-    long = melt_wide_matrix(wide)
+    long = melt_wide_matrix(read_hierarchical_data(spark, data_path))
     params = CompetitionParams(
         lowest_level=3, max_level=15, nperm=2, num_trees=30, seed=1234,
         random_effects=True, disable_super_filter=True,
@@ -135,6 +158,11 @@ def re_state(spark):
     return state
 
 
+@pytest.fixture(scope="module")
+def re_state(spark, re_paths):
+    return _re_run(spark, re_paths)
+
+
 def test_re_fixture_produces_winner_antichain(re_state):
     s = re_state.set_index("path")
     winners = [p for p in s.index if s.loc[p, "winner"]]
@@ -144,32 +172,8 @@ def test_re_fixture_produces_winner_antichain(re_state):
             assert a == b or not b.startswith(a + "|"), (a, b)
 
 
-def test_re_fixture_deterministic(spark, re_state):
-    from taxahfe_spark.pipeline import read_hierarchical_data, read_metadata
-    from taxahfe_spark.taxonomy import melt_wide_matrix
-
-    meta = read_metadata(
-        spark,
-        "/root/reference/example_inputs/metadata_time.txt",
-        subject_identifier="subject_id",
-        label="Intervention",
-    )
-    long = melt_wide_matrix(
-        read_hierarchical_data(
-            spark, "/root/reference/example_inputs/microbiome_time.txt"
-        )
-    )
-    params = CompetitionParams(
-        lowest_level=3, max_level=15, nperm=2, num_trees=30, seed=1234,
-        random_effects=True, disable_super_filter=True,
-    )
-    _, state2 = taxa_hfe(
-        meta.select("subject_id", "feature_of_interest", "individual", "time"),
-        long,
-        params=params,
-        filter_prevalence=0.01,
-        from_reference_levels=True,
-    )
+def test_re_fixture_deterministic(spark, re_paths, re_state):
+    state2 = _re_run(spark, re_paths)
     pd.testing.assert_frame_equal(re_state, state2)
 
 

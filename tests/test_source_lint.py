@@ -121,3 +121,25 @@ def test_metrics_module_imports_no_spark():
             imported.append(node.module)
     spark = [m for m in imported if m.split(".")[0] == "pyspark"]
     assert not spark, spark
+
+
+def test_no_per_call_size_parameters():
+    """Size gates read named constants (through session.driver_side where
+    TAXAHFE_DISTRIBUTED must reach them), never a per-call parameter: no
+    package function declares ``small_*``, ``*_broadcast_max`` or
+    ``prefix_len``."""
+    found = []
+    for path in sorted((ROOT / "taxahfe_spark").rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                continue
+            a = node.args
+            for arg in [*a.posonlyargs, *a.args, *a.kwonlyargs, a.vararg, a.kwarg]:
+                name = arg.arg if arg else ""
+                if (
+                    name.startswith("small_")
+                    or name.endswith("_broadcast_max")
+                    or name == "prefix_len"
+                ):
+                    found.append(f"{path.relative_to(ROOT)}:{node.lineno} {name}")
+    assert not found, found

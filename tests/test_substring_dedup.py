@@ -52,17 +52,20 @@ def test_substring_dedup_engineered(spark):
     )
 
 
-def test_substring_dedup_shuffle_fallback_regime(spark):
-    # dup_broadcast_max=0 forces the non-broadcast join branch; results
+def test_substring_dedup_shuffle_fallback_regime(spark, monkeypatch):
+    # BROADCAST_MAX_ROWS=0 forces the non-broadcast join branch; results
     # must be identical to the broadcast regime
+    from taxahfe_spark import session
+
     df = _seqs(spark, [("a", [1, 2, 3]), ("b", [1, 2, 4]), ("c", [8, 9, 10])])
     fast = {
         r["doc_id"]: r["tokens_clean"]
         for r in substring_dedup(df, k=2).collect()
     }
+    monkeypatch.setattr(session, "BROADCAST_MAX_ROWS", 0)
     slow = {
         r["doc_id"]: r["tokens_clean"]
-        for r in substring_dedup(df, k=2, dup_broadcast_max=0).collect()
+        for r in substring_dedup(df, k=2).collect()
     }
     assert fast == slow == {"a": [3], "b": [4], "c": [8, 9, 10]}
 

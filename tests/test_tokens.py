@@ -101,7 +101,7 @@ def test_relative_abundance(spark, seqs):
         assert r["s"] == pytest.approx(1.0)
 
 
-def test_build_vocab_prefix_partitioned_matches_global_sort(spark):
+def test_build_vocab_prefix_partitioned_matches_global_sort(spark, monkeypatch):
     """Scale-safe vocab ids == global lexicographic enumeration, with no
     single-partition global sort in the plan."""
     import random
@@ -120,8 +120,10 @@ def test_build_vocab_prefix_partitioned_matches_global_sort(spark):
         [(i, list(wordset)[i::64]) for i in range(64)],
         "doc_id int, words array<string>",
     )
-    # force the scale path (small_vocab=0) and check id identity + plan shape
-    vocab = build_vocab(docs, small_vocab=0)
+    # force the scale path (TAXAHFE_DISTRIBUTED=1) and check id identity +
+    # plan shape
+    monkeypatch.setenv("TAXAHFE_DISTRIBUTED", "1")
+    vocab = build_vocab(docs)
     got = {r["word"]: r["token_id"] for r in vocab.collect()}
     expected = {w: i for i, w in enumerate(words_list)}
     assert got == expected
@@ -129,6 +131,7 @@ def test_build_vocab_prefix_partitioned_matches_global_sort(spark):
     plan = vocab._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" not in plan
     # the small-vocab fast path produces the same ids
+    monkeypatch.delenv("TAXAHFE_DISTRIBUTED")
     got_small = {
         r["word"]: r["token_id"] for r in build_vocab(docs).collect()
     }
@@ -184,7 +187,7 @@ def test_pack_sequences_budget_and_positions(spark):
     ).all()
 
 
-def test_pack_sequences_chunked_identical_and_parallel(spark):
+def test_pack_sequences_chunked_identical_and_parallel(spark, monkeypatch):
     """The chunked (scale) path must produce bins IDENTICAL to the global
     window, for string AND numeric ids, and must not run the running sum as
     one single-task per-source window."""
@@ -192,18 +195,21 @@ def test_pack_sequences_chunked_identical_and_parallel(spark):
 
     rng = __import__("numpy").random.default_rng(5)
     # single source = the worst case for a per-source global window
-    rows_s = [(f"d{i:05d}", "crawl", int(rng.integers(10, 400))) for i in range(500)]
+    # 7-char ids: the 6-char chunk prefix puts 10 docs in each chunk
+    rows_s = [(f"d{i:06d}", "crawl", int(rng.integers(10, 400))) for i in range(500)]
     df_s = spark.createDataFrame(rows_s, "doc_id string, source string, n_tok int")
     rows_n = [(int(i), "crawl", int(rng.integers(10, 400))) for i in range(500)]
     df_n = spark.createDataFrame(rows_n, "doc_id long, source string, n_tok int")
 
-    for df, pfx_kw in ((df_s, dict(prefix_len=2)), (df_n, {})):
+    for df in (df_s, df_n):
+        monkeypatch.delenv("TAXAHFE_DISTRIBUTED", raising=False)
         glob = (
-            pack_sequences(df, budget=1000, small_n=1 << 20, **pfx_kw)
+            pack_sequences(df, budget=1000)
             .toPandas().sort_values("doc_id").reset_index(drop=True)
         )
+        monkeypatch.setenv("TAXAHFE_DISTRIBUTED", "1")
         chunked = (
-            pack_sequences(df, budget=1000, small_n=0, **pfx_kw)
+            pack_sequences(df, budget=1000)
             .toPandas().sort_values("doc_id").reset_index(drop=True)
         )
         assert glob["bin"].tolist() == chunked["bin"].tolist()
@@ -212,9 +218,85 @@ def test_pack_sequences_chunked_identical_and_parallel(spark):
     # plan shape: the chunked branch's running-sum window partitions by
     # (source, chunk), never by source alone
     plan = pack_sequences(
-        df_s, budget=1000, small_n=0, prefix_len=2
+        df_s, budget=1000
     )._jdf.queryExecution().executedPlan().toString()
     assert "__chunk" in plan
+
+
+@pytest.mark.parametrize(
+    "null_col", ["source", "doc_id_string", "doc_id_long", "n_tok"]
+)
+def test_running_total_null_keys(spark, monkeypatch, null_col):
+    """Rows with a null group key, a null doc id (string or numeric) or a
+    null token count keep their place on the chunked branch: it joins the
+    chunk offsets null-safe and sorts a null chunk first, as the one-task
+    window orders nulls first. Both branches return the same rows, bins and
+    bin positions. The null-id rows are identical, so their tied order
+    cannot change the result."""
+    from collections import Counter
+
+    from taxahfe_spark.tokens import pack_sequences
+
+    id_type = "bigint" if null_col == "doc_id_long" else "string"
+    rows = []
+    for i in range(40):
+        doc = i if id_type == "bigint" else f"d{i:06d}"
+        row = [doc, f"s{i % 3}", 10 + (i * 37) % 290]
+        if i % 5 == 0:  # 8 rows
+            if null_col == "source":
+                row[1] = None
+            elif null_col == "n_tok":
+                row[2] = None
+            else:
+                row = [None, "s0", 100]
+        rows.append(tuple(row))
+    df = spark.createDataFrame(rows, f"doc_id {id_type}, source string, n_tok int")
+
+    monkeypatch.delenv("TAXAHFE_DISTRIBUTED", raising=False)
+    one_task = Counter(tuple(r) for r in pack_sequences(df, budget=500).collect())
+    monkeypatch.setenv("TAXAHFE_DISTRIBUTED", "1")
+    packed = pack_sequences(df, budget=500)
+    assert "__chunk" in packed._jdf.queryExecution().executedPlan().toString()
+    chunked = Counter(tuple(r) for r in packed.collect())
+    assert sum(one_task.values()) == 40
+    assert chunked == one_task
+
+
+def test_broadcast_gates_shuffle_fallback_same_rows(spark, monkeypatch):
+    """Every operator gated on session.BROADCAST_MAX_ROWS returns the same
+    rows when the gate is 0 (the hash or key set joins through a shuffle)."""
+    from taxahfe_spark import session
+    from taxahfe_spark.operators.dedup import exact_dedup
+    from taxahfe_spark.operators.lm import bigram_logprob
+    from taxahfe_spark.tokens import (
+        incremental_dedup_sequences,
+        unigram_logprob,
+    )
+
+    seqs = spark.createDataFrame(
+        [(1, [1, 2, 3]), (2, [1, 2, 3]), (3, [4, 2]), (4, [5]), (5, [2, 2, 1])],
+        "doc_id long, tokens array<int>",
+    )
+    corpus = spark.createDataFrame([(9, [4, 2])], "doc_id long, tokens array<int>")
+    docs = spark.createDataFrame(
+        [(1, "a b"), (2, "A  b"), (3, "c"), (4, "d"), (5, "c ")],
+        "doc_id long, text string",
+    )
+    ops = {
+        "dedup_sequences": lambda: dedup_sequences(seqs),
+        "incremental_dedup_sequences": lambda: incremental_dedup_sequences(seqs, corpus),
+        "unigram_logprob": lambda: unigram_logprob(seqs),
+        "bigram_logprob": lambda: bigram_logprob(seqs),
+        "exact_dedup": lambda: exact_dedup(docs),
+    }
+
+    def run():
+        return {name: sorted(map(str, op().collect())) for name, op in ops.items()}
+
+    broadcast = run()
+    monkeypatch.setattr(session, "BROADCAST_MAX_ROWS", 0)
+    assert run() == broadcast
+    assert [len(broadcast[n]) for n in ops] == [4, 3, 5, 5, 3]
 
 
 def test_temperature_rates_semantics(spark):
@@ -359,18 +441,20 @@ def test_holdout_split_eval_cut_and_quarantine(spark):
     assert out2 == out3
 
 
-def test_holdout_split_shuffle_fallback_matches_broadcast(spark):
-    """ADVICE r6: above eval_broadcast_max the eval-hash probe joins via
-    shuffle instead of a forced broadcast; the split labels are identical
-    either way."""
+def test_holdout_split_shuffle_fallback_matches_broadcast(spark, monkeypatch):
+    """ADVICE r6: above session.BROADCAST_MAX_ROWS the eval-hash probe joins
+    via shuffle instead of a forced broadcast; the split labels are
+    identical either way."""
+    from taxahfe_spark import session
     from taxahfe_spark.tokens import holdout_split
 
     rows = [(i, f"unique text number {i}") for i in range(40)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     a = {r["doc_id"]: r["split"] for r in holdout_split(df, frac=0.1, seed=5).collect()}
+    monkeypatch.setattr(session, "BROADCAST_MAX_ROWS", 0)
     b = {
         r["doc_id"]: r["split"]
-        for r in holdout_split(df, frac=0.1, seed=5, eval_broadcast_max=0).collect()
+        for r in holdout_split(df, frac=0.1, seed=5).collect()
     }
     assert a == b
 
@@ -432,7 +516,7 @@ def test_budget_mix_and_epochs(spark):
     assert ep.agg(F.max("epoch")).collect()[0][0] == 5
 
 
-def test_remap_tokens(spark):
+def test_remap_tokens(spark, monkeypatch):
     from taxahfe_spark.tokens import remap_tokens
 
     rows = [
@@ -455,11 +539,15 @@ def test_remap_tokens(spark):
     out2 = {r["doc_id"]: list(r["tokens"])
             for r in remap_tokens(df, min_count=2, unk_id=-1).collect()}
     assert out2[1] == [1, 2, 1, -1]
-    # gate raises above the one-task window budget
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        remap_tokens(df, min_count=1, small_vocab=2)
+    # the chunked ranking (above VOCAB_RANK_MAX_ROWS) assigns the same ids;
+    # an old id past 2^16 lands in a second chunk
+    wide = df.union(spark.createDataFrame([(5, [70000, 40, 70000])], df.schema))
+    monkeypatch.delenv("TAXAHFE_DISTRIBUTED", raising=False)
+    one_task = {r["doc_id"]: list(r["tokens"]) for r in remap_tokens(wide).collect()}
+    monkeypatch.setenv("TAXAHFE_DISTRIBUTED", "1")
+    chunked = {r["doc_id"]: list(r["tokens"]) for r in remap_tokens(wide).collect()}
+    assert chunked == one_task
+    assert one_task[5] == [4, 3, 4]
 
 
 def test_cms_token_counts_overestimates_only_and_exact_when_wide(spark):
