@@ -799,440 +799,448 @@ def run_dietml(
         c for c in df.columns if c not in (id_col, label_col, split_col)
     ]
 
-    if split_col is not None:
-        split = df.withColumnRenamed(split_col, "is_train").persist()
-    else:
-        split = stratified_split(
-            df, label_col, id_col, train_frac, seed, feature_type
-        ).persist()
-    train = split.filter("is_train").drop("is_train")
-    test = split.filter("NOT is_train").drop("is_train")
+    # every frame this run persists, released in the finally (a failed run
+    # too)
+    cached: list[DataFrame] = []
+    try:
+        if split_col is not None:
+            split = df.withColumnRenamed(split_col, "is_train").persist()
+        else:
+            split = stratified_split(
+                df, label_col, id_col, train_frac, seed, feature_type
+            ).persist()
+        cached.append(split)
+        train = split.filter("is_train").drop("is_train")
+        test = split.filter("NOT is_train").drop("is_train")
 
-    kept, audit, corr = reduce_collinearity(
-        train, feature_cols, vif_threshold, cor_level
-    )
-    standardize = model in ("ridge", "lasso", "enet", "svm")
-    recipe = fit_recipe(
-        train, kept, standardize, cor_level,
-        info_gain_n=info_gain_n, label_col=label_col, feature_type=feature_type,
-        corr=corr,
-    )
-
-    classes = None
-    if feature_type == "factor":
-        # the class list and the train size from one aggregate
-        counts = train.groupBy(label_col).count().collect()
-        classes = sorted(str(r[label_col]) for r in counts)
-        n_train = sum(r["count"] for r in counts)
-    else:
-        n_train = train.count()
-
-    def prep(d: DataFrame) -> DataFrame:
-        return _assemble(
-            _prep_label(recipe.transform(d), label_col, feature_type, classes),
-            recipe.keep_cols,
+        kept, audit, corr = reduce_collinearity(
+            train, feature_cols, vif_threshold, cor_level
+        )
+        standardize = model in ("ridge", "lasso", "enet", "svm")
+        recipe = fit_recipe(
+            train, kept, standardize, cor_level,
+            info_gain_n=info_gain_n, label_col=label_col, feature_type=feature_type,
+            corr=corr,
         )
 
-    # tiny-frame adaptivity: a few-hundred-sample CV frame scattered over the
-    # session's shuffle partitions pays ~partitions x task scheduling on
-    # EVERY one of the hundreds of tuning fits — the dominant dietML cost at
-    # reference scale. Coalesce small cached frames to ~25k rows/partition
-    # (thread-pooled fits still use every core via concurrent jobs); large
-    # frames keep their partitioning untouched.
-    small_parts = (
-        max(1, -(-n_train // 25_000)) if n_train <= 100_000 else None
-    )
-    # the small-n fast path (below) collects the CV frame once; only the
-    # pyspark.ml path's thread-pooled fits need both frames materialized
-    fit_local = (
-        model in ("rf", "mars")
-        and n_train <= LOCAL_FIT_MAX_ROWS
-        and not reprep_per_fold
-    )
-    train_p = prep(train)
-    if small_parts:
-        train_p = train_p.coalesce(small_parts)
-    train_p = train_p.persist()
-    if not fit_local:
-        train_p.count()
-    test_p = prep(test)
+        classes = None
+        if feature_type == "factor":
+            # the class list and the train size from one aggregate
+            counts = train.groupBy(label_col).count().collect()
+            classes = sorted(str(r[label_col]) for r in counts)
+            n_train = sum(r["count"] for r in counts)
+        else:
+            n_train = train.count()
 
-    fold_df = fold_assignments(
-        train, label_col, id_col, folds, cv_repeats, seed, feature_type
-    )
-    train_cv = train_p.join(fold_df, id_col)
-    if small_parts:
-        train_cv = train_cv.coalesce(small_parts)
-    train_cv = train_cv.persist()
-    if not fit_local:
-        train_cv.count()
+        def prep(d: DataFrame) -> DataFrame:
+            return _assemble(
+                _prep_label(recipe.transform(d), label_col, feature_type, classes),
+                recipe.keep_cols,
+            )
 
-    # small-n fast path (rf, mars): at or below LOCAL_FIT_MAX_ROWS train rows,
-    # every CV and final fit runs a numpy engine (functions/rf.py forest_fit,
-    # functions/mars.py) on a driver-collected copy of the ALREADY-prepped CV
-    # frame — one toPandas of the recipe output, then zero Spark jobs per
-    # tuning fit. Rationale: a few-hundred-sample resample pays ~10-20
-    # scheduled Spark jobs per pyspark.ml fit (the reference-scale dietML
-    # bottleneck, BENCH.md), while the histogram-CART forest fits the same
-    # frame in tens of milliseconds. The train/test and CV-fold leakage
-    # boundaries and the scoring code are untouched — this swaps the FIT
-    # ENGINE for sub-threshold frames, not the protocol.
-    # per-fold re-prep keeps the RAW train rows joined to fold assignments;
-    # each fit re-runs fit_recipe on its own fold-train portion
-    train_cv_raw = None
-    if reprep_per_fold:
-        train_cv_raw = train.join(fold_df, id_col)
+        # tiny-frame adaptivity: a few-hundred-sample CV frame scattered over the
+        # session's shuffle partitions pays ~partitions x task scheduling on
+        # EVERY one of the hundreds of tuning fits — the dominant dietML cost at
+        # reference scale. Coalesce small cached frames to ~25k rows/partition
+        # (thread-pooled fits still use every core via concurrent jobs); large
+        # frames keep their partitioning untouched.
+        small_parts = (
+            max(1, -(-n_train // 25_000)) if n_train <= 100_000 else None
+        )
+        # the small-n fast path (below) collects the CV frame once; only the
+        # pyspark.ml path's thread-pooled fits need both frames materialized
+        fit_local = (
+            model in ("rf", "mars")
+            and n_train <= LOCAL_FIT_MAX_ROWS
+            and not reprep_per_fold
+        )
+        train_p = prep(train)
         if small_parts:
-            train_cv_raw = train_cv_raw.coalesce(small_parts)
-        train_cv_raw = train_cv_raw.persist()
-        train_cv_raw.count()
+            train_p = train_p.coalesce(small_parts)
+        train_p = train_p.persist()
+        cached.append(train_p)
+        if not fit_local:
+            train_p.count()
+        test_p = prep(test)
 
-    local_cv = None
-    if fit_local:
-        local_cv = (
-            train_cv.select(id_col, "label", "repeat", "fold", *recipe.keep_cols)
-            .toPandas()
-            .sort_values(["repeat", id_col], kind="mergesort")
-            .reset_index(drop=True)
-        )  # deterministic row order -> layout-invariant bootstrap draws
-    if model == "mars" and local_cv is None:
-        raise NotImplementedError(
-            "mars (bagged earth, lib/diet_ml_funcs.R:510-561) is a "
-            "single-node engine here as in R: it requires n_train <= "
-            f"dietml.LOCAL_FIT_MAX_ROWS ({LOCAL_FIT_MAX_ROWS}) and "
-            "reprep_per_fold=False"
+        fold_df = fold_assignments(
+            train, label_col, id_col, folds, cv_repeats, seed, feature_type
         )
+        train_cv = train_p.join(fold_df, id_col)
+        if small_parts:
+            train_cv = train_cv.coalesce(small_parts)
+        train_cv = train_cv.persist()
+        cached.append(train_cv)
+        if not fit_local:
+            train_cv.count()
 
-    # -- grid tune (M7) with tune_stop / tune_time early stopping -----------
-    candidates = _grid(model, tune_length, seed)
-    maximize = metric in MAXIMIZE
-    rows = []
-    best_score, since_best = None, 0
-    t0 = time.time()
+        # small-n fast path (rf, mars): at or below LOCAL_FIT_MAX_ROWS train rows,
+        # every CV and final fit runs a numpy engine (functions/rf.py forest_fit,
+        # functions/mars.py) on a driver-collected copy of the ALREADY-prepped CV
+        # frame — one toPandas of the recipe output, then zero Spark jobs per
+        # tuning fit. Rationale: a few-hundred-sample resample pays ~10-20
+        # scheduled Spark jobs per pyspark.ml fit (the reference-scale dietML
+        # bottleneck, BENCH.md), while the histogram-CART forest fits the same
+        # frame in tens of milliseconds. The train/test and CV-fold leakage
+        # boundaries and the scoring code are untouched — this swaps the FIT
+        # ENGINE for sub-threshold frames, not the protocol.
+        # per-fold re-prep keeps the RAW train rows joined to fold assignments;
+        # each fit re-runs fit_recipe on its own fold-train portion
+        train_cv_raw = None
+        if reprep_per_fold:
+            train_cv_raw = train.join(fold_df, id_col)
+            if small_parts:
+                train_cv_raw = train_cv_raw.coalesce(small_parts)
+            train_cv_raw = train_cv_raw.persist()
+            cached.append(train_cv_raw)
+            train_cv_raw.count()
 
-    def _mtry_count(strategy: str, p: int) -> int:
-        # featureSubsetStrategy -> feature count, pyspark.ml's mapping.
-        # spark-mllib DecisionTreeMetadata uses math.sqrt(p).ceil for
-        # "sqrt" (NOT ranger's floor — functions/rf.py's None-default keeps
-        # floor for the ranger-parity competition path).
-        if strategy == "sqrt":
-            return max(1, int(np.ceil(np.sqrt(p))))
-        try:
-            return max(1, int(np.ceil(p * float(strategy))))
-        except ValueError:
-            return max(1, int(np.ceil(np.sqrt(p))))
+        local_cv = None
+        if fit_local:
+            local_cv = (
+                train_cv.select(id_col, "label", "repeat", "fold", *recipe.keep_cols)
+                .toPandas()
+                .sort_values(["repeat", id_col], kind="mergesort")
+                .reset_index(drop=True)
+            )  # deterministic row order -> layout-invariant bootstrap draws
+        if model == "mars" and local_cv is None:
+            raise NotImplementedError(
+                "mars (bagged earth, lib/diet_ml_funcs.R:510-561) is a "
+                "single-node engine here as in R: it requires n_train <= "
+                f"dietml.LOCAL_FIT_MAX_ROWS ({LOCAL_FIT_MAX_ROWS}) and "
+                "reprep_per_fold=False"
+            )
 
-    def _fit_local_predictor(params: dict, Xtr: np.ndarray, ytr: np.ndarray, fit_seed: int):
-        """Driver-local fit for the fast path; returns a predict closure.
-        rf -> the numpy histogram forest; mars -> bagged numpy MARS
-        (functions/mars.py, the earth/bag_mars analog)."""
-        cls = feature_type == "factor"
-        if model == "mars":
-            from taxahfe_spark.functions.mars import mars_fit, mars_predict
+        # -- grid tune (M7) with tune_stop / tune_time early stopping -----------
+        candidates = _grid(model, tune_length, seed)
+        maximize = metric in MAXIMIZE
+        rows = []
+        best_score, since_best = None, 0
+        t0 = time.time()
 
-            nt = params.get("num_terms")
-            bags = mars_fit(
+        def _mtry_count(strategy: str, p: int) -> int:
+            # featureSubsetStrategy -> feature count, pyspark.ml's mapping.
+            # spark-mllib DecisionTreeMetadata uses math.sqrt(p).ceil for
+            # "sqrt" (NOT ranger's floor — functions/rf.py's None-default keeps
+            # floor for the ranger-parity competition path).
+            if strategy == "sqrt":
+                return max(1, int(np.ceil(np.sqrt(p))))
+            try:
+                return max(1, int(np.ceil(p * float(strategy))))
+            except ValueError:
+                return max(1, int(np.ceil(np.sqrt(p))))
+
+        def _fit_local_predictor(params: dict, Xtr: np.ndarray, ytr: np.ndarray, fit_seed: int):
+            """Driver-local fit for the fast path; returns a predict closure.
+            rf -> the numpy histogram forest; mars -> bagged numpy MARS
+            (functions/mars.py, the earth/bag_mars analog)."""
+            cls = feature_type == "factor"
+            if model == "mars":
+                from taxahfe_spark.functions.mars import mars_fit, mars_predict
+
+                nt = params.get("num_terms")
+                bags = mars_fit(
+                    Xtr,
+                    ytr.astype(np.int64) if cls else ytr,
+                    cls,
+                    num_terms=int(nt) if nt else None,
+                    prod_degree=int(params.get("prod_degree", 1)),
+                    prune_method=str(params.get("prune_method", "backward")),
+                    n_bags=int(params.get("n_bags", MARS_BAGS)),
+                    seed=fit_seed,
+                    n_classes=len(classes) if cls else None,
+                )
+                return lambda M: mars_predict(bags, M)
+            from taxahfe_spark.functions.rf import forest_fit, forest_predict
+
+            mdl = forest_fit(
                 Xtr,
                 ytr.astype(np.int64) if cls else ytr,
                 cls,
-                num_terms=int(nt) if nt else None,
-                prod_degree=int(params.get("prod_degree", 1)),
-                prune_method=str(params.get("prune_method", "backward")),
-                n_bags=int(params.get("n_bags", MARS_BAGS)),
+                num_trees=int(params.get("num_trees", 100)),
+                mtry=_mtry_count(str(params.get("mtry", "sqrt")), Xtr.shape[1]),
+                min_node=int(params.get("min_n", 1)),
                 seed=fit_seed,
                 n_classes=len(classes) if cls else None,
             )
-            return lambda M: mars_predict(bags, M)
-        from taxahfe_spark.functions.rf import forest_fit, forest_predict
+            return lambda M: forest_predict(mdl, M)
 
-        mdl = forest_fit(
-            Xtr,
-            ytr.astype(np.int64) if cls else ytr,
-            cls,
-            num_trees=int(params.get("num_trees", 100)),
-            mtry=_mtry_count(str(params.get("mtry", "sqrt")), Xtr.shape[1]),
-            min_node=int(params.get("min_n", 1)),
-            seed=fit_seed,
-            n_classes=len(classes) if cls else None,
-        )
-        return lambda M: forest_predict(mdl, M)
+        # reprep_per_fold: the recipe depends only on (repeat, fold) — candidates
+        # share identical fold-train data (tidymodels preps once per resample,
+        # not per candidate) — so memoize the prepped tr/va frames across
+        # candidates. Lock because fits may run in a thread pool.
+        import threading
 
-    # reprep_per_fold: the recipe depends only on (repeat, fold) — candidates
-    # share identical fold-train data (tidymodels preps once per resample,
-    # not per candidate) — so memoize the prepped tr/va frames across
-    # candidates. Lock because fits may run in a thread pool.
-    import threading
+        _reprep_cache: dict[tuple[int, int], tuple[DataFrame, DataFrame]] = {}
+        _reprep_lock = threading.Lock()
 
-    _reprep_cache: dict[tuple[int, int], tuple[DataFrame, DataFrame]] = {}
-    _reprep_lock = threading.Lock()
-
-    def _reprep_frames(r: int, f: int) -> tuple[DataFrame, DataFrame]:
-        with _reprep_lock:
-            hit = _reprep_cache.get((r, f))
-        if hit is not None:
-            return hit
-        tr_raw = train_cv_raw.filter(
-            (F.col("repeat") == r) & (F.col("fold") != f)
-        )
-        va_raw = train_cv_raw.filter(
-            (F.col("repeat") == r) & (F.col("fold") == f)
-        )
-        rec_f = fit_recipe(
-            tr_raw, kept, standardize, cor_level,
-            info_gain_n=info_gain_n, label_col=label_col,
-            feature_type=feature_type,
-        )
-
-        def prep_f(d: DataFrame) -> DataFrame:
-            return _assemble(
-                _prep_label(rec_f.transform(d), label_col, feature_type, classes),
-                rec_f.keep_cols,
+        def _reprep_frames(r: int, f: int) -> tuple[DataFrame, DataFrame]:
+            with _reprep_lock:
+                hit = _reprep_cache.get((r, f))
+            if hit is not None:
+                return hit
+            tr_raw = train_cv_raw.filter(
+                (F.col("repeat") == r) & (F.col("fold") != f)
+            )
+            va_raw = train_cv_raw.filter(
+                (F.col("repeat") == r) & (F.col("fold") == f)
+            )
+            rec_f = fit_recipe(
+                tr_raw, kept, standardize, cor_level,
+                info_gain_n=info_gain_n, label_col=label_col,
+                feature_type=feature_type,
             )
 
-        pair = (prep_f(tr_raw), prep_f(va_raw))
-        with _reprep_lock:
-            # first fit wins on a race — both computed identical frames
-            pair = _reprep_cache.setdefault((r, f), pair)
-        return pair
+            def prep_f(d: DataFrame) -> DataFrame:
+                return _assemble(
+                    _prep_label(rec_f.transform(d), label_col, feature_type, classes),
+                    rec_f.keep_cols,
+                )
 
-    def fit_one(params: dict, ci: int, r: int, f: int) -> float:
-        # one (id, fold) row per repeat: restrict to THIS repeat's
-        # dealing, then hold out fold f. Seed depends on (candidate,
-        # repeat) only — layout- and worker-count-invariant.
-        fit_seed = seed + 31 * ci + r
-        if local_cv is not None:
-            sub = local_cv[local_cv["repeat"] == r]
-            tr = sub[sub["fold"] != f]
-            va = sub[sub["fold"] == f]
-            cols = recipe.keep_cols
-            predict = _fit_local_predictor(
-                params, tr[cols].to_numpy(np.float64),
-                tr["label"].to_numpy(np.float64), fit_seed,
-            )
-            scored = (
-                _from_labels(va["label"].to_numpy(np.float64), classes),
-                *_local_outputs(predict(va[cols].to_numpy(np.float64)), classes),
-            )
-        else:
-            if reprep_per_fold:
-                tr, va = _reprep_frames(r, f)
+            pair = (prep_f(tr_raw), prep_f(va_raw))
+            with _reprep_lock:
+                # first fit wins on a race — both computed identical frames
+                pair = _reprep_cache.setdefault((r, f), pair)
+            return pair
+
+        def fit_one(params: dict, ci: int, r: int, f: int) -> float:
+            # one (id, fold) row per repeat: restrict to THIS repeat's
+            # dealing, then hold out fold f. Seed depends on (candidate,
+            # repeat) only — layout- and worker-count-invariant.
+            fit_seed = seed + 31 * ci + r
+            if local_cv is not None:
+                sub = local_cv[local_cv["repeat"] == r]
+                tr = sub[sub["fold"] != f]
+                va = sub[sub["fold"] == f]
+                cols = recipe.keep_cols
+                predict = _fit_local_predictor(
+                    params, tr[cols].to_numpy(np.float64),
+                    tr["label"].to_numpy(np.float64), fit_seed,
+                )
+                scored = (
+                    _from_labels(va["label"].to_numpy(np.float64), classes),
+                    *_local_outputs(predict(va[cols].to_numpy(np.float64)), classes),
+                )
             else:
-                tr = train_cv.filter((F.col("repeat") == r) & (F.col("fold") != f))
-                va = train_cv.filter((F.col("repeat") == r) & (F.col("fold") == f))
-            fitted = _estimator(model, feature_type, params, fit_seed).fit(tr)
-            scored = _spark_predictions(fitted, va, id_col, label_col, classes)
-        return _metrics(*scored, classes)[metric]
+                if reprep_per_fold:
+                    tr, va = _reprep_frames(r, f)
+                else:
+                    tr = train_cv.filter((F.col("repeat") == r) & (F.col("fold") != f))
+                    va = train_cv.filter((F.col("repeat") == r) & (F.col("fold") == f))
+                fitted = _estimator(model, feature_type, params, fit_seed).fit(tr)
+                scored = _spark_predictions(fitted, va, id_col, label_col, classes)
+            return _metrics(*scored, classes)[metric]
 
-    from concurrent.futures import ThreadPoolExecutor
+        from concurrent.futures import ThreadPoolExecutor
 
-    pool = (
-        ThreadPoolExecutor(max_workers=int(parallel_workers))
-        if parallel_workers and int(parallel_workers) > 1
-        else None
-    )
-    if model == "rf":
-        candidates = [{**c, "num_trees": num_trees} for c in candidates]
-    score_cache: dict[tuple[int, int, int], float] = {}
-
-    def eval_pairs(cis: list[int], pairs: list[tuple[int, int]]) -> dict[int, float]:
-        """Mean metric per candidate over ``pairs``, memoizing each
-        (candidate, repeat, fold) fit so later rungs reuse earlier ones."""
-        todo = [
-            (ci, r, f) for ci in cis for r, f in pairs if (ci, r, f) not in score_cache
-        ]
-        if pool is not None:
-            futs = {k: pool.submit(fit_one, candidates[k[0]], *k) for k in todo}
-            for k, fu in futs.items():
-                score_cache[k] = fu.result()
-        else:
-            for k in todo:
-                score_cache[k] = fit_one(candidates[k[0]], *k)
-        return {
-            ci: float(np.nanmean([score_cache[(ci, r, f)] for r, f in pairs]))
-            for ci in cis
-        }
-
-    def top(cis: list[int], means: dict[int, float], k: int) -> list[int]:
-        sign = -1.0 if maximize else 1.0
-        return sorted(cis, key=lambda ci: (sign * means[ci], ci))[:k]
-
-    if tune_strategy == "bayes":
-        # true tune_bayes analog (reference lib/diet_ml_funcs.R:789-806):
-        # GP surrogate + expected improvement over continuous dials, seeded
-        # initial design, uncertain pick every 5 non-improving iterations,
-        # no_improve = tune_stop. Candidates come from the GP, not _grid.
-        from taxahfe_spark.functions.bayes import bayes_search
-
-        candidates = []
-        full = [(r, f) for r in range(cv_repeats) for f in range(folds)]
-
-        def _eval_bayes(params: dict) -> float:
-            if model == "rf":
-                params = {**params, "num_trees": num_trees}
-            ci = len(candidates)
-            candidates.append(params)
-            return eval_pairs([ci], full)[ci]
-
-        rows = bayes_search(
-            model,
-            _eval_bayes,
-            maximize=maximize,
-            seed=seed,
-            iterations=tune_length,
-            no_improve=tune_stop,
-            time_limit_s=tune_time_min * 60,
-            clock=time.time,
+        pool = (
+            ThreadPoolExecutor(max_workers=int(parallel_workers))
+            if parallel_workers and int(parallel_workers) > 1
+            else None
         )
-    elif tune_strategy == "halving" and len(candidates) > 2 and folds > 1:
-        # successive halving: every candidate pays ONE fold, the top third
-        # pay repeat 0's folds, finalists pay the full repeats x folds bill;
-        # cv_results reports finalists' FULL-budget means only
-        cis = list(range(len(candidates)))
-        m1 = eval_pairs(cis, [(0, 0)])
-        cis = top(cis, m1, max(2, -(-len(cis) // 3)))
-        m2 = eval_pairs(cis, [(0, f) for f in range(folds)])
-        cis = top(cis, m2, max(2, -(-len(cis) // 3)))
-        full = [(r, f) for r in range(cv_repeats) for f in range(folds)]
-        m3 = eval_pairs(cis, full) if cv_repeats > 1 else {ci: m2[ci] for ci in cis}
-        rows = [
-            {"params": candidates[ci], "mean_metric": m3[ci]} for ci in sorted(cis)
-        ]
-    else:
-        full = [(r, f) for r in range(cv_repeats) for f in range(folds)]
-        for ci, params in enumerate(candidates):
-            mean_metric = eval_pairs([ci], full)[ci]
-            rows.append({"params": params, "mean_metric": mean_metric})
-            better = (
-                best_score is None
-                or (mean_metric > best_score if maximize else mean_metric < best_score)
-            )
-            if better:
-                best_score, since_best = mean_metric, 0
-            else:
-                since_best += 1
-            if since_best >= tune_stop or (time.time() - t0) > tune_time_min * 60:
-                break
-    if pool is not None:
-        pool.shutdown(wait=False)
-    cv_results = pd.DataFrame(rows)
-    best_params = select_by_pct_loss(cv_results, metric, pct_loss, model)
-
-    # -- evaluation (M9 null model, M10 last_fit, S8 predictions) -----------
-    #
-    # Both engines hand over (truth, estimate, class probabilities) arrays for
-    # the whole train split and the test split, in id order: the fast path
-    # refits its numpy engine on the CV frame it already holds and collects
-    # the test rows once; the pyspark.ml path collects each split's
-    # predictions through one Arrow job. The same scorer, null model and
-    # raw-predictions builder then run on either.
-    if local_cv is not None:
-        cols = recipe.keep_cols
-        tr_pdf = (
-            local_cv[local_cv["repeat"] == 0]
-            .sort_values(id_col, kind="mergesort")
-            .reset_index(drop=True)
-        )
-        # carry the RAW label for test: a test-only class unseen in train
-        # encodes to null in "label" but must still appear as truth
-        te_pdf = (
-            test_p.select(id_col, F.col(label_col).alias("__raw"), "label", *cols)
-            .toPandas()
-            .sort_values(id_col, kind="mergesort")
-            .reset_index(drop=True)
-        )
-        Xtr = tr_pdf[cols].to_numpy(np.float64)
-        ytr = tr_pdf["label"].to_numpy(np.float64)
-        fit_params = dict(best_params)
         if model == "rf":
-            fit_params.setdefault("num_trees", num_trees)
-        predict_local = _fit_local_predictor(fit_params, Xtr, ytr, seed)
-        te_truth = (
-            te_pdf["__raw"].astype(str).to_numpy()
-            if classes is not None
-            else te_pdf["label"].to_numpy(np.float64)
-        )
-        splits = {
-            "train": (
-                _from_labels(ytr, classes),
-                *_local_outputs(predict_local(Xtr), classes),
-            ),
-            "test": (
-                te_truth,
-                *_local_outputs(predict_local(te_pdf[cols].to_numpy(np.float64)), classes),
-            ),
-        }
-    else:
-        final = _estimator(model, feature_type, best_params, seed).fit(train_p)
-        splits = {
-            tag: _spark_predictions(final, d, id_col, label_col, classes)
-            for tag, d in (("train", train_p), ("test", test_p))
-        }
-    train_m = _metrics(*splits["train"], classes)
-    final_m = _metrics(*splits["test"], classes)
-    null_m = null_model_metrics(splits["train"][0], splits["test"][0], feature_type)
-    # S8: raw train+test predictions (reference bind_rows + augment,
-    # lib/diet_ml_funcs.R:991-1013)
-    raw_predictions = pd.concat(
-        [_raw_predictions(*splits[tag], classes, tag) for tag in ("train", "test")],
-        ignore_index=True,
-    )
+            candidates = [{**c, "num_trees": num_trees} for c in candidates]
+        score_cache: dict[tuple[int, int, int], float] = {}
 
-    # J7: outer merge final vs null on metric name
-    names = sorted(set(final_m) | set(null_m))
-    full_results = pd.DataFrame(
-        {
-            ".metric": names,
-            "estimate": [final_m.get(n, float("nan")) for n in names],
-            "null_model_avg": [null_m.get(n, float("nan")) for n in names],
-        }
-    )
+        def eval_pairs(cis: list[int], pairs: list[tuple[int, int]]) -> dict[int, float]:
+            """Mean metric per candidate over ``pairs``, memoizing each
+            (candidate, repeat, fold) fit so later rungs reuse earlier ones."""
+            todo = [
+                (ci, r, f) for ci in cis for r, f in pairs if (ci, r, f) not in score_cache
+            ]
+            if pool is not None:
+                futs = {k: pool.submit(fit_one, candidates[k[0]], *k) for k in todo}
+                for k, fu in futs.items():
+                    score_cache[k] = fu.result()
+            else:
+                for k in todo:
+                    score_cache[k] = fit_one(candidates[k[0]], *k)
+            return {
+                ci: float(np.nanmean([score_cache[(ci, r, f)] for r, f in pairs]))
+                for ci in cis
+            }
 
-    shap_ranking = None
-    shap_values = shap_inputs = None
-    if shap:
-        if local_cv is not None:
-            from taxahfe_spark.functions.shap import (
-                ranking_from_phi,
-                shap_values_local,
+        def top(cis: list[int], means: dict[int, float], k: int) -> list[int]:
+            sign = -1.0 if maximize else 1.0
+            return sorted(cis, key=lambda ci: (sign * means[ci], ci))[:k]
+
+        if tune_strategy == "bayes":
+            # true tune_bayes analog (reference lib/diet_ml_funcs.R:789-806):
+            # GP surrogate + expected improvement over continuous dials, seeded
+            # initial design, uncertain pick every 5 non-improving iterations,
+            # no_improve = tune_stop. Candidates come from the GP, not _grid.
+            from taxahfe_spark.functions.bayes import bayes_search
+
+            candidates = []
+            full = [(r, f) for r in range(cv_repeats) for f in range(folds)]
+
+            def _eval_bayes(params: dict) -> float:
+                if model == "rf":
+                    params = {**params, "num_trees": num_trees}
+                ci = len(candidates)
+                candidates.append(params)
+                return eval_pairs([ci], full)[ci]
+
+            rows = bayes_search(
+                model,
+                _eval_bayes,
+                maximize=maximize,
+                seed=seed,
+                iterations=tune_length,
+                no_improve=tune_stop,
+                time_limit_s=tune_time_min * 60,
+                clock=time.time,
             )
-
-            def _shap_score(M: np.ndarray) -> np.ndarray:
-                out = predict_local(M)
-                # P(class 0) for classifiers — shap_mean_abs's default
-                return out[:, 0] if out.ndim == 2 else out
-
-            # per-row phi computed once: the ranking AND the S9 beeswarm
-            # artifact derive from the same matrix
-            shap_values = shap_values_local(_shap_score, Xtr, seed=seed)
-            shap_inputs = Xtr
-            shap_ranking = ranking_from_phi(
-                shap_values, recipe.keep_cols, top_k=shap_top_k
-            )
+        elif tune_strategy == "halving" and len(candidates) > 2 and folds > 1:
+            # successive halving: every candidate pays ONE fold, the top third
+            # pay repeat 0's folds, finalists pay the full repeats x folds bill;
+            # cv_results reports finalists' FULL-budget means only
+            cis = list(range(len(candidates)))
+            m1 = eval_pairs(cis, [(0, 0)])
+            cis = top(cis, m1, max(2, -(-len(cis) // 3)))
+            m2 = eval_pairs(cis, [(0, f) for f in range(folds)])
+            cis = top(cis, m2, max(2, -(-len(cis) // 3)))
+            full = [(r, f) for r in range(cv_repeats) for f in range(folds)]
+            m3 = eval_pairs(cis, full) if cv_repeats > 1 else {ci: m2[ci] for ci in cis}
+            rows = [
+                {"params": candidates[ci], "mean_metric": m3[ci]} for ci in sorted(cis)
+            ]
         else:
-            from taxahfe_spark.functions.shap import shap_mean_abs
+            full = [(r, f) for r in range(cv_repeats) for f in range(folds)]
+            for ci, params in enumerate(candidates):
+                mean_metric = eval_pairs([ci], full)[ci]
+                rows.append({"params": params, "mean_metric": mean_metric})
+                better = (
+                    best_score is None
+                    or (mean_metric > best_score if maximize else mean_metric < best_score)
+                )
+                if better:
+                    best_score, since_best = mean_metric, 0
+                else:
+                    since_best += 1
+                if since_best >= tune_stop or (time.time() - t0) > tune_time_min * 60:
+                    break
+        if pool is not None:
+            pool.shutdown(wait=False)
+        cv_results = pd.DataFrame(rows)
+        best_params = select_by_pct_loss(cv_results, metric, pct_loss, model)
 
-            shap_ranking = shap_mean_abs(
-                final, train_p, recipe.keep_cols, seed=seed, top_k=shap_top_k
-            ).toPandas()
+        # -- evaluation (M9 null model, M10 last_fit, S8 predictions) -----------
+        #
+        # Both engines hand over (truth, estimate, class probabilities) arrays for
+        # the whole train split and the test split, in id order: the fast path
+        # refits its numpy engine on the CV frame it already holds and collects
+        # the test rows once; the pyspark.ml path collects each split's
+        # predictions through one Arrow job. The same scorer, null model and
+        # raw-predictions builder then run on either.
+        if local_cv is not None:
+            cols = recipe.keep_cols
+            tr_pdf = (
+                local_cv[local_cv["repeat"] == 0]
+                .sort_values(id_col, kind="mergesort")
+                .reset_index(drop=True)
+            )
+            # carry the RAW label for test: a test-only class unseen in train
+            # encodes to null in "label" but must still appear as truth
+            te_pdf = (
+                test_p.select(id_col, F.col(label_col).alias("__raw"), "label", *cols)
+                .toPandas()
+                .sort_values(id_col, kind="mergesort")
+                .reset_index(drop=True)
+            )
+            Xtr = tr_pdf[cols].to_numpy(np.float64)
+            ytr = tr_pdf["label"].to_numpy(np.float64)
+            fit_params = dict(best_params)
+            if model == "rf":
+                fit_params.setdefault("num_trees", num_trees)
+            predict_local = _fit_local_predictor(fit_params, Xtr, ytr, seed)
+            te_truth = (
+                te_pdf["__raw"].astype(str).to_numpy()
+                if classes is not None
+                else te_pdf["label"].to_numpy(np.float64)
+            )
+            splits = {
+                "train": (
+                    _from_labels(ytr, classes),
+                    *_local_outputs(predict_local(Xtr), classes),
+                ),
+                "test": (
+                    te_truth,
+                    *_local_outputs(predict_local(te_pdf[cols].to_numpy(np.float64)), classes),
+                ),
+            }
+        else:
+            final = _estimator(model, feature_type, best_params, seed).fit(train_p)
+            splits = {
+                tag: _spark_predictions(final, d, id_col, label_col, classes)
+                for tag, d in (("train", train_p), ("test", test_p))
+            }
+        train_m = _metrics(*splits["train"], classes)
+        final_m = _metrics(*splits["test"], classes)
+        null_m = null_model_metrics(splits["train"][0], splits["test"][0], feature_type)
+        # S8: raw train+test predictions (reference bind_rows + augment,
+        # lib/diet_ml_funcs.R:991-1013)
+        raw_predictions = pd.concat(
+            [_raw_predictions(*splits[tag], classes, tag) for tag in ("train", "test")],
+            ignore_index=True,
+        )
 
-    split.unpersist()
-    train_p.unpersist()
-    train_cv.unpersist()
-    return DietMLResult(
-        model=model,
-        metric=metric,
-        best_params=best_params,
-        cv_results=cv_results,
-        full_results=full_results,
-        train_metrics=train_m,
-        collinearity_audit=audit,
-        recipe=recipe,
-        shap_ranking=shap_ranking,
-        raw_predictions=raw_predictions,
-        null_metrics=null_m,
-        shap_values=shap_values,
-        shap_inputs=shap_inputs,
-    )
+        # J7: outer merge final vs null on metric name
+        names = sorted(set(final_m) | set(null_m))
+        full_results = pd.DataFrame(
+            {
+                ".metric": names,
+                "estimate": [final_m.get(n, float("nan")) for n in names],
+                "null_model_avg": [null_m.get(n, float("nan")) for n in names],
+            }
+        )
+
+        shap_ranking = None
+        shap_values = shap_inputs = None
+        if shap:
+            if local_cv is not None:
+                from taxahfe_spark.functions.shap import (
+                    ranking_from_phi,
+                    shap_values_local,
+                )
+
+                def _shap_score(M: np.ndarray) -> np.ndarray:
+                    out = predict_local(M)
+                    # P(class 0) for classifiers — shap_mean_abs's default
+                    return out[:, 0] if out.ndim == 2 else out
+
+                # per-row phi computed once: the ranking AND the S9 beeswarm
+                # artifact derive from the same matrix
+                shap_values = shap_values_local(_shap_score, Xtr, seed=seed)
+                shap_inputs = Xtr
+                shap_ranking = ranking_from_phi(
+                    shap_values, recipe.keep_cols, top_k=shap_top_k
+                )
+            else:
+                from taxahfe_spark.functions.shap import shap_mean_abs
+
+                shap_ranking = shap_mean_abs(
+                    final, train_p, recipe.keep_cols, seed=seed, top_k=shap_top_k
+                ).toPandas()
+
+        return DietMLResult(
+            model=model,
+            metric=metric,
+            best_params=best_params,
+            cv_results=cv_results,
+            full_results=full_results,
+            train_metrics=train_m,
+            collinearity_audit=audit,
+            recipe=recipe,
+            shap_ranking=shap_ranking,
+            raw_predictions=raw_predictions,
+            null_metrics=null_m,
+            shap_values=shap_values,
+            shap_inputs=shap_inputs,
+        )
+    finally:
+        for frame in cached:
+            frame.unpersist()
 
 
 def append_results_csv(result: DietMLResult, path: str, seed: int, program: str) -> None:

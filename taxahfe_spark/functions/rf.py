@@ -38,15 +38,18 @@ N_BINS = 64
 _MAX_HIST = 1 << 24
 
 
-def _bin_features(X: np.ndarray) -> np.ndarray:
-    """Quantile-bin each column of X to uint8 codes in [0, N_BINS-1]."""
-    n, p = X.shape
-    codes = np.empty((n, p), dtype=np.uint8)
+def _quantile_edges(X: np.ndarray) -> list[np.ndarray]:
+    """Per-column quantile bin edges of X: at most N_BINS - 1 distinct cut
+    points, so every code :func:`_apply_bins` gives is in [0, N_BINS-1]."""
     qs = np.linspace(0, 1, N_BINS + 1)[1:-1]
-    for j in range(p):
-        col = X[:, j]
-        edges = np.unique(np.quantile(col, qs))
-        codes[:, j] = np.searchsorted(edges, col, side="right").astype(np.uint8)
+    return [np.unique(np.quantile(X[:, j], qs)) for j in range(X.shape[1])]
+
+
+def _apply_bins(X: np.ndarray, edges: list[np.ndarray]) -> np.ndarray:
+    """uint8 bin codes of X's rows against per-column ``edges``."""
+    codes = np.empty(X.shape, dtype=np.uint8)
+    for j, e in enumerate(edges):
+        codes[:, j] = np.searchsorted(e, X[:, j], side="right")
     return codes
 
 
@@ -162,7 +165,7 @@ def _best_splits_regression(
 
 
 def forest_importance(
-    X: np.ndarray,
+    codes: np.ndarray,
     y: np.ndarray,
     classification: bool,
     num_trees: int = 100,
@@ -171,27 +174,26 @@ def forest_importance(
     seed: int = 0,
     corrected: bool = True,
     max_depth: int = 16,
-    codes: np.ndarray | None = None,
 ) -> np.ndarray:
     """Averaged (optionally shadow-corrected) impurity importance, shape (p,).
 
     Mirrors ranger's call shape in the reference (bootstrap with
     sample.fraction=1, importance summed over splits, averaged over trees).
 
-    ``codes``: precomputed ``_bin_features(X)`` output. The competition runs
-    nperm independent fits on the SAME X; quantile binning is a large share
-    of a small-forest fit, so callers hoist it once per competition and pass
-    it in (bit-identical results — binning is deterministic).
+    ``codes``: the design's (n, p) uint8 bin codes
+    (``_apply_bins(X, _quantile_edges(X))``). The competition runs nperm
+    independent fits on the SAME design; quantile binning is a large share
+    of a small-forest fit, so the caller bins once per competition and every
+    fit reads the codes.
 
     All trees grow together, level-synchronously: the per-depth state is a
     flat slot array (one slot per bootstrap draw per tree) carrying
     (tree, node, sample) and each depth performs one fused histogram pass
     over every splittable (tree, node) group. Shadow codes are never
     materialized — a slot reading shadow column j reads
-    ``base_codes[perm[tree, row], j]`` through the per-tree permutation.
+    ``codes[perm[tree, row], j]`` through the per-tree permutation.
     """
-    X = np.asarray(X, dtype=np.float64)
-    n, p = X.shape
+    n, p = codes.shape
     rng = np.random.default_rng(seed)
     if classification:
         _, y_enc = np.unique(y, return_inverse=True)
@@ -207,7 +209,6 @@ def forest_importance(
         base = 1 if classification else 5
         min_node = max(base, n // 512)
     min_size = max(2, min_node)
-    base_codes = codes if codes is not None else _bin_features(X)
     P = 2 * p if corrected else p
     if mtry is None:
         mtry = max(1, int(np.floor(np.sqrt(P))))
@@ -223,7 +224,7 @@ def forest_importance(
     for t_lo in range(0, num_trees, block):
         T = min(block, num_trees - t_lo)
         _grow_tree_block(
-            rng, T, n, P, p, m_eff, min_size, base_codes, yv, classification,
+            rng, T, n, P, p, m_eff, min_size, codes, yv, classification,
             n_classes, corrected, max_depth, imp,
         )
 
@@ -419,31 +420,6 @@ def _grow_tree_block(
 # -- predictive forest (small-n dietML fast path) -----------------------------
 
 
-def _bin_features_edges(X: np.ndarray) -> tuple[np.ndarray, list[np.ndarray]]:
-    """Like _bin_features but also returns the per-column edge arrays so
-    validation/test rows can be binned with the TRAINING edges."""
-    n, p = X.shape
-    codes = np.empty((n, p), dtype=np.uint8)
-    qs = np.linspace(0, 1, N_BINS + 1)[1:-1]
-    edges: list[np.ndarray] = []
-    for j in range(p):
-        col = X[:, j]
-        e = np.unique(np.quantile(col, qs))
-        codes[:, j] = np.searchsorted(e, col, side="right").astype(np.uint8)
-        edges.append(e)
-    return codes, edges
-
-
-def _apply_bins(X: np.ndarray, edges: list[np.ndarray]) -> np.ndarray:
-    n, p = X.shape
-    codes = np.empty((n, p), dtype=np.uint8)
-    for j in range(p):
-        codes[:, j] = np.searchsorted(edges[j], X[:, j], side="right").astype(
-            np.uint8
-        )
-    return codes
-
-
 class ForestModel:
     """A fitted ``forest_fit`` forest compiled into one flat node table,
     plus the training bin edges. Node ``i`` splits on bin codes
@@ -539,7 +515,8 @@ def forest_fit(
     else:
         yv = np.asarray(y, dtype=np.float64)
         n_classes = 0
-    codes, edges = _bin_features_edges(X)
+    edges = _quantile_edges(X)
+    codes = _apply_bins(X, edges)
     if mtry is None:
         mtry = max(1, int(np.floor(np.sqrt(p))))
     m_eff = min(mtry, p)

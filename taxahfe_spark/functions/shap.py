@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from taxahfe_spark.session import local_frame
+from taxahfe_spark.session import ForkPool, local_frame
 
 
 def adaptive_nsim(n_rows: int, n_features: int) -> int:
@@ -189,18 +189,10 @@ def shap_mean_abs(
         agg_pdf = agg_pdf[agg_pdf["rank"] <= top_k]
     return local_frame(spark, agg_pdf, "feature string, mean_abs_shap double, rank int")
 
-# fork-inherited context for the local-SHAP row pool: a closure over a
-# fitted model can't pickle, but a forked child inherits this module global.
-_LOCAL_SHAP_CTX: dict = {}
 
-
-def _shap_rows_phi(rows: list[int]) -> np.ndarray:
+def _shap_rows_phi(predict, X, bg, nsim: int, seed: int, rows: list[int]) -> np.ndarray:
     """Per-row SHAP vectors phi for the given explain rows (one pool work
     item); returns (len(rows), p) in the order given."""
-    ctx = _LOCAL_SHAP_CTX
-    predict, X, bg, nsim, seed = (
-        ctx["predict"], ctx["X"], ctx["bg"], ctx["nsim"], ctx["seed"]
-    )
     n, p = X.shape
     k = bg.shape[0]
     diag = np.arange(p)
@@ -256,13 +248,13 @@ def shap_values_local(
     nsim: int | None = None,
     seed: int = 42,
     max_background: int = 100,
-    workers: int | None = None,
 ) -> np.ndarray:
     """Per-row SHAP matrix (n, p) for the driver-local estimator — the
     basis for both the mean-|phi| ranking and the S9 beeswarm artifact.
-    Per-row rngs (seed + row) make the matrix identical for every worker
-    count and row order."""
-    import os as _os
+    Rows are dealt round-robin to the session's ``ForkPool`` (its children
+    inherit ``predict``, which need not pickle); where the driver cannot
+    fork, one serial loop computes them. Per-row rngs (seed + row) make the
+    matrix identical for every worker count and row order."""
     import zlib
 
     X = np.asarray(X, dtype=np.float64)
@@ -274,23 +266,18 @@ def shap_values_local(
     )
     bg = X[np.argsort(hashes, kind="stable")[:max_background]]
 
-    _LOCAL_SHAP_CTX.update(
-        predict=predict, X=X, bg=bg, nsim=nsim, seed=seed
-    )
-    try:
-        import multiprocessing as mp
+    def phi_rows(rows: list[int]) -> np.ndarray:
+        return _shap_rows_phi(predict, X, bg, nsim, seed, rows)
 
-        workers = workers or min(8, _os.cpu_count() or 1, n)
-        can_fork = hasattr(_os, "fork")
-        phi = np.empty((n, p))
-        if workers > 1 and can_fork and n > 1:
-            chunks = [list(range(w, n, workers)) for w in range(workers)]
-            with mp.get_context("fork").Pool(workers) as pool:
-                parts = pool.map(_shap_rows_phi, chunks)
-            for chunk, part in zip(chunks, parts):
-                phi[chunk] = part
-        else:
-            phi[:] = _shap_rows_phi(list(range(n)))
-    finally:
-        _LOCAL_SHAP_CTX.clear()
+    try:
+        with ForkPool(phi_rows) as pool:
+            k = min(pool.workers, n)
+            chunks = [list(range(w, n, k)) for w in range(k)]
+            parts = pool.map(chunks)
+    except (ImportError, OSError):  # no fork, or the pool failed
+        chunks = [list(range(n))]
+        parts = [phi_rows(chunks[0])]
+    phi = np.empty((n, p))
+    for chunk, part in zip(chunks, parts):
+        phi[chunk] = part
     return phi

@@ -41,6 +41,10 @@ from taxahfe_spark.tokens import words as _words
 
 # driver trainer budget: distinct words collected once
 DRIVER_MAX_WORDS = 2_000_000
+# distributed trainer: candidate pairs one round reads (its TakeOrdered
+# size), and accepted merges between lineage-truncating local checkpoints
+BATCH_MAX = 64
+CHECKPOINT_EVERY = 8
 
 
 def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -182,8 +186,6 @@ def bpe_train(
     wc: DataFrame,
     num_merges: int,
     min_pair_count: int = 2,
-    checkpoint_every: int = 8,
-    batch_max: int = 64,
 ) -> list[tuple[str, str]]:
     """Learn up to ``num_merges`` merges from a (word, count) frame.
 
@@ -204,7 +206,7 @@ def bpe_train(
     BATCHED rounds, exactly equal to the sequential argmax loop (r7 shape:
     one Spark job PER merge — a non-starter at 32k-merge tokenizers). Each
     round computes the full weighted pair-count table ONCE (TakeOrdered
-    ``batch_max`` with the pinned (count desc, a, b) tiebreak) and accepts
+    ``BATCH_MAX`` with the pinned (count desc, a, b) tiebreak) and accepts
     the longest candidate prefix that is PROVABLY the sequential merge
     sequence:
 
@@ -249,7 +251,7 @@ def bpe_train(
     merges: list[tuple[str, str]] = []
     applied_since_ckpt = 0
     while len(merges) < num_merges:
-        want = min(batch_max, num_merges - len(merges))
+        want = min(BATCH_MAX, num_merges - len(merges))
         cands = (
             cur.filter(F.size("syms") >= 2)
             .select("count", F.explode(_adjacent_pairs("syms")).alias("__p"))
@@ -318,7 +320,7 @@ def bpe_train(
             symbols.add(a + b)
             cur = cur.withColumn("syms", _merge_fold(F.col("syms"), a, b))
             applied_since_ckpt += 1
-            if applied_since_ckpt >= checkpoint_every:
+            if applied_since_ckpt >= CHECKPOINT_EVERY:
                 # truncate the fold-expression lineage (same discipline as
                 # dedup.connected_components)
                 cur = cur.localCheckpoint(eager=True)

@@ -72,8 +72,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from taxahfe_spark.functions.rf import forest_importance
-from taxahfe_spark.session import driver_side, local_frame
+from taxahfe_spark.functions.rf import _apply_bins, _quantile_edges, forest_importance
+from taxahfe_spark.session import ForkPool, driver_side, local_frame
 from taxahfe_spark.taxonomy import sparse_to_dense
 
 # driver-local fused stage budget: design cells (entity x competitor x fit)
@@ -171,15 +171,21 @@ def _corr_with_parent(mat: np.ndarray, method: str) -> np.ndarray:
             lambda c: pd.Series(c).rank(method="average").to_numpy(), 0, x
         )
     xc = x - x.mean(axis=0)
-    denom = np.sqrt((xc**2).sum(axis=0))
+    ss = (xc**2).sum(axis=0)
+    denom = np.sqrt(ss)
     num = xc[:, :1].T @ xc  # (1, k)
     with np.errstate(divide="ignore", invalid="ignore"):
         r = (num / (denom[0] * denom))[0]
     # (effectively-)constant columns must yield NaN, never a prune: without
     # the relative floor, catastrophic cancellation in the mean subtraction
     # can turn an exactly-constant column into denom ~ 1e-20 and a spurious
-    # r = +/-1 (found by hypothesis)
-    tiny = denom <= np.abs(x).max(axis=0) * x.shape[0] * 1e-14
+    # r = +/-1; and a column whose variance underflows to 0 (deviations below
+    # ~1e-162) is constant in float64 even when its entries differ, where
+    # the floor alone let a one-subnormal ss give r = 1 (both found by
+    # hypothesis)
+    tiny = (denom <= np.abs(x).max(axis=0) * x.shape[0] * 1e-14) | (
+        ss / x.shape[0] == 0
+    )
     r = r[1:]
     r[tiny[0] | tiny[1:]] = np.nan
     return r
@@ -254,32 +260,8 @@ def _rank_avg(v: np.ndarray) -> np.ndarray:
     return pd.Series(v).rank(method="average").to_numpy()
 
 
-# executor-process bin-code memo: chunk fan-out runs MANY tasks per
-# competition, each rebuilding the identical design and re-binning it (1.8s
-# at the sf0.1 super filter's 15k x 1000 shape). Python workers are reused
-# across tasks, so a per-process cache amortizes binning across a worker's
-# share of the fan-out. Keyed by (competition key + a content crc of the
-# design), so a colliding key from a different run can never serve stale
-# codes; bounded to the last few competitions.
-_BIN_MEMO: dict[str, np.ndarray] = {}
-
-
-def _cached_bins(X: np.ndarray, cache_key: str | None) -> np.ndarray:
-    from taxahfe_spark.functions.rf import _bin_features
-
-    if cache_key is None:
-        return _bin_features(X)
-    key = (
-        f"{cache_key}|{X.shape}|"
-        f"{zlib.crc32(np.ascontiguousarray(X[: min(64, X.shape[0])]).tobytes())}"
-    )
-    codes = _BIN_MEMO.get(key)
-    if codes is None:
-        codes = _bin_features(X)
-        if len(_BIN_MEMO) >= 4:
-            _BIN_MEMO.pop(next(iter(_BIN_MEMO)))
-        _BIN_MEMO[key] = codes
-    return codes
+def _bin(X: np.ndarray) -> np.ndarray:
+    return _apply_bins(X, _quantile_edges(X))
 
 
 def make_importance_runner(
@@ -289,13 +271,11 @@ def make_importance_runner(
     re_individual: np.ndarray | None,
     re_time: np.ndarray | None,
     params: "CompetitionParams",
-    cache_key: str | None = None,
 ):
-    """Per-competition importance closure: design matrices AND quantile bin
-    codes are computed ONCE, then each chunk's fit reuses them (binning is a
-    large share of a small-forest fit; results are bit-identical).
-    ``cache_key`` additionally memoizes the bin codes across TASKS of the
-    same competition in one worker process (see _BIN_MEMO).
+    """Per-competition importance closure ``fit(seed)``: each design is
+    binned ONCE here and the closure keeps only its uint8 codes, so every
+    chunk fit reads them (binning is a large share of a small-forest fit;
+    results are bit-identical). ``fit.nbytes`` is the size of those codes.
 
     Non-RE: one corrected-impurity forest on [features | covariates]
     (reference lib/tree.R:799-803). RE: two forests on the per-(individual,
@@ -304,15 +284,15 @@ def make_importance_runner(
     classification = params.feature_type == "factor"
     p = Xf.shape[1]
     if not params.random_effects:
-        X = Xf if cov is None or not cov.size else np.column_stack([Xf, cov])
-        codes = _cached_bins(X, cache_key)
+        codes = _bin(Xf if cov is None or not cov.size else np.column_stack([Xf, cov]))
 
         def run(seed: int) -> np.ndarray:
             return forest_importance(
-                X, label, classification=classification,
-                num_trees=params.num_trees, seed=seed, codes=codes,
+                codes, label, classification=classification,
+                num_trees=params.num_trees, seed=seed,
             )[:p]
 
+        run.nbytes = codes.nbytes
         return run
 
     # repeated measures: pseudo-sample = (individual, label) pair
@@ -332,53 +312,53 @@ def make_importance_runner(
         slopes if cov is None or not cov.size
         else np.column_stack([slopes, X_mean[:, p:]])
     )
-    codes_mean = _cached_bins(X_mean, cache_key and f"{cache_key}:mean")
-    codes_slope = _cached_bins(X_slope, cache_key and f"{cache_key}:slope")
+    codes_mean, codes_slope = _bin(X_mean), _bin(X_slope)
 
     def run_re(seed: int) -> np.ndarray:
         imp_a = forest_importance(
-            X_mean, y_group, classification=classification,
-            num_trees=params.num_trees, seed=seed, codes=codes_mean,
+            codes_mean, y_group, classification=classification,
+            num_trees=params.num_trees, seed=seed,
         )
         imp_s = forest_importance(
-            X_slope, y_group, classification=classification,
-            num_trees=params.num_trees, seed=seed + 1, codes=codes_slope,
+            codes_slope, y_group, classification=classification,
+            num_trees=params.num_trees, seed=seed + 1,
         )
         # rank within each fit (over features AND covariates), avg the ranks
         return ((_rank_avg(imp_a) + _rank_avg(imp_s)) / 2.0)[:p]
 
+    run_re.nbytes = codes_mean.nbytes + codes_slope.nbytes
     return run_re
 
 
-# executor-process design memo: the chunk fan-out runs MANY tasks per
-# competition; every one re-densified the competitors' sparse vectors,
-# re-ran the correlation prune, and re-stacked the design matrix before its
+# per-process memo of prepared tasks: the chunk fan-out runs MANY tasks per
+# competition, and each would re-densify the competitors' sparse vectors,
+# re-run the correlation prune, re-stack the design and re-bin it before its
 # chunk fits (at the sf0.1 super filter's 15k x 1000 shape that is ~100 MB
-# of pure memory traffic per task — exactly the non-scaling byte-bound work
-# the eta audit flagged). Workers are reused across tasks, so the last two
-# competitions' (corr, competitors, Xf) live here, keyed by a run-identity
-# token + competition key + competitor-set crc (a different run or node set
-# can never serve stale state). Size-capped so a beyond-budget design never
-# pins worker memory.
+# of pure memory traffic and 1.8 s of binning per task). Workers (Spark's
+# Python workers, the driver fork pool's children) are reused across tasks,
+# so the last two competitions' (corr, competitors, fit closure over the bin
+# codes) live here, keyed by the run token + competition key + names crc: a
+# different run or node set never reads another's entry. Size-capped on the
+# codes so a beyond-budget design never pins worker memory.
 _DESIGN_MEMO: dict[str, tuple] = {}
 _DESIGN_MEMO_MAX_BYTES = 256 * 1024 * 1024
 
 
-def _prepare_design(
+def _prepare_task(
     parent_path: str | None,
     names: list[str],
     get_dense,
+    ctx: tuple,
     params: "CompetitionParams",
-    memo_key: str | None,
-) -> tuple[np.ndarray | None, list[str], np.ndarray | None]:
-    """(corr vs parent over sorted descendants | None, competitors, Xf | None)
-    — the chunk-invariant prefix of a competition, memoized per process.
-    ``competitors`` is empty when the RF stage must not run (all pruned, or
-    corr_only mode)."""
-    if memo_key is not None:
-        hit = _DESIGN_MEMO.get(memo_key)
-        if hit is not None:
-            return hit
+    memo_key: str,
+) -> tuple[np.ndarray | None, list[str], object]:
+    """(corr vs parent over sorted descendants | None, competitors, fit |
+    None): the chunk-invariant prefix of a competition, memoized per
+    process. ``competitors`` is empty and ``fit`` None when the RF stage
+    must not run (all pruned, or corr_only mode)."""
+    hit = _DESIGN_MEMO.get(memo_key)
+    if hit is not None:
+        return hit
     descs = [n for n in names if n != parent_path]
     competitors = list(descs)
     r = None
@@ -397,15 +377,15 @@ def _prepare_design(
             competitors = []
         else:
             competitors = [parent_path] + keep
-    Xf = (
-        np.column_stack([get_dense(n) for n in competitors])
-        if competitors
-        else None
-    )
-    entry = (r, competitors, Xf)
-    if memo_key is not None and (
-        Xf is None or Xf.nbytes <= _DESIGN_MEMO_MAX_BYTES
-    ):
+    fit = None
+    if competitors:
+        label, cov, re_ind, re_time, _ = ctx
+        fit = make_importance_runner(
+            np.column_stack([get_dense(n) for n in competitors]),
+            label, cov, re_ind, re_time, params,
+        )
+    entry = (r, competitors, fit)
+    if fit is None or fit.nbytes <= _DESIGN_MEMO_MAX_BYTES:
         if len(_DESIGN_MEMO) >= 2:
             _DESIGN_MEMO.pop(next(iter(_DESIGN_MEMO)))
         _DESIGN_MEMO[memo_key] = entry
@@ -413,8 +393,7 @@ def _prepare_design(
 
 
 def _run_group(
-    task: tuple, vecs, ctx: tuple, params: "CompetitionParams",
-    memo_prefix: str | None,
+    task: tuple, vecs, ctx: tuple, params: "CompetitionParams", run_token: str
 ) -> list[tuple]:
     """Fused corr + prune + forest pass for one task — the one body every
     executor runs (fork pool, ``mapInPandas``, ``applyInPandas``).
@@ -427,19 +406,16 @@ def _run_group(
     one corr row per descendant, then ONE importance row per competitor
     carrying the sum over this range's chunk fits (summed HERE, in ascending
     chunk order, so :func:`_reduce_stage` stays bit-deterministic regardless
-    of task scheduling). Densification, the corr prune and the design stack
-    are chunk-invariant and served from _DESIGN_MEMO when another range of
-    the same competition already ran in this worker process;
-    ``memo_prefix`` names the run in the memo key (None: no memo).
+    of task scheduling). Densification, the corr prune, the design stack
+    and its binning are chunk-invariant and served from _DESIGN_MEMO when
+    another range of the same competition already ran in this process;
+    ``run_token`` names the run in the memo key.
     """
     key, parent_path, names, chunk_lo, chunk_hi = task
-    label, cov, re_ind, re_time, remap = ctx
-    memo_key = None if memo_prefix is None else (
-        f"{memo_prefix}|{key}|{zlib.crc32('|'.join(names).encode())}"
-    )
-    r, competitors, Xf = _prepare_design(
-        parent_path, names, lambda n: _to_dense(*vecs[n], len(label), remap),
-        params, memo_key,
+    n_entities = len(ctx[0])
+    r, competitors, run_fit = _prepare_task(
+        parent_path, names, lambda n: _to_dense(*vecs[n], n_entities, ctx[4]),
+        ctx, params, f"{run_token}|{key}|{zlib.crc32('|'.join(names).encode())}",
     )
     rows: list[tuple] = []
     if parent_path is not None:
@@ -448,10 +424,6 @@ def _run_group(
         if not competitors:
             return rows
     parent_key = parent_path if parent_path is not None else "__final__"
-    cache_key = f"{parent_key}|{len(competitors)}|{zlib.crc32('|'.join(competitors).encode())}"
-    run_fit = make_importance_runner(
-        Xf, label, cov, re_ind, re_time, params, cache_key=cache_key
-    )
     imp_sum = np.zeros(len(competitors))
     imp_cnt = np.zeros(len(competitors), dtype=np.int64)
     for chunk in range(chunk_lo, chunk_hi):
@@ -503,19 +475,6 @@ def _spark_task(row, names) -> tuple:
             int(row.chunk_hi))
 
 
-# driver-local fused-stage context: set by _run_stage_local immediately
-# before the fork pool spins up, inherited by children via copy-on-write
-# (never pickled), cleared in a finally. One slot — stages never overlap.
-_LOCAL_STAGE_CTX: list = [None]
-
-
-def _local_stage_worker(task) -> list[tuple]:
-    """One task on the driver pool (no design memo: the children share the
-    parent's pages)."""
-    vecs, ctx, params = _LOCAL_STAGE_CTX[0]
-    return _run_group(task, vecs, ctx, params, None)
-
-
 def _collect_vectors_arrow(vectors: DataFrame) -> dict:
     """(path, idxs, vals) frame -> {path: (int32 idxs, float64 vals)} via one
     Arrow transfer (flat buffer slices, no per-element deserialization); a
@@ -547,7 +506,7 @@ def _next_run_token() -> str:
 
 def make_broadcast_stage_udf(
     parts: list[list[tuple]], bc_vectors, bc_ctx, params: CompetitionParams,
-    run_token: str = "",
+    run_token: str,
 ):
     """mapInPandas runner for the broadcast strategy over
     ``spark.range(len(parts))``: input row ``i`` runs the tasks
@@ -561,15 +520,13 @@ def make_broadcast_stage_udf(
                 row
                 for i in pdf["id"]
                 for task in parts[i]
-                for row in _run_group(task, vecs, ctx, params, f"b{run_token}")
+                for row in _run_group(task, vecs, ctx, params, run_token)
             ])
 
     return fn
 
 
-def make_shuffle_stage_udf(
-    bc_ctx, params: CompetitionParams, run_token: str = ""
-):
+def make_shuffle_stage_udf(bc_ctx, params: CompetitionParams, run_token: str):
     """applyInPandas runner for the shuffle strategy: one GROUP per task,
     one row per name carrying its position in the task's names and its
     sparse vector (joined in, never via the driver)."""
@@ -579,7 +536,7 @@ def make_shuffle_stage_udf(
         vecs = dict(zip(pdf["path"], zip(pdf["idxs"], pdf["vals"])))
         task = _spark_task(pdf.iloc[0], pdf["path"])
         return _rows_frame(
-            _run_group(task, vecs, bc_ctx.value, params, f"s{run_token}")
+            _run_group(task, vecs, bc_ctx.value, params, run_token)
         )
 
     return fn
@@ -618,7 +575,7 @@ class TreeCompetition:
         )
         self.params = params
         self._memo_token = _next_run_token()
-        self._local_pool = None  # driver-local stage pool (see _run_stage)
+        self._pool = None  # the run's driver fork pool (see _run_stage)
         # design_sample_frac < 1: seeded hash subsample of entity POSITIONS,
         # applied to label/cov/RE arrays here and to every sparse vector at
         # densify time via the remap (see CompetitionParams docstring). A
@@ -816,7 +773,8 @@ class TreeCompetition:
         """Compete the tree. With ``resume_dir``, node state is committed
         after every level (driver-side JSON, taxonomy-sized, commit-last) and
         a restarted run with the same inputs skips completed levels — the
-        level-loop analog of StageCheckpointer for the distributed frames."""
+        level-loop analog of StageCheckpointer for the distributed frames.
+        The run's pool and broadcasts are released on the way out."""
         p = self.params
         done = self._load_progress(resume_dir) if resume_dir else []
         levels = sorted({n.level for n in self.nodes.values()}, reverse=True)
@@ -835,7 +793,7 @@ class TreeCompetition:
                     if resume_dir:
                         self._save_progress(resume_dir, done + ["super"])
         finally:
-            self._close_local_pool()
+            self.close()
         if self.strategy == "shuffle":
             self.vectors.unpersist()
         return self.state_frame()
@@ -886,20 +844,22 @@ class TreeCompetition:
         executor runs :func:`_run_group` on each task and yields the same
         flat rows, and :func:`_reduce_stage` turns them into the result.
 
-        Small stages run DRIVER-LOCAL (multiprocessing fork pool) when the
-        vectors are already on the driver (broadcast strategy), the platform
-        can fork, and the total design work is within
-        ``DRIVER_STAGE_MAX_CELLS`` (``session.driver_side``): a
-        megabyte-scale stage pays more in Spark scheduling (~1 s/stage
-        measured at sf0.1) than in compute, the same size-gated driver
-        fast-path rule as dietml's small-n CV. Otherwise the stage runs on
-        Spark (:meth:`_run_stage_spark`). Results are bit-identical:
-        _run_group is a pure function of (inputs, seeds) and the partials
-        reduce in chunk order whatever ran them; cluster-scale inputs always
-        take the Spark path (the gate scales with n_entities, so it closes
-        itself at scale)."""
-        import multiprocessing as mp
-
+        Small stages run DRIVER-LOCAL on the run's ``session.ForkPool``
+        when the vectors are already on the driver (broadcast strategy) and
+        the total design work is within ``DRIVER_STAGE_MAX_CELLS``
+        (``session.driver_side``): a megabyte-scale stage pays more in Spark
+        scheduling (~1 s/stage measured at sf0.1) than in compute, the same
+        size-gated driver fast-path rule as dietml's small-n CV. The
+        children inherit the vectors and the design context by COW memory —
+        zero serialization, no Spark job, no broadcast — and ONE pool serves
+        the whole run, closed in run(): 20-30 forks of a driver holding the
+        vector dict measured ~0.5 s, paid once, not per level. Otherwise, or
+        when the pool cannot fork, the stage runs on Spark
+        (:meth:`_run_stage_spark`). Results are bit-identical: _run_group is
+        a pure function of (inputs, seeds) and the partials reduce in chunk
+        order whatever ran them; cluster-scale inputs always take the Spark
+        path (the gate scales with n_entities, so it closes itself at
+        scale)."""
         tasks = []
         ranges = self._chunk_ranges(len(comps), n_chunks)
         for key, (parent, paths) in comps.items():
@@ -907,16 +867,17 @@ class TreeCompetition:
             names += sorted(set(paths) - {parent})
             tasks += [(key, parent, names, lo, hi) for lo, hi in ranges]
         rows = None
-        if (
-            self.strategy == "broadcast"
-            and "fork" in mp.get_all_start_methods()
-            and driver_side(
-                self._driver_stage_cells(comps, n_chunks), DRIVER_STAGE_MAX_CELLS
-            )
+        if self.strategy == "broadcast" and driver_side(
+            self._driver_stage_cells(comps, n_chunks), DRIVER_STAGE_MAX_CELLS
         ):
             try:
-                rows = self._run_stage_local(tasks, self.vectors_dict, self._ctx)
-            except (ImportError, OSError) as e:  # pool failure
+                if self._pool is None:
+                    self._pool = ForkPool(lambda task: _run_group(
+                        task, self.vectors_dict, self._ctx, self.params,
+                        self._memo_token,
+                    ))
+                rows = [row for part in self._pool.map(tasks) for row in part]
+            except (ImportError, OSError) as e:  # no fork, or the pool failed
                 warnings.warn(
                     f"driver-local competition stage unavailable ({e}); "
                     "running the stage on Spark",
@@ -977,41 +938,16 @@ class TreeCompetition:
         return list(zip(*stage.toArrow().to_pydict().values()))
 
     def close(self) -> None:
-        """Release the broadcasts a Spark stage created (vectors and design
-        context); the caller keeps ``vectors_dict`` if it still needs the
-        vectors."""
+        """Release the driver fork pool and the broadcasts a Spark stage
+        created (vectors and design context); ``vectors_dict`` stays for a
+        caller that still needs the vectors. Idempotent."""
+        if self._pool is not None:
+            self._pool.close()
+            self._pool = None
         for bc in (self.bc_vectors, self.bc_ctx):
             if bc is not None:
                 bc.destroy()
         self.bc_vectors = self.bc_ctx = None
-
-    def _close_local_pool(self) -> None:
-        if self._local_pool is not None:
-            self._local_pool.terminate()
-            self._local_pool.join()
-            self._local_pool = None
-        _LOCAL_STAGE_CTX[0] = None
-
-    def _run_stage_local(self, tasks: list[tuple], vecs: dict, ctx: tuple):
-        """The stage on a driver fork pool: the children inherit the vectors
-        and the design context by COW memory — zero serialization, no Spark
-        job, no broadcast. ONE pool per run, created at the first local
-        stage and closed in run(): 20-30 forks of a driver holding the
-        vector dict measured ~0.5 s — paid once, not per level. (vecs, ctx)
-        are stage-invariant, so a pool forked at stage 1 serves every later
-        stage unchanged. A one-task stage runs in the driver itself."""
-        import multiprocessing as mp
-
-        if len(tasks) == 1:
-            return _run_group(tasks[0], vecs, ctx, self.params, None)
-        if self._local_pool is None:
-            _LOCAL_STAGE_CTX[0] = (vecs, ctx, self.params)
-            procs = min(
-                max(len(tasks), 8), self.spark.sparkContext.defaultParallelism
-            )
-            self._local_pool = mp.get_context("fork").Pool(procs)
-        results = self._local_pool.map(_local_stage_worker, tasks)
-        return [row for rows in results for row in rows]
 
     # -- level competition ---------------------------------------------------
 

@@ -21,6 +21,12 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# estimated right-side payload (rows x dim x 8 B) up to which
+# cosine_allpairs broadcasts it; above, the pair join runs as a partitioned
+# cartesian product. Not a driver_side gate: broadcasting a small side is
+# the at-scale plan, so TAXAHFE_DISTRIBUTED=1 leaves it on.
+ALLPAIRS_BROADCAST_MAX_BYTES = 256 * 1024 * 1024
+
 
 def _dot(a, b) -> F.Column:
     # cast BEFORE multiplying: float32*float32 loses precision pre-sum and
@@ -404,19 +410,19 @@ def cosine_allpairs(
     a < b. The correctness baseline for embedding near-dup detection.
 
     Quadratic by definition. The right side is broadcast only when its
-    estimated payload (rows x dim x 8B) fits ``broadcast_max_bytes``; above
-    that the non-equi join runs as a partitioned cartesian product instead
-    of failing the driver on a giant broadcast. Use ann_self_pairs for the
-    bucketed scale path; this exact form is for verification and modest
+    estimated payload (rows x dim x 8B) fits
+    ``ALLPAIRS_BROADCAST_MAX_BYTES``; above that the non-equi join runs as
+    a partitioned cartesian product instead of failing the driver on a
+    giant broadcast. Use ann_self_pairs for the bucketed scale path; this
+    exact form is for verification and modest
     corpora (<= ~10^5 vectors).
     """
-    broadcast_max_bytes = 256 * 1024 * 1024
     n = df.count()
     dim_row = df.select(vec_col).first()
     dim = len(dim_row[0]) if dim_row and dim_row[0] is not None else 0
     a = df.select(F.col(id_col).alias("a"), F.col(vec_col).alias("va"))
     b = df.select(F.col(id_col).alias("b"), F.col(vec_col).alias("vb"))
-    right = F.broadcast(b) if n * dim * 8 <= broadcast_max_bytes else b
+    right = F.broadcast(b) if n * dim * 8 <= ALLPAIRS_BROADCAST_MAX_BYTES else b
     pairs = a.join(right, F.col("a") < F.col("b"))
     scored = pairs.withColumn(
         "cosine", F.round(cosine_similarity_col("va", "vb"), 8)

@@ -21,13 +21,19 @@ from pyspark.sql import functions as F
 from taxahfe_spark.naming import clean_entity, clean_entity_expr, clean_name, clean_names_df
 from taxahfe_spark.operators.competition import CompetitionParams, TreeCompetition
 from taxahfe_spark.operators.filters import feature_filter_flags
-from taxahfe_spark.session import local_frame
+from taxahfe_spark.session import driver_side, local_frame
 from taxahfe_spark.taxonomy import (
     ResolvedTree,
     melt_wide_matrix,
     resolve_tree,
     to_feature_vectors,
 )
+
+# winner-matrix cells (entities x winners) up to which a driver tree's
+# winner columns densify locally (``session.driver_side``); above it, or
+# under TAXAHFE_DISTRIBUTED=1, the winners are pivoted from the resolved
+# frame
+WINNER_MATRIX_MAX_CELLS = 50_000_000
 
 
 def read_metadata(
@@ -337,7 +343,6 @@ def taxa_hfe(
     try:
         state = comp.run(resume_dir=resume_dir)
     finally:
-        comp.close()
         if not tree.on_driver:
             vectors.unpersist()  # no-op when TreeCompetition already released it
     if tree.vectors is None:
@@ -414,7 +419,7 @@ def winner_feature_matrix(
         base = entities()
     elif (
         vecs is not None
-        and len(entity_ids) * len(winners) <= 50_000_000
+        and driver_side(len(entity_ids) * len(winners), WINNER_MATRIX_MAX_CELLS)
         and len({clean_name(w) for w in winners}) == len(winners)
     ):
         # the cell gate falls back to the pivot for pathological winner counts

@@ -33,6 +33,7 @@ in the same session).
 
 from __future__ import annotations
 
+import multiprocessing as mp
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -59,11 +60,68 @@ def driver_side(size: int, limit: int) -> bool:
     ``TAXAHFE_DISTRIBUTED=1`` pins every caller to its distributed path —
     the parity tests and the scaling runner need those paths at small
     sizes. Callers: the rollup (``taxonomy.DRIVER_MAX_ROWS``), the
-    competition pool (``competition.DRIVER_STAGE_MAX_CELLS``), the BPE
-    trainer (``bpe.DRIVER_MAX_WORDS``) and the four ranks of
+    competition pool (``competition.DRIVER_STAGE_MAX_CELLS``), the winner
+    matrix (``pipeline.WINNER_MATRIX_MAX_CELLS``), the BPE trainer
+    (``bpe.DRIVER_MAX_WORDS``) and the four ranks of
     ``tokens._running_total`` (``VOCAB_RANK_MAX_ROWS``: build_vocab,
     remap_tokens; ``DOC_RANK_MAX_ROWS``: epoch_shuffle, pack_sequences)."""
     return size <= limit and os.environ.get("TAXAHFE_DISTRIBUTED") != "1"
+
+
+# the open driver fork pool's work function: set when the pool opens and
+# inherited by its forked children (copy-on-write, never pickled, so the
+# work may close over a fitted model or the run's vectors); cleared when it
+# closes. One slot: one pool at a time.
+_FORK_WORK: list = [None]
+
+
+def _fork_call(item):
+    return _FORK_WORK[0](item)
+
+
+class ForkPool:
+    """Driver-local fork work, for work too small to pay a Spark job:
+    ``map(items)`` returns ``[work(item) for item in items]``, computed by
+    ``defaultParallelism`` forked children of the driver (the session's
+    core count, which ``--ncores`` sets). The children are forked at the
+    first ``map`` of two or more items and serve every later ``map`` until
+    :meth:`close`; a single item runs in the driver itself. Items and
+    results are pickled, ``work`` is not.
+
+    Raises ``OSError`` when the platform cannot fork (each caller has its
+    own fallback) and ``RuntimeError`` while another pool is open.
+    """
+
+    def __init__(self, work):
+        if _FORK_WORK[0] is not None:
+            raise RuntimeError("a driver fork pool is already open")
+        if "fork" not in mp.get_all_start_methods():
+            raise OSError("the driver fork pool needs the 'fork' start method")
+        self.workers = SparkSession.active().sparkContext.defaultParallelism
+        self._work = work
+        self._pool = None
+        _FORK_WORK[0] = work
+
+    def map(self, items: list) -> list:
+        if len(items) <= 1:
+            return [self._work(item) for item in items]
+        if self._pool is None:
+            self._pool = mp.get_context("fork").Pool(self.workers)
+        return self._pool.map(_fork_call, items)
+
+    def close(self) -> None:
+        if self._pool is not None:
+            self._pool.terminate()
+            self._pool.join()
+            self._pool = None
+        if _FORK_WORK[0] is self._work:
+            _FORK_WORK[0] = None
+
+    def __enter__(self) -> "ForkPool":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
 
 
 def local_frame(spark: SparkSession, data, schema: str | StructType | None) -> DataFrame:

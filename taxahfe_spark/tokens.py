@@ -16,6 +16,8 @@ mid-level rows can be observed (the microbiome CSV case).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -42,7 +44,7 @@ TOKEN_ID_CHUNK_BITS = 16
 def _running_total(
     df: DataFrame,
     order: list,
-    chunk: F.Column,
+    chunk: F.Column | Callable[[], F.Column],
     limit: int,
     keys: list[str] | tuple = (),
     weight: str | None = None,
@@ -57,13 +59,17 @@ def _running_total(
     key group does the rest; above it the chunk offsets join as a broadcast
     local frame (null-safe, a null chunk first) and the window partitions
     by ``keys + chunk``. Both branches agree on every row when ``order`` is
-    total.
+    total. A ``chunk`` that costs Spark jobs to build (approxQuantile
+    edges) comes as a callable: the first job then totals per key only,
+    and the chunk is built, and totalled, on the chunked branch alone.
     """
     keys = list(keys)
     aggs = [F.count(F.lit(1)).alias("__rows")]
     if weight is not None:
         aggs.append(F.sum(weight).alias("__sum"))
-    per_chunk = df.groupBy(*keys, chunk.alias("__chunk")).agg(*aggs)
+    lazy = callable(chunk)
+    group = keys if lazy else [*keys, chunk.alias("__chunk")]
+    per_chunk = df.groupBy(*group).agg(*aggs)
     stats = per_chunk.collect()
 
     def before(w: Window) -> F.Column:
@@ -78,6 +84,10 @@ def _running_total(
         return df.withColumn(
             "__before", before(Window.partitionBy(*keys).orderBy(*order))
         )
+    if lazy:
+        chunk = chunk()
+        per_chunk = df.groupBy(*keys, chunk.alias("__chunk")).agg(*aggs)
+        stats = per_chunk.collect()
     amount = "__rows" if weight is None else "__sum"
     acc: dict = {}
     offsets = []
@@ -662,15 +672,16 @@ def pack_sequences(
     if dtype in ("string", "varchar"):
         chunk = F.substring(F.col(id_col), 1, DOC_ID_PREFIX_CHARS)
     else:
-        qs = [i / 64 for i in range(1, 64)]
-        edges = sorted(set(seqs.approxQuantile(id_col, qs, 0.001)))
-        from functools import reduce
+        def chunk() -> F.Column:  # the edges' jobs run on the chunked branch only
+            from functools import reduce
 
-        chunk = reduce(
-            lambda acc, e: acc + (F.col(id_col) > F.lit(e)).cast("int"),
-            edges,
-            F.lit(0),
-        )
+            qs = [i / 64 for i in range(1, 64)]
+            edges = sorted(set(seqs.approxQuantile(id_col, qs, 0.001)))
+            return reduce(
+                lambda acc, e: acc + (F.col(id_col) > F.lit(e)).cast("int"),
+                edges,
+                F.lit(0),
+            )
     out = _running_total(
         seqs, [F.col(id_col).asc()], chunk, DOC_RANK_MAX_ROWS, keys, weight=ntok_col
     ).withColumn("bin", F.floor(F.col("__before") / budget)).drop("__before")

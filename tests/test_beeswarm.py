@@ -17,7 +17,7 @@ def _linear_predict(M: np.ndarray) -> np.ndarray:
     return 3.0 * M[:, 0] - 1.0 * M[:, 1]
 
 
-def test_shap_values_local_matches_ranking_path():
+def test_shap_values_local_matches_ranking_path(spark):
     rng = np.random.default_rng(0)
     X = rng.random((40, 4))
     cols = ["a", "b", "c", "d"]
@@ -27,12 +27,33 @@ def test_shap_values_local_matches_ranking_path():
     assert rank.iloc[0]["feature"] == "a"
 
 
-def test_shap_values_local_worker_invariant():
+def test_shap_values_local_worker_invariant(spark, monkeypatch):
+    """The rows go to a pool of the session's ``defaultParallelism``
+    children, whatever the host's core count; where the driver cannot fork,
+    one in-process loop returns the same matrix."""
+    import multiprocessing
+    import os
+    from multiprocessing import context
+
     rng = np.random.default_rng(1)
     X = rng.random((12, 3))
-    p1 = shap_values_local(_linear_predict, X, seed=3, workers=1)
-    p4 = shap_values_local(_linear_predict, X, seed=3, workers=4)
-    assert np.array_equal(p1, p4)
+    real_pool = context.BaseContext.Pool
+    sizes = []
+
+    def spy(self, processes=None, *args, **kwargs):
+        sizes.append(processes)
+        return real_pool(self, processes, *args, **kwargs)
+
+    monkeypatch.setattr(context.BaseContext, "Pool", spy)
+    monkeypatch.setattr(os, "cpu_count", lambda: 16)
+    pooled = shap_values_local(_linear_predict, X, seed=3)
+    assert sizes == [spark.sparkContext.defaultParallelism]
+    monkeypatch.setattr(
+        multiprocessing, "get_all_start_methods", lambda: ["spawn"]
+    )
+    in_process = shap_values_local(_linear_predict, X, seed=3)
+    assert len(sizes) == 1  # no pool was forked
+    assert np.array_equal(pooled, in_process)
 
 
 def test_beeswarm_svg_structure():

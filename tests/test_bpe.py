@@ -125,11 +125,20 @@ def test_bpe_train_no_python_in_merge_loop(spark):
     assert "BatchEvalPython" not in plan and "PythonUDF" not in plan
 
 
-def test_bpe_checkpoint_path_same_result(spark):
+def test_bpe_checkpoint_path_same_result(spark, monkeypatch):
+    """The distributed trainer learns the same merges whatever its round
+    size and checkpoint spacing."""
+    from taxahfe_spark.operators import bpe
+
     docs = spark.createDataFrame(CORPUS, "doc_id long, text string")
     wc = word_counts(docs)
-    a = bpe_train(wc, num_merges=10, checkpoint_every=2)
-    b = bpe_train(wc, num_merges=10, checkpoint_every=100)
+    monkeypatch.setenv("TAXAHFE_DISTRIBUTED", "1")
+    monkeypatch.setattr(bpe, "CHECKPOINT_EVERY", 2)
+    monkeypatch.setattr(bpe, "BATCH_MAX", 1)
+    a = bpe_train(wc, num_merges=10)
+    monkeypatch.setattr(bpe, "CHECKPOINT_EVERY", 100)
+    monkeypatch.setattr(bpe, "BATCH_MAX", 64)
+    b = bpe_train(wc, num_merges=10)
     assert a == b
 
 
@@ -182,7 +191,7 @@ def test_bpe_driver_path_job_count(spark):
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     before = max(tracker.getJobIdsForGroup() or [0])
-    merges = bpe_train(wc, num_merges=60, min_pair_count=1, checkpoint_every=8)
+    merges = bpe_train(wc, num_merges=60, min_pair_count=1)
     after = max(tracker.getJobIdsForGroup() or [0])
     n_jobs = after - before
     assert len(merges) == 60

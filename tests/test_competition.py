@@ -346,12 +346,12 @@ def test_collapse_matches_frozen_golden(spark):
 
 
 def test_forkless_platform_takes_spark_stage_with_same_state(spark, monkeypatch):
-    """Where the platform offers no ``fork`` start method the driver-local
-    stage is not attempted (``get_context("fork")`` raises ValueError
-    there): every stage runs on Spark and the state equals the fork-pool
-    run's. Where the pool itself fails (``OSError``), the stage also moves
-    to Spark, with a RuntimeWarning, and the state is the same again."""
+    """The run's driver pool forks ``defaultParallelism`` children. Where
+    the platform offers no ``fork`` start method, or the pool itself fails
+    (``OSError``), every stage moves to Spark with a RuntimeWarning, and the
+    state equals the fork-pool run's."""
     import multiprocessing
+    from multiprocessing import context
 
     long = spark.createDataFrame(
         _long_rows(), "clade_name string, entity_id string, value double"
@@ -366,38 +366,68 @@ def test_forkless_platform_takes_spark_stage_with_same_state(spark, monkeypatch)
     params = CompetitionParams(
         lowest_level=1, max_level=14, nperm=2, num_trees=10, seed=5
     )
-    real_get_context = multiprocessing.get_context
-    contexts = []
+    real_pool = context.BaseContext.Pool
+    sizes = []
 
-    def spy(method=None):
-        contexts.append(method)
-        return real_get_context(method)
+    def spy(self, processes=None, *args, **kwargs):
+        sizes.append(processes)
+        return real_pool(self, processes, *args, **kwargs)
 
-    monkeypatch.setattr(multiprocessing, "get_context", spy)
+    monkeypatch.setattr(context.BaseContext, "Pool", spy)
     forked = TreeCompetition(vectors, flags_pdf, LABEL, None, params).run()
-    assert "fork" in contexts  # the reference run used the fork pool
+    # the reference run forked one pool, at the session's parallelism
+    assert sizes == [spark.sparkContext.defaultParallelism]
 
-    def no_fork(method=None):
-        if method == "fork":
-            raise ValueError("cannot find context for 'fork'")
-        return real_get_context(method)
-
-    monkeypatch.setattr(multiprocessing, "get_context", no_fork)
     monkeypatch.setattr(
         multiprocessing, "get_all_start_methods", lambda: ["spawn"]
     )
-    staged = TreeCompetition(vectors, flags_pdf, LABEL, None, params).run()
+    with pytest.warns(RuntimeWarning, match="running the stage on Spark"):
+        staged = TreeCompetition(vectors, flags_pdf, LABEL, None, params).run()
     pd.testing.assert_frame_equal(forked, staged)
+    assert len(sizes) == 1  # no pool was forked
 
     monkeypatch.undo()
 
-    def pool_fails(self, comps, ranges, n_chunks):
+    def pool_fails(self, processes=None, *args, **kwargs):
         raise OSError("cannot start the fork pool")
 
-    monkeypatch.setattr(TreeCompetition, "_run_stage_local", pool_fails)
+    monkeypatch.setattr(context.BaseContext, "Pool", pool_fails)
     with pytest.warns(RuntimeWarning, match="running the stage on Spark"):
         fell_back = TreeCompetition(vectors, flags_pdf, LABEL, None, params).run()
     pd.testing.assert_frame_equal(forked, fell_back)
+
+
+def test_runs_in_one_process_never_share_prepared_designs(spark):
+    """Two competitions in one process whose designs agree in their first
+    64 entities and differ after them: each stage's importances are the
+    ones a fresh fit of its own design gives (a memo keyed on a prefix of
+    the design handed the second run the first run's bin codes)."""
+    from taxahfe_spark.operators.competition import group_seed, make_importance_runner
+
+    n = 100
+    rng = np.random.default_rng(3)
+    label = np.array(["a", "b"] * (n // 2))
+    names = ["k__p", "k__p|c__x", "k__p|c__y"]
+    first = rng.random((n, 3))
+    flags = pd.DataFrame({"path": names, "level": [1, 2, 2], "passed_filters": True})
+    params = CompetitionParams(lowest_level=1, nperm=1, num_trees=20, seed=11)
+    for run in range(2):
+        dense = first.copy()
+        if run:
+            dense[64:] = rng.random((n - 64, 3))
+        vecs = {
+            path: (np.arange(n, dtype=np.int32), dense[:, j])
+            for j, path in enumerate(names)
+        }
+        comp = TreeCompetition(vecs, flags, label, None, params)
+        try:
+            _, imps = comp._run_stage({"k__p": ("k__p", names[1:])}, 1)
+        finally:
+            comp.close()
+        fresh = make_importance_runner(dense, label, None, None, None, params)(
+            group_seed(params.seed, "k__p")
+        )
+        assert [imps["k__p"][path] for path in names] == list(fresh), run
 
 
 def test_distributed_broadcast_stage_is_one_spark_job(

@@ -753,15 +753,20 @@ def test_reprep_per_fold_quantifies_cv_optimism(bike):
     (tidymodels semantics); the run completes with the same protocol and
     candidate list, and the per-fold-prepped CV scores differ from the
     shared-recipe approximation (the delta the leakage-contract note
-    documents). Uses the bike_share frame."""
+    documents). Uses the bike_share frame. Neither run leaves a persisted
+    RDD behind."""
     df = bike
     kwargs = dict(
         feature_type="numeric", model="ridge", folds=3, cv_repeats=1,
         tune_length=2, metric="rmse", seed=7,
         tune_time_min=60.0,  # see fast-path regression test: deterministic grid
     )
+    jsc = df.sparkSession.sparkContext._jsc
+    cached = len(jsc.getPersistentRDDs())
     shared = run_dietml(df, **kwargs)
+    assert len(jsc.getPersistentRDDs()) == cached
     reprep = run_dietml(df, reprep_per_fold=True, **kwargs)
+    assert len(jsc.getPersistentRDDs()) == cached
     assert [r["params"] for _, r in shared.cv_results.iterrows()] == [
         r["params"] for _, r in reprep.cv_results.iterrows()
     ]

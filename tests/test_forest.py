@@ -111,13 +111,20 @@ def test_node_table_walk_matches_key_tables(monkeypatch, kind, min_node, max_dep
         assert np.array_equal(rf.forest_predict(model, rows), oracle)
 
 
-def test_forest_shap_is_worker_count_invariant():
+def test_forest_shap_is_worker_count_invariant(spark, monkeypatch):
+    """The forked pool's SHAP matrix equals the in-process one computed
+    where the driver cannot fork."""
+    import multiprocessing
+
     X, y = _design("binary", n=40, p=5, seed=2)
     model = rf.forest_fit(X, y, True, num_trees=30, seed=3)
 
     def predict(M):
         return rf.forest_predict(model, M)[:, 1]
 
-    one = shap_values_local(predict, X, nsim=12, seed=9, workers=1)
-    four = shap_values_local(predict, X, nsim=12, seed=9, workers=4)
-    assert np.array_equal(one, four)
+    pooled = shap_values_local(predict, X, nsim=12, seed=9)
+    monkeypatch.setattr(
+        multiprocessing, "get_all_start_methods", lambda: ["spawn"]
+    )
+    in_process = shap_values_local(predict, X, nsim=12, seed=9)
+    assert np.array_equal(pooled, in_process)

@@ -14,6 +14,7 @@ from __future__ import annotations
 import pathlib
 
 import pandas as pd
+import pytest
 
 from oracle_collapse import oracle_collapse
 
@@ -54,27 +55,34 @@ def test_collapse_matches_independent_oracle_sf0001(spark, sf_dir):
     _assert_states_equal(state, ostate)
 
 
-def test_collapse_matches_independent_oracle_reference_example(spark):
-    """The reference's own 288x1187 microbiome example (reduced forest
-    params — this is a dual-implementation equality check, any params
-    qualify). 1190 nodes; all five flag sets must match exactly."""
-    from taxahfe_spark.operators.competition import CompetitionParams
-    from taxahfe_spark.pipeline import (
-        read_hierarchical_data,
-        read_metadata,
-        taxa_hfe,
-    )
-    from taxahfe_spark.taxonomy import melt_wide_matrix
+def _seeded_example(spark):
+    """The reference example's shape without its files: the seeded 7-level
+    tests/deep_tree taxonomy over 80 entities (more than the 64 quantile
+    bins, so binning merges rows) and a seeded binary label."""
+    import numpy as np
 
-    meta = read_metadata(spark, REF_META, "Sample", "Category")
-    wide = read_hierarchical_data(spark, REF_DATA)
-    params = CompetitionParams(
-        lowest_level=3, max_level=15, nperm=2, num_trees=10, seed=1234,
-        super_filter_nperm_factor=2,
+    from deep_tree import deep_tree_long
+
+    long_pdf = deep_tree_long(seed=2026, n_entities=80)
+    entities = sorted(long_pdf["entity_id"].unique())
+    meta_pdf = pd.DataFrame(
+        {
+            "subject_id": entities,
+            "feature_of_interest": np.random.default_rng(2026).choice(
+                ["a", "b"], len(entities)
+            ),
+        }
     )
-    _, state = taxa_hfe(
-        meta, melt_wide_matrix(wide), params=params, from_reference_levels=True
+    return (
+        spark.createDataFrame(meta_pdf), spark.createDataFrame(long_pdf),
+        meta_pdf, long_pdf,
     )
+
+
+def _reference_example(spark):
+    """The reference's own 288x1187 microbiome example (1190 nodes)."""
+    from taxahfe_spark.pipeline import read_hierarchical_data, read_metadata
+    from taxahfe_spark.taxonomy import melt_wide_matrix
 
     meta_pdf = (
         pd.read_csv(REF_META, sep="\t")
@@ -88,6 +96,41 @@ def test_collapse_matches_independent_oracle_reference_example(spark):
     long_pdf = wide_pdf.melt(
         id_vars=["clade_name"], var_name="entity_id", value_name="value"
     )
+    return (
+        read_metadata(spark, REF_META, "Sample", "Category"),
+        melt_wide_matrix(read_hierarchical_data(spark, REF_DATA)),
+        meta_pdf, long_pdf,
+    )
+
+
+@pytest.mark.parametrize(
+    "lane",
+    [
+        "seeded",
+        pytest.param(
+            "reference",
+            marks=pytest.mark.skipif(
+                not pathlib.Path(REF_DATA).exists(),
+                reason="reference example inputs absent",
+            ),
+        ),
+    ],
+)
+def test_collapse_matches_independent_oracle_reference_example(spark, lane):
+    """The reference example's settings (reduced forest params — this is a
+    dual-implementation equality check, any params qualify), in reference
+    levels, on a seeded stand-in and on the reference's own files; all five
+    flag sets must match exactly."""
+    from taxahfe_spark.operators.competition import CompetitionParams
+    from taxahfe_spark.pipeline import taxa_hfe
+
+    example = _seeded_example if lane == "seeded" else _reference_example
+    meta, long, meta_pdf, long_pdf = example(spark)
+    params = CompetitionParams(
+        lowest_level=3, max_level=15, nperm=2, num_trees=10, seed=1234,
+        super_filter_nperm_factor=2,
+    )
+    _, state = taxa_hfe(meta, long, params=params, from_reference_levels=True)
     ostate = oracle_collapse(
         meta_pdf, long_pdf, lowest_level=2, max_level=14, nperm=2,
         num_trees=10, seed=1234, super_filter_nperm_factor=2,

@@ -358,7 +358,6 @@ def test_competition_stage_executors_agree_property(spark, case):
                 out = comp._run_stage(comps, n_chunks)
                 return comp.strategy, comp.bc_ctx is not None, out
             finally:
-                comp._close_local_pool()
                 comp.close()
                 if comp.vectors is not None:
                     comp.vectors.unpersist()

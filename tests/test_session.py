@@ -35,3 +35,27 @@ def test_second_pass_over_150_queries_compiles_no_class(spark):
     for q in queries:
         q.collect()
     assert compiled_classes(spark) == first
+
+
+def test_fork_pool_is_one_at_a_time_and_one_item_stays_home(spark):
+    """A second ``ForkPool`` while one is open raises; a single item runs
+    in the driver (no child is forked); the children see the work's
+    closure, and closing frees the slot."""
+    import os
+
+    import pytest
+
+    from taxahfe_spark.session import ForkPool
+
+    offset = 10
+    with ForkPool(lambda item: (item + offset, os.getpid())) as pool:
+        assert pool.workers == spark.sparkContext.defaultParallelism
+        with pytest.raises(RuntimeError, match="already open"):
+            ForkPool(abs)
+        assert pool.map([1]) == [(11, os.getpid())]
+        assert pool._pool is None
+        out = pool.map(list(range(8)))
+        assert [v for v, _ in out] == list(range(10, 18))
+        assert os.getpid() not in {pid for _, pid in out}
+    with ForkPool(abs) as pool:
+        assert pool.map([-3]) == [3]

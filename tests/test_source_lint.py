@@ -126,8 +126,8 @@ def test_metrics_module_imports_no_spark():
 def test_no_per_call_size_parameters():
     """Size gates read named constants (through session.driver_side where
     TAXAHFE_DISTRIBUTED must reach them), never a per-call parameter: no
-    package function declares ``small_*``, ``*_broadcast_max`` or
-    ``prefix_len``."""
+    package function declares ``small_*``, ``*_broadcast_max``,
+    ``prefix_len``, ``checkpoint_every``, ``batch_max`` or ``workers``."""
     found = []
     for path in sorted((ROOT / "taxahfe_spark").rglob("*.py")):
         for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
@@ -139,7 +139,7 @@ def test_no_per_call_size_parameters():
                 if (
                     name.startswith("small_")
                     or name.endswith("_broadcast_max")
-                    or name == "prefix_len"
+                    or name in ("prefix_len", "checkpoint_every", "batch_max", "workers")
                 ):
                     found.append(f"{path.relative_to(ROOT)}:{node.lineno} {name}")
     assert not found, found

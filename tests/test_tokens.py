@@ -223,6 +223,29 @@ def test_pack_sequences_chunked_identical_and_parallel(spark, monkeypatch):
     assert "__chunk" in plan
 
 
+def test_pack_sequences_numeric_ids_run_no_edge_jobs_below_the_gate(spark, monkeypatch):
+    """Below ``DOC_RANK_MAX_ROWS`` the one-task window packs the frame, so
+    bigint ids cost no more Spark jobs than string ids: the approxQuantile
+    chunk edges are computed on the chunked branch only."""
+    from taxahfe_spark.tokens import pack_sequences
+
+    monkeypatch.delenv("TAXAHFE_DISTRIBUTED", raising=False)
+    tracker = spark.sparkContext.statusTracker()
+    jobs, bins = {}, {}
+    for id_type in ("string", "bigint"):
+        rows = [
+            (i if id_type == "bigint" else f"d{i:06d}", "s", 10 + i % 7)
+            for i in range(100)
+        ]
+        df = spark.createDataFrame(rows, f"doc_id {id_type}, source string, n_tok int")
+        before = max(tracker.getJobIdsForGroup() or [0])
+        out = pack_sequences(df, budget=50).collect()
+        jobs[id_type] = max(tracker.getJobIdsForGroup() or [0]) - before
+        bins[id_type] = sorted((r["n_tok"], r["bin"], r["bin_pos"]) for r in out)
+    assert jobs["bigint"] <= jobs["string"], jobs
+    assert bins["bigint"] == bins["string"]
+
+
 @pytest.mark.parametrize(
     "null_col", ["source", "doc_id_string", "doc_id_long", "n_tok"]
 )
